@@ -1,14 +1,14 @@
 """Deduplication operators for LLM training-data pipelines.
 
 Four tiers, all shuffle-bounded (no crossJoin anywhere — candidate
-generation always goes through an equi-join on a bucket key, which is
-the only formulation that survives 100 TB):
+generation always groups or equi-joins on a bucket key, which is the
+only formulation that survives 100 TB):
 
 - exact:    sha256(text) group-by. One shuffle on the hash.
 - minhash:  token n-gram shingles (width configurable; default
             unigram) -> k permutation-min signatures -> LSH banding ->
-            equi-join on (band, band_hash). Candidate count is
-            controlled by the band geometry, not O(n^2).
+            grouped sub-block pairs per (band, band_hash). Candidate
+            count is controlled by the band geometry, not O(n^2).
 - simhash:  63-bit weighted-token signature -> chunk banding ->
             equi-join on chunks, hamming verify via bit_count(xor).
 - embedding:near-dup via cosine on LSH-bucketed candidates (see
@@ -27,7 +27,9 @@ from typing import Iterator  # noqa: UP035 - PySpark's pandas_udf
 
 import pandas as pd
 
-from pyspark.sql import DataFrame, Observation, functions as F
+from pyspark.sql import Column, DataFrame, Observation, functions as F
+
+from etl_dagster_service_crawler_spark.operators.block_pairs import block_pair_fan
 
 # Universal-hash family h_i(x) = (a_i * x + b_i) mod P over Z_P.
 # P = 2^31 - 1 keeps a*x < 2^62 (no bigint overflow).
@@ -245,34 +247,45 @@ def minhash_signatures(
     return hv.select(id_col, _sig32_udf()(F.col("hv")).alias("sig"))
 
 
-# Sub-block grain for the vectorized pair kernel: a bucket with more
-# members than this is split into ceil(n/B) hash sub-blocks and every
-# (sub-block, sub-block) pair becomes its own kernel row, so a mega
-# bucket (the near-constant-corpus failure mode) never serializes
-# through one kernel invocation — per-row work is bounded by B^2 x k
-# comparisons (~34M int ops at B=1024, tens of ms) and two B-row block
-# payloads (~600 KB), the quantized_block_pairs envelope applied to
-# LSH buckets. B=512 (not 4096) because the pair WEIGHT of a bucket
-# is quadratic in its size: at sf0.1 a 1630-member bucket left whole
-# put 42% of all candidate pairs into one hash partition (measured
-# max/median 4.33M/24k pairs at B=4096/1x width); sweeping B at sf0.1
-# measured 128..512 equal within noise (~2.5-3.2 s) and 1024+ slower
-# (straggler partitions return). The cost of a smaller B is payload
-# replication (each member ships in ceil(m/B) block pairs), so the
-# LARGEST B inside the flat knee wins at scale — 512.
+# Sub-block grain of the LSH pair stage (read at call time, so tests
+# can pin sub-blocked == whole-bucket output by monkeypatching it): a
+# bucket with more members than this splits into ceil(n/B) hash
+# sub-blocks, so a mega bucket (the near-constant-corpus failure mode)
+# never serializes through one kernel call — per-group work is bounded
+# by B^2 x k comparisons (~34M int ops at B=1024, tens of ms). B=512
+# (not 4096) because the pair WEIGHT of a bucket is quadratic in its
+# size: at sf0.1 a 1630-member bucket left whole put 42% of all
+# candidate pairs into one hash partition; sweeping B at sf0.1 measured
+# 128..512 equal within noise and 1024+ slower (straggler partitions
+# return). A smaller B replicates each member over more groups
+# (ceil(m/B) each), so the LARGEST B inside the flat knee wins — 512.
 MINHASH_PAIR_BLOCK_ROWS = 512
 
 
-def _make_lsh_pair_kernel(threshold: float, k: int, n_bands: int):
-    """mapInArrow kernel over packed (band, bh) sub-block pairs: exact
-    replay of the streamed join's per-candidate math (guide §4.2) —
-    n_eq = Σ_k [sig_a[k] == sig_b[k]] as k vectorized numpy column
-    compares, est = n_eq / k in float64 (same IEEE divide), pairs with
-    a NULL signature on either side score 0 (each NULL eq term folded
-    to 0, exactly the CASE ... OTHERWISE 0), first-matching-band
-    emission as (band) plain != masks over the earlier band hashes,
-    and id_a < id_b orientation. Emits only survivors of
-    est >= threshold, so the output IS the old row set."""
+def _band_hashes() -> Column:
+    """The LSH_BANDS band hashes of a `sig` column as one array:
+    band j hashes (j, its LSH_ROWS signature components)."""
+    return F.array(
+        *[
+            F.xxhash64(
+                F.lit(j),
+                *[F.element_at("sig", j * LSH_ROWS + r + 1) for r in range(LSH_ROWS)],
+            )
+            for j in range(LSH_BANDS)
+        ]
+    )
+
+
+def _make_lsh_pair_kernel(threshold: float, k: int):
+    """Grouped Arrow kernel over one (band, bh, qblk, tblk) sub-block
+    pair: exact replay of the streamed join's per-candidate math
+    (guide §4.2) — n_eq = Σ_k [sig_a[k] == sig_b[k]] as one dense numpy
+    compare, est = n_eq / k in float64 (same IEEE divide), pairs with a
+    NULL signature on either side score 0 (each NULL eq term folded to
+    0, exactly the CASE ... OTHERWISE 0), first-matching-band emission
+    as (band) plain != masks over the earlier band hashes, and
+    id_a < id_b orientation. Emits only survivors of est >= threshold,
+    so the output IS the old row set."""
 
     # bound the (rows x rows x k) boolean equality temporary: chunk the
     # query rows so one slab stays ~64 MB (cache/RSS-friendly with many
@@ -282,194 +295,76 @@ def _make_lsh_pair_kernel(threshold: float, k: int, n_bands: int):
     # bandwidth where the dense compare streams sequentially.
     slab_elems = 64 * 1024 * 1024
 
-    def kernel(batches):
+    def kernel(key, table):
         import numpy as np
         import pyarrow as pa
 
-        from etl_dagster_service_crawler_spark.operators.similarity import (
-            _arrow_list_rows,
+        from etl_dagster_service_crawler_spark.operators.block_pairs import (
+            list_matrix,
+            sides,
         )
 
-        names = ("qids", "qoks", "qsigs", "qbhss", "nids", "noks", "nsigs", "nbhss")
-        for b in batches:
-            get = {name: _arrow_list_rows(b, name) for name in names}
-            bandc = b.column(b.schema.get_field_index("band")).to_numpy(
-                zero_copy_only=False
-            )
-            same = (
-                b.column(b.schema.get_field_index("qblk")).to_numpy(
-                    zero_copy_only=False
+        band = key[0].as_py()
+        q, n, same = sides(key, table)
+        ids = table.column("__id").to_numpy()
+        ok = table.column("ok").to_numpy()
+        sig = list_matrix(table, "sigf")
+        bhs = list_matrix(table, "bhs")
+        qids, nids = ids[q], ids[n]
+        mq, mn = len(qids), len(nids)
+        out_a = [np.zeros(0, dtype=np.int64)]
+        out_b = [np.zeros(0, dtype=np.int64)]
+        out_e = [np.zeros(0, dtype=np.float64)]
+        if mq and mn:
+            qsig, nsig = sig[q], sig[n]
+            okm = ok[q][:, None] & ok[n][None, :]
+            qbh, nbh = bhs[q], bhs[n]
+            # chunk query rows so the 3D equality slab stays bounded
+            step = max(1, slab_elems // max(1, mn * k))
+            for lo in range(0, mq, step):
+                hi = min(mq, lo + step)
+                # ONE dense pass: n_eq = Σ_k [sig_a[k] == sig_b[k]]
+                neq = (qsig[lo:hi, None, :] == nsig[None, :, :]).sum(
+                    axis=2, dtype=np.int32
                 )
-                == b.column(b.schema.get_field_index("tblk")).to_numpy(
-                    zero_copy_only=False
-                )
-            )
-            out_a, out_b, out_e = [], [], []
-            for i in range(b.num_rows):
-                qids = get["qids"](i)
-                nids = get["nids"](i)
-                mq, mn = len(qids), len(nids)
-                if not mq or not mn:
-                    continue
-                qsig = get["qsigs"](i).reshape(mq, k)
-                nsig = get["nsigs"](i).reshape(mn, k)
-                okm = (
-                    get["qoks"](i).astype(bool)[:, None]
-                    & get["noks"](i).astype(bool)[None, :]
-                )
-                band = int(bandc[i])
-                if band:
-                    qbh = get["qbhss"](i).reshape(mq, n_bands)
-                    nbh = get["nbhss"](i).reshape(mn, n_bands)
-                # chunk query rows so the 3D equality slab stays bounded
-                step = max(1, slab_elems // max(1, mn * k))
-                for lo in range(0, mq, step):
-                    hi = min(mq, lo + step)
-                    # ONE dense pass: n_eq = Σ_k [sig_a[k] == sig_b[k]]
-                    neq = (
-                        (qsig[lo:hi, None, :] == nsig[None, :, :])
-                        .sum(axis=2, dtype=np.int32)
-                    )
-                    est = neq.astype(np.float64) / float(k)
-                    est = np.where(okm[lo:hi], est, 0.0)
-                    keep = est >= threshold
-                    if band:
-                        for j in range(band):
-                            keep &= (
-                                qbh[lo:hi, j][:, None] != nbh[:, j][None, :]
-                            )
-                    if same[i]:
-                        # same sub-block: rows are id-sorted on both
-                        # sides, strict upper triangle == id_a < id_b
-                        keep &= qids[lo:hi, None] < nids[None, :]
-                        ia, ib = np.nonzero(keep)
-                        a_ids, b_ids = qids[ia + lo], nids[ib]
-                    else:
-                        ia, ib = np.nonzero(keep)
-                        a_raw, b_raw = qids[ia + lo], nids[ib]
-                        a_ids = np.minimum(a_raw, b_raw)
-                        b_ids = np.maximum(a_raw, b_raw)
-                    if len(a_ids):
-                        out_a.append(a_ids)
-                        out_b.append(b_ids)
-                        out_e.append(est[ia, ib])
-            if out_a:
-                yield pa.RecordBatch.from_arrays(
-                    [
-                        pa.array(np.concatenate(out_a), type=pa.int64()),
-                        pa.array(np.concatenate(out_b), type=pa.int64()),
-                        pa.array(np.concatenate(out_e), type=pa.float64()),
-                    ],
-                    names=["id_a", "id_b", "est_jaccard"],
-                )
+                est = neq.astype(np.float64) / float(k)
+                est = np.where(okm[lo:hi], est, 0.0)
+                keep = est >= threshold
+                for j in range(band):
+                    keep &= qbh[lo:hi, j][:, None] != nbh[:, j][None, :]
+                if same:
+                    keep &= qids[lo:hi, None] < nids[None, :]
+                ia, ib = np.nonzero(keep)
+                a_raw, b_raw = qids[ia + lo], nids[ib]
+                out_a.append(np.minimum(a_raw, b_raw))
+                out_b.append(np.maximum(a_raw, b_raw))
+                out_e.append(est[ia, ib])
+        return pa.table(
+            {
+                "id_a": np.concatenate(out_a),
+                "id_b": np.concatenate(out_b),
+                "est_jaccard": np.concatenate(out_e),
+            }
+        )
 
     return kernel
 
 
-def _minhash_pair_blocks(
-    sig: DataFrame, id_col: str, block_rows: int = MINHASH_PAIR_BLOCK_ROWS
-) -> DataFrame:
-    """Packed sub-block pairs of the LSH buckets, feeding the pair
-    kernel: one row per (band, bh, query sub-block, target sub-block)
-    with the id-sorted member ids, flattened signatures, flattened
-    band-hash arrays and a NULL-signature mask. Buckets of n members
-    split into ceil(n/block_rows) hash sub-blocks; singleton buckets
-    (the vast majority) are dropped by the size prefilter before any
-    payload is packed."""
-    bhs = F.array(
-        *[
-            F.xxhash64(
-                *[F.element_at("sig", j * LSH_ROWS + r + 1) for r in range(LSH_ROWS)]
-            )
-            for j in range(LSH_BANDS)
-        ]
-    )
-    bucket = sig.select(
-        F.col(id_col).alias("__id"),
-        F.col("sig").isNotNull().alias("ok"),
-        F.coalesce(
-            "sig", F.array_repeat(F.lit(0).cast("bigint"), NUM_HASHES)
-        ).alias("sigf"),
-        bhs.alias("bhs"),
-    ).select(
-        "__id", "ok", "sigf", "bhs", F.posexplode("bhs").alias("band", "bh")
-    )
-    # bucket sizes: map-side partial aggregation, one tiny row per
-    # bucket — the prefilter that drops singleton buckets' payloads
-    # before the pack, and the source of the sub-block count
-    sz = (
-        bucket.groupBy("band", "bh")
-        .agg(F.count(F.lit(1)).alias("__n"))
-        .where(F.col("__n") >= 2)
-        .select(
-            "band", "bh",
-            F.ceil(F.col("__n") / F.lit(block_rows)).cast("int").alias("nblk"),
-        )
-    )
-    joined = bucket.join(sz, ["band", "bh"]).select(
-        "band", "bh", "__id", "ok", "sigf", "bhs",
-        F.pmod(F.xxhash64(F.col("__id")), F.col("nblk")).cast("int").alias("blk"),
-        "nblk",
-    )
-    packed = (
-        joined.groupBy("band", "bh", "blk")
-        .agg(
-            F.sort_array(
-                F.collect_list(F.struct("__id", "ok", "sigf", "bhs"))
-            ).alias("rows"),
-            F.first("nblk").alias("nblk"),
-        )
-        .select(
-            "band", "bh", "blk", "nblk",
-            F.transform("rows", lambda r: r["__id"]).alias("ids"),
-            F.transform("rows", lambda r: r["ok"]).alias("oks"),
-            F.flatten(F.transform("rows", lambda r: r["sigf"])).alias("sigs"),
-            F.flatten(F.transform("rows", lambda r: r["bhs"])).alias("bhss"),
-        )
-    )
-    qside = packed.select(
-        "band", "bh",
-        F.col("blk").alias("qblk"),
-        F.col("ids").alias("qids"), F.col("oks").alias("qoks"),
-        F.col("sigs").alias("qsigs"), F.col("bhss").alias("qbhss"),
-        F.explode(F.sequence("blk", F.col("nblk") - 1)).alias("tblk"),
-    )
-    nside = packed.select(
-        "band", "bh", F.col("blk").alias("tblk"),
-        F.col("ids").alias("nids"), F.col("oks").alias("noks"),
-        F.col("sigs").alias("nsigs"), F.col("bhss").alias("nbhss"),
-    )
-    # explicit width: AQE would coalesce this small exchange to one
-    # partition and run every kernel task serially (the knn_join_cells
-    # lesson); an explicit repartition pins the fan-out and is reused
-    # as the join's left-side exchange. 4x the core count because the
-    # block-pair rows carry wildly uneven pair weights (1 .. B² pairs
-    # per row) — finer bins keep the heavy rows from clumping into one
-    # hash partition (measured: at 1x width one partition drew 42% of
-    # all pairs at sf0.1).
-    n_parts = 4 * sig.sparkSession.sparkContext.defaultParallelism
-    return qside.repartition(n_parts, "band", "bh", "tblk").join(
-        nside, ["band", "bh", "tblk"]
-    )
-
-
 def minhash_dedup_pairs(
     df: DataFrame, id_col: str, text_col: str, threshold: float = 0.7,
-    block_rows: int = MINHASH_PAIR_BLOCK_ROWS,
 ) -> DataFrame:
     """Near-dup pairs with estimated jaccard >= threshold.
     Estimate = fraction of equal signature components. Requires a
     numeric (long) id_col — ids cross the Arrow kernel as int64.
 
-    r15 shape (guide §4.1/§4.2): each (band, bh) bucket is packed into
-    id-sorted hash sub-blocks (ceil(n/block_rows) per bucket) and every
-    candidate pair is evaluated by a dense numpy kernel over
-    (sub-block, sub-block) pairs — one vectorized equality pass per
-    block pair instead of streaming Σ|bucket|² candidates through the
-    bucket self-join's interpreted 32-term CASE chain (the r13/r14
-    shape: measured 5.1-6.2 s at sf0.1 against 2.5-3.2 s for the
-    kernel, same-session interleaved, identical 1,268,188-pair output).
-    Semantics replayed exactly:
+    Shape (guide §4.1/§4.2): each (band, bh) bucket splits into
+    ceil(n/MINHASH_PAIR_BLOCK_ROWS) hash sub-blocks (block_pair_fan)
+    and every candidate pair is evaluated by a dense numpy kernel once
+    per (sub-block, sub-block) group — one vectorized equality pass per
+    group instead of streaming Σ|bucket|² candidates through a bucket
+    self-join's interpreted 32-term CASE chain (the r13/r14 shape:
+    measured 5.1-6.2 s at sf0.1 against 2.5-3.2 s for the kernel,
+    identical 1,268,188-pair output). Semantics replayed exactly:
 
     - each qualifying pair is emitted by its FIRST matching band only
       (kernel mask: no earlier band hash equal), so the output is
@@ -477,36 +372,41 @@ def minhash_dedup_pairs(
     - est = (Σ_k [sig_a[k] == sig_b[k]]) / k in float64, pairs with a
       NULL signature on either side score 0 (the CASE ... OTHERWISE 0
       fold), emitted iff est >= threshold;
-    - id_a < id_b orientation (id-sorted blocks: strict upper triangle
-      within a block, value min/max across blocks).
+    - id_a < id_b orientation (strict id order within a sub-block,
+      value min/max across sub-blocks).
 
-    Skew: a mega bucket (the near-constant-corpus failure mode) splits
-    into bounded block pairs — per-task work <= block_rows² x k
-    compares, payload <= 2 x block_rows rows — instead of either one
-    giant collected group (OOM) or one hash partition owning the
-    quadratic pair mass (measured 42% of all pairs in one task before
-    sub-blocking). Singleton buckets (the vast majority) are dropped by
-    a count prefilter before any payload is packed or shuffled.
+    Skew: a mega bucket splits into bounded groups — per-group work
+    <= B² x k compares — instead of one task owning the quadratic pair
+    mass (measured 42% of all pairs in one task before sub-blocking).
+    Singleton buckets (the vast majority) are dropped by the fan's
+    size prefilter before any payload is shuffled.
 
-    r14 NEGATIVE RESULT on the old join shape, kept for the record:
-    statically expanding its first-matching-band HOF removed the
-    CodegenFallback but code-generated the 32-branch est CASE chain
-    past the JIT's method limit — 24-28 s vs 6 s. A gather-vectorized
-    kernel variant (flattened pair list, one fancy-indexed pass per
-    component) also measured SLOWER distributed than this dense form:
-    32 workers of random gathers saturate memory bandwidth where the
-    dense compare streams sequentially."""
-    # localCheckpoint(eager), not persist+count (r15): the pack plan's
-    # two bucket consumers (size prefilter + member join) read a
-    # materialized frame either way, but the checkpoint skips the
-    # separate count job and leaves no CacheManager entry behind
-    # (blocks are freed when the frame is GC'd) — measured 2.3-2.5 s
-    # vs 2.8-3.1 s interleaved at sf0.1 for the whole query.
+    Negative results on the old join shape: statically expanding its
+    first-matching-band HOF code-generated the 32-branch est CASE chain
+    past the JIT's method limit — 24-28 s vs 6 s."""
+    # localCheckpoint(eager), not persist+count (r15): the fan's two
+    # consumers (size prefilter + member rows) read a materialized
+    # frame, and the checkpoint leaves no CacheManager entry behind
+    # (blocks are freed when the frame is GC'd)
     sig = minhash_signatures(df, id_col, text_col).localCheckpoint(eager=True)
-    pairs = _minhash_pair_blocks(sig, id_col, block_rows)
-    kernel = _make_lsh_pair_kernel(threshold, NUM_HASHES, LSH_BANDS)
-    return pairs.mapInArrow(
-        kernel, "id_a bigint, id_b bigint, est_jaccard double"
+    bucket = sig.select(
+        F.col(id_col).alias("__id"),
+        F.col("sig").isNotNull().alias("ok"),
+        F.coalesce(
+            "sig", F.array_repeat(F.lit(0).cast("bigint"), NUM_HASHES)
+        ).alias("sigf"),
+        _band_hashes().alias("bhs"),
+    ).select(
+        "__id", "ok", "sigf", "bhs", F.posexplode("bhs").alias("band", "bh")
+    )
+    keys = ["band", "bh"]
+    return (
+        block_pair_fan(bucket, keys, "__id", block_rows=MINHASH_PAIR_BLOCK_ROWS)
+        .groupBy(*keys, "qblk", "tblk")
+        .applyInArrow(
+            _make_lsh_pair_kernel(threshold, NUM_HASHES),
+            "id_a bigint, id_b bigint, est_jaccard double",
+        )
     )
 
 
@@ -541,15 +441,6 @@ def minhash_assign_representatives(
         )
     else:
         sig = minhash_signatures(df, id_col, text_col)
-        bands = F.array(
-            *[
-                F.xxhash64(
-                    F.lit(j),
-                    *[F.element_at("sig", j * LSH_ROWS + r + 1) for r in range(LSH_ROWS)],
-                )
-                for j in range(LSH_BANDS)
-            ]
-        )
         # sig materialized: the skew probe plus the plan's two consumers
         # would otherwise recompute the signature fold three times (the
         # 2-consumer no-persist tradeoff measured in r2 flips with a
@@ -560,7 +451,7 @@ def minhash_assign_representatives(
         # leak (blocks are freed when the frame is GC'd; the persists
         # here were never unpersisted).
         buckets = sig.localCheckpoint(eager=True).select(
-            F.col(id_col), F.explode(bands).alias("bh")
+            F.col(id_col), F.explode(_band_hashes()).alias("bh")
         )
     # bucket stats materialized too: one row per distinct bucket — min
     # id and size come out of the same exchange, read by the probe and
@@ -665,39 +556,12 @@ def minhash_cluster_cc(
         edges = df.select(F.col(id_col), F.sha2(F.col(text_col), 256).alias("bh"))
     else:
         sig = minhash_signatures(df, id_col, text_col)
-        bands = F.array(
-            *[
-                F.xxhash64(
-                    F.lit(j),
-                    *[F.element_at("sig", j * LSH_ROWS + r + 1) for r in range(LSH_ROWS)],
-                )
-                for j in range(LSH_BANDS)
-            ]
-        )
-        edges = sig.select(F.col(id_col), F.explode(bands).alias("bh"))
+        edges = sig.select(F.col(id_col), F.explode(_band_hashes()).alias("bh"))
 
     n_edges = df.count() * bands_per_doc
     return cc_label_propagation(
         edges, id_col, n_edges, max_iters, hot_bucket_rows, n_salts
     )
-
-
-# Propagation rounds batched into one checkpointed job (see the loop
-# comment in cc_label_propagation). Module-level so tests and probes
-# can pin either batching. r15 NEGATIVE RESULT, kept for the record:
-# 2-hop batching (halving the eager checkpoint round-trips, VERDICT
-# r14 item 6) measured consistently SLOWER on the benched LSH-CC path
-# at sf0.1 — interleaved mins over 3 rounds: 1hop [2.40, 2.38, 2.03] s
-# vs 2hop [3.85, 3.45, 3.20] s, identical 500-row output. The loop
-# converges in ~4 data rounds here, so batching saves at most 2 driver
-# round-trips (~100 ms) but every batch runs its second hop's two
-# aligned exchanges + pointer jump as REAL shuffle work even when the
-# first hop already converged, and the fixpoint test only fires per
-# batch — one to two full overshoot rounds of shuffles for the saved
-# latency. Keep 1; the batch machinery stays because the tradeoff
-# flips when driver latency dominates shuffle cost (high-RTT cluster
-# masters), and tests pin output equality at either setting.
-CC_HOPS_PER_JOB = 1
 
 
 def cc_label_propagation(
@@ -766,46 +630,32 @@ def cc_label_propagation(
 
         labels: DataFrame | None = None
         prev_sum = None
-        it = 0
-        # The loop supports batching CC_HOPS_PER_JOB propagation
-        # rounds into one checkpointed job: min-label propagation is
-        # monotone, so batching can only overshoot by already-converged
-        # rounds inside the same job — the fixpoint (and therefore
-        # every consumer's output) is identical at any batch size.
-        # Default is 1: see the CC_HOPS_PER_JOB negative result above
-        # (batched overshoot rounds are real shuffle work and measured
-        # slower than the driver round-trips they save at sf0.1).
-        hops_per_job = CC_HOPS_PER_JOB
-        while it < max_iters:
-            batch = min(hops_per_job, max_iters - it)
-            cur = labels
-            for _ in range(batch):
-                if cur is None:
-                    bucket_min = stats.select("bh", "bucket_label")
-                else:
-                    bucket_min = (
-                        by_id.join(cur, id_col)
-                        .groupBy("bh")
-                        .agg(F.min("label").alias("bucket_label"))
-                    )
-                if has_hot:
-                    bucket_min = _replicate_labels_across_salts(
-                        bucket_min, hot, n_salts
-                    )
-                hop = (
-                    by_bh.join(bucket_min, join_keys)
-                    .groupBy(id_col)
-                    .agg(F.min("bucket_label").alias("label"))
+        for it in range(max_iters):
+            if labels is None:
+                bucket_min = stats.select("bh", "bucket_label")
+            else:
+                bucket_min = (
+                    by_id.join(labels, id_col)
+                    .groupBy("bh")
+                    .agg(F.min("label").alias("bucket_label"))
                 )
-                # pointer jump: follow the label one more step through
-                # the hop frame itself (labels are doc ids, so
-                # label2 = hop[label])
-                lmap = hop.select(
-                    F.col(id_col).alias("label"), F.col("label").alias("label2")
+            if has_hot:
+                bucket_min = _replicate_labels_across_salts(
+                    bucket_min, hot, n_salts
                 )
-                cur = hop.join(lmap, "label", "left").select(
-                    F.col(id_col), F.coalesce("label2", "label").alias("label")
-                )
+            hop = (
+                by_bh.join(bucket_min, join_keys)
+                .groupBy(id_col)
+                .agg(F.min("bucket_label").alias("label"))
+            )
+            # pointer jump: follow the label one more step through the
+            # hop frame itself (labels are doc ids, so label2 = hop[label])
+            lmap = hop.select(
+                F.col(id_col).alias("label"), F.col("label").alias("label2")
+            )
+            cur = hop.join(lmap, "label", "left").select(
+                F.col(id_col), F.coalesce("label2", "label").alias("label")
+            )
             # localCheckpoint, not persist: persist caches DATA but the
             # LOGICAL plan keeps growing — the pointer jump self-joins
             # hop with itself, so the plan TREE doubles every round
@@ -819,13 +669,13 @@ def cc_label_propagation(
             # (on a cluster: reliable checkpoint dir, same call shape).
             #
             # The fixpoint sum rides the checkpoint action as an
-            # observed metric (r9): one job per batch instead of
+            # observed metric (r9): one job per round instead of
             # checkpoint + a separate agg/collect — and the observed
             # sum is computed on exactly the rows the checkpoint
             # writes. Equal consecutive sums mean the LAST round
             # changed nothing (labels are monotone non-increasing, the
             # sum strictly decreases until the fixpoint), so stopping
-            # on equality is exact at any batch size.
+            # on equality is exact.
             obs = Observation(f"cc_labsum_{it}")
             new_labels = (
                 cur.observe(
@@ -837,7 +687,6 @@ def cc_label_propagation(
             if labels is not None:
                 labels.unpersist()
             labels = new_labels
-            it += batch
             if new_sum == prev_sum:
                 break
             prev_sum = new_sum

@@ -30,6 +30,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from etl_dagster_service_crawler_spark.functions.vectors import cosine, dot, dot_fixed, norm2
+from etl_dagster_service_crawler_spark.operators.block_pairs import block_pair_fan
 
 _log = logging.getLogger("spark_graft.similarity")
 
@@ -1087,22 +1088,6 @@ def _pair_dot(a: Column, b: Column, dim: int | None) -> Column:
 KNN_QUANT_BLOCK_CAP = 4096
 
 
-def _arrow_list_rows(batch, name: str):
-    """Row accessor for an Arrow list column of a RecordBatch: the
-    column is one flat values buffer plus an offsets array, so row i's
-    list is a zero-copy numpy slice — no per-element Python objects
-    (the mapInPandas path materialized every element through one).
-    Lists here are non-null by construction (packed block rows)."""
-    col = batch.column(batch.schema.get_field_index(name))
-    offs = col.offsets.to_numpy(zero_copy_only=False)
-    vals = col.values.to_numpy(zero_copy_only=False)
-
-    def row(i: int):
-        return vals[offs[i]: offs[i + 1]]
-
-    return row
-
-
 def _quantize_rows_kernel(batches):
     """mapInArrow kernel: (id, emb array<float>) -> (id, q8 array<int>,
     n8 double) — the embedding_quantize formula as three vectorized
@@ -1122,7 +1107,14 @@ def _quantize_rows_kernel(batches):
       to NULL (the JVM acc + NULL semantics) — such rows take a
       per-row replay path, flagged by the Arrow element validity mask
       (a pandas_udf would have collapsed element-NULL to NaN and made
-      the replay undetectable, hence mapInArrow)."""
+      the replay undetectable, hence mapInArrow);
+    - a NaN or ±Inf element makes the JVM absmax NaN or Inf (greatest
+      orders NaN above every number), so the scale is NaN or 0.0,
+      every x*scale+0.5 is NaN or 0.5, and floor(NaN) casts to 0: the
+      row's non-NULL elements all quantize to 0. The fast path's int
+      cast of NaN is undefined, so these rows take the replay too."""
+    import math
+
     import numpy as np
     import pyarrow as pa
 
@@ -1150,33 +1142,27 @@ def _quantize_rows_kernel(batches):
             absmax[nonempty] = np.maximum.reduceat(
                 np.abs(vals64), offs0[:-1][nonempty]
             )
-        scale = np.where(absmax > 0, 127.0 / absmax, 0.0)
-        q8flat = np.floor(
-            vals64 * np.repeat(scale, lens) + 0.5
-        ).astype(np.int32)
+        # non-finite rows get garbage here and are replayed below
+        with np.errstate(divide="ignore", invalid="ignore"):
+            scale = np.where(absmax > 0, 127.0 / absmax, 0.0)
+            q8flat = np.floor(
+                vals64 * np.repeat(scale, lens) + 0.5
+            ).astype(np.int32)
         sumsq = np.zeros(n_rows, dtype=np.float64)
         if nonempty.any():
             sumsq[nonempty] = np.add.reduceat(
                 q8flat.astype(np.float64) ** 2, offs0[:-1][nonempty]
             )
         n8_list: list[float | None] = np.sqrt(sumsq).tolist()
-        elem_null = (
-            evals.is_null().to_numpy(zero_copy_only=False)
-            if evals.null_count
-            else None
-        )
-        if row_null.any() or elem_null is not None:
+        # NULL elements read as NaN here, so this flags both kinds
+        odd = ~np.isfinite(vals64)
+        if row_null.any() or odd.any():
             # slow-path replay, only for rows the fast path can't
-            # represent: NULL rows and rows with NULL elements
+            # represent: NULL rows and rows with NULL or non-finite
+            # elements
             redo = set(np.nonzero(row_null)[0].tolist())
-            if elem_null is not None:
-                bad = (
-                    np.searchsorted(
-                        offs0, np.nonzero(elem_null)[0], side="right"
-                    )
-                    - 1
-                )
-                redo.update(int(x) for x in np.unique(bad))
+            bad = np.searchsorted(offs0, np.nonzero(odd)[0], side="right") - 1
+            redo.update(int(x) for x in np.unique(bad))
             q8_rows: list[list[int | None] | None] = [None] * n_rows
             for i in range(n_rows):
                 if row_null[i]:
@@ -1187,15 +1173,16 @@ def _quantize_rows_kernel(batches):
                         None if not evals[j].is_valid else float(evals[j].as_py())
                         for j in range(lo, hi)
                     ]
-                    amx = 0.0
-                    for x in elems:
-                        if x is not None and abs(x) > amx:
-                            amx = abs(x)
-                    sc = 127.0 / amx if amx > 0 else 0.0
-                    q8_rows[i] = [
-                        None if x is None else int(np.floor(x * sc + 0.5))
-                        for x in elems
-                    ]
+                    present = [x for x in elems if x is not None]
+                    if all(math.isfinite(x) for x in present):
+                        amx = max(map(abs, present), default=0.0)
+                        sc = 127.0 / amx if amx > 0 else 0.0
+                        q8_rows[i] = [
+                            None if x is None else int(np.floor(x * sc + 0.5))
+                            for x in elems
+                        ]
+                    else:
+                        q8_rows[i] = [None if x is None else 0 for x in elems]
                     n8_list[i] = (
                         None
                         if any(x is None for x in elems)
@@ -1222,56 +1209,29 @@ def _quantize_rows_kernel(batches):
 def quantized_block_pairs(
     emb: DataFrame,
     n: int,
-    block_rows: int | None = None,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    triangle: bool = False,
-    dim: int | None = None,
 ) -> DataFrame:
     """The shared block-product stage of the quantized family
     (knn_join_quantized, similarity_pair_histogram): int8-quantize
-    (the embedding_quantize formula), hash vectors into
-    ceil(n/block_rows) blocks packed ONCE into id-sorted (ids,
-    flattened int8 matrix, int-exact norms), and form (query block,
-    corpus block) pairs via explode(sequence) + plain EQUI-join —
-    never a CartesianProduct or unbounded BNLJ. Returns rows
-    (nb, qblk, qids, qmat, qnorms, nids, nmat, nnorms).
+    (the embedding_quantize formula) and fan the vectors over every
+    unordered (block, block) pair of ceil(n/block_rows) hash blocks
+    (block_pair_fan with the whole corpus as one bucket) — never a
+    CartesianProduct or unbounded BNLJ. Returns rows
+    (id, q8, n8, qblk, tblk, isq) ready for
+    ``groupBy("qblk", "tblk").applyInArrow``; each group is one block
+    product and carries each unordered pair exactly once, so kernels
+    emit both orientations of a cross-block pair from one matrix.
 
-    ``triangle=True`` fans only qblk <= nb (the LSH pair-kernel
-    pattern) for symmetric consumers that count each unordered pair
-    once — the full ordered fan computes every block product twice
-    and throws half away (a same-block mask cannot recover the
-    cross-block half). Kernel-side contract: same-block rows
-    (qblk == nb) carry the full self product; cross-block rows carry
-    each unordered pair exactly once.
-
-    r15 shape changes (measured, guide §2.4/§2.5):
-    - the packed frame is localCheckpoint(eager)ed: the q and corpus
-      legs previously compiled as two SEPARATE full subtrees (the
-      join's pushed isnotnull(nb) made the corpus leg's exchange
-      non-identical, so ReusedExchange never fired — the r14 comment
-      claiming it did was wrong, see plans/r15/*_before.txt: two
-      ObjectHashAggregate+Exchange chains, two parquet scans) — the
-      scan + quantize + pack now run once per invocation;
-    - the corpus leg is broadcast when the whole packed corpus is
-      provably small (n * (4*dim+16) bytes; 512-dim assumed when dim
-      is unknown), so the pair rows stream over the explicit
-      round-robin repartition and the kernel runs min(pairs, cores)
-      tasks — the previous plan broadcast the QUERY leg and ran the
-      kernel over the corpus leg's hashpartitioning(block) exchange:
-      at most n_blocks (4 at sf0.1) non-empty tasks for 16 block
-      pairs, the knn_join_cells AQE-serialization lesson again. At
-      scale the broadcast arm disarms (payload > cap) and the join
-      shuffles on nb, whose cardinality n/4096 then exceeds the core
-      count anyway."""
-    if block_rows is None:
-        # B^2 ~ P/2 block pairs: enough tasks to fill the cluster once
-        # AQE splits, few enough that per-pair stage overhead doesn't
-        # dominate (measured at n=2000/P=32: B=4 beats B=8 by ~15%
-        # and B=2 loses to both — parallelism vs overhead knee)
-        p = emb.sparkSession.sparkContext.defaultParallelism
-        b_target = max(1, int((p / 2) ** 0.5))
-        block_rows = min(KNN_QUANT_BLOCK_CAP, max(64, -(-n // b_target)))
+    NULL embeddings have no defined cosine and are dropped before the
+    fan, like zero-norm vectors are masked in the kernels."""
+    # B^2 ~ P/2: enough block products to fill the cluster, few enough
+    # that per-product overhead doesn't dominate (measured at
+    # n=2000/P=32: B=4 beats B=8 by ~15% and B=2 loses to both —
+    # parallelism vs overhead knee)
+    p = emb.sparkSession.sparkContext.defaultParallelism
+    b_target = max(1, int((p / 2) ** 0.5))
+    block_rows = min(KNN_QUANT_BLOCK_CAP, max(64, -(-n // b_target)))
     n_blocks = max(1, -(-n // block_rows))
 
     # r15: the absmax/scale/floor quantize + int-exact norm runs as ONE
@@ -1288,61 +1248,41 @@ def quantized_block_pairs(
         .mapInArrow(
             _quantize_rows_kernel, "id bigint, q8 array<int>, n8 double"
         )
-        .withColumn(
-            "block", F.pmod(F.xxhash64(F.col("id")), F.lit(n_blocks)).cast("int")
-        )
+        .where(F.col("q8").isNotNull())
     )
-    packed = (
-        base.groupBy("block")
-        .agg(
-            F.sort_array(
-                F.collect_list(F.struct("id", "q8", "n8"))
-            ).alias("rows")
-        )
-        .select(
-            "block",
-            F.transform("rows", lambda r: r["id"]).alias("ids"),
-            F.flatten(F.transform("rows", lambda r: r["q8"])).alias("mat"),
-            F.transform("rows", lambda r: r["n8"]).alias("norms"),
-        )
-        .localCheckpoint(eager=True)
+    return block_pair_fan(base, [], "id", n_blocks=n_blocks)
+
+
+def _block_cosines(key, table):
+    """One quantized block-pair group as (qids, nids, c, same): the
+    BLAS-exact int8 cosine matrix between the group's query-side and
+    target-side vectors, -2.0 where a norm is zero. float64 matmul of
+    int8-valued matrices is EXACT (every product <= 127^2, every
+    partial sum an integer < 2^53) and runs on BLAS — measured 4.6x
+    over the int64 path, which numpy executes without BLAS. Exactness
+    also makes a cross-block c.T bit-identical to the product computed
+    with the sides swapped."""
+    import numpy as np
+
+    from etl_dagster_service_crawler_spark.operators.block_pairs import (
+        list_matrix,
+        sides,
     )
-    span = (
-        F.sequence(F.col("block"), F.lit(n_blocks - 1))
-        if triangle
-        else F.sequence(F.lit(0), F.lit(n_blocks - 1))
-    )
-    qb = packed.select(
-        F.col("block").alias("qblk"),
-        F.col("ids").alias("qids"),
-        F.col("mat").alias("qmat"),
-        F.col("norms").alias("qnorms"),
-        F.explode(span).alias("nb"),
-    )
-    nb = packed.select(
-        F.col("block").alias("nb"),
-        F.col("ids").alias("nids"),
-        F.col("mat").alias("nmat"),
-        F.col("norms").alias("nnorms"),
-    )
-    n_parts = emb.sparkSession.sparkContext.defaultParallelism
-    # broadcast cap: the whole packed corpus as one relation — int
-    # codes dominate (4 bytes each after the JVM int cast) plus
-    # id+norm per row
-    est_bytes = n * (4 * (dim or 512) + 16)
-    if est_bytes <= 32 * 1024 * 1024:
-        # round-robin spread of the block-pair rows (each carries
-        # bounded uniform work, so balance beats key affinity; the
-        # sort-before-repartition cost is n_blocks tiny header rows)
-        return qb.repartition(n_parts).join(F.broadcast(nb), "nb")
-    return qb.repartition(n_parts, "nb").join(nb, "nb")
+
+    q, n, same = sides(key, table)
+    ids = table.column("id").to_numpy()
+    mat = list_matrix(table, "q8").astype(np.float64)
+    nrm = table.column("n8").to_numpy()
+    den = np.outer(nrm[q], nrm[n])
+    with np.errstate(divide="ignore", invalid="ignore"):
+        c = np.where(den > 0, (mat[q] @ mat[n].T) / den, -2.0)
+    return ids[q], ids[n], c, same
 
 
 def knn_join_quantized(
     emb: DataFrame,
     k: int = 5,
     r_candidates: int = 64,
-    block_rows: int | None = None,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     dim: int | None = None,
@@ -1350,33 +1290,29 @@ def knn_join_quantized(
 ) -> DataFrame:
     """Batch kNN self-join for corpora where IVF degenerates (the
     route_knn 'quantized' arm): block brute force — int8-quantized
-    coarse scan over PACKED block pairs, exact float re-rank of the
-    R survivors per query. The batch twin of quantized_rerank_topk
+    coarse scan over block pairs, exact float re-rank of the R
+    survivors per query. The batch twin of quantized_rerank_topk
     (same quantization, same coarse score, same -2.0 zero-vector
     sentinel), and the only honest shape on isotropic embeddings,
     where no partition-pruning index beats a scan — so the scan is
     made cheap (1/8th the bytes, vectorized integer matmuls) instead
     of pretending to prune.
 
-    Shape: vectors land in ceil(n/block_rows) hash blocks; each block
-    is packed ONCE into (ids, flattened int8 matrix, norms) — sorted
-    by id, so the pack is deterministic. Query blocks replicate over
-    corpus blocks via an explode(sequence)-equi-join — a plain
-    shuffled join, NEVER a CartesianProduct or an unbounded BNLJ, so
-    AQE/skew machinery applies and plan_lint stays clean. Each
-    block-pair task runs ONE numpy int matmul (Arrow-batched
-    mapInPandas; per-pair expression folds would pay ~100x per pair)
-    and keeps its per-query top-R by (coarse desc, id) — the global
-    top-R per query is a window merge of those partials (correct:
-    global top-R is a subset of the union of per-block top-Rs). The
-    exact re-rank then touches n x R pairs, not n^2.
+    Shape: vectors land in hash blocks (quantized_block_pairs); each
+    unordered block pair is one grouped-Arrow call running ONE numpy
+    matmul, and emits each side's per-query top-R by (coarse desc, id)
+    against the other side (rows and transpose of the same matrix) —
+    the global top-R per query is a window merge of those partials
+    (correct: global top-R is a subset of the union of per-block
+    top-Rs). The exact re-rank then touches n x R pairs, not n^2.
 
-    Scale: data moved = packed query blocks replicated B_c times
-    (n x dim bytes x n/block_rows) — the standard block-product
+    Scale: data moved = each vector replicated once per block
+    (n x dim bytes x n_blocks) — the standard block-product
     replication; compute is the unavoidable O(n^2 dim / 8) coarse
-    bytes. Integer dots are exact, so coarse ordering (and therefore
-    the survivor set) is deterministic; with r_candidates >= n the
-    result equals cosine_topk_bruteforce row-for-row (pinned).
+    bytes, once per unordered block pair. Integer dots are exact, so
+    coarse ordering (and therefore the survivor set) is deterministic;
+    with r_candidates >= n the result equals cosine_topk_bruteforce
+    row-for-row (pinned).
 
     Returns (qid, nid, cos, rn) — the knn_join_cells contract.
     """
@@ -1387,75 +1323,52 @@ def knn_join_quantized(
         return emb.sparkSession.createDataFrame(
             [], "qid long, nid long, cos double, rn int"
         )
-    pairs = quantized_block_pairs(emb, n, block_rows, id_col, vec_col, dim=dim)
+    pairs = quantized_block_pairs(emb, n, id_col, vec_col)
 
     r_cand = r_candidates
 
-    def coarse_blocks(batches):
-        # mapInArrow (r14): zero-copy slices of the packed list cells
-        # instead of per-element pandas object conversion — see
-        # similarity_pair_histogram's kernel. Math unchanged.
+    def coarse_blocks(key, table):
         import numpy as np
         import pyarrow as pa
 
-        for b in batches:
-            cols = {
-                name: _arrow_list_rows(b, name)
-                for name in ("qids", "qmat", "qnorms", "nids", "nmat", "nnorms")
-            }
-            out_q, out_n, out_c = [], [], []
-            for i in range(b.num_rows):
-                qids = cols["qids"](i)
-                nids = cols["nids"](i)
-                if not len(qids) or not len(nids):
-                    continue
-                d = len(cols["qmat"](i)) // len(qids)
-                # float64 matmul of int8-valued matrices is EXACT (every
-                # product <= 127^2, every partial sum an integer < 2^53)
-                # and runs on BLAS — measured 4.6x over the int64 path,
-                # which numpy executes without BLAS
-                q = cols["qmat"](i).astype(np.float64).reshape(len(qids), d)
-                m = cols["nmat"](i).astype(np.float64).reshape(len(nids), d)
-                den = np.outer(
-                    cols["qnorms"](i).astype(np.float64),
-                    cols["nnorms"](i).astype(np.float64),
-                )
-                s = q @ m.T
-                with np.errstate(divide="ignore", invalid="ignore"):
-                    c = np.where(den > 0, s / den, -2.0)
-                r = min(r_cand, len(nids))
-                nn = len(nids)
-                # per-row value cutoff at the (r+1)-th largest keeps
-                # every boundary TIE plus self-drop headroom, so the
-                # small lexsort below reproduces the full-sort order
-                # (coarse desc, nid asc) exactly; np.partition is the
-                # vectorized O(n)-per-row part
-                if nn > r + 1:
-                    kth = np.partition(c, nn - r - 1, axis=1)[
-                        :, nn - r - 1, None
-                    ]
-                else:
-                    kth = np.full((len(qids), 1), -np.inf)
-                for qi in range(len(qids)):
-                    cand = np.nonzero(c[qi] >= kth[qi])[0]
-                    order = cand[np.lexsort((nids[cand], -c[qi][cand]))]
-                    keep = order[nids[order] != qids[qi]][:r]
-                    out_q.append(np.full(len(keep), qids[qi]))
-                    out_n.append(nids[keep])
-                    out_c.append(c[qi][keep])
-            if out_q:
-                yield pa.RecordBatch.from_arrays(
-                    [
-                        pa.array(np.concatenate(out_q), type=pa.int64()),
-                        pa.array(np.concatenate(out_n), type=pa.int64()),
-                        pa.array(
-                            np.concatenate(out_c), type=pa.float64()
-                        ),
-                    ],
-                    names=["qid", "nid", "coarse"],
-                )
+        qids, nids, c, same = _block_cosines(key, table)
+        out_q = [np.zeros(0, dtype=np.int64)]
+        out_n = [np.zeros(0, dtype=np.int64)]
+        out_c = [np.zeros(0, dtype=np.float64)]
 
-    partials = pairs.mapInArrow(
+        def top_r(c, qids, nids):
+            r = min(r_cand, len(nids))
+            nn = len(nids)
+            # per-row value cutoff at the (r+1)-th largest keeps every
+            # boundary TIE plus self-drop headroom, so the small lexsort
+            # below reproduces the full-sort order (coarse desc, nid
+            # asc) exactly; np.partition is the vectorized O(n)-per-row
+            # part
+            if nn > r + 1:
+                kth = np.partition(c, nn - r - 1, axis=1)[:, nn - r - 1, None]
+            else:
+                kth = np.full((len(qids), 1), -np.inf)
+            for qi in range(len(qids)):
+                cand = np.nonzero(c[qi] >= kth[qi])[0]
+                order = cand[np.lexsort((nids[cand], -c[qi][cand]))]
+                keep = order[nids[order] != qids[qi]][:r]
+                out_q.append(np.full(len(keep), qids[qi]))
+                out_n.append(nids[keep])
+                out_c.append(c[qi][keep])
+
+        if len(qids) and len(nids):
+            top_r(c, qids, nids)
+            if not same:
+                top_r(c.T, nids, qids)
+        return pa.table(
+            {
+                "qid": np.concatenate(out_q),
+                "nid": np.concatenate(out_n),
+                "coarse": np.concatenate(out_c),
+            }
+        )
+
+    partials = pairs.groupBy("qblk", "tblk").applyInArrow(
         coarse_blocks, "qid long, nid long, coarse double"
     )
     wc = Window.partitionBy("qid").orderBy(F.col("coarse").desc(), F.col("nid"))
@@ -1498,7 +1411,6 @@ SIM_HIST_BUCKETS = 20
 
 def similarity_pair_histogram(
     emb: DataFrame,
-    block_rows: int | None = None,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     n_rows: int | None = None,
@@ -1508,7 +1420,7 @@ def similarity_pair_histogram(
     (where does the duplicate mode sit? how fat is the 0.9+ tail?).
 
     The O(n^2) pair set is never materialized as rows: each
-    quantized_block_pairs task computes its coarse matrix (the exact
+    quantized_block_pairs group computes its coarse matrix (the exact
     same BLAS-exact int8 cosine as knn_join_quantized), buckets it,
     and emits AT MOST 20 (bucket, count) partials — compute is
     quadratic, data movement is O(blocks x buckets). This is also the
@@ -1519,10 +1431,11 @@ def similarity_pair_histogram(
 
     Bucketing: bucket = min(floor((coarse + 1) * 10), 19) over
     [-1, 1] (exact duplicates land in bucket 19 via the clamp).
-    Unordered pairs counted once (id_a < id_b); zero-norm vectors
-    excluded (no defined cosine). Determinism: coarse is an exact
-    integer ratio computed identically on both engines, and +1/*10/
-    floor are identically-rounded IEEE ops.
+    Unordered pairs counted once (id_a < id_b within a block; every
+    cross-block pair meets in exactly one group); zero-norm and NULL
+    vectors excluded (no defined cosine). Determinism: coarse is an
+    exact integer ratio computed identically on both engines, and
+    +1/*10/floor are identically-rounded IEEE ops.
 
     Returns (bucket int, cos_lo double, pair_count bigint).
     """
@@ -1532,77 +1445,30 @@ def similarity_pair_histogram(
         return spark.createDataFrame(
             [], "bucket int, cos_lo double, pair_count bigint"
         )
-    pairs = quantized_block_pairs(
-        emb, n, block_rows, id_col, vec_col, triangle=True
-    )
+    pairs = quantized_block_pairs(emb, n, id_col, vec_col)
     n_buckets = SIM_HIST_BUCKETS
 
-    def hist_blocks(batches):
-        # mapInArrow (r14): the packed rows carry ~100k-element list
-        # cells; the previous mapInPandas converted every element
-        # through a Python object on the way to np.asarray. Arrow list
-        # columns are one flat buffer + offsets, so each block's matrix
-        # is a zero-copy numpy slice. Math unchanged — bit-identical.
-        #
-        # r15: triangle fan — the pair stage now emits qblk <= nb only
-        # (the full ordered fan ran every block product twice and the
-        # qids < nids mask threw half away). Same-block rows keep the
-        # id-order mask; cross-block rows count every pair, which each
-        # occurs in exactly one (qblk, nb) combination. Bucket counts
-        # are bit-identical (coarse cosine is symmetric).
+    def hist_blocks(key, table):
         import numpy as np
         import pyarrow as pa
 
-        for b in batches:
-            cols = {
-                name: _arrow_list_rows(b, name)
-                for name in ("qids", "qmat", "qnorms", "nids", "nmat", "nnorms")
-            }
-            same = (
-                b.column(b.schema.get_field_index("qblk")).to_numpy(
-                    zero_copy_only=False
-                )
-                == b.column(b.schema.get_field_index("nb")).to_numpy(
-                    zero_copy_only=False
-                )
-            )
-            acc = np.zeros(n_buckets, dtype=np.int64)
-            for i in range(b.num_rows):
-                qids = cols["qids"](i)
-                nids = cols["nids"](i)
-                if not len(qids) or not len(nids):
-                    continue
-                d = len(cols["qmat"](i)) // len(qids)
-                q = cols["qmat"](i).astype(np.float64).reshape(len(qids), d)
-                m = cols["nmat"](i).astype(np.float64).reshape(len(nids), d)
-                den = np.outer(
-                    cols["qnorms"](i).astype(np.float64),
-                    cols["nnorms"](i).astype(np.float64),
-                )
-                # each unordered pair once, zero-norm pairs excluded
-                mask = den > 0
-                if same[i]:
-                    mask &= qids[:, None] < nids[None, :]
-                if not mask.any():
-                    continue
-                c = (q @ m.T)[mask] / den[mask]
-                bkt = np.minimum(
-                    np.floor((c + 1.0) * 10.0).astype(np.int64),
-                    n_buckets - 1,
-                )
-                acc += np.bincount(bkt, minlength=n_buckets)
-            nz = np.nonzero(acc)[0]
-            if len(nz):
-                yield pa.RecordBatch.from_arrays(
-                    [
-                        pa.array(nz.astype(np.int32), type=pa.int32()),
-                        pa.array(acc[nz], type=pa.int64()),
-                    ],
-                    names=["bucket", "cnt"],
-                )
+        qids, nids, c, same = _block_cosines(key, table)
+        # each unordered pair once, zero-norm pairs excluded
+        mask = c != -2.0
+        if same:
+            mask &= qids[:, None] < nids[None, :]
+        bkt = np.minimum(
+            np.floor((c[mask] + 1.0) * 10.0).astype(np.int64), n_buckets - 1
+        )
+        acc = np.bincount(bkt, minlength=n_buckets)
+        nz = np.nonzero(acc)[0]
+        return pa.table(
+            {"bucket": nz.astype(np.int32), "cnt": acc[nz].astype(np.int64)}
+        )
 
     return (
-        pairs.mapInArrow(hist_blocks, "bucket int, cnt bigint")
+        pairs.groupBy("qblk", "tblk")
+        .applyInArrow(hist_blocks, "bucket int, cnt bigint")
         .groupBy("bucket")
         .agg(F.sum("cnt").alias("pair_count"))
         .select(
@@ -2405,9 +2271,9 @@ def auto_graph_cells(n: int) -> int:
 
 # Sub-block grain for the graph pair kernel: a cell with more members
 # than this splits into ceil(m/B) hash sub-blocks, so a hot cell never
-# serializes through one kernel task — per-row work is bounded by
-# B² x n_sub gathers and two B-row code payloads (the
-# MINHASH_PAIR_BLOCK_ROWS envelope applied to IVF cells).
+# serializes through one kernel call — per-group work is bounded by
+# B² x n_sub gathers (the MINHASH_PAIR_BLOCK_ROWS envelope applied to
+# IVF cells).
 GRAPH_PAIR_BLOCK_ROWS = 1024
 
 
@@ -2432,148 +2298,82 @@ def _collect_sdc(cb: list[list[list[int]]]):
     return sdc
 
 
-def _graph_pair_blocks(
-    node: DataFrame, block_rows: int = GRAPH_PAIR_BLOCK_ROWS
-) -> DataFrame:
-    """Packed sub-blocked cell pairs feeding the graph pair kernel:
-    node = (aid, cid, codes array<int>, n_sub codes per row); one row
-    per (cid, qblk, tblk >= qblk) with id-sorted member ids and
-    flattened code matrices for both sides (the _minhash_pair_blocks
-    shape without bands — triangle fan, the kernel emits both pair
-    orientations from one distance matrix). Singleton cells are
-    dropped by the size prefilter (no same-cell pair exists)."""
-    sz = (
-        node.groupBy("cid")
-        .agg(F.count(F.lit(1)).alias("__n"))
-        .where(F.col("__n") >= 2)
-        .select(
-            "cid",
-            F.ceil(F.col("__n") / F.lit(block_rows)).cast("int").alias("nblk"),
-        )
-    )
-    joined = node.join(sz, "cid").select(
-        "cid", "aid", "codes",
-        F.pmod(F.xxhash64(F.col("aid")), F.col("nblk")).cast("int").alias("blk"),
-        "nblk",
-    )
-    packed = (
-        joined.groupBy("cid", "blk")
-        .agg(
-            F.sort_array(F.collect_list(F.struct("aid", "codes"))).alias("rows"),
-            F.first("nblk").alias("nblk"),
-        )
-        .select(
-            "cid", "blk", "nblk",
-            F.transform("rows", lambda r: r["aid"]).alias("ids"),
-            F.flatten(F.transform("rows", lambda r: r["codes"])).alias("mat"),
-        )
-    )
-    qside = packed.select(
-        "cid",
-        F.col("blk").alias("qblk"),
-        F.col("ids").alias("qids"),
-        F.col("mat").alias("qmat"),
-        F.explode(F.sequence("blk", F.col("nblk") - 1)).alias("tblk"),
-    )
-    nside = packed.select(
-        "cid", F.col("blk").alias("tblk"),
-        F.col("ids").alias("nids"), F.col("mat").alias("nmat"),
-    )
-    # explicit width, 4x cores: block-pair rows carry uneven quadratic
-    # pair weights — finer bins keep heavy rows from clumping (the
-    # _minhash_pair_blocks sizing note); AQE would otherwise coalesce
-    # the small exchange to one partition and serialize the kernel.
-    n_parts = 4 * node.sparkSession.sparkContext.defaultParallelism
-    return qside.repartition(n_parts, "cid", "tblk").join(
-        nside, ["cid", "tblk"]
-    )
-
-
-def _make_graph_pair_kernel(sdc, k: int, n_sub: int):
-    """mapInArrow kernel over packed (cell, sub-block, sub-block)
-    pairs: per block pair ONE gather-sum distance matrix
-    D[a, b] = Σ_s sdc[s, codes_a[s], codes_b[s]] (exact int64 — the
-    broadcast-SDC join + groupBy sum it replaces, per pair), then a
-    per-aid PARTIAL top-k with a tie-preserving value cutoff: every
-    candidate with d <= the k-th smallest of that row survives, so the
-    downstream window merge (d asc, bid asc) reproduces the exact
-    global top-k per aid. Same-block pairs mask the diagonal
-    (aid != bid — blocks hash-partition ids, so cross-block aid == bid
-    is impossible); cross-block pairs emit BOTH orientations from one
-    matrix (rows and transpose), which is why the fan is triangular.
-    Rows with NULL codes never reach the kernel (filtered upstream,
-    matching the exploded-encode inner join's drop); null code
-    ELEMENTS cannot be produced by the encode argmin — the kernel
+def _make_graph_pair_kernel(sdc, k: int):
+    """Grouped Arrow kernel over one (cell, sub-block, sub-block) pair:
+    ONE gather-sum distance matrix D[a, b] = Σ_s sdc[s, codes_a[s],
+    codes_b[s]] (exact int64 — the broadcast-SDC join + groupBy sum it
+    replaces, per pair), then a per-aid PARTIAL top-k with a
+    tie-preserving value cutoff: every candidate with d <= the k-th
+    smallest of that row survives, so the downstream window merge
+    (d asc, bid asc) reproduces the exact global top-k per aid.
+    Same-block groups mask the diagonal (aid != bid — sub-blocks
+    hash-partition ids, so cross-block aid == bid is impossible);
+    cross-block groups emit BOTH orientations from one matrix (rows and
+    transpose). Rows with NULL codes never reach the kernel (filtered
+    upstream, matching the exploded-encode inner join's drop); null
+    code ELEMENTS cannot be produced by the encode argmin — the kernel
     raises rather than guess if it ever sees one."""
     import numpy as np
 
     sdc = np.ascontiguousarray(sdc, dtype=np.int64)
+    n_sub = sdc.shape[0]
     sentinel = np.iinfo(np.int64).max // 4
 
-    def kernel(batches):
+    def kernel(key, table):
         import numpy as np
         import pyarrow as pa
+        import pyarrow.compute as pc
 
-        def partials(D, rids, cids, out):
-            m, n = D.shape
-            kk = min(k, n)
-            if n > kk:
+        from etl_dagster_service_crawler_spark.operators.block_pairs import (
+            list_matrix,
+            sides,
+        )
+
+        out = (
+            [np.zeros(0, dtype=np.int64)],
+            [np.zeros(0, dtype=np.int64)],
+            [np.zeros(0, dtype=np.int64)],
+        )
+
+        def partials(D, rids, cids):
+            kk = min(k, D.shape[1])
+            if D.shape[1] > kk:
                 kth = np.partition(D, kk - 1, axis=1)[:, kk - 1, None]
             else:
                 kth = D.max(axis=1, keepdims=True)
-            keep = (D <= kth) & (D < sentinel)
-            ia, ib = np.nonzero(keep)
-            if len(ia):
-                out[0].append(rids[ia])
-                out[1].append(cids[ib])
-                out[2].append(D[ia, ib])
+            ia, ib = np.nonzero((D <= kth) & (D < sentinel))
+            out[0].append(rids[ia])
+            out[1].append(cids[ib])
+            out[2].append(D[ia, ib])
 
-        for b in batches:
-            names = ("qids", "qmat", "nids", "nmat")
-            get = {name: _arrow_list_rows(b, name) for name in names}
-            for nm in ("qmat", "nmat"):
-                col = b.column(b.schema.get_field_index(nm))
-                if col.values.null_count:
-                    raise ValueError(
-                        "graph pair kernel: NULL code element in packed "
-                        "block — encode cannot produce this; refusing to "
-                        "approximate the SDC join's drop semantics"
-                    )
-            same = (
-                b.column(b.schema.get_field_index("qblk")).to_numpy(
-                    zero_copy_only=False
-                )
-                == b.column(b.schema.get_field_index("tblk")).to_numpy(
-                    zero_copy_only=False
-                )
+        if pc.list_flatten(table.column("codes")).null_count:
+            raise ValueError(
+                "graph pair kernel: NULL code element in a block — encode "
+                "cannot produce this; refusing to approximate the SDC "
+                "join's drop semantics"
             )
-            out = ([], [], [])
-            for i in range(b.num_rows):
-                qids = get["qids"](i)
-                nids = get["nids"](i)
-                mq, mn = len(qids), len(nids)
-                if not mq or not mn:
-                    continue
-                A = get["qmat"](i).reshape(mq, n_sub)
-                B = get["nmat"](i).reshape(mn, n_sub)
-                D = sdc[0][A[:, 0][:, None], B[:, 0][None, :]].copy()
-                for s in range(1, n_sub):
-                    D += sdc[s][A[:, s][:, None], B[:, s][None, :]]
-                if same[i]:
-                    np.fill_diagonal(D, sentinel)
-                    partials(D, qids, nids, out)
-                else:
-                    partials(D, qids, nids, out)
-                    partials(D.T, nids, qids, out)
-            if out[0]:
-                yield pa.RecordBatch.from_arrays(
-                    [
-                        pa.array(np.concatenate(out[0]), type=pa.int64()),
-                        pa.array(np.concatenate(out[1]), type=pa.int64()),
-                        pa.array(np.concatenate(out[2]), type=pa.int64()),
-                    ],
-                    names=["aid", "bid", "d"],
-                )
+        q, n, same = sides(key, table)
+        ids = table.column("aid").to_numpy()
+        codes = list_matrix(table, "codes")
+        qids, nids = ids[q], ids[n]
+        if len(qids) and len(nids):
+            A, B = codes[q], codes[n]
+            D = sdc[0][A[:, 0][:, None], B[:, 0][None, :]].copy()
+            for s in range(1, n_sub):
+                D += sdc[s][A[:, s][:, None], B[:, s][None, :]]
+            if same:
+                np.fill_diagonal(D, sentinel)
+                partials(D, qids, nids)
+            else:
+                partials(D, qids, nids)
+                partials(D.T, nids, qids)
+        return pa.table(
+            {
+                "aid": np.concatenate(out[0]),
+                "bid": np.concatenate(out[1]),
+                "d": np.concatenate(out[2]),
+            }
+        )
 
     return kernel
 
@@ -2595,10 +2395,9 @@ def knn_graph_mutual(
     cells, int8 PQ codes, and the broadcast SDC table, so pair
     distances are exact integers and the whole graph value-hash
     oracle-checks. Scale shape: after encoding, the quadratic stage
-    joins CODES with CODES on (cell, subspace) — rows of five small
-    ints — and map-side-combines the per-pair sum; the corpus vectors
-    are read exactly once (encode + assign). Returns (src, dst, d)
-    with src < dst, one row per mutual edge.
+    compares CODES with CODES inside each cell's sub-block pairs
+    (block_pair_fan) and emits only per-aid partial top-k rows.
+    Returns (src, dst, d) with src < dst, one row per mutual edge.
 
     ``n_centroids=None`` (the default) sizes the cells to ~√n — the
     measured rule from SCALE.md 'Graph cell sizing': a fixed cell count
@@ -2613,8 +2412,8 @@ def knn_graph_mutual(
     asg = assign_cells(emb, cent, id_col, vec_col, dim=dim).select(
         F.col(id_col).alias("aid"), "cid"
     )
-    # r15: the pair stage is a cell-blocked Arrow kernel — one
-    # gather-sum distance matrix per (cell sub-block, sub-block) pair
+    # the pair stage is a cell-blocked grouped Arrow kernel — one
+    # gather-sum distance matrix per (cell sub-block, sub-block) group
     # plus a per-aid tie-preserving partial top-k, replacing the
     # (cid, sub_id) row join x n_sub, the broadcast SDC join, the
     # pair-sized groupBy sum AND most of the top-k window's input
@@ -2640,20 +2439,24 @@ def knn_graph_mutual(
         .select(F.col(id_col).alias("aid"), "codes")
         .join(asg, "aid")
     )
-    kernel = _make_graph_pair_kernel(_collect_sdc(cb), k, n_sub)
     # block grain read at call time (module global) so tests can pin
     # sub-blocked == whole-cell equality by monkeypatching it
-    partial = _graph_pair_blocks(node, GRAPH_PAIR_BLOCK_ROWS).mapInArrow(
-        kernel, "aid bigint, bid bigint, d bigint"
+    partial = (
+        block_pair_fan(node, ["cid"], "aid", block_rows=GRAPH_PAIR_BLOCK_ROWS)
+        .groupBy("cid", "qblk", "tblk")
+        .applyInArrow(
+            _make_graph_pair_kernel(_collect_sdc(cb), k),
+            "aid bigint, bid bigint, d bigint",
+        )
     )
     wk = Window.partitionBy("aid").orderBy(F.col("d"), F.col("bid"))
     # topk materialized eagerly: the mutuality join consumes it twice
     # (fwd/rev) with DIFFERENT column prunings, so the pre-window
     # exchanges are not byte-identical and ReusedExchange does not fire
-    # — without this the whole pack+kernel subtree compiles and runs
+    # — without this the whole fan+kernel subtree compiles and runs
     # once per direction (verified in plans/r15/knn_graph_mutual_*:
-    # 2 MapInArrow nodes without the checkpoint). n x k rows, within
-    # this invocation only; blocks are freed when the frame is GC'd.
+    # 2 kernel nodes without the checkpoint). n x k rows, within this
+    # invocation only; blocks are freed when the frame is GC'd.
     topk = (
         partial.withColumn("rn", F.row_number().over(wk))
         .where(F.col("rn") <= k)

@@ -319,33 +319,25 @@ def _dup_window_frames(d):
     (doc_id, s)). A change to the window rule lands HERE or the
     statistic and the rewrite silently diverge.
 
-    The corpus is windowed+md5'd ONCE (r14: the previous shape re-ran
-    the full window+md5 projection per consumer — 2 x 0.78 s at
-    sf0.1): the occurrence triples are localCheckpoint(eager)ed and
-    both the stats aggregate and the occurrence join read the
-    materialized frame. (An explicit whash repartition was tried
-    first: the planner broadcast the stats side and compiled TWO full
-    md5 subtrees anyway — ReusedExchange needs byte-identical exchange
-    children and the join's pushed predicates break that, the same
-    trap quantized_block_pairs hit.)
+    The corpus is windowed and md5'd once, and one exchange on whash
+    feeds three window aggregates over Window.partitionBy('whash') —
+    min(struct(doc_id, s)), min(doc_id) and max(doc_id) — so every
+    occurrence row learns whether its hash is duplicated and whether it
+    is the first occurrence, with no join back to a stats frame.
 
-    r15 skew hardening (VERDICT r14 item 4): the r14 shape collected
-    EVERY occurrence of a duplicated hash into one
-    sort_array(collect_list) row — a boilerplate window shared by
-    millions of docs at 100 TB becomes a multi-million-element array
-    in a single aggregation buffer, then a single-task explode (the
-    guide §2.5 hot-key failure the pre-r14 shape didn't have). The
-    stats aggregate now carries only min(struct)/min/max — O(1) per
-    hash however hot — and occurrences flow back per-ROW through an
-    equi-join on whash (broadcast when the dup-hash set is small;
-    shuffled at scale, where AQE skew-join splits a hot hash's
-    partition — machinery that exists for joins but not for the
-    aggregation the old collect_list was). The per-doc regroup
-    downstream bounds every collected array by the DOC's own window
-    count. Duplicated ≡
-    min(doc_id) != max(doc_id) ≡ countDistinct >= 2; first ≡
-    min(struct(doc_id, s)) ≡ head of the sorted occurrence list —
-    identical rows (oracle-pinned on both consumers)."""
+    Skew: the r14 shape collected EVERY occurrence of a duplicated hash
+    into one sort_array(collect_list) row — a boilerplate window shared
+    by millions of docs at 100 TB became a multi-million-element array
+    in a single aggregation buffer. The window form keeps no such
+    array: WindowExec buffers one hash's rows and spills them past its
+    threshold, so memory stays bounded. It does NOT spread a hot hash:
+    AQE cannot split a window exchange, so all occurrences of one hash
+    still run in one task — a residual single-task straggler on
+    boilerplate-heavy corpora. The per-doc regroup downstream bounds
+    every collected array by the DOC's own window count.
+    Duplicated ≡ min(doc_id) != max(doc_id) ≡ countDistinct >= 2;
+    first ≡ min(struct(doc_id, s)) ≡ head of the sorted occurrence
+    list — identical rows (oracle-pinned on both consumers)."""
     w = DUP_SPAN_WINDOW
     dt = d.select("doc_id", tokens_ws(F.col("text")).alias("t"))
     toks = F.col("t")

@@ -99,10 +99,10 @@ def test_minhash_firstband_pairs_equal_naive_distinct(spark, sf_dir):
     assert got == want and len(want) > 0
 
 
-def test_minhash_subblocked_hot_bucket_matches_whole_bucket(spark):
+def test_minhash_subblocked_hot_bucket_matches_whole_bucket(spark, monkeypatch):
     """The r15 sub-blocked pair kernel must emit the identical pair set
-    when a bucket is split across sub-blocks (block_rows smaller than
-    the hot bucket) as when every bucket fits one block — including
+    when a bucket is split across sub-blocks (MINHASH_PAIR_BLOCK_ROWS
+    smaller than the hot bucket) as when every bucket fits one block — including
     cross-block id orientation, first-matching-band masking, and the
     est values. A shared template puts many docs into the same band
     buckets (the hot-bucket shape), unique docs stay singletons."""
@@ -110,15 +110,13 @@ def test_minhash_subblocked_hot_bucket_matches_whole_bucket(spark):
     rows = [(i, tmpl) for i in range(60)]
     rows += [(1000 + i, f"unique doc {i} words tail {i * 7} end") for i in range(20)]
     df = spark.createDataFrame(rows, "doc_id bigint, text string")
-    from etl_dagster_service_crawler_spark.operators.dedup import (
-        minhash_dedup_pairs,
-    )
+    import etl_dagster_service_crawler_spark.operators.dedup as dd
 
-    whole = minhash_dedup_pairs(df, "doc_id", "text", threshold=0.5,
-                                block_rows=4096)
-    split = minhash_dedup_pairs(df, "doc_id", "text", threshold=0.5,
-                                block_rows=8)
+    monkeypatch.setattr(dd, "MINHASH_PAIR_BLOCK_ROWS", 4096)
+    whole = dd.minhash_dedup_pairs(df, "doc_id", "text", threshold=0.5)
     got_w = {(r.id_a, r.id_b, r.est_jaccard) for r in whole.collect()}
+    monkeypatch.setattr(dd, "MINHASH_PAIR_BLOCK_ROWS", 8)
+    split = dd.minhash_dedup_pairs(df, "doc_id", "text", threshold=0.5)
     got_s = {(r.id_a, r.id_b, r.est_jaccard) for r in split.collect()}
     # 60 identical docs -> the full 60*59/2 clique at est 1.0 must be
     # present exactly once each (as a subset: the "unique" docs share
@@ -562,35 +560,6 @@ def test_cc_merges_chains_one_hop_cannot(spark):
     lab = {r["doc_id"]: r["label"] for r in minhash_cluster_cc(df, "doc_id", "text").collect()}
     assert lab[1] == lab[2] == lab[3]
     assert lab[4] != lab[1]
-
-
-def test_cc_hop_batching_output_identical(spark, monkeypatch):
-    """cc_label_propagation batches CC_HOPS_PER_JOB propagation rounds
-    per checkpointed job; min-label propagation is monotone so the
-    fixpoint is identical at any batch size. Pin that: a 3-chain plus
-    an isolated doc must label identically at 1-hop and 2-hop batching
-    (default is 1 — the r15 measured negative result — but the batch
-    machinery must stay correct for the cluster-master tradeoff)."""
-    from pyspark.sql import Row
-
-    import etl_dagster_service_crawler_spark.operators.dedup as dd
-
-    mid = " ".join(f"w{i}" for i in range(30))
-    a = " ".join(f"w{i}" for i in range(0, 29)) + " onlyA"
-    c = " ".join(f"w{i}" for i in range(1, 30)) + " onlyC"
-    other = "entirely different text about benchmarks and clusters"
-    df = spark.createDataFrame(
-        [Row(doc_id=1, text=a), Row(doc_id=2, text=mid),
-         Row(doc_id=3, text=c), Row(doc_id=4, text=other)]
-    )
-    outs = []
-    for hops in (1, 2):
-        monkeypatch.setattr(dd, "CC_HOPS_PER_JOB", hops)
-        outs.append({
-            (r["doc_id"], r["label"], r["is_dup"])
-            for r in dd.minhash_cluster_cc(df, "doc_id", "text").collect()
-        })
-    assert outs[0] == outs[1] and len(outs[0]) == 4
 
 
 def test_image_decode_and_resize_with_pillow():
@@ -1043,19 +1012,47 @@ def test_similarity_pair_histogram_totals_and_duplicate_mode(spark, sf_dir, tmp_
     assert sum(got.values()) == 200 * 199 // 2
 
 
+def test_similarity_pair_histogram_skips_null_embeddings(spark):
+    """A NULL embedding has no cosine: it must drop out of the pair
+    histogram like a zero vector, leaving every other pair's bucket
+    unchanged (it once zeroed its whole block's cosines)."""
+    import random
+
+    from etl_dagster_service_crawler_spark.operators.similarity import (
+        similarity_pair_histogram,
+    )
+
+    rng = random.Random(5)
+    rows = [(i, [rng.uniform(-1, 1) for _ in range(8)]) for i in range(30)]
+    schema = "vec_id bigint, embedding array<float>"
+
+    def hist(rs):
+        return sorted(
+            tuple(r)
+            for r in similarity_pair_histogram(
+                spark.createDataFrame(rs, schema)
+            ).collect()
+        )
+
+    assert hist(rows + [(100, None)]) == hist(rows)
+
+
 def test_quantize_rows_kernel_replays_jvm_edge_semantics(spark):
     """The r15 Arrow quantize kernel must replay the JVM expression
     chain exactly, including the edges: NULL embedding -> NULL q8/n8;
     empty array -> empty q8, n8 = 0.0; a NULL element -> NULL q8
     element and a NULL-poisoned n8 fold; zero vector -> all-zero q8,
-    n8 = 0.0. Compare kernel output row-for-row against the HOF
-    expression chain it replaced."""
+    n8 = 0.0; NaN / +Inf / -Inf elements (alone, mixed with finite
+    values, or next to a NULL) -> whatever the JVM twin gives. Compare
+    kernel output row-for-row against the JVM twin _q8_expr."""
     from pyspark.sql import functions as F
 
     from etl_dagster_service_crawler_spark.operators.similarity import (
+        _q8_expr,
         _quantize_rows_kernel,
     )
 
+    nan, inf = float("nan"), float("inf")
     rows = [
         (1, [1.0, -2.0, 0.5]),
         (2, None),
@@ -1063,6 +1060,12 @@ def test_quantize_rows_kernel_replays_jvm_edge_semantics(spark):
         (4, [0.0, 0.0]),
         (5, [3.5, None, -1.25]),
         (6, [127.0]),
+        (7, [1.0, nan, -2.0]),
+        (8, [0.5, inf, -3.0]),
+        (9, [-inf, 2.0]),
+        (10, [nan]),
+        (11, [inf, None, 1.0]),
+        (12, [2.0, 4.0]),
     ]
     e = spark.createDataFrame(rows, "vec_id bigint, embedding array<float>")
     got = {
@@ -1073,22 +1076,13 @@ def test_quantize_rows_kernel_replays_jvm_edge_semantics(spark):
         .mapInArrow(_quantize_rows_kernel, "id bigint, q8 array<int>, n8 double")
         .collect()
     }
-    absmax = F.aggregate(
-        F.col("embedding"), F.lit(0.0),
-        lambda acc, x: F.greatest(acc, F.abs(x.cast("double"))),
-    )
-    scale = F.when(absmax > 0, F.lit(127.0) / absmax).otherwise(F.lit(0.0))
-    q8 = F.transform(
-        F.col("embedding"),
-        lambda x: F.floor(x.cast("double") * scale + 0.5).cast("int"),
-    )
     isq = F.aggregate(
         F.col("q8"), F.lit(0).cast("bigint"),
         lambda acc, x: acc + (x * x).cast("bigint"),
     )
     want = {
         r["vec_id"]: (r["q8"], r["n8"])
-        for r in e.select(F.col("vec_id"), q8.alias("q8"))
+        for r in e.select(F.col("vec_id"), _q8_expr("embedding").alias("q8"))
         .withColumn("n8", F.sqrt(isq.cast("double")))
         .collect()
     }
@@ -1096,6 +1090,10 @@ def test_quantize_rows_kernel_replays_jvm_edge_semantics(spark):
     assert got[2] == (None, None)
     assert got[3] == ([], 0.0)
     assert got[5][0][1] is None and got[5][1] is None
+    # the JVM twin's non-finite output, recorded as literals
+    assert got[7] == ([0, 0, 0], 0.0) and got[8] == ([0, 0, 0], 0.0)
+    assert got[9] == ([0, 0], 0.0) and got[10] == ([0], 0.0)
+    assert got[11] == ([0, None, 0], None)
 
 
 def test_pq_encode_complete_codes_in_range(spark, sf_dir):

@@ -905,3 +905,46 @@ def test_decontaminate_embedding_single_corpus_scan(spark, sf_dir):
     plan = _plan(q_decontaminate_embedding(spark, sf_dir))
     assert "BroadcastNestedLoopJoin" in plan  # the 8-probe broadcast
     assert "CartesianProduct" not in plan
+
+
+def test_block_pair_stages_are_one_grouped_arrow_map(spark, sf_dir, monkeypatch):
+    """Every quadratic pair stage (LSH pairs, kNN-graph partial top-k,
+    pair histogram, quantized coarse top-R) runs as ONE grouped Arrow
+    map over the block-pair fan: no collect_list pack and no pack
+    self-join, so the fan is compiled and run once."""
+    from etl_dagster_service_crawler_spark.operators.similarity import (
+        knn_join_quantized,
+    )
+    from etl_dagster_service_crawler_spark.workloads.llm import (
+        q_dedup_minhash,
+        q_knn_graph_mutual,
+        q_similarity_pair_histogram,
+    )
+
+    # knn_graph_mutual checkpoints its top-k, so its pair stage is
+    # only visible as the frame handed to localCheckpoint
+    checkpointed = []
+    frame_cls = type(spark.range(1))
+    real = frame_cls.localCheckpoint
+
+    def spy(self, *args, **kwargs):
+        checkpointed.append(_plan(self))
+        return real(self, *args, **kwargs)
+
+    monkeypatch.setattr(frame_cls, "localCheckpoint", spy)
+    q_knn_graph_mutual(spark, sf_dir)
+    graph = [p for p in checkpointed if "FlatMapGroupsInArrow" in p]
+    assert len(graph) == 1
+    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+    plans = {
+        "dedup_minhash_lsh": _plan(q_dedup_minhash(spark, sf_dir)),
+        "knn_graph_mutual": graph[0],
+        "similarity_pair_histogram": _plan(
+            q_similarity_pair_histogram(spark, sf_dir)
+        ),
+        "knn_join_quantized": _plan(knn_join_quantized(emb)),
+    }
+    for name, plan in plans.items():
+        assert "collect_list" not in plan, name
+        assert plan.count("FlatMapGroupsInArrow") == 1, name
+        assert "CartesianProduct" not in plan, name
