@@ -16,10 +16,10 @@
 - embedding near-dup pairs ride the same bucketing (same-bucket
   equi-join) — see workloads/llm.py.
 
-All vector math is expression-based (functions/vectors.py) — no UDF,
-no collect — except knn_join_quantized's coarse pass, which is an
-Arrow-batched numpy matmul by design (block brute force: the per-pair
-fold is the whole cost, so it runs vectorized).
+Float vector math is expression-based (functions/vectors.py). The
+int8 family runs as Arrow-batched numpy kernels instead: one quantizer
+(_quantize_batch) feeds the quantized coarse passes, the PQ encode and
+the ADC gather, because there the per-element fold is the whole cost.
 """
 
 from __future__ import annotations
@@ -68,10 +68,15 @@ def quantized_rerank_topk(
     beats a scan, so make the scan CHEAP instead of pretending to
     prune).
 
-    Two passes, both per broadcast query:
+    Two passes per query:
     1. coarse — int8-quantized cosine (q = floor(x·127/max|x| + 0.5),
        the embedding_quantize formula) over the whole corpus; keep
-       the top r_candidates per query by (coarse desc, id). At scale
+       the top r_candidates per query by (coarse desc, id). The query
+       rows are quantized and collected (|query_ids| rows), then one
+       mapInArrow pass quantizes each corpus batch and scores it with
+       one matmul against them (_make_coarse_scores_kernel) — sound
+       for a bounded query set; past O(100) queries use
+       knn_join_quantized's block-pair fan (same coarse math). At scale
        the int8 sidecar is materialized once next to the corpus and
        this pass reads 1/8th the bytes of a float64 scan — memory
        bandwidth, not arithmetic, is what a 100 TB coarse pass pays
@@ -88,56 +93,93 @@ def quantized_rerank_topk(
     size the result equals cosine_topk_bruteforce row-for-row
     (pinned by test). Returns (qid, nid, cos, rn).
     """
-    zero = F.lit(0).cast("bigint")
-    idot = lambda a, b: F.aggregate(  # noqa: E731 - local expr builder
-        F.zip_with(a, b, lambda x, y: (x * y).cast("bigint")),
-        zero,
-        lambda acc, x: acc + x,
+    qrows = quantize_rows(
+        emb.where(F.col(id_col).isin(query_ids)), id_col, vec_col
+    ).collect()
+    # a NULL id never passes the pairs' nid != qid test
+    coarse = emb.where(F.col(id_col).isNotNull()).select(
+        F.col(id_col).alias("id"), F.col(vec_col).alias("emb")
+    ).mapInArrow(
+        _make_coarse_scores_kernel(qrows), "qid bigint, nid bigint, coarse double"
     )
-    absmax = F.aggregate(
-        F.col(vec_col), F.lit(0.0),
-        lambda acc, x: F.greatest(acc, F.abs(x.cast("double"))),
-    )
-    scale = F.when(absmax > 0, F.lit(127.0) / absmax).otherwise(F.lit(0.0))
-    q8 = F.transform(
-        F.col(vec_col), lambda x: F.floor(x.cast("double") * scale + 0.5).cast("int")
-    )
-    base = emb.select(F.col(id_col), F.col(vec_col), q8.alias("q8"))
-    base = base.withColumn(
-        "qn8", F.sqrt(idot(F.col("q8"), F.col("q8")).cast("double"))
-    )
-    q = base.where(F.col(id_col).isin(query_ids)).select(
-        F.col(id_col).alias("qid"),
-        F.col(vec_col).alias("qvec"),
-        F.col("q8").alias("qq8"),
-        F.col("qn8").alias("qqn8"),
-    )
-    cand = base.select(
-        F.col(id_col).alias("nid"),
-        F.col(vec_col).alias("nvec"),
-        F.col("q8").alias("nq8"),
-        F.col("qn8").alias("nqn8"),
-    )
-    denom = F.col("qqn8") * F.col("nqn8")
-    coarse = F.when(
-        denom > 0, idot(F.col("qq8"), F.col("nq8")).cast("double") / denom
-    ).otherwise(F.lit(-2.0))  # zero vectors sort last, deterministically
     wc = Window.partitionBy("qid").orderBy(F.col("coarse").desc(), F.col("nid"))
     survivors = (
-        cand.join(F.broadcast(q), F.col("nid") != F.col("qid"))
-        .select("qid", "qvec", "nid", "nvec", coarse.alias("coarse"))
-        .withColumn("crn", F.row_number().over(wc))
+        coarse.withColumn("crn", F.row_number().over(wc))
         .where(F.col("crn") <= r_candidates)
+        .select("qid", "nid")
     )
+    qv = emb.where(F.col(id_col).isin(query_ids)).select(
+        F.col(id_col).alias("qid"), F.col(vec_col).alias("qvec")
+    )
+    nv = emb.select(F.col(id_col).alias("nid"), F.col(vec_col).alias("nvec"))
     we = Window.partitionBy("qid").orderBy(F.col("cos").desc(), F.col("nid"))
     return (
-        survivors.select(
-            "qid", "nid", cosine(F.col("qvec"), F.col("nvec")).alias("cos")
-        )
+        survivors.join(nv, "nid")
+        .join(F.broadcast(qv), "qid")
+        .select("qid", "nid", cosine(F.col("qvec"), F.col("nvec")).alias("cos"))
         .withColumn("rn", F.row_number().over(we))
         .where(F.col("rn") <= k)
         .select("qid", "nid", "cos", "rn")
     )
+
+
+def _make_coarse_scores_kernel(qrows):
+    """mapInArrow kernel for quantized_rerank_topk's coarse pass:
+    (id, emb) -> (qid, nid, coarse) for every collected query row
+    (id, q8, n8) against every corpus row, self excluded. Each batch
+    is quantized by _quantize_batch and scored with _int8_cosines, the
+    _block_cosines math: -2.0 where either norm is zero or NULL (NULL
+    embedding or NULL element). A pair of different lengths has no
+    integer dot (the zip_with NULL pad) and scores NULL unless the
+    -2.0 sentinel applies first."""
+    import numpy as np
+
+    qids = np.array([r["id"] for r in qrows], dtype=np.int64)
+    qn8 = np.array(
+        [np.nan if r["n8"] is None else r["n8"] for r in qrows], dtype=np.float64
+    )
+    qlen = np.array([-1 if r["q8"] is None else len(r["q8"]) for r in qrows])
+    # one query matrix per vector length; NULL elements only occur in
+    # rows whose NULL n8 already forces -2.0, so they read as 0 here
+    qmats = {}
+    for n in set(qlen.tolist()) - {-1}:
+        vecs = [
+            [0 if x is None else x for x in r["q8"]]
+            for r in qrows if r["q8"] is not None and len(r["q8"]) == n
+        ]
+        qmats[n] = np.array(vecs, dtype=np.float64).reshape(len(vecs), n)
+
+    def kernel(batches):
+        import pyarrow as pa
+
+        for b in batches:
+            ids = b.column("id").cast(pa.int64()).to_numpy()
+            q8, n8 = _quantize_batch(b.column("emb"))
+            offs = q8.offsets.to_numpy()
+            lens = np.diff(offs)
+            flat = q8.values.fill_null(0).to_numpy().astype(np.float64)
+            dots = np.full((len(ids), len(qids)), np.nan)
+            for n, qmat in qmats.items():
+                rows = np.nonzero(lens == n)[0]
+                cols = np.nonzero(qlen == n)[0]
+                mat = flat[offs[rows][:, None] + np.arange(n)]
+                dots[np.ix_(rows, cols)] = mat @ qmat.T
+            c = _int8_cosines(
+                dots, n8.to_numpy(zero_copy_only=False), qn8
+            ).T.reshape(-1)
+            qcol = np.repeat(qids, len(ids))
+            ncol = np.tile(ids, len(qids))
+            keep = ncol != qcol
+            yield pa.RecordBatch.from_arrays(
+                [
+                    pa.array(qcol[keep]),
+                    pa.array(ncol[keep]),
+                    pa.array(c[keep], mask=np.isnan(c[keep])),
+                ],
+                names=["qid", "nid", "coarse"],
+            )
+
+    return kernel
 
 
 def srp_planes(
@@ -1088,15 +1130,21 @@ def _pair_dot(a: Column, b: Column, dim: int | None) -> Column:
 KNN_QUANT_BLOCK_CAP = 4096
 
 
-def _quantize_rows_kernel(batches):
-    """mapInArrow kernel: (id, emb array<float>) -> (id, q8 array<int>,
-    n8 double) — the embedding_quantize formula as three vectorized
-    numpy passes over the batch's flattened element buffer. Exact
-    replay of the JVM expression chain it replaces:
+def _quantize_batch(col):
+    """The one engine-side int8 quantizer: an Arrow list<float> column
+    -> (q8 list<int32>, n8 double), the embedding_quantize formula as
+    vectorized numpy passes over the column's flattened element buffer.
+    Every consumer (the _quantize_rows_kernel map, the fused PQ encode,
+    the quantized re-rank coarse pass) quantizes through here, so a
+    change to the quantization invariant lands in this function AND in
+    the DuckDB oracle twins (workloads/llm: _SQL_Q8,
+    SQL_EMBEDDING_QUANTIZE, SQL_TOPK_RERANK, SQL_SIM_PAIR_HIST). Exact
+    replay of the JVM expression chain it replaced:
 
     - absmax = fold greatest(acc, abs(double(x))) from 0.0 — max of
-      |x| over non-null elements (np.maximum.reduceat on the flat
-      buffer; float32->float64 cast then abs, same IEEE values);
+      |x| over non-null elements (float32->float64 cast then abs, same
+      IEEE values; NULL elements read as 0.0, which cannot raise a max
+      that starts at 0.0);
     - scale = 127.0/absmax when absmax > 0 else 0.0 (same divide);
     - q8[i] = floor(double(x)*scale + 0.5) as int (same mul/add/floor
       order; results are in [-127, 127] so int32 is lossless);
@@ -1104,106 +1152,75 @@ def _quantize_rows_kernel(batches):
       integral in float64);
     - NULL emb -> NULL q8 / NULL n8; empty emb -> empty q8 / n8 = 0.0;
       a NULL ELEMENT maps to a NULL q8 element and poisons the n8 fold
-      to NULL (the JVM acc + NULL semantics) — such rows take a
-      per-row replay path, flagged by the Arrow element validity mask
-      (a pandas_udf would have collapsed element-NULL to NaN and made
-      the replay undetectable, hence mapInArrow);
+      to NULL (the JVM acc + NULL semantics), read off the Arrow
+      validity masks (a pandas_udf would have collapsed element-NULL
+      to NaN, hence Arrow);
     - a NaN or ±Inf element makes the JVM absmax NaN or Inf (greatest
-      orders NaN above every number), so the scale is NaN or 0.0,
-      every x*scale+0.5 is NaN or 0.5, and floor(NaN) casts to 0: the
-      row's non-NULL elements all quantize to 0. The fast path's int
-      cast of NaN is undefined, so these rows take the replay too."""
-    import math
-
+      orders NaN above every number), so the scale is NaN or 0.0, every
+      x*scale+0.5 is NaN or 0.5, and floor(NaN) casts to 0: the row's
+      non-NULL elements all quantize to 0."""
     import numpy as np
     import pyarrow as pa
 
+    n_rows = len(col)
+    # absolute offsets into the (possibly shared) values child; rebase
+    # so the flat compute covers exactly the logical rows
+    offs = col.offsets.to_numpy(zero_copy_only=False).astype(np.int64)
+    base, stop = int(offs[0]), int(offs[-1])
+    offs0 = offs - base
+    evals = col.values.slice(base, stop - base)
+    elem_null = evals.is_null().to_numpy(zero_copy_only=False)
+    vals = evals.fill_null(0).to_numpy(zero_copy_only=False).astype(np.float64)
+    row_null = col.is_null().to_numpy(zero_copy_only=False)
+    lens = np.diff(offs0)
+    nonempty = lens > 0
+    starts = offs0[:-1][nonempty]
+    absmax = np.zeros(n_rows)
+    if len(starts):
+        absmax[nonempty] = np.maximum.reduceat(np.abs(vals), starts)
+    odd = ~np.isfinite(absmax)
+    absmax[odd] = 0.0
+    vals[np.repeat(odd, lens)] = 0.0
+    with np.errstate(divide="ignore"):
+        scale = np.where(absmax > 0, 127.0 / absmax, 0.0)
+    q8 = np.floor(vals * np.repeat(scale, lens) + 0.5).astype(np.int32)
+    sumsq = np.zeros(n_rows)
+    has_null = np.zeros(n_rows, dtype=bool)
+    if len(starts):
+        sumsq[nonempty] = np.add.reduceat(q8.astype(np.float64) ** 2, starts)
+        has_null[nonempty] = np.logical_or.reduceat(elem_null, starts)
+    return (
+        pa.ListArray.from_arrays(
+            pa.array(offs0, type=pa.int32()),
+            pa.array(q8, mask=elem_null),
+            mask=pa.array(row_null),
+        ),
+        pa.array(np.sqrt(sumsq), mask=row_null | has_null),
+    )
+
+
+def _quantize_rows_kernel(batches):
+    """mapInArrow kernel: (id, emb array<float>) -> (id, q8 array<int>,
+    n8 double) — _quantize_batch over each Arrow batch."""
+    import pyarrow as pa
+
     for b in batches:
-        ids = b.column(b.schema.get_field_index("id"))
-        col = b.column(b.schema.get_field_index("emb"))
-        n_rows = len(col)
-        # absolute offsets into the (possibly shared) values child;
-        # rebase so the flat compute covers exactly the logical rows
-        offs = col.offsets.to_numpy(zero_copy_only=False).astype(np.int64)
-        base, stop = int(offs[0]), int(offs[-1])
-        offs0 = offs - base
-        evals = col.values.slice(base, stop - base)
-        vals64 = evals.to_numpy(zero_copy_only=False).astype(np.float64)
-        row_null = (
-            col.is_null().to_numpy(zero_copy_only=False)
-            if col.null_count
-            else np.zeros(n_rows, dtype=bool)
-        )
-        lens = offs0[1:] - offs0[:-1]
-        nonempty = lens > 0
-        # fast path: every non-empty segment in three reduceat passes
-        absmax = np.zeros(n_rows, dtype=np.float64)
-        if nonempty.any():
-            absmax[nonempty] = np.maximum.reduceat(
-                np.abs(vals64), offs0[:-1][nonempty]
-            )
-        # non-finite rows get garbage here and are replayed below
-        with np.errstate(divide="ignore", invalid="ignore"):
-            scale = np.where(absmax > 0, 127.0 / absmax, 0.0)
-            q8flat = np.floor(
-                vals64 * np.repeat(scale, lens) + 0.5
-            ).astype(np.int32)
-        sumsq = np.zeros(n_rows, dtype=np.float64)
-        if nonempty.any():
-            sumsq[nonempty] = np.add.reduceat(
-                q8flat.astype(np.float64) ** 2, offs0[:-1][nonempty]
-            )
-        n8_list: list[float | None] = np.sqrt(sumsq).tolist()
-        # NULL elements read as NaN here, so this flags both kinds
-        odd = ~np.isfinite(vals64)
-        if row_null.any() or odd.any():
-            # slow-path replay, only for rows the fast path can't
-            # represent: NULL rows and rows with NULL or non-finite
-            # elements
-            redo = set(np.nonzero(row_null)[0].tolist())
-            bad = np.searchsorted(offs0, np.nonzero(odd)[0], side="right") - 1
-            redo.update(int(x) for x in np.unique(bad))
-            q8_rows: list[list[int | None] | None] = [None] * n_rows
-            for i in range(n_rows):
-                if row_null[i]:
-                    n8_list[i] = None
-                elif i in redo:
-                    lo, hi = int(offs0[i]), int(offs0[i + 1])
-                    elems = [
-                        None if not evals[j].is_valid else float(evals[j].as_py())
-                        for j in range(lo, hi)
-                    ]
-                    present = [x for x in elems if x is not None]
-                    if all(math.isfinite(x) for x in present):
-                        amx = max(map(abs, present), default=0.0)
-                        sc = 127.0 / amx if amx > 0 else 0.0
-                        q8_rows[i] = [
-                            None if x is None else int(np.floor(x * sc + 0.5))
-                            for x in elems
-                        ]
-                    else:
-                        q8_rows[i] = [None if x is None else 0 for x in elems]
-                    n8_list[i] = (
-                        None
-                        if any(x is None for x in elems)
-                        else float(
-                            np.sqrt(float(sum(q * q for q in q8_rows[i])))
-                        )
-                    )
-                else:
-                    lo, hi = int(offs0[i]), int(offs0[i + 1])
-                    q8_rows[i] = q8flat[lo:hi].tolist()
-            q8_arr = pa.array(q8_rows, type=pa.list_(pa.int32()))
-            n8_out = pa.array(n8_list, type=pa.float64())
-        else:
-            q8_arr = pa.ListArray.from_arrays(
-                pa.array(offs0, type=pa.int32()),
-                pa.array(q8flat, type=pa.int32()),
-            )
-            n8_out = pa.array(n8_list, type=pa.float64())
+        q8, n8 = _quantize_batch(b.column("emb"))
         yield pa.RecordBatch.from_arrays(
-            [ids.cast(pa.int64()), q8_arr, n8_out], names=["id", "q8", "n8"]
+            [b.column("id").cast(pa.int64()), q8, n8], names=["id", "q8", "n8"]
         )
+
+
+def quantize_rows(
+    df: DataFrame, id_col: str = "vec_id", vec_col: str = "embedding"
+) -> DataFrame:
+    """(id bigint, q8 array<int>, n8 double) for every row of df: the
+    int8 embedding_quantize formula plus the exact integer norm, as one
+    shuffle-free mapInArrow (_quantize_rows_kernel). Callers alias id
+    back to their own key name."""
+    return df.select(
+        F.col(id_col).alias("id"), F.col(vec_col).alias("emb")
+    ).mapInArrow(_quantize_rows_kernel, "id bigint, q8 array<int>, n8 double")
 
 
 def quantized_block_pairs(
@@ -1243,13 +1260,7 @@ def quantized_block_pairs(
     # noop sink on each subplan. Math and null semantics are replayed
     # exactly (see _quantize_rows_kernel); output is bit-identical
     # (histogram value-hash oracle + exact-when-r-covers-corpus pin).
-    base = (
-        emb.select(F.col(id_col).alias("id"), F.col(vec_col).alias("emb"))
-        .mapInArrow(
-            _quantize_rows_kernel, "id bigint, q8 array<int>, n8 double"
-        )
-        .where(F.col("q8").isNotNull())
-    )
+    base = quantize_rows(emb, id_col, vec_col).where(F.col("q8").isNotNull())
     return block_pair_fan(base, [], "id", n_blocks=n_blocks)
 
 
@@ -1273,10 +1284,18 @@ def _block_cosines(key, table):
     ids = table.column("id").to_numpy()
     mat = list_matrix(table, "q8").astype(np.float64)
     nrm = table.column("n8").to_numpy()
-    den = np.outer(nrm[q], nrm[n])
+    return ids[q], ids[n], _int8_cosines(mat[q] @ mat[n].T, nrm[q], nrm[n]), same
+
+
+def _int8_cosines(dots, nrm_a, nrm_b):
+    """dots[i, j] / (nrm_a[i] * nrm_b[j]) where that norm product is
+    > 0, else -2.0 (a zero or NULL-as-NaN norm) — the coarse-cosine
+    `when(denom > 0, dot / denom).otherwise(-2.0)`, same IEEE ops."""
+    import numpy as np
+
+    den = np.outer(nrm_a, nrm_b)
     with np.errstate(divide="ignore", invalid="ignore"):
-        c = np.where(den > 0, (mat[q] @ mat[n].T) / den, -2.0)
-    return ids[q], ids[n], c, same
+        return np.where(den > 0, dots / den, -2.0)
 
 
 def knn_join_quantized(
@@ -1493,25 +1512,6 @@ def similarity_pair_histogram(
 # trained-codebook PQ (same argument as the md5-picked IVF exports).
 
 
-def _q8_expr(vec_col: str):
-    """The embedding_quantize int8 formula as a column expression:
-    q = floor(x * 127 / max|x| + 0.5), zero vectors to zeros.
-
-    NB: quantized_rerank_topk and quantized_block_pairs inline the same
-    formula (with an int cast — values fit either way); a change to the
-    quantization invariant must land in all three sites AND the SQL
-    twins (workloads/llm._SQL_Q8, SQL_EMBEDDING_QUANTIZE)."""
-    absmax = F.aggregate(
-        F.col(vec_col), F.lit(0.0),
-        lambda acc, x: F.greatest(acc, F.abs(x.cast("double"))),
-    )
-    scale = F.when(absmax > 0, F.lit(127.0) / absmax).otherwise(F.lit(0.0))
-    return F.transform(
-        F.col(vec_col),
-        lambda x: F.floor(x.cast("double") * scale + 0.5).cast("bigint"),
-    )
-
-
 def _il2(a, b):
     """Exact integer squared-L2 between two int lists.
 
@@ -1595,9 +1595,12 @@ def pq_codebook(
     hash-spread seed vectors (hash_spread_seeds — the same
     deterministic pick as the IVF exports), int8-quantized and sliced.
     n_sub x n_codes rows; always broadcast by the consumers."""
-    seed = hash_spread_seeds(
-        emb, n_codes, id_col, vec_col, out_idx="code", out_vec="cvec"
-    ).select("code", _q8_expr("cvec").alias("q8"))
+    seed = quantize_rows(
+        hash_spread_seeds(
+            emb, n_codes, id_col, vec_col, out_idx="code", out_vec="cvec"
+        ),
+        "code", "cvec",
+    ).select(F.col("id").cast("int").alias("code"), "q8")
     return _explode_subvectors(seed, n_sub, "q8", "csub").select(
         "sub_id", "code", "csub"
     )
@@ -1637,30 +1640,29 @@ def _collect_codebook_from_emb(
 ) -> list[list[list[int]]]:
     """cb[sub_id][code] -> csub, collected with ONE tiny Spark job:
     the hash-spread seed pick (smallest (md5(id), id), a TakeOrdered
-    of n_codes rows) with the q8 projection computed ENGINE-side, then
-    sliced into subvectors in Python. Row-identical to
+    of n_codes rows), quantized by the kernel over just those rows,
+    then sliced into subvectors in Python. Row-identical to
     _collect_codebook(pq_codebook(...)) — same pick, same numbering,
     same fixed slice windows — but one bounded job instead of the
     codebook pipeline's seed job + collect job."""
-    rows = (
+    seed = (
         emb.select(
-            F.md5(F.col(id_col).cast("string")).alias("__h"),
-            F.col(id_col).alias("__id"),
-            _q8_expr(vec_col).alias("__q8"),
+            F.md5(F.col(id_col).cast("string")).alias("__h"), id_col, vec_col
         )
-        .orderBy("__h", "__id")
+        .orderBy("__h", id_col)
         .limit(n_codes)
-        .collect()
     )
+    # the TakeOrdered output is one sorted partition and the kernel
+    # keeps row order, so the i-th collected row is code i
+    rows = quantize_rows(seed, id_col, vec_col).collect()
     sub_dim = dim // n_sub
     cb: list[list[list[int]]] = [
         [[] for _ in range(len(rows))] for _ in range(n_sub)
     ]
     for code, r in enumerate(rows):
-        q = r["__q8"]
+        q = r["q8"]
         if q is None:
             continue
-        q = [None if x is None else int(x) for x in q]
         for s in range(n_sub):
             cb[s][code] = q[s * sub_dim: (s + 1) * sub_dim]
     return cb
@@ -1679,24 +1681,17 @@ def _il2_py(a: list[int], b: list[int]) -> int:
 
 
 def _make_encode_batch_fn(cb: list[list[list[int]]], sub_dim: int):
-    """Per-batch fused quantize+encode over an Arrow (id, emb) batch —
-    the _q8_expr quantize AND the per-subspace argmin encode in one
-    Python pass (r15: the interpreted JVM quantize fold was ~half of
-    pq_encode_codes' cost at sf0.1, the same hot spot
-    quantized_block_pairs' kernel removed). Shared by the encode
-    kernel and the fused ADC-scores kernel. Exact replay, stage by
-    stage:
-
-    - quantize: the _quantize_rows_kernel math (absmax fold over
-      non-null |x| in float64, 127.0/absmax when positive else 0.0,
-      floor(x*scale + 0.5)) — values identical to _q8_expr's bigint
-      transform;
-    - encode: the r14 argmin-UDF math — full-width null-free rows
-      take the broadcast (n, n_sub, n_codes) int64 subtract-square-sum
-      argmin (FIRST minimum == ties to the smallest code); NULL rows
-      encode to NULL; ragged or null-element rows (and every row, when
-      the codebook itself is ragged) replay _il2's pad-with-zero
-      semantics per row, bit-for-bit with the old joined min_by."""
+    """Per-batch fused quantize+encode over an Arrow (id, emb) batch:
+    _quantize_batch, then the per-subspace argmin encode, in one Python
+    pass (r15: the interpreted JVM quantize fold was ~half of
+    pq_encode_codes' cost at sf0.1). Shared by the encode kernel and
+    the fused ADC-scores kernel. The encode is the r14 argmin-UDF math:
+    full-width rows with a non-NULL norm take the broadcast
+    (n, n_sub, n_codes) int64 subtract-square-sum argmin (FIRST
+    minimum == ties to the smallest code); NULL rows encode to NULL;
+    ragged or null-element rows (and every row, when the codebook
+    itself is ragged) replay _il2's pad-with-zero semantics per row
+    through _il2_py, bit-for-bit with the old joined min_by."""
     import numpy as np
 
     n_sub = len(cb)
@@ -1713,40 +1708,12 @@ def _make_encode_batch_fn(cb: list[list[list[int]]], sub_dim: int):
     )
 
     def slow_row(q):
-        # exact replay of _il2 over slices: pad-with-zero on both
-        # sides (None or NaN elements count 0), ties to the smallest
-        # code — q is the row's q8 list (ints with None holes)
-        def ok(x):
-            return x is not None and x == x
-
         codes_out = []
         for s in range(n_sub):
             vsub = q[s * sub_dim: (s + 1) * sub_dim]
-            best_c, best_d = 0, None
-            for c, csub in enumerate(cb[s]):
-                m = min(len(vsub), len(csub))
-                d = sum(
-                    (int(vsub[i]) - int(csub[i])) ** 2
-                    for i in range(m)
-                    if ok(vsub[i]) and ok(csub[i])
-                )
-                if best_d is None or d < best_d:
-                    best_c, best_d = c, d
-            codes_out.append(best_c)
+            d = [_il2_py(vsub, csub) for csub in cb[s]]
+            codes_out.append(d.index(min(d)))
         return codes_out
-
-    def q8_row(elems):
-        # _q8_expr per row for the slow path: greatest skips nulls,
-        # scale 0 when absmax is not positive, floor(x*scale + 0.5)
-        amx = 0.0
-        for x in elems:
-            if x is not None and abs(x) > amx:
-                amx = abs(x)
-        sc = 127.0 / amx if amx > 0 else 0.0
-        return [
-            None if x is None else int(np.floor(x * sc + 0.5))
-            for x in elems
-        ]
 
     def encode_batch(b):
         """-> (ids pa int64, row_null bool np, codes_mat (n, n_sub)
@@ -1754,66 +1721,24 @@ def _make_encode_batch_fn(cb: list[list[list[int]]], sub_dim: int):
         the fused ADC kernels."""
         import pyarrow as pa
 
-        ids = b.column(b.schema.get_field_index("id")).cast(pa.int64())
-        col = b.column(b.schema.get_field_index("emb"))
-        n_rows = len(col)
-        offs = col.offsets.to_numpy(zero_copy_only=False).astype(np.int64)
-        base, stop = int(offs[0]), int(offs[-1])
-        offs0 = offs - base
-        evals = col.values.slice(base, stop - base)
-        row_null = (
-            col.is_null().to_numpy(zero_copy_only=False)
-            if col.null_count
-            else np.zeros(n_rows, dtype=bool)
+        ids = b.column("id").cast(pa.int64())
+        q8, n8 = _quantize_batch(b.column("emb"))
+        offs = q8.offsets.to_numpy()
+        row_null = q8.is_null().to_numpy(zero_copy_only=False)
+        # a valid n8 means a non-NULL row without NULL elements
+        fast = n8.is_valid().to_numpy(zero_copy_only=False) & (
+            np.diff(offs) == dim
         )
-        lens = offs0[1:] - offs0[:-1]
-        elem_null = (
-            evals.is_null().to_numpy(zero_copy_only=False)
-            if evals.null_count
-            else None
-        )
-        bad = np.zeros(n_rows, dtype=bool)
-        if elem_null is not None:
-            hit = (
-                np.searchsorted(
-                    offs0, np.nonzero(elem_null)[0], side="right"
-                )
-                - 1
-            )
-            bad[np.unique(hit)] = True
-        fast = (
-            ~row_null & ~bad & (lens == dim)
-            if not ragged_cb
-            else np.zeros(n_rows, dtype=bool)
-        )
-        mat = np.zeros((n_rows, n_sub), dtype=np.int32)
-        done = fast | row_null
+        if ragged_cb:
+            fast[:] = False
+        mat = np.zeros((len(q8), n_sub), dtype=np.int32)
         if fast.any():
-            vals64 = evals.to_numpy(zero_copy_only=False).astype(np.float64)
-            nonempty = lens > 0
-            absmax = np.zeros(n_rows, dtype=np.float64)
-            if nonempty.any():
-                absmax[nonempty] = np.maximum.reduceat(
-                    np.abs(vals64), offs0[:-1][nonempty]
-                )
-            scale = np.where(absmax > 0, 127.0 / absmax, 0.0)
-            q8flat = np.floor(
-                vals64 * np.repeat(scale, lens) + 0.5
-            ).astype(np.int64)
-            starts = offs0[:-1][fast]
-            idx = starts[:, None] + np.arange(dim)[None, :]
-            q = q8flat[idx].reshape(-1, n_sub, 1, sub_dim)
-            d2 = ((q - cb_arr[None, :, :, :]) ** 2).sum(axis=3)
-            mat[fast] = d2.argmin(axis=2).astype(np.int32)
-        for i in range(n_rows):
-            if done[i]:
-                continue
-            lo, hi = int(offs0[i]), int(offs0[i + 1])
-            elems = [
-                None if not evals[j].is_valid else float(evals[j].as_py())
-                for j in range(lo, hi)
-            ]
-            mat[i] = slow_row(q8_row(elems))
+            flat = q8.values.fill_null(0).to_numpy().astype(np.int64)
+            q = flat[offs[:-1][fast][:, None] + np.arange(dim)]
+            d2 = ((q.reshape(-1, n_sub, 1, sub_dim) - cb_arr[None]) ** 2).sum(axis=3)
+            mat[fast] = d2.argmin(axis=2)
+        for i in np.nonzero(~(fast | row_null))[0]:
+            mat[i] = slow_row(q8[i].as_py())
         return ids, row_null, mat
 
     return encode_batch
@@ -1831,23 +1756,11 @@ def _make_fused_encode_kernel(cb: list[list[list[int]]], sub_dim: int):
 
         for b in batches:
             ids, row_null, mat = encode_batch(b)
-            n_rows = len(ids)
-            if row_null.any():
-                codes_arr = pa.array(
-                    [
-                        None if row_null[i] else mat[i].tolist()
-                        for i in range(n_rows)
-                    ],
-                    type=pa.list_(pa.int32()),
-                )
-            else:
-                codes_arr = pa.ListArray.from_arrays(
-                    pa.array(
-                        np.arange(n_rows + 1, dtype=np.int32) * n_sub,
-                        type=pa.int32(),
-                    ),
-                    pa.array(mat.reshape(-1), type=pa.int32()),
-                )
+            codes_arr = pa.ListArray.from_arrays(
+                pa.array(np.arange(len(ids) + 1, dtype=np.int32) * n_sub),
+                pa.array(mat.reshape(-1)),
+                mask=pa.array(row_null),
+            )
             yield pa.RecordBatch.from_arrays(
                 [ids, codes_arr], names=["id", "codes"]
             )
@@ -1863,7 +1776,7 @@ def pq_encode_codes(
     """(id, codes array<int>): every subspace's nearest-code id in one
     shuffle-free projection. r15: the quantize AND the argmin encode
     run fused inside one mapInArrow kernel — the r14 shape kept the
-    quantization as the interpreted _q8_expr JVM fold (measured ~half
+    quantization as an interpreted JVM fold (measured ~half
     of this projection's cost at sf0.1: 1.05 s of interpreted HOF per
     corpus pass) and crossed the q8 arrays into a separate pandas_udf.
     Only (id, emb) cross the boundary now; output rows are
@@ -1917,72 +1830,54 @@ def _collect_query_luts(
     """[(qid, lut[sub][code] = exact integer squared-L2)] for each
     standing query found in the corpus, in ascending qid order. The
     query side is bounded (|query_ids| rows) and the quantization is
-    collected FROM the engine's own _q8_expr projection, so no float
+    collected FROM the engine's own kernel (quantize_rows), so no float
     arithmetic is re-implemented driver-side — the integer squared-L2
-    against the collected codebook is exact Python int math."""
+    against the collected codebook is _il2_py's exact Python int math
+    (either-side-None terms count 0)."""
     sub_dim = dim // len(cb)
-    rows = (
-        emb.where(F.col(id_col).isin(query_ids))
-        .select(F.col(id_col).alias("qid"), _q8_expr(vec_col).alias("q8"))
-        .collect()
-    )
+    rows = quantize_rows(
+        emb.where(F.col(id_col).isin(query_ids)), id_col, vec_col
+    ).collect()
     out = []
-    for r in sorted(rows, key=lambda r: r["qid"]):
+    for r in sorted(rows, key=lambda r: r["id"]):
         if r["q8"] is None:
             # NULL embedding: every LUT distance is NULL on both the
             # previous fold and the DuckDB twin — keep that bit exact
-            out.append((int(r["qid"]), None))
+            out.append((int(r["id"]), None))
             continue
-        q = [None if x is None else int(x) for x in r["q8"]]
-        lut = []
-        for s, codes in enumerate(cb):
-            vsub = q[s * sub_dim: (s + 1) * sub_dim]
-            lut.append(
-                [
-                    sum(
-                        (vsub[i] - csub[i]) ** 2
-                        # either-side-None terms count 0 — the _il2_py /
-                        # encode slow_row rule; a None element inside a
-                        # collected codebook subvector used to raise a
-                        # driver-side TypeError here (r15, ADVICE)
-                        for i in range(min(len(vsub), len(csub)))
-                        if vsub[i] is not None and csub[i] is not None
-                    )
-                    for csub in codes
-                ]
-            )
-        out.append((int(r["qid"]), lut))
+        q = r["q8"]
+        out.append((int(r["id"]), [
+            [_il2_py(q[s * sub_dim: (s + 1) * sub_dim], csub) for csub in codes]
+            for s, codes in enumerate(cb)
+        ]))
     return out
 
 
-def _int_array_sql(a) -> str:
-    """Nested int list -> a SQL `array(...)` literal string (bigint
-    leaves). Built as ONE string and parsed JVM-side by F.expr: a
-    CreateArray tree assembled node-by-node from Python pays a py4j
-    round-trip per node (an 8192-leaf SDC table costs tens of seconds
-    of pure driver chatter); the parser builds and constant-folds the
-    same literal in milliseconds."""
-    if isinstance(a, (list, tuple)):
-        return "array(" + ",".join(_int_array_sql(x) for x in a) + ")"
-    return f"{int(a)}L"
+def _lut_array(luts: list[tuple[int, list[list[int]] | None]], n_sub: int):
+    """The collected LUTs as one zero-padded (q, n_sub, n_codes) int64
+    array plus a has-LUT flag per query (False for a NULL query
+    embedding, whose ADC is NULL)."""
+    import numpy as np
+
+    width = max(
+        (len(cs) for _, lut in luts if lut is not None for cs in lut),
+        default=1,
+    )
+    lut_arr = np.zeros((len(luts), n_sub, width), dtype=np.int64)
+    for qi, (_, lut) in enumerate(luts):
+        for s, cs in enumerate(lut or []):
+            lut_arr[qi, s, : len(cs)] = cs
+    return lut_arr, np.array([lut is not None for _, lut in luts], dtype=bool)
 
 
-def _adc_expr(lut: list[list[int]] | None, codes_col: Column) -> Column:
-    """Σ_sub lut[sub][codes[sub]] as a literal-2D-array gather — the
-    per-(query, vector) ADC sum with the LUT folded into the plan as a
-    constant. Exact bigint, identical to the previous sum(d) over the
-    LUT join. A None lut (NULL query embedding) yields NULL, matching
-    the previous fold's propagation."""
-    if lut is None:
-        return F.lit(None).cast("bigint")
-    lut2 = F.expr(_int_array_sql(lut))
-    total: Column | None = None
-    for s in range(len(lut)):
-        term = F.element_at(
-            F.element_at(lut2, s + 1), F.element_at(codes_col, s + 1) + 1
-        )
-        total = term if total is None else total + term
-    return total
+def _adc_gather(lut_arr, qi, codes):
+    """The one ADC sum: adc[r] = Σ_s lut_arr[qi[r], s, codes[r, s]] in
+    int64 (qi a scalar or one query index per row). LUT entries are
+    bounded (≤ dim·254²), so the sum is exact."""
+    adc = lut_arr[qi, 0, codes[:, 0]]
+    for s in range(1, codes.shape[1]):
+        adc = adc + lut_arr[qi, s, codes[:, s]]
+    return adc
 
 
 def _make_adc_scores_kernel(
@@ -1992,40 +1887,28 @@ def _make_adc_scores_kernel(
     """mapInArrow kernel: (id, emb) -> (qid, id, adc) — the encode
     (via _make_encode_batch_fn) fused with the q-way query fan-out and
     the LUT gather in ONE Python crossing (r15: the literal-LUT CASE
-    chain this replaces was 2.1 s of pq_adc_topk's 2.6 s at sf0.1 —
+    chain this replaced was 2.1 s of pq_adc_topk's 2.6 s at sf0.1 —
     dominated by the giant folded-constant expression tree, not the
     arithmetic). Replayed semantics: NULL-codes corpus rows emit
-    nothing (the old isNotNull filter / pre-r14 inner-join drop);
-    self pairs (id == qid) excluded; a None LUT (NULL query embedding)
-    emits NULL adc for every corpus row, exactly like the NULL-literal
-    branch of _adc_case. adc = Σ_s lut[s][codes[s]] in int64 — the LUT
-    entries are bounded (≤ dim·254²), so the sum is exact."""
+    nothing (the old isNotNull filter / pre-r14 inner-join drop), nor
+    do NULL-id rows (the oracle's nid != qid drops them); self pairs
+    (id == qid) excluded; a None LUT (NULL query embedding) emits NULL
+    adc for every corpus row."""
     import numpy as np
 
     encode_batch = _make_encode_batch_fn(cb, sub_dim)
-    n_sub = len(cb)
     qids = [int(q) for q, _ in luts]
-    has_lut = [lut is not None for _, lut in luts]
-    width = max(
-        (len(cs) for _, lut in luts if lut is not None for cs in lut),
-        default=1,
-    )
-    lut_arr = np.zeros((len(luts), n_sub, width), dtype=np.int64)
-    for qi, (_, lut) in enumerate(luts):
-        if lut is None:
-            continue
-        for s, cs in enumerate(lut):
-            lut_arr[qi, s, : len(cs)] = cs
+    lut_arr, has_lut = _lut_array(luts, len(cb))
 
     def kernel(batches):
         import pyarrow as pa
 
         for b in batches:
             ids, row_null, mat = encode_batch(b)
-            ids_np = ids.to_numpy(zero_copy_only=False)
-            valid = ~row_null
-            vids = ids_np[valid]
-            vmat = mat[valid].astype(np.int64, copy=False)
+            # a NULL id never passes the nid != qid pair test
+            valid = ~row_null & ids.is_valid().to_numpy(zero_copy_only=False)
+            vids = ids.filter(pa.array(valid)).to_numpy()
+            vmat = mat[valid]
             if not len(vids):
                 continue
             out_q, out_i, out_a = [], [], []
@@ -2035,11 +1918,9 @@ def _make_adc_scores_kernel(
                 if not len(kids):
                     continue
                 if has_lut[qi]:
-                    km = vmat[keep]
-                    adc = lut_arr[qi, 0][km[:, 0]].copy()
-                    for s in range(1, n_sub):
-                        adc += lut_arr[qi, s][km[:, s]]
-                    out_a.append(pa.array(adc, type=pa.int64()))
+                    out_a.append(
+                        pa.array(_adc_gather(lut_arr, qi, vmat[keep]), type=pa.int64())
+                    )
                 else:
                     out_a.append(pa.nulls(len(kids), pa.int64()))
                 out_q.append(np.full(len(kids), qid, dtype=np.int64))
@@ -2053,6 +1934,40 @@ def _make_adc_scores_kernel(
                     ],
                     names=["qid", "id", "adc"],
                 )
+
+    return kernel
+
+
+def _make_adc_gather_kernel(
+    luts: list[tuple[int, list[list[int]] | None]], n_sub: int
+):
+    """mapInArrow kernel: (qid, id, codes) -> (qid, id, adc) — the
+    _adc_gather sum over already-encoded candidate rows, each scored
+    against its own query's LUT (luts non-empty, ascending qid). NULL
+    adc for a None LUT (NULL query embedding) or a qid without one."""
+    import numpy as np
+
+    qids = np.array([q for q, _ in luts], dtype=np.int64)
+    lut_arr, has_lut = _lut_array(luts, n_sub)
+
+    def kernel(batches):
+        import pyarrow as pa
+
+        from etl_dagster_service_crawler_spark.operators.block_pairs import (
+            list_matrix,
+        )
+
+        for b in batches:
+            if not b.num_rows:
+                continue
+            qid = b.column("qid").to_numpy()
+            qi = np.minimum(np.searchsorted(qids, qid), len(qids) - 1)
+            adc = _adc_gather(lut_arr, qi, list_matrix(b, "codes"))
+            ok = has_lut[qi] & (qids[qi] == qid)
+            yield pa.RecordBatch.from_arrays(
+                [b.column("qid"), b.column("id"), pa.array(adc, mask=~ok)],
+                names=["qid", "id", "adc"],
+            )
 
     return kernel
 
@@ -2090,21 +2005,6 @@ def _pq_adc_scores(
         )
         .withColumnRenamed("id", id_col)
     )
-
-
-def _adc_case(
-    luts: list[tuple[int, list[list[int]] | None]],
-    codes_col: Column, qid_col: Column,
-) -> Column:
-    """Per-row ADC dispatch over the standing queries: CASE qid WHEN
-    q_k THEN <literal-LUT gather for q_k> — one evaluated branch per
-    row, every LUT a folded constant."""
-    adc: Column | None = None
-    for qid, lut in luts:
-        cond = qid_col == F.lit(qid)
-        expr = _adc_expr(lut, codes_col)
-        adc = F.when(cond, expr) if adc is None else adc.when(cond, expr)
-    return adc
 
 
 def pq_adc_topk(
@@ -2219,17 +2119,23 @@ def ivf_pq_search(
         )
     else:
         # r14: one id-keyed join attaches the 8-byte code array to the
-        # probed candidates; the ADC sum is a literal-LUT gather — the
-        # previous shape paid a (qid, sub_id, code) LUT join plus a
+        # probed candidates, and one mapInArrow gathers each candidate's
+        # LUT entries (_adc_gather, the pq_adc_topk sum) — the previous
+        # shape paid a (qid, sub_id, code) LUT join plus a
         # corpus-candidate-sized groupBy sum on top of it. NULL-codes
         # rows (NULL embeddings) are dropped as the old exploded codes
         # join did (r15, ADVICE — else NULL adc ranks first).
         enc = pq_encode_codes(emb, cb, id_col, vec_col).where(
             F.col("codes").isNotNull()
         )
-        adc = cand.join(enc, id_col).select(
-            "qid", id_col,
-            _adc_case(luts, F.col("codes"), F.col("qid")).alias("adc"),
+        adc = (
+            cand.join(enc, id_col)
+            .select("qid", F.col(id_col).alias("id"), "codes")
+            .mapInArrow(
+                _make_adc_gather_kernel(luts, len(cb)),
+                "qid bigint, id bigint, adc bigint",
+            )
+            .withColumnRenamed("id", id_col)
         )
     wk = Window.partitionBy("qid").orderBy(F.col("adc"), F.col(id_col))
     return (
@@ -2237,27 +2143,6 @@ def ivf_pq_search(
         .where(F.col("rn") <= k)
         .select("qid", F.col("rn").cast("int").alias("rn"),
                 F.col(id_col).alias("nid"), F.col("adc"))
-    )
-
-
-def pq_sdc_table(
-    codebook: DataFrame,
-) -> DataFrame:
-    """(sub_id, code_a, code_b, d): symmetric PQ distance table — exact
-    integer squared-L2 between every codebook pair per subspace. The
-    all-pairs twin of the per-query ADC LUT: n_sub x n_codes^2 rows
-    total (8 x 32^2 = 8192 at the export defaults), built once and
-    broadcast, after which ANY pair distance is a code gather + sum —
-    the corpus vectors are never touched again."""
-    a = codebook.select(
-        "sub_id", F.col("code").alias("code_a"), F.col("csub").alias("ca")
-    )
-    b = codebook.select(
-        "sub_id", F.col("code").alias("code_b"), F.col("csub").alias("cb")
-    )
-    return a.join(b, "sub_id").select(
-        "sub_id", "code_a", "code_b",
-        _il2(F.col("ca"), F.col("cb")).alias("d"),
     )
 
 
@@ -2280,9 +2165,10 @@ GRAPH_PAIR_BLOCK_ROWS = 1024
 def _collect_sdc(cb: list[list[list[int]]]):
     """numpy SDC table from the collected codebook:
     sdc[s, i, j] = exact integer squared-L2 between codes i and j of
-    subspace s — the _il2_py twin of pq_sdc_table's _il2 fold, so the
-    gathered pair distances are bit-identical to the broadcast-join
-    shape's. n_sub x n_codes² int64 entries (8 KiB at the export
+    subspace s, by _il2_py — the per-code-pair distance of the DuckDB
+    twin's _SQL_SDC table (workloads/llm), so gathered pair distances
+    match the oracle bit for bit. n_sub x n_codes² int64
+    entries (8 KiB at the export
     defaults) — bounded, closed over by the kernel."""
     import numpy as np
 
@@ -2423,13 +2309,12 @@ def knn_graph_mutual(
     # SLOWER because the interpreted expression lost to the join's
     # codegen; the numpy kernel wins where the expression could not —
     # the same history as minhash_dedup_pairs. Distances are exact
-    # int64 SDC gathers (_collect_sdc is the _il2_py twin of
-    # pq_sdc_table), NULL-codes rows are dropped exactly as the
-    # exploded-encode inner join dropped them, and sub-blocking keeps
-    # a hot cell's quadratic pair mass spread across tasks.
-    codebook = pq_codebook(emb, n_sub, n_codes, id_col, vec_col)
-    cb = _collect_codebook(codebook)
-    if not cb:
+    # int64 SDC gathers (_collect_sdc, one _il2_py per code pair),
+    # NULL-codes rows are dropped exactly as the exploded-encode inner
+    # join dropped them, and sub-blocking keeps a hot cell's quadratic
+    # pair mass spread across tasks.
+    cb = _collect_codebook_from_emb(emb, n_sub, n_codes, id_col, vec_col)
+    if not any(cb):  # empty corpus: no codes
         return emb.sparkSession.createDataFrame(
             [], "src bigint, dst bigint, d bigint"
         )

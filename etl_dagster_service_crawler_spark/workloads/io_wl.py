@@ -759,15 +759,15 @@ WHERE l_shipdate >= TIMESTAMP '1997-03-01'
 def q_sink_pq_sidecar(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The persisted PQ-codes SIDECAR — the artifact pq_adc_topk /
     ivf_pq_search read instead of vectors at scale (8 small ints per
-    vector, 64:1 vs float64). One row per vector with the codes pivoted
-    into a sub_id-ordered array, written sorted by vec_id so the exact
+    vector, 64:1 vs float64). One row per vector with pq_encode_codes'
+    sub_id-ordered codes array, written sorted by vec_id so the exact
     rerank's join-back prunes row groups on id; read back and returned,
     so the oracle checks the on-disk bytes round-trip, not just the
     in-memory frame. Layout twin of the bucketed IVF assignment
     (SCALE.md 'IVF build path')."""
     from etl_dagster_service_crawler_spark.operators.similarity import (
-        pq_codebook,
-        pq_encode,
+        _collect_codebook_from_emb,
+        pq_encode_codes,
     )
     from etl_dagster_service_crawler_spark.workloads.llm import (
         PQ_EXPORT_CODES,
@@ -775,20 +775,14 @@ def q_sink_pq_sidecar(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     e = load_table(spark, sf_dir, "embeddings")
-    cb = pq_codebook(e, PQ_EXPORT_SUB, PQ_EXPORT_CODES)
-    codes = (
-        pq_encode(e, cb, PQ_EXPORT_SUB)
-        .groupBy("vec_id")
-        .agg(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("sub_id", "code"))),
-                lambda s: s["code"].cast("int"),
-            ).alias("codes")
-        )
-    )
+    cb = _collect_codebook_from_emb(e, PQ_EXPORT_SUB, PQ_EXPORT_CODES)
+    # NULL embeddings encode to NULL codes and get no sidecar row
+    codes = pq_encode_codes(e, cb).where(F.col("codes").isNotNull())
     path = _scratch(sf_dir, "sink_pq_sidecar/codes")
     shutil.rmtree(path, ignore_errors=True)
-    codes.sort("vec_id").coalesce(1).write.parquet(path)
+    # one file sorted by vec_id; a global sort would range-partition
+    # and run the encode kernel twice (once more for the sample)
+    codes.repartition(1).sortWithinPartitions("vec_id").write.parquet(path)
     back = spark.read.parquet(path)
     return back.select("vec_id", F.posexplode("codes").alias("sub_id", "code"))
 
@@ -837,8 +831,8 @@ def q_sink_pq_sidecar_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     the sidecar; at 100 TB with thousands of pb buckets a takedown
     batch touches only the buckets its ids hash to."""
     from etl_dagster_service_crawler_spark.operators.similarity import (
-        pq_codebook,
-        pq_encode,
+        _collect_codebook_from_emb,
+        pq_encode_codes,
     )
     from etl_dagster_service_crawler_spark.workloads.llm import (
         PQ_EXPORT_CODES,
@@ -846,19 +840,10 @@ def q_sink_pq_sidecar_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     e = load_table(spark, sf_dir, "embeddings")
-    cb = pq_codebook(e, PQ_EXPORT_SUB, PQ_EXPORT_CODES)  # frozen
+    cb = _collect_codebook_from_emb(e, PQ_EXPORT_SUB, PQ_EXPORT_CODES)  # frozen
 
     def codes_of(frame: DataFrame) -> DataFrame:
-        return (
-            pq_encode(frame, cb, PQ_EXPORT_SUB)
-            .groupBy("vec_id")
-            .agg(
-                F.transform(
-                    F.array_sort(F.collect_list(F.struct("sub_id", "code"))),
-                    lambda s: s["code"].cast("int"),
-                ).alias("codes")
-            )
-        )
+        return pq_encode_codes(frame, cb).where(F.col("codes").isNotNull())
 
     path = _scratch(sf_dir, "sink_pq_apply/codes")
     shutil.rmtree(path, ignore_errors=True)

@@ -588,22 +588,14 @@ def q_embedding_quantize(spark: SparkSession, sf_dir: str) -> DataFrame:
     4x storage/bandwidth cut an embedding index takes before sharding.
     floor(x+0.5) instead of round() so both engines agree at .5; scale
     is per-vector (one fold), quantized values exploded for the oracle."""
+    from etl_dagster_service_crawler_spark.operators.similarity import (
+        quantize_rows,
+    )
+
     emb = load_table(spark, sf_dir, "embeddings").where(F.col("vec_id") < 100)
-    absmax = F.aggregate(
-        F.col("embedding"),
-        F.lit(0.0),
-        lambda acc, x: F.greatest(acc, F.abs(x.cast("double"))),
-    )
-    # zero-vector guard: scale 0 quantizes a zero vector to zeros
-    # instead of tripping ANSI on a NaN->int cast
-    scale = F.when(absmax > 0, F.lit(127.0) / absmax).otherwise(F.lit(0.0))
-    q = F.transform(
-        F.col("embedding"),
-        lambda x: F.floor(x.cast("double") * scale + 0.5).cast("int"),
-    )
-    return emb.select(
-        "vec_id",
-        F.posexplode(q).alias("pos", "qval"),
+    return quantize_rows(emb).select(
+        F.col("id").alias("vec_id"),
+        F.posexplode("q8").alias("pos", "qval"),
     )
 
 
@@ -1945,13 +1937,13 @@ def q_kmeans_assign_export(spark: SparkSession, sf_dir: str) -> DataFrame:
     export-only scaffolding (8 rows)."""
     from etl_dagster_service_crawler_spark.operators.similarity import (
         _il2,
-        _q8_expr,
         hash_spread_seeds,
+        quantize_rows,
     )
 
     e = load_table(spark, sf_dir, "embeddings")
-    cent = hash_spread_seeds(e, KMEANS_EXPORT_K).select(
-        F.col("cid").alias("cluster_id"), _q8_expr("cvec").alias("qc")
+    cent = quantize_rows(hash_spread_seeds(e, KMEANS_EXPORT_K), "cid", "cvec").select(
+        F.col("id").cast("int").alias("cluster_id"), F.col("q8").alias("qc")
     )
     # _il2, not an inline fold: its per-term coalesce is the
     # engine-parity seam for wrong-dim rows (zip_with pads NULL and a
@@ -1959,7 +1951,7 @@ def q_kmeans_assign_export(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the r9 invariant _sql_il2 states on the oracle side)
     d2 = _il2(F.col("qv"), F.col("qc"))
     return (
-        e.select("vec_id", _q8_expr("embedding").alias("qv"))
+        quantize_rows(e).select(F.col("id").alias("vec_id"), F.col("q8").alias("qv"))
         .join(F.broadcast(cent))
         .select("vec_id", "cluster_id", d2.alias("d2"))
         .groupBy("vec_id")
@@ -2021,14 +2013,14 @@ def q_kmeans_update_export(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregate combines map-side — the exchange carries k x dims rows
     per task, constant in n (treeAggregate semantics relationally)."""
     from etl_dagster_service_crawler_spark.operators.similarity import (
-        _q8_expr,
+        quantize_rows,
     )
 
     assign = q_kmeans_assign_export(spark, sf_dir).select(
         "vec_id", "cluster_id"
     )
-    e = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id", _q8_expr("embedding").alias("qv")
+    e = quantize_rows(load_table(spark, sf_dir, "embeddings")).select(
+        F.col("id").alias("vec_id"), F.col("q8").alias("qv")
     )
     ex = e.join(assign, "vec_id").select(
         "cluster_id", F.posexplode("qv").alias("pos", "q")
@@ -2095,15 +2087,17 @@ def q_kmeans_train_iters(spark: SparkSession, sf_dir: str) -> DataFrame:
     frame is persisted once and re-scanned, never re-shuffled."""
     from etl_dagster_service_crawler_spark.operators.similarity import (
         _il2,
-        _q8_expr,
         hash_spread_seeds,
+        quantize_rows,
     )
 
     e_raw = load_table(spark, sf_dir, "embeddings")
-    e = e_raw.select("vec_id", _q8_expr("embedding").alias("qv")).persist()
-    cent = hash_spread_seeds(e_raw, KMEANS_EXPORT_K).select(
-        F.col("cid").alias("cluster_id"), _q8_expr("cvec").alias("qc")
-    )
+    e = quantize_rows(e_raw).select(
+        F.col("id").alias("vec_id"), F.col("q8").alias("qv")
+    ).persist()
+    cent = quantize_rows(
+        hash_spread_seeds(e_raw, KMEANS_EXPORT_K), "cid", "cvec"
+    ).select(F.col("id").cast("int").alias("cluster_id"), F.col("q8").alias("qc"))
     outs = []
     for it in range(1, KMEANS_TRAIN_ITERS + 1):
         d2 = _il2(F.col("qv"), F.col("qc"))
@@ -2242,13 +2236,13 @@ def q_embedding_dim_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     ints) + one 64-group aggregate with map-side combine. The exchange
     carries dim-partial sums, never vectors."""
     from etl_dagster_service_crawler_spark.operators.similarity import (
-        _q8_expr,
+        quantize_rows,
     )
 
     e = load_table(spark, sf_dir, "embeddings")
     v = F.col("v")
     return (
-        e.select(F.posexplode(_q8_expr("embedding")).alias("dim", "v"))
+        quantize_rows(e).select(F.posexplode("q8").alias("dim", "v"))
         .groupBy(F.col("dim").cast("int").alias("dim"))
         .agg(
             F.sum(v).cast("bigint").alias("sum_q8"),
@@ -4094,14 +4088,14 @@ def q_decontaminate_embedding(spark: SparkSession, sf_dir: str) -> DataFrame:
     scan (the similarity_topk shape — flips to a block equi-join past
     ~100 probes); output is hit pairs only."""
     from etl_dagster_service_crawler_spark.operators.similarity import (
-        _il2 as _unused_il2,  # noqa: F401 - keep import surface explicit
-        _q8_expr,
+        quantize_rows,
     )
 
     e = load_table(spark, sf_dir, "embeddings")
-    q = e.select("vec_id", _q8_expr("embedding").alias("qv"))
-    probes = q.where(F.col("vec_id").isin(TOPK_QUERY_IDS)).select(
-        F.col("vec_id").alias("probe_id"), F.col("qv").alias("pv")
+    q = quantize_rows(e).select(F.col("id").alias("vec_id"), F.col("q8").alias("qv"))
+    # filter before the kernel so the id predicate reaches the scan
+    probes = quantize_rows(e.where(F.col("vec_id").isin(TOPK_QUERY_IDS))).select(
+        F.col("id").alias("probe_id"), F.col("q8").alias("pv")
     )
     dot = F.aggregate(
         F.zip_with(F.col("qv"), F.col("pv"), lambda x, y: x * y),

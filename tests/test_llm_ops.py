@@ -853,6 +853,84 @@ def test_rerank_topk_exact_when_r_covers_corpus(spark, sf_dir):
     assert rer == exact
 
 
+def _jvm_q8_fold(vec_col: str):
+    """Reference for the quantize kernel: the embedding_quantize int8
+    formula as the plain JVM expression fold the kernel replaced —
+    q = floor(x * 127 / max|x| + 0.5), zero vectors to zeros."""
+    from pyspark.sql import functions as F
+
+    absmax = F.aggregate(
+        F.col(vec_col), F.lit(0.0),
+        lambda acc, x: F.greatest(acc, F.abs(x.cast("double"))),
+    )
+    scale = F.when(absmax > 0, F.lit(127.0) / absmax).otherwise(F.lit(0.0))
+    return F.transform(
+        F.col(vec_col),
+        lambda x: F.floor(x.cast("double") * scale + 0.5).cast("bigint"),
+    )
+
+
+def test_rerank_coarse_kernel_replays_jvm_edge_semantics(spark):
+    """quantized_rerank_topk's coarse kernel must score every
+    (query, corpus) pair exactly like the JVM expression it replaced:
+    int8 dot / (query n8 * corpus n8) when that product is > 0, else
+    -2.0 (zero vectors, NULL embeddings, NULL elements, NaN rows); NULL
+    when the lengths differ (the zip_with NULL pad); self excluded."""
+    from pyspark.sql import functions as F
+
+    from etl_dagster_service_crawler_spark.operators.similarity import (
+        _make_coarse_scores_kernel,
+        quantize_rows,
+    )
+
+    rows = [
+        (1, [1.0, -2.0, 0.5]),
+        (2, None),
+        (3, []),
+        (4, [0.0, 0.0, 0.0]),
+        (5, [3.5, None, -1.25]),
+        (6, [2.0, 1.0]),
+        (7, [1.0, float("nan"), -2.0]),
+        (8, [-1.0, 2.0, 0.25]),
+    ]
+    queries = [1, 2, 5, 6, 8]
+    e = spark.createDataFrame(rows, "vec_id bigint, embedding array<float>")
+    qrows = quantize_rows(e.where(F.col("vec_id").isin(queries))).collect()
+    got = {
+        (r["qid"], r["nid"]): r["coarse"]
+        for r in e.select(F.col("vec_id").alias("id"), F.col("embedding").alias("emb"))
+        .mapInArrow(
+            _make_coarse_scores_kernel(qrows), "qid bigint, nid bigint, coarse double"
+        )
+        .collect()
+    }
+
+    def idot(a, b):
+        return F.aggregate(
+            F.zip_with(a, b, lambda x, y: (x * y).cast("bigint")),
+            F.lit(0).cast("bigint"),
+            lambda acc, x: acc + x,
+        )
+
+    base = e.select("vec_id", _jvm_q8_fold("embedding").alias("q8"))
+    base = base.withColumn("n8", F.sqrt(idot(F.col("q8"), F.col("q8")).cast("double")))
+    q = base.where(F.col("vec_id").isin(queries)).select(
+        F.col("vec_id").alias("qid"), F.col("q8").alias("qq8"), F.col("n8").alias("qn8")
+    )
+    denom = F.col("qn8") * F.col("n8")
+    coarse = F.when(
+        denom > 0, idot(F.col("qq8"), F.col("q8")).cast("double") / denom
+    ).otherwise(F.lit(-2.0))
+    want = {
+        (r["qid"], r["vec_id"]): r["coarse"]
+        for r in base.join(q, F.col("vec_id") != F.col("qid"))
+        .select("qid", "vec_id", coarse.alias("coarse"))
+        .collect()
+    }
+    assert got == want
+    assert got[(1, 6)] is None and got[(1, 7)] == -2.0 and got[(5, 1)] == -2.0
+
+
 def test_rerank_topk_default_r_recall(spark, sf_dir):
     """At the default R the int8 coarse cut must not cost measurable
     recall on the fixtures (measured 1.0 at sf0.01/sf0.001; pin 0.9
@@ -1038,18 +1116,26 @@ def test_similarity_pair_histogram_skips_null_embeddings(spark):
 
 
 def test_quantize_rows_kernel_replays_jvm_edge_semantics(spark):
-    """The r15 Arrow quantize kernel must replay the JVM expression
-    chain exactly, including the edges: NULL embedding -> NULL q8/n8;
+    """The Arrow quantize kernel must replay the JVM expression chain
+    exactly, including the edges: NULL embedding -> NULL q8/n8;
     empty array -> empty q8, n8 = 0.0; a NULL element -> NULL q8
     element and a NULL-poisoned n8 fold; zero vector -> all-zero q8,
     n8 = 0.0; NaN / +Inf / -Inf elements (alone, mixed with finite
-    values, or next to a NULL) -> whatever the JVM twin gives. Compare
-    kernel output row-for-row against the JVM twin _q8_expr."""
+    values, or next to a NULL) -> whatever the JVM fold gives. Compare
+    kernel output row-for-row against the JVM fold _jvm_q8_fold.
+
+    The same rows through pq_encode_codes (which quantizes with the
+    same kernel code) must encode every row with an embedding to the
+    per-subspace argmin of _il2_py over the kernel's q8, ties to the
+    smallest code: full-width rows take the vectorized argmin, the
+    others the per-row replay — where a NULL next to a NaN/±Inf
+    element used to raise."""
     from pyspark.sql import functions as F
 
     from etl_dagster_service_crawler_spark.operators.similarity import (
-        _q8_expr,
-        _quantize_rows_kernel,
+        _il2_py,
+        pq_encode_codes,
+        quantize_rows,
     )
 
     nan, inf = float("nan"), float("inf")
@@ -1070,11 +1156,7 @@ def test_quantize_rows_kernel_replays_jvm_edge_semantics(spark):
     e = spark.createDataFrame(rows, "vec_id bigint, embedding array<float>")
     got = {
         r["id"]: (r["q8"], r["n8"])
-        for r in e.select(
-            F.col("vec_id").alias("id"), F.col("embedding").alias("emb")
-        )
-        .mapInArrow(_quantize_rows_kernel, "id bigint, q8 array<int>, n8 double")
-        .collect()
+        for r in quantize_rows(e).collect()
     }
     isq = F.aggregate(
         F.col("q8"), F.lit(0).cast("bigint"),
@@ -1082,7 +1164,7 @@ def test_quantize_rows_kernel_replays_jvm_edge_semantics(spark):
     )
     want = {
         r["vec_id"]: (r["q8"], r["n8"])
-        for r in e.select(F.col("vec_id"), _q8_expr("embedding").alias("q8"))
+        for r in e.select(F.col("vec_id"), _jvm_q8_fold("embedding").alias("q8"))
         .withColumn("n8", F.sqrt(isq.cast("double")))
         .collect()
     }
@@ -1090,10 +1172,28 @@ def test_quantize_rows_kernel_replays_jvm_edge_semantics(spark):
     assert got[2] == (None, None)
     assert got[3] == ([], 0.0)
     assert got[5][0][1] is None and got[5][1] is None
-    # the JVM twin's non-finite output, recorded as literals
+    # the JVM fold's non-finite output, recorded as literals
     assert got[7] == ([0, 0, 0], 0.0) and got[8] == ([0, 0, 0], 0.0)
     assert got[9] == ([0, 0], 0.0) and got[10] == ([0], 0.0)
     assert got[11] == ([0, None, 0], None)
+
+    # 2 subspaces of width 1: the 2-element rows are full width; code
+    # 0 and 3 tie in subspace 0
+    cb = [[[0], [127], [-127], [0]], [[64], [-64], [0], [64]]]
+    codes = {
+        r["vec_id"]: r["codes"]
+        for r in pq_encode_codes(e, cb, dim=2).collect()
+    }
+    assert codes.keys() == got.keys()
+    for vid, (q8, _) in got.items():
+        if q8 is None:
+            assert codes[vid] is None
+            continue
+        want_codes = []
+        for s, cs in enumerate(cb):
+            d = [_il2_py(q8[s:s + 1], c) for c in cs]
+            want_codes.append(d.index(min(d)))
+        assert codes[vid] == want_codes, vid
 
 
 def test_pq_encode_complete_codes_in_range(spark, sf_dir):
@@ -1139,6 +1239,23 @@ def test_pq_encode_complete_codes_in_range(spark, sf_dir):
         assert by_vec[vid] == {want}
 
 
+def test_collect_codebook_from_emb_matches_codebook_pipeline(spark, sf_dir):
+    """The one-job codebook collect (TakeOrdered seed pick, kernel
+    quantize over just those rows, code = collected row order) must
+    equal the pq_codebook frame collected — same pick, same numbering,
+    same slices."""
+    from etl_dagster_service_crawler_spark.operators.similarity import (
+        _collect_codebook,
+        _collect_codebook_from_emb,
+        pq_codebook,
+    )
+
+    e = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+    assert _collect_codebook_from_emb(e, 8, 32) == _collect_codebook(
+        pq_codebook(e, 8, 32)
+    )
+
+
 def test_pq_adc_null_embedding_row_is_dropped(spark):
     """A NULL-embedding corpus row encodes to NULL codes; the pre-r14
     join-based ADC dropped it (posexplode of NULL emits no rows -> the
@@ -1155,12 +1272,14 @@ def test_pq_adc_null_embedding_row_is_dropped(spark):
     rng = random.Random(7)
     rows = [(i, [rng.uniform(-1, 1) for _ in range(64)]) for i in range(40)]
     rows.append((99, None))
+    # a NULL id fails the oracle's nid != qid test: dropped, not a crash
+    rows.append((None, [rng.uniform(-1, 1) for _ in range(64)]))
     e = spark.createDataFrame(rows, "vec_id bigint, embedding array<double>")
     adc = pq_adc_topk(e, [0, 1], k=5).collect()
-    assert adc and all(r["nid"] != 99 for r in adc)
+    assert adc and all(r["nid"] not in (99, None) for r in adc)
     assert all(r["adc"] is not None for r in adc)
     rr = pq_rerank_topk(e, [0, 1], k=5, r_candidates=8).collect()
-    assert rr and all(r["nid"] != 99 for r in rr)
+    assert rr and all(r["nid"] not in (99, None) for r in rr)
 
 
 def test_pq_encode_empty_corpus_returns_empty(spark):
@@ -2248,7 +2367,7 @@ def test_kmeans_update_matches_brute_force(spark, sf_dir):
     from collections import defaultdict
 
     from etl_dagster_service_crawler_spark.operators.similarity import (
-        _q8_expr,
+        quantize_rows,
     )
     from etl_dagster_service_crawler_spark.workloads.llm import (
         q_kmeans_assign_export,
@@ -2260,10 +2379,7 @@ def test_kmeans_update_matches_brute_force(spark, sf_dir):
         for r in q_kmeans_assign_export(spark, sf_dir).collect()
     }
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    qv = {
-        r["vec_id"]: r["qv"]
-        for r in emb.select("vec_id", _q8_expr("embedding").alias("qv")).collect()
-    }
+    qv = {r["id"]: r["q8"] for r in quantize_rows(emb).collect()}
     acc = defaultdict(lambda: [0, 0])  # (cluster, pos) -> [n, s]
     for vid, cid in assign.items():
         for pos, q in enumerate(qv[vid]):

@@ -948,3 +948,25 @@ def test_block_pair_stages_are_one_grouped_arrow_map(spark, sf_dir, monkeypatch)
         assert "collect_list" not in plan, name
         assert plan.count("FlatMapGroupsInArrow") == 1, name
         assert "CartesianProduct" not in plan, name
+
+
+def test_int8_family_runs_on_the_one_quantize_kernel(spark, sf_dir):
+    """The int8 quantize has one engine implementation (the
+    _quantize_rows_kernel Arrow map) and the PQ ADC sum one (the numpy
+    LUT gather): no interpreted absmax/transform quantize fold and no
+    literal-LUT CASE tree in the plans. The kmeans export keeps its
+    integer-L2 fold (aggregate over zip_with), which is not a
+    quantizer."""
+    import re
+
+    from etl_dagster_service_crawler_spark.workloads.llm import (
+        q_embedding_quantize,
+        q_ivf_pq_search,
+        q_kmeans_assign_export,
+    )
+
+    assert "CASE WHEN" not in _plan(q_ivf_pq_search(spark, sf_dir))
+    for q in (q_embedding_quantize, q_kmeans_assign_export):
+        plan = _plan(q(spark, sf_dir))
+        assert "MapInArrow" in plan, q.__name__
+        assert not re.search(r"aggregate\((?!zip_with\()", plan), q.__name__

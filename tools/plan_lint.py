@@ -58,12 +58,6 @@ ALLOW: dict[tuple[str, str], str] = {
     # past ~100 probes)
     ("decontaminate_embedding", "BroadcastNestedLoopJoin"):
         "8 quantized probe vectors",
-    # the BNLJ broadcasts the 8 probe vectors over the corpus scan;
-    # sound while |queries| x corpus-block fits one task's memory —
-    # past O(100) queries the shape must flip to knn_join_quantized's
-    # grouped block-pair fan (same coarse math, no broadcast of the
-    # query set), or IVF when the corpus clusters (route_knn)
-    ("similarity_topk_rerank", "BroadcastNestedLoopJoin"): "bounded probe rows (coarse int8 scan; flips to block join past ~100 queries)",
     ("similarity_topk_ivf", "BroadcastNestedLoopJoin"): "probe + centroid rows",
     ("knn_join_ivf", "BroadcastNestedLoopJoin"): "centroid array row",
     # r8 oracle exports: 32-row plane / 16-row centroid broadcasts and
