@@ -30,6 +30,7 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame, Observation, functions as F
 
 from etl_dagster_service_crawler_spark.operators.block_pairs import block_pair_fan
+from etl_dagster_service_crawler_spark.operators.joins import hot_keys, salt_hot_keys
 
 # Universal-hash family h_i(x) = (a_i * x + b_i) mod P over Z_P.
 # P = 2^31 - 1 keeps a*x < 2^62 (no bigint overflow).
@@ -52,49 +53,11 @@ MINHASH_B = [_rng.randrange(0, MINHASH_P) for _ in range(NUM_HASHES)]
 # mode. Buckets larger than HOT_BUCKET_ROWS get salted: members hash
 # to one of N_SALTS sub-keys, and the 1-row-per-bucket label side is
 # REPLICATED across all salts, so the join result is bit-identical
-# while the hot key's probe rows spread over N_SALTS tasks.
+# while the hot key's probe rows spread over N_SALTS tasks
+# (operators/joins.salt_hot_keys). Both are read at call time, so
+# tests force the salted plan by monkeypatching them.
 HOT_BUCKET_ROWS = 100_000
 N_SALTS = 16
-
-
-def _salt_bucket_members(
-    edges: DataFrame, hot: DataFrame, id_col: str, n_salts: int
-) -> DataFrame:
-    """Members + salt column: a member of a hot bucket hashes to one of
-    n_salts sub-keys; everything else keeps salt 0, so the non-skewed
-    path pays nothing but a broadcast probe. `hot` is (bh, is_hot) —
-    bounded by corpus_rows/threshold buckets, broadcastable by
-    construction."""
-    return edges.join(F.broadcast(hot), "bh", "left").select(
-        id_col,
-        "bh",
-        F.when(
-            F.col("is_hot"), F.pmod(F.xxhash64(F.col(id_col)), F.lit(n_salts))
-        )
-        .otherwise(F.lit(0))
-        .cast("int")
-        .alias("salt"),
-    )
-
-
-def _replicate_labels_across_salts(
-    bucket_labels: DataFrame, hot: DataFrame, n_salts: int
-) -> DataFrame:
-    """Explode the (bh, label) side to every salt of a hot bucket —
-    the replicate-the-small-side half of classic skew salting. Cold
-    buckets emit exactly one (salt 0) row."""
-    salts = F.when(
-        F.col("is_hot"), F.sequence(F.lit(0), F.lit(n_salts - 1))
-    ).otherwise(F.array(F.lit(0)))
-    return (
-        bucket_labels.join(F.broadcast(hot), "bh", "left")
-        .select(
-            "bh",
-            *[c for c in bucket_labels.columns if c != "bh"],
-            F.explode(salts).alias("salt"),  # int already (sequence of int lits)
-        )
-        .drop("is_hot")
-    )
 
 
 def dedup_exact(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
@@ -411,9 +374,7 @@ def minhash_dedup_pairs(
 
 
 def minhash_assign_representatives(
-    df: DataFrame, id_col: str, text_col: str,
-    hot_bucket_rows: int = HOT_BUCKET_ROWS, n_salts: int = N_SALTS,
-    exact: bool = False,
+    df: DataFrame, id_col: str, text_col: str, exact: bool = False,
 ) -> DataFrame:
     """Scalable dedup ASSIGNMENT: each doc -> a cluster representative,
     without ever enumerating pairs (pair output is O(cluster^2) — a
@@ -426,9 +387,9 @@ def minhash_assign_representatives(
 
     Skew-hardened (see HOT_BUCKET_ROWS): bucket size and bucket min
     come out of ONE aggregation; buckets above the threshold have their
-    members salted across n_salts sub-keys and their (one-row) rep
+    members salted across N_SALTS sub-keys and their (one-row) rep
     replicated to every salt, so the members<-rep join spreads a mega
-    bucket over n_salts tasks instead of funnelling it through one.
+    bucket over N_SALTS tasks instead of funnelling it through one.
     Results are bit-identical with salting on or off (pinned by test).
 
     exact=True swaps LSH band buckets for ONE sha2(text) bucket per doc
@@ -459,22 +420,16 @@ def minhash_assign_representatives(
     stats = buckets.groupBy("bh").agg(
         F.min(id_col).alias("bucket_rep"), F.count(F.lit(1)).alias("bn")
     ).localCheckpoint(eager=True)
-    hot = stats.where(F.col("bn") > hot_bucket_rows).select(
-        "bh", F.lit(True).alias("is_hot")
-    )
-    # short-circuit: pay the salted plan (broadcast barriers, 2-key
-    # join, replicate generate) ONLY when a hot bucket exists — one
-    # cheap aggregation job over the cached signatures decides
-    if hot.limit(1).count() == 0:
-        bucket_min = stats.select("bh", "bucket_rep")
+    # short-circuit: pay the salted plan ONLY when a hot bucket exists
+    # — one cheap job over the checkpointed stats decides
+    hot = hot_keys(stats, "bh", "bn", HOT_BUCKET_ROWS)
+    bucket_min = stats.select("bh", "bucket_rep")
+    if hot is None:
         joined = buckets.join(bucket_min, "bh")
     else:
-        joined = _salt_bucket_members(buckets, hot, id_col, n_salts).join(
-            _replicate_labels_across_salts(
-                stats.select("bh", "bucket_rep"), hot, n_salts
-            ),
-            ["bh", "salt"],
-        )
+        joined = salt_hot_keys(
+            buckets, hot, "bh", N_SALTS, spread_col=id_col
+        ).join(salt_hot_keys(bucket_min, hot, "bh", N_SALTS), ["bh", "salt"])
     return (
         joined.groupBy(id_col)
         .agg(F.min("bucket_rep").alias("rep_id"))
@@ -485,7 +440,6 @@ def minhash_assign_representatives(
 def minhash_cluster_cc(
     df: DataFrame, id_col: str, text_col: str, max_iters: int = 10,
     exact: bool = False,
-    hot_bucket_rows: int = HOT_BUCKET_ROWS, n_salts: int = N_SALTS,
 ) -> DataFrame:
     """FULL near-dup clustering: connected components over the LSH
     bucket graph by iterative label propagation to a fixpoint.
@@ -559,14 +513,11 @@ def minhash_cluster_cc(
         edges = sig.select(F.col(id_col), F.explode(_band_hashes()).alias("bh"))
 
     n_edges = df.count() * bands_per_doc
-    return cc_label_propagation(
-        edges, id_col, n_edges, max_iters, hot_bucket_rows, n_salts
-    )
+    return cc_label_propagation(edges, id_col, n_edges, max_iters)
 
 
 def cc_label_propagation(
     edges: DataFrame, id_col: str, n_edges: int, max_iters: int = 10,
-    hot_bucket_rows: int = HOT_BUCKET_ROWS, n_salts: int = N_SALTS,
 ) -> DataFrame:
     """Connected components over an (id, bh) membership frame by
     iterative min-label propagation to a fixpoint — the tuned loop
@@ -594,10 +545,10 @@ def cc_label_propagation(
         #
         # Skew hardening (static across iterations, so probed ONCE):
         # hot buckets — the near-constant-corpus mega bucket — get
-        # their members salted over n_salts sub-keys; each iteration's
+        # their members salted over N_SALTS sub-keys; each iteration's
         # label side is replicated across those salts, keeping results
         # bit-identical while the per-iteration members<-label join
-        # spreads the hot key over n_salts tasks. The salted loop
+        # spreads the hot key over N_SALTS tasks. The salted loop
         # (broadcast barriers, 2-key join, replicate generate) is built
         # ONLY when the probe finds a hot bucket — the no-skew plan is
         # byte-for-byte the old one.
@@ -609,14 +560,10 @@ def cc_label_propagation(
             )
             .persist()
         )
-        hot = (
-            stats.where(F.col("bn") > hot_bucket_rows)
-            .select("bh", F.lit(True).alias("is_hot"))
-        )
-        has_hot = hot.limit(1).count() > 0
-        if has_hot:
+        hot = hot_keys(stats, "bh", "bn", HOT_BUCKET_ROWS)
+        if hot is not None:
             by_bh = (
-                _salt_bucket_members(by_id, hot, id_col, n_salts)
+                salt_hot_keys(by_id, hot, "bh", N_SALTS, spread_col=id_col)
                 .repartition(width, F.col("bh"), F.col("salt"))
                 .persist()
             )
@@ -639,10 +586,8 @@ def cc_label_propagation(
                     .groupBy("bh")
                     .agg(F.min("label").alias("bucket_label"))
                 )
-            if has_hot:
-                bucket_min = _replicate_labels_across_salts(
-                    bucket_min, hot, n_salts
-                )
+            if hot is not None:
+                bucket_min = salt_hot_keys(bucket_min, hot, "bh", N_SALTS)
             hop = (
                 by_bh.join(bucket_min, join_keys)
                 .groupBy(id_col)

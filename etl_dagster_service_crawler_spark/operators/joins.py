@@ -82,6 +82,50 @@ def salted_join(
     return left.join(right, [on, "_salt"], how).drop("_salt")
 
 
+def hot_keys(sizes: DataFrame, key: str, size_col: str, threshold: int) -> DataFrame | None:
+    """(key, is_hot) for every key whose `size_col` exceeds threshold,
+    or None when no key does — one limit(1) probe, so callers build the
+    salted plan (broadcast barriers, two-key join, replicate generate)
+    only when a hot key exists and the no-skew plan stays unsalted.
+    Bounded by rows/threshold keys: broadcastable by construction."""
+    hot = sizes.where(F.col(size_col) > threshold).select(
+        key, F.lit(True).alias("is_hot")
+    )
+    return hot if hot.limit(1).count() else None
+
+
+def salt_hot_keys(
+    df: DataFrame, hot: DataFrame, key: str, n_salts: int,
+    spread_col: str | None = None,
+) -> DataFrame:
+    """df plus an int `salt` column for a skew-salted equi-join on
+    (key, salt) — the deterministic, key-generic twin of salted_join,
+    applied only to the keys in `hot` (hot_keys). The two sides of one
+    join call it in the two modes:
+
+    - spread_col given (the many-rows side): a row of a hot key goes to
+      salt pmod(xxhash64(spread_col), n_salts), so the key's rows
+      spread over n_salts tasks;
+    - spread_col None (the few-rows side): a row of a hot key is
+      replicated to every salt 0..n_salts-1.
+
+    Rows of cold keys get salt 0 in both modes, so the join result is
+    bit-identical to the unsalted join."""
+    hot_flag = F.col("is_hot")
+    if spread_col is not None:
+        salt = F.when(
+            hot_flag, F.pmod(F.xxhash64(F.col(spread_col)), F.lit(n_salts))
+        ).otherwise(F.lit(0)).cast("int")
+    else:
+        salt = F.explode(
+            F.when(hot_flag, F.sequence(F.lit(0), F.lit(n_salts - 1)))
+            .otherwise(F.array(F.lit(0)))
+        )
+    return df.join(F.broadcast(hot), key, "left").select(
+        *df.columns, salt.alias("salt")
+    )
+
+
 def asof_join(
     left: DataFrame,
     right: DataFrame,

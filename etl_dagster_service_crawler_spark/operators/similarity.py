@@ -4,15 +4,15 @@
   side is broadcast; the corpus streams once per partition. Fine when
   |queries| is bounded (interactive search); the full-corpus-vs-itself
   case must use the bucketed variants below.
-- ivf_topk: IVF-style approximate top-k — assign corpus vectors to
-  nearest of C centroids (broadcast centroids), probe the nprobe
-  nearest centroid buckets per query. Candidate set shrinks by
-  ~C/nprobe; at scale the bucket assignment is the only full pass.
-- ivf_build / ivf_search: the persisted form — assignments written
-  once in a bucketed layout (pmod(cid, <=128) partition dirs,
-  cid-sorted files), searches statically prune to the probed buckets'
-  partitions and the probed cells' row groups. This is the serving
-  shape for repeated queries.
+- ivf_build / ivf_search: IVF approximate top-k — corpus vectors are
+  assigned to the nearest of C k-means centroids once and written in a
+  bucketed layout (pmod(cid, <=128) partition dirs, cid-sorted files);
+  each search ranks the cells per query (probe_cells, the one probe
+  rank) and statically prunes to the nprobe probed cells' partitions
+  and row groups. Candidate set shrinks by ~C/nprobe.
+- knn_join_cells: the same cells as a batch self-join (every row a
+  query). The coarse-then-exact searches (quantized, PQ) share one
+  exact re-rank of their survivors (exact_rerank_topk).
 - embedding near-dup pairs ride the same bucketing (same-bucket
   equi-join) — see workloads/llm.py.
 
@@ -31,6 +31,7 @@ from pyspark.sql import functions as F
 
 from etl_dagster_service_crawler_spark.functions.vectors import cosine, dot, dot_fixed, norm2
 from etl_dagster_service_crawler_spark.operators.block_pairs import block_pair_fan
+from etl_dagster_service_crawler_spark.operators.joins import hot_keys, salt_hot_keys
 
 _log = logging.getLogger("spark_graft.similarity")
 
@@ -52,6 +53,50 @@ def cosine_topk_bruteforce(
     w = Window.partitionBy("qid").orderBy(F.col("cos").desc(), F.col("nid"))
     return (
         scored.withColumn("rn", F.row_number().over(w))
+        .where(F.col("rn") <= k)
+        .select("qid", "nid", "cos", "rn")
+    )
+
+
+def exact_rerank_topk(
+    survivors: DataFrame, emb: DataFrame, k: int,
+    query_ids: list[int] | None = None,
+    id_col: str = "vec_id", vec_col: str = "embedding",
+    dim: int | None = None,
+) -> DataFrame:
+    """The one exact re-rank of coarse survivors: (qid, nid) rows ->
+    the top-k (qid, nid, cos, rn) per qid by (cos desc, nid), cos the
+    full-precision cosine of the two emb vectors. Norms are taken once
+    per row, so each survivor pair pays one dot fold: the same IEEE ops
+    as cosine(), bit-identical. A bounded query_ids list is broadcast
+    as the query side; None makes every emb row a query (the batch
+    self-joins). `dim` unrolls the pair dot (dot_fixed)."""
+    v = emb.select(
+        F.col(id_col).alias("id"),
+        F.col(vec_col).alias("vec"),
+        F.sqrt(norm2(F.col(vec_col))).alias("nrm"),
+    )
+    nv = v.select(
+        F.col("id").alias("nid"), F.col("vec").alias("nvec"),
+        F.col("nrm").alias("nnrm"),
+    )
+    qv = v.select(
+        F.col("id").alias("qid"), F.col("vec").alias("qvec"),
+        F.col("nrm").alias("qnrm"),
+    )
+    if query_ids is not None:
+        qv = F.broadcast(qv.where(F.col("qid").isin(query_ids)))
+    w = Window.partitionBy("qid").orderBy(F.col("cos").desc(), F.col("nid"))
+    return (
+        survivors.join(nv, "nid")
+        .join(qv, "qid")
+        .select(
+            "qid",
+            "nid",
+            (_pair_dot(F.col("qvec"), F.col("nvec"), dim)
+             / (F.col("qnrm") * F.col("nnrm"))).alias("cos"),
+        )
+        .withColumn("rn", F.row_number().over(w))
         .where(F.col("rn") <= k)
         .select("qid", "nid", "cos", "rn")
     )
@@ -85,7 +130,7 @@ def quantized_rerank_topk(
        drift); the only float ops are one sqrt and one divide on
        exactly-representable integers.
     2. exact — full-precision cosine on the R survivors only, top-k
-       by (cos desc, id).
+       by (cos desc, id) (exact_rerank_topk).
 
     Unlike the IVF operators this is fully DuckDB-oracle-checkable:
     recall is a DETERMINISTIC function of the quantization, not of a
@@ -108,19 +153,7 @@ def quantized_rerank_topk(
         .where(F.col("crn") <= r_candidates)
         .select("qid", "nid")
     )
-    qv = emb.where(F.col(id_col).isin(query_ids)).select(
-        F.col(id_col).alias("qid"), F.col(vec_col).alias("qvec")
-    )
-    nv = emb.select(F.col(id_col).alias("nid"), F.col(vec_col).alias("nvec"))
-    we = Window.partitionBy("qid").orderBy(F.col("cos").desc(), F.col("nid"))
-    return (
-        survivors.join(nv, "nid")
-        .join(F.broadcast(qv), "qid")
-        .select("qid", "nid", cosine(F.col("qvec"), F.col("nvec")).alias("cos"))
-        .withColumn("rn", F.row_number().over(we))
-        .where(F.col("rn") <= k)
-        .select("qid", "nid", "cos", "rn")
-    )
+    return exact_rerank_topk(survivors, emb, k, query_ids, id_col, vec_col)
 
 
 def _make_coarse_scores_kernel(qrows):
@@ -206,10 +239,15 @@ def probe_cells(
     dim: int | None = None,
 ) -> DataFrame:
     """Per-query probe ranking — the ONE definition of IVF probe order
-    (qcos desc, ties to smallest cid): rows (qid, qvec, cid, qcos, rn)
-    with rn <= nprobe. Shared by ivf_search and the oracle-backed
-    probe export, and mirrored exactly by calibrate_nprobe's numpy
-    kernel (probe_order_and_assignment).
+    (qcos desc, ties to smallest cid): every column of `queries` (at
+    least qid, qvec) plus (qnrm, cid, qcos, rn), rn <= nprobe. qnrm is
+    the query norm, kept for the caller's own pair cosines. Shared by
+    ivf_search, knn_join_cells, ivf_pq_search and the oracle-backed
+    probe exports, and mirrored exactly by calibrate_nprobe's numpy
+    kernel (probe_order_and_assignment). The join and the projection
+    keep the queries' partitioning, so a caller that hash-partitions
+    queries by qid gets the window with no Exchange over the fanned
+    |queries| x C frame.
 
     r14: both norms are computed once per row/centroid instead of once
     per (query, centroid) pair inside cosine(), and a caller-known
@@ -217,13 +255,13 @@ def probe_cells(
     factored IEEE ops in the same order — qcos is bit-identical."""
     wq = Window.partitionBy("qid").orderBy(F.col("qcos").desc(), F.col("cid"))
     cents = centroids.withColumn("__cnrm", F.sqrt(norm2(F.col("cvec"))))
+    q = queries.withColumn("qnrm", F.sqrt(norm2(F.col("qvec"))))
     return (
-        queries.withColumn("__qnrm", F.sqrt(norm2(F.col("qvec"))))
-        .join(F.broadcast(cents))
+        q.join(F.broadcast(cents))
         .select(
-            "qid", "qvec", "cid",
+            *q.columns, "cid",
             (_pair_dot(F.col("qvec"), F.col("cvec"), dim)
-             / (F.col("__qnrm") * F.col("__cnrm"))).alias("qcos"),
+             / (F.col("qnrm") * F.col("__cnrm"))).alias("qcos"),
         )
         .withColumn("rn", F.row_number().over(wq))
         .where(F.col("rn") <= nprobe)
@@ -574,20 +612,6 @@ def calibration_cached(
     return nprobe, curve
 
 
-def calibrated_nprobe_cached(
-    emb: DataFrame,
-    centroids: DataFrame,
-    index_dir: str,
-    target_recall: float = 0.85,
-    k: int = 5,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> int:
-    return calibration_cached(
-        emb, centroids, index_dir, target_recall, k, id_col, vec_col
-    )[0]
-
-
 # Above this probed fraction at target recall, the IVF candidate join
 # approaches brute force (candidate volume ~ fraction x n^2) while
 # still paying index maintenance — the quantized block scan does the
@@ -765,7 +789,7 @@ def ivf_n_dirs(n_centroids: int, cap: int | None = None) -> int:
     return max(1, min(n_centroids, cap if cap is not None else IVF_MAX_PARTITION_DIRS))
 
 
-def ivf_index_n_dirs(index_dir: str, n_centroids: int) -> int:
+def ivf_index_n_dirs(index_dir: str, n_centroids: int | None = None) -> int:
     """Bucket count of a PERSISTED index: the _NDIRS marker ivf_build
     records (atomic with the publish rename). For marker-less legacy
     indexes the count is derived from the ON-DISK layout itself — the
@@ -779,7 +803,10 @@ def ivf_index_n_dirs(index_dir: str, n_centroids: int) -> int:
     beats a resized constant. The constant is the last resort when
     assignments/ itself is unreadable — with a loud warning either way. Every
     reader (ivf_search's partition pruning) and every appender
-    (streaming ingest) must size pmod by the layout ON DISK."""
+    (streaming ingest) must size pmod by the layout ON DISK.
+
+    n_centroids=None counts the centroids from their parquet footers
+    (driver-side pyarrow, no Spark job), and only on that last path."""
     import os
 
     try:
@@ -808,6 +835,12 @@ def ivf_index_n_dirs(index_dir: str, n_centroids: int) -> int:
         "is only correct if the cap has not changed since the index was "
         "built", index_dir,
     )
+    if n_centroids is None:
+        import pyarrow.dataset as ds
+
+        n_centroids = ds.dataset(
+            os.path.join(index_dir, "centroids"), format="parquet"
+        ).count_rows()
     return ivf_n_dirs(n_centroids)
 
 
@@ -918,8 +951,12 @@ def ivf_search(
     byte is read, and the probed cids land as a pushed data filter that
     skips unprobed cells' row groups inside shared buckets (the files
     are cid-sorted — see write_assignments). Tests pin the partition
-    pruning via the executed plan. Self-matches (nid == qid) are
-    excluded for parity with ivf_topk/bruteforce."""
+    pruning via the executed plan. The bucket count comes from the
+    index's _NDIRS marker (ivf_index_n_dirs), so the probe collect is
+    the only Spark job before the search itself. Self-matches
+    (nid == qid) are excluded for parity with cosine_topk_bruteforce;
+    at nprobe == the cell count the search IS the brute force (pinned
+    by test)."""
     centroids = spark.read.parquet(f"{index_dir}/centroids")
     probes = probe_cells(queries, centroids, nprobe).select(
         "qid", "qvec", "cid"
@@ -927,7 +964,7 @@ def ivf_search(
     probe_cids = sorted(
         int(r["cid"]) for r in probes.select("cid").distinct().collect()
     )
-    nd = ivf_index_n_dirs(index_dir, centroids.count())
+    nd = ivf_index_n_dirs(index_dir)
     probe_pbs = sorted({c % nd for c in probe_cids})
     assignments = (
         spark.read.parquet(f"{index_dir}/assignments")
@@ -945,44 +982,12 @@ def ivf_search(
     )
 
 
-def ivf_topk(
-    emb: DataFrame, query_ids: list[int], k: int = 5,
-    n_centroids: int = 16, nprobe: int = 4,
-    id_col: str = "vec_id", vec_col: str = "embedding",
-) -> DataFrame:
-    """Approximate top-k: search only the nprobe closest centroid
-    buckets per query. One-shot form (trains per call) — repeated query
-    batches should ivf_build once and ivf_search the persisted index."""
-    centroids, assignments = ivf_assign(emb, n_centroids, id_col, vec_col)
-    q = emb.where(F.col(id_col).isin(query_ids)).select(
-        F.col(id_col).alias("qid"), F.col(vec_col).alias("qvec")
-    )
-    wq = Window.partitionBy("qid").orderBy(F.col("qcos").desc(), F.col("cid"))
-    probes = (
-        q.join(F.broadcast(centroids))
-        .select("qid", "qvec", "cid", cosine(F.col("qvec"), F.col("cvec")).alias("qcos"))
-        .withColumn("rn", F.row_number().over(wq))
-        .where(F.col("rn") <= nprobe)
-        .select("qid", "qvec", "cid")
-    )
-    cand = probes.join(
-        assignments.withColumnRenamed(id_col, "nid").withColumnRenamed(vec_col, "nvec"),
-        "cid",
-    ).where(F.col("nid") != F.col("qid"))
-    w = Window.partitionBy("qid").orderBy(F.col("cos").desc(), F.col("nid"))
-    return (
-        cand.select("qid", "nid", cosine(F.col("qvec"), F.col("nvec")).alias("cos"))
-        .withColumn("rn", F.row_number().over(w))
-        .where(F.col("rn") <= k)
-        .select("qid", "nid", "cos", "rn")
-    )
-
-
 # k-means cells are rarely balanced; a cell above HOT_CELL_ROWS gets
 # its members salted over N_CELL_SALTS sub-keys and the probe rows for
-# that cell replicated across all of them — bit-identical results, hot
-# cell spread over N_CELL_SALTS tasks (the dedup.py mega-bucket
-# discipline applied to ANN cells).
+# that cell replicated across all of them (operators/joins
+# .salt_hot_keys) — bit-identical results, hot cell spread over
+# N_CELL_SALTS tasks. Both are read at call time, so tests force the
+# salted plan by monkeypatching them.
 HOT_CELL_ROWS = 1_000_000
 N_CELL_SALTS = 8
 
@@ -992,47 +997,38 @@ def knn_join_cells(
     id_col: str = "vec_id", vec_col: str = "embedding",
     centroids: DataFrame | None = None,
     assignments: DataFrame | None = None,
-    dim: int | None = None,
-    hot_cell_rows: int = HOT_CELL_ROWS,
-    n_salts: int = N_CELL_SALTS,
 ) -> DataFrame:
     """LARGE-to-LARGE approximate kNN self-join: top-k cosine neighbors
     for EVERY row, blocked through shared IVF cells — the batch twin of
     ivf_search (which serves a small query set against a big corpus).
 
     Shape: each vector lands in its own cell (broadcast-centroid argmax,
-    no corpus shuffle) and PROBES its nprobe closest cells; candidates
-    are the equi-join probe.cid == cell.cid — never a crossJoin — so
-    per-task work is bounded by cell size, and the join + per-id top-k
-    window are the only exchanges. At 100 TB the knobs are n_centroids
-    (cell size ~ n/√n_centroids rows) and nprobe (recall vs candidate
-    volume); a skewed cell is split by the same salting discipline as
-    the LSH mega-buckets (operators/dedup.py).
+    no corpus shuffle) and PROBES its nprobe closest cells (probe_cells);
+    candidates are the equi-join probe.cid == cell.cid — never a
+    crossJoin — so per-task work is bounded by cell size, and the join +
+    per-id top-k window are the only exchanges. At 100 TB the knobs are
+    n_centroids (cell size ~ n/√n_centroids rows) and nprobe (recall vs
+    candidate volume); a skewed cell is split by hot-key salting
+    (HOT_CELL_ROWS).
 
     Pass `centroids`/`assignments` from a persisted index (ivf_build)
     to skip the train+assign pass — the batch-join twin of ivf_search's
     amortization. Norms are computed ONCE per row on each side so every
     candidate pair pays a single dot-product fold, not three (the same
     precompute srp_neardup_pairs uses; with |cells| x nprobe candidates
-    per row, the per-pair fold IS the operator's hot loop).
-
-    Pass `dim` when the embedding width is known: the per-pair dot then
-    unrolls to dim fused multiply-adds (functions/vectors.dot_fixed)
-    instead of allocating a zipped array per candidate — measured ~2x
-    on the pair stage at sf0.1. Values are bit-identical either way.
+    per row, the per-pair fold IS the operator's hot loop). The pair dot
+    stays the HOF fold: unrolled (dot_fixed) inside the candidate
+    projection it code-generates a method past the JIT's compilation
+    limit and the hot loop drops to the bytecode interpreter — measured
+    20.6 s vs 3.5 s for knn_join_ivf at sf0.1 (r14 bisect).
 
     Returns (qid, nid, cos, rn) with rn in 1..k per qid.
     """
     if centroids is None or assignments is None:
         centroids, assignments = ivf_assign(emb, n_centroids, id_col, vec_col)
     n_parts = emb.sparkSession.sparkContext.defaultParallelism
-    base = emb.select(
-        F.col(id_col).alias("qid"),
-        F.col(vec_col).alias("qvec"),
-        F.sqrt(norm2(F.col(vec_col))).alias("qnrm"),
-    )
     # ALWAYS hash-partition base by qid before the probe window — not
-    # just when the source scanned narrow. The window below requires
+    # just when the source scanned narrow. The window requires
     # hashpartitioning(qid); when base already satisfies it, Catalyst
     # plans NO exchange above the broadcast-centroid fan-out, so the
     # n x C probe-scoring frame (vector payloads included — ~2.9 TB at
@@ -1043,23 +1039,11 @@ def knn_join_cells(
     # unconditional n-row shuffle is negligible insurance, and also
     # fans out single-row-group sources for the CPU-bound probe folds
     # (srp_neardup_pairs discipline).
-    base = base.repartition(n_parts, "qid")
-    wq = Window.partitionBy("qid").orderBy(F.col("qcos").desc(), F.col("cid"))
-    # r14: reuse base's qnrm and a once-per-centroid cnrm instead of
-    # re-folding both norms inside cosine() per (row, centroid) pair;
-    # dim (when known) unrolls the dot. Same factored IEEE ops — qcos
-    # and therefore the probe order are bit-identical.
-    cents = centroids.withColumn("__cnrm", F.sqrt(norm2(F.col("cvec"))))
-    probes = (
-        base.join(F.broadcast(cents))
-        .select(
-            "qid", "qvec", "qnrm", "cid",
-            (_pair_dot(F.col("qvec"), F.col("cvec"), dim)
-             / (F.col("qnrm") * F.col("__cnrm"))).alias("qcos"),
-        )
-        .withColumn("rn", F.row_number().over(wq))
-        .where(F.col("rn") <= nprobe)
-        .select("qid", "qvec", "qnrm", "cid")
+    base = emb.select(
+        F.col(id_col).alias("qid"), F.col(vec_col).alias("qvec")
+    ).repartition(n_parts, "qid")
+    probes = probe_cells(base, centroids, nprobe).select(
+        "qid", "qvec", "qnrm", "cid"
     )
     cells = assignments.select(
         F.col(id_col).alias("nid"),
@@ -1075,42 +1059,24 @@ def knn_join_cells(
     # spread unconditionally: shuffling the probe frame is negligible
     # next to the pair stage it parallelizes.
     probes = probes.repartition(n_parts, "qid")
-    # skew: a cell above hot_cell_rows would funnel every probe of that
-    # cell through one task when the join shuffles. Short-circuit probe
-    # first — the salted plan only exists when a hot cell does.
-    hot = (
-        cells.groupBy("cid")
-        .agg(F.count(F.lit(1)).alias("cn"))
-        .where(F.col("cn") > hot_cell_rows)
-        .select("cid", F.lit(True).alias("is_hot"))
+    # skew: a cell above HOT_CELL_ROWS would funnel every probe of that
+    # cell through one task when the join shuffles
+    hot = hot_keys(
+        cells.groupBy("cid").agg(F.count(F.lit(1)).alias("cn")),
+        "cid", "cn", HOT_CELL_ROWS,
     )
-    if hot.limit(1).count() > 0:
-        cells = cells.join(F.broadcast(hot), "cid", "left").select(
-            "nid", "nvec", "nnrm", "cid",
-            F.when(
-                F.col("is_hot"),
-                F.pmod(F.xxhash64(F.col("nid")), F.lit(n_salts)),
-            )
-            .otherwise(F.lit(0))
-            .cast("int")
-            .alias("salt"),
-        )
-        salts = F.when(
-            F.col("is_hot"), F.sequence(F.lit(0), F.lit(n_salts - 1))
-        ).otherwise(F.array(F.lit(0)))
-        probes = probes.join(F.broadcast(hot), "cid", "left").select(
-            "qid", "qvec", "qnrm", "cid", F.explode(salts).alias("salt")
-        )
+    join_keys = ["cid"]
+    if hot is not None:
+        cells = salt_hot_keys(cells, hot, "cid", N_CELL_SALTS, spread_col="nid")
+        probes = salt_hot_keys(probes, hot, "cid", N_CELL_SALTS)
         join_keys = ["cid", "salt"]
-    else:
-        join_keys = ["cid"]
     cand = probes.join(cells, join_keys).where(F.col("nid") != F.col("qid"))
     w = Window.partitionBy("qid").orderBy(F.col("cos").desc(), F.col("nid"))
     return (
         cand.select(
             "qid",
             "nid",
-            (_pair_dot(F.col("qvec"), F.col("nvec"), dim)
+            (dot(F.col("qvec"), F.col("nvec"))
              / (F.col("qnrm") * F.col("nnrm"))).alias("cos"),
         )
         .withColumn("rn", F.row_number().over(w))
@@ -1323,7 +1289,8 @@ def knn_join_quantized(
     against the other side (rows and transpose of the same matrix) —
     the global top-R per query is a window merge of those partials
     (correct: global top-R is a subset of the union of per-block
-    top-Rs). The exact re-rank then touches n x R pairs, not n^2.
+    top-Rs). The exact re-rank (exact_rerank_topk) then touches
+    n x R pairs, not n^2.
 
     Scale: data moved = each vector replicated once per block
     (n x dim bytes x n_blocks) — the standard block-product
@@ -1396,32 +1363,8 @@ def knn_join_quantized(
         .where(F.col("crn") <= r_candidates)
         .select("qid", "nid")
     )
-    v = emb.select(
-        F.col(id_col).alias("id"),
-        F.col(vec_col).alias("vec"),
-        F.sqrt(norm2(F.col(vec_col))).alias("nrm"),
-    )
-    qv = v.select(
-        F.col("id").alias("qid"), F.col("vec").alias("qvec"),
-        F.col("nrm").alias("qnrm"),
-    )
-    nv = v.select(
-        F.col("id").alias("nid"), F.col("vec").alias("nvec"),
-        F.col("nrm").alias("nnrm"),
-    )
-    we = Window.partitionBy("qid").orderBy(F.col("cos").desc(), F.col("nid"))
-    return (
-        survivors.join(qv, "qid")
-        .join(nv, "nid")
-        .select(
-            "qid",
-            "nid",
-            (_pair_dot(F.col("qvec"), F.col("nvec"), dim)
-             / (F.col("qnrm") * F.col("nnrm"))).alias("cos"),
-        )
-        .withColumn("rn", F.row_number().over(we))
-        .where(F.col("rn") <= k)
-        .select("qid", "nid", "cos", "rn")
+    return exact_rerank_topk(
+        survivors, emb, k, id_col=id_col, vec_col=vec_col, dim=dim
     )
 
 
@@ -1536,29 +1479,6 @@ def _il2(a, b):
 PQ_DIM = 64  # fixture embedding dim; the slice width every oracle pins
 
 
-def _explode_subvectors(df: DataFrame, n_sub: int, q8_col: str,
-                        out_col: str, dim: int = PQ_DIM) -> DataFrame:
-    """One row per (row, subspace): slice the quantized vector into
-    n_sub contiguous dim/n_sub-wide blocks. Pure per-row transform,
-    zero exchanges. The slice width is pinned from the EXPECTED dim,
-    never derived per row from size(): a defective row (wrong-dim
-    vector, the kind embedding_quality_gate quarantines) must slice the
-    same fixed windows the DuckDB twins hardcode, not silently re-shape
-    — engines stay bit-identical even on bad input."""
-    if dim % n_sub:
-        raise ValueError(f"dim {dim} not divisible by n_sub {n_sub}")
-    sub_dim = dim // n_sub
-    df = df.select(
-        "*", F.explode(F.sequence(F.lit(0), F.lit(n_sub - 1))).alias("sub_id")
-    )
-    return df.select(
-        "*",
-        F.slice(
-            F.col(q8_col), F.col("sub_id") * F.lit(sub_dim) + F.lit(1), sub_dim
-        ).alias(out_col),
-    ).drop(q8_col)
-
-
 def hash_spread_seeds(
     emb: DataFrame, n: int,
     id_col: str = "vec_id", vec_col: str = "embedding",
@@ -1587,64 +1507,27 @@ def hash_spread_seeds(
     )
 
 
-def pq_codebook(
-    emb: DataFrame, n_sub: int = 8, n_codes: int = 32,
-    id_col: str = "vec_id", vec_col: str = "embedding",
-) -> DataFrame:
-    """(sub_id, code, csub): per-subspace codebook from the n_codes
-    hash-spread seed vectors (hash_spread_seeds — the same
-    deterministic pick as the IVF exports), int8-quantized and sliced.
-    n_sub x n_codes rows; always broadcast by the consumers."""
-    seed = quantize_rows(
-        hash_spread_seeds(
-            emb, n_codes, id_col, vec_col, out_idx="code", out_vec="cvec"
-        ),
-        "code", "cvec",
-    ).select(F.col("id").cast("int").alias("code"), "q8")
-    return _explode_subvectors(seed, n_sub, "q8", "csub").select(
-        "sub_id", "code", "csub"
-    )
-
-
-def _collect_codebook(codebook: DataFrame) -> list[list[list[int]]]:
-    """Collect the tiny codebook frame into cb[sub_id][code] -> csub
-    (list of Python ints). Bounded by construction — n_sub x n_codes
-    rows (8 x 32 at the export defaults), CONSTANT in corpus size, the
-    same bounded-collect class as the nprobe cell lists. Collecting it
-    lets the consumers fold the codebook into literal expressions, so
-    encode/ADC/SDC run as single codegen'd projections instead of
-    join + groupBy cascades (guide §2.4: remove shuffles outright)."""
-    rows = codebook.select("sub_id", "code", "csub").collect()
-    if not rows:
-        # empty corpus -> empty codebook: consumers produce an empty
-        # result (the old join-based shape's behavior) instead of this
-        # helper crashing on max() of an empty sequence (r15, ADVICE)
-        return []
-    n_sub = 1 + max(r["sub_id"] for r in rows)
-    n_codes = 1 + max(r["code"] for r in rows)
-    cb: list[list[list[int]]] = [
-        [[] for _ in range(n_codes)] for _ in range(n_sub)
-    ]
-    for r in rows:
-        if r["csub"] is not None:
-            cb[r["sub_id"]][r["code"]] = [
-                None if x is None else int(x) for x in r["csub"]
-            ]
-    return cb
-
-
 def _collect_codebook_from_emb(
     emb: DataFrame, n_sub: int, n_codes: int,
     id_col: str = "vec_id", vec_col: str = "embedding",
     dim: int = PQ_DIM,
 ) -> list[list[list[int]]]:
-    """cb[sub_id][code] -> csub, collected with ONE tiny Spark job:
-    the hash-spread seed pick (smallest (md5(id), id), a TakeOrdered
-    of n_codes rows), quantized by the kernel over just those rows,
-    then sliced into subvectors in Python. Row-identical to
-    _collect_codebook(pq_codebook(...)) — same pick, same numbering,
-    same fixed slice windows — but one bounded job instead of the
-    codebook pipeline's seed job + collect job."""
+    """The PQ codebook cb[sub_id][code] -> csub (list of ints),
+    collected with ONE tiny Spark job: the n_codes hash-spread seed
+    vectors (smallest (md5(id), id), a TakeOrdered — the
+    hash_spread_seeds pick), quantized by the kernel over just those
+    rows, then sliced into n_sub subvectors in Python. n_sub x n_codes
+    entries, CONSTANT in corpus size. A NULL seed embedding leaves its
+    code's subvectors empty; an empty corpus gives n_sub empty lists.
+
+    The slice width is pinned from the EXPECTED dim, never derived per
+    row: a defective row (wrong-dim vector, the kind
+    embedding_quality_gate quarantines) slices the same fixed windows
+    the DuckDB twins hardcode, so the engines stay bit-identical even
+    on bad input. An n_sub that does not divide dim fails before any
+    job runs instead of silently truncating the tail dimensions."""
+    if dim % n_sub:
+        raise ValueError(f"dim {dim} not divisible by n_sub {n_sub}")
     seed = (
         emb.select(
             F.md5(F.col(id_col).cast("string")).alias("__h"), id_col, vec_col
@@ -1793,31 +1676,15 @@ def pq_encode_codes(
 
 
 def pq_encode(
-    emb: DataFrame, codebook: DataFrame, n_sub: int = 8,
+    emb: DataFrame, n_sub: int = 8, n_codes: int = 32,
     id_col: str = "vec_id", vec_col: str = "embedding",
 ) -> DataFrame:
     """(id, sub_id, code): nearest codebook entry per subspace by exact
-    integer squared-L2, ties to the smallest code. The codebook is a
-    bounded deterministic table (n_sub x n_codes rows, constant in
-    corpus size), so it is collected once and folded into the argmin
-    expression — the whole encode is ONE shuffle-free codegen'd
-    projection over the corpus (r14; the previous explode + broadcast
-    join + min_by groupBy shape shuffled n x n_sub triples and
-    evaluated the squared-L2 as an interpreted per-pair HOF fold —
-    measured 2.3 s of pq_adc_topk's 3.4 s at sf0.1). Output rows are
-    bit-identical (oracle: SQL_PQ_ENCODE_EXPORT)."""
-    cb = _collect_codebook(codebook)
-    if not cb:
-        # empty codebook (empty corpus): the old explode+join+min_by
-        # shape produced zero rows; mirror that instead of dividing the
-        # slice width by len(cb) == 0 (r15, ADVICE)
-        return (
-            emb.select(
-                F.col(id_col),
-                F.lit(None).cast("int").alias("sub_id"),
-                F.lit(None).cast("int").alias("code"),
-            ).where(F.lit(False))
-        )
+    integer squared-L2, ties to the smallest code — pq_encode_codes
+    exploded to one row per subspace, against the collected
+    hash-spread codebook (_collect_codebook_from_emb). Output rows are
+    bit-identical to the DuckDB twin (oracle: SQL_PQ_ENCODE_EXPORT)."""
+    cb = _collect_codebook_from_emb(emb, n_sub, n_codes, id_col, vec_col)
     return pq_encode_codes(emb, cb, id_col, vec_col).select(
         id_col, F.posexplode("codes").alias("sub_id", "code")
     )
@@ -1889,11 +1756,13 @@ def _make_adc_scores_kernel(
     the LUT gather in ONE Python crossing (r15: the literal-LUT CASE
     chain this replaced was 2.1 s of pq_adc_topk's 2.6 s at sf0.1 —
     dominated by the giant folded-constant expression tree, not the
-    arithmetic). Replayed semantics: NULL-codes corpus rows emit
-    nothing (the old isNotNull filter / pre-r14 inner-join drop), nor
-    do NULL-id rows (the oracle's nid != qid drops them); self pairs
-    (id == qid) excluded; a None LUT (NULL query embedding) emits NULL
-    adc for every corpus row."""
+    arithmetic). NULL-codes corpus rows (NULL embeddings) emit
+    nothing: they have no ADC distance, and a NULL adc would sort first
+    and take rank 1 of every query. This drop is a behaviour fix,
+    pinned by test_pq_adc_null_embedding_row_is_dropped. NULL-id rows
+    emit nothing either (the oracle's nid != qid drops them); self
+    pairs (id == qid) are excluded; a None LUT (NULL query embedding)
+    emits NULL adc for every corpus row."""
     import numpy as np
 
     encode_batch = _make_encode_batch_fn(cb, sub_dim)
@@ -2063,19 +1932,9 @@ def pq_rerank_topk(
         .where(F.col("crn") <= r_candidates)
         .select("qid", F.col(id_col).alias("nid"))
     )
-    qv = emb.where(F.col(id_col).isin(query_ids)).select(
-        F.col(id_col).alias("qid"), F.col(vec_col).alias("qvec")
-    )
-    nv = emb.select(F.col(id_col).alias("nid"), F.col(vec_col).alias("nvec"))
-    we = Window.partitionBy("qid").orderBy(F.col("cos").desc(), F.col("nid"))
-    return (
-        surv.join(nv, "nid")
-        .join(F.broadcast(qv), "qid")
-        .select("qid", "nid", cosine(F.col("qvec"), F.col("nvec")).alias("cos"))
-        .withColumn("rn", F.row_number().over(we))
-        .where(F.col("rn") <= k)
-        .select("qid", F.col("rn").cast("int").alias("rn"), "nid", "cos")
-    )
+    return exact_rerank_topk(
+        surv, emb, k, query_ids, id_col, vec_col
+    ).select("qid", "rn", "nid", "cos")
 
 
 def ivf_pq_search(
@@ -2123,8 +1982,9 @@ def ivf_pq_search(
         # LUT entries (_adc_gather, the pq_adc_topk sum) — the previous
         # shape paid a (qid, sub_id, code) LUT join plus a
         # corpus-candidate-sized groupBy sum on top of it. NULL-codes
-        # rows (NULL embeddings) are dropped as the old exploded codes
-        # join did (r15, ADVICE — else NULL adc ranks first).
+        # rows (NULL embeddings) have no ADC distance and are dropped,
+        # else a NULL adc would rank first (a behaviour fix, the same
+        # as _make_adc_scores_kernel's).
         enc = pq_encode_codes(emb, cb, id_col, vec_col).where(
             F.col("codes").isNotNull()
         )

@@ -1,7 +1,8 @@
 """SparkSession factory.
 
-Defaults are tuned for the local[32] test harness but every setting is
-chosen to also be the right *shape* at cluster scale:
+Local defaults fit the host the session starts on (local[<usable
+cores>], a driver heap derived from physical memory), and every setting
+is chosen to also be the right *shape* at cluster scale:
 
 - AQE on (runtime re-plan: coalesce post-shuffle partitions, skew-join
   splitting, dynamic broadcast) — on a 1000-executor cluster this is
@@ -25,6 +26,26 @@ import os
 from pyspark.sql import SparkSession
 
 
+def default_cpus() -> int:
+    """Local parallelism: SPARK_GRAFT_CPUS, else the cores this
+    process may run on (its CPU affinity set, which a container or
+    taskset narrows below the machine's core count)."""
+    env = os.environ.get("SPARK_GRAFT_CPUS")
+    return int(env) if env else len(os.sched_getaffinity(0))
+
+
+def default_driver_memory() -> str:
+    """Driver heap: SPARK_GRAFT_DRIVER_MEM, else half of physical
+    memory in whole GiB (at least 1g). In local mode the driver JVM
+    holds every executor, and the other half is left to the Python
+    workers and the OS page cache the parquet scans lean on."""
+    env = os.environ.get("SPARK_GRAFT_DRIVER_MEM")
+    if env:
+        return env
+    phys = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    return f"{max(1, phys // 2 // 2**30)}g"
+
+
 def get_spark(
     app_name: str = "etl-dagster-service-crawler-spark",
     master: str | None = None,
@@ -35,8 +56,9 @@ def get_spark(
     """Build (or fetch) the engine's SparkSession.
 
     local-mode knobs come from env so the bench driver can steer them:
-    SPARK_GRAFT_CPUS (default 32) sets local parallelism and shuffle
-    partitions.
+    SPARK_GRAFT_CPUS (default_cpus) sets local parallelism and shuffle
+    partitions, SPARK_GRAFT_DRIVER_MEM (default_driver_memory) the
+    driver heap.
 
     `tz` sets spark.sql.session.timeZone — the reference pins
     Asia/Taipei (definitions.py:36 in the reference); a deployment
@@ -44,7 +66,7 @@ def get_spark(
     tz="Asia/Taipei". Default stays UTC (the oracle contract). It is a
     runtime conf, so it is applied to the session even when getOrCreate
     returns an existing one."""
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = default_cpus()
     if master is None:
         master = f"local[{cpus}]"
     if shuffle_partitions is None:
@@ -59,7 +81,7 @@ def get_spark(
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.session.timeZone", tz)
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
+        .config("spark.driver.memory", default_driver_memory())
         .config("spark.ui.enabled", "false")
         # Files: pack small fixture files into few tasks locally; at scale
         # maxPartitionBytes keeps one task's input within executor memory.

@@ -870,15 +870,9 @@ def q_knn_join_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     This op is EXPLICITLY the IVF arm (the index inspection surface);
     production batch kNN should call knn_join_auto, which routes away
     from IVF when the calibration curve shows it degenerating."""
-    emb, c, _index_dir, centroids, assignments, nprobe, _curve, dim = (
+    emb, c, _index_dir, centroids, assignments, nprobe, _curve, _dim = (
         _knn_ivf_plan(spark, sf_dir)
     )
-    # NB: dim is deliberately NOT passed here — unrolling the per-pair
-    # dot (dot_fixed) inside the candidate projection code-generates a
-    # method past the JIT's compilation limit and the 2M-candidate hot
-    # loop drops to the bytecode interpreter: measured 20.6 s vs 3.5 s
-    # at sf0.1 (r14 bisect). The HOF dot stays on Catalyst's cached
-    # interpreted evaluators, which JIT fine.
     return knn_join_cells(
         emb, k=5, n_centroids=c, nprobe=nprobe,
         centroids=centroids, assignments=assignments,
@@ -890,8 +884,9 @@ def _knn_ivf_plan(spark: SparkSession, sf_dir: str):
     (built once per corpus), cached calibration. Returns
     (emb, n_centroids, index_dir, centroids, assignments, nprobe,
     curve, dim) — dim peeked from the parquet leading rows (driver-side
-    pyarrow read, no Spark job) so both arms unroll their per-pair
-    dots (dot_fixed, r14)."""
+    pyarrow read, no Spark job) so the quantized arm's exact re-rank
+    can unroll its pair dot (dot_fixed, r14); the IVF arm keeps the HOF
+    fold (see knn_join_cells)."""
     import os
 
     from etl_dagster_service_crawler_spark.operators.similarity import (
@@ -949,8 +944,8 @@ def q_sink_ivf_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     the cid VALUES. Anchors: the row count equals the corpus row count
     (every vector assigned exactly one cell — the driver's rows-only
     check pins it), pb == pmod(cid, _NDIRS) is pinned by unit test,
-    and search parity over the rebuilt index is pinned by the
-    similarity_topk_ivf == one-shot ivf_topk test."""
+    and search over the rebuilt index is pinned equal to the search
+    before the rebuild, and at full probe to cosine_topk_bruteforce."""
     import os
 
     from etl_dagster_service_crawler_spark.operators.similarity import (
@@ -1004,8 +999,6 @@ def q_knn_join_auto(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     path, nprobe = route_knn(curve, c, KNN_TARGET_RECALL)
     if path == "ivf":
-        # dim deliberately not passed — see q_knn_join_ivf's note on
-        # the dot_fixed JIT pathology (r14 bisect: 20.6 s vs 3.5 s).
         out = knn_join_cells(
             emb, k=5, n_centroids=c, nprobe=nprobe,
             centroids=centroids, assignments=assignments,

@@ -831,8 +831,8 @@ def q_similarity_topk_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     /tmp, keyed by sf_dir) and reused by every subsequent search — the
     expensive train+assign pass is amortized, and the search scan reads
     only the probed buckets' partitions (and, within them, the probed
-    cells' row groups). Results are identical to the one-shot ivf_topk
-    (same seed, same centroids), pinned by unit test."""
+    cells' row groups). With nprobe equal to the cell count the search
+    equals cosine_topk_bruteforce row for row, pinned by unit test."""
     import os
 
     from etl_dagster_service_crawler_spark.operators.similarity import (
@@ -3664,17 +3664,15 @@ def q_pq_encode_export(spark: SparkSession, sf_dir: str) -> DataFrame:
     hash-spread seed codes — the deterministic stand-in for a trained
     codebook, same argument as ivf_assign_export). At 100 TB this
     8-byte-per-vector sidecar IS the ANN corpus representation the ADC
-    scan reads (64:1 vs float64). The argmin is a map-side-combining
-    min_by over the broadcast codebook (operators/similarity.pq_encode)
-    — the exchange carries (id, sub_id, code) triples, never a vector."""
+    scan reads (64:1 vs float64). The codebook is collected in one
+    bounded job and the argmin runs inside one shuffle-free Arrow map
+    (operators/similarity.pq_encode) — no exchange, no join."""
     from etl_dagster_service_crawler_spark.operators.similarity import (
-        pq_codebook,
         pq_encode,
     )
 
     e = load_table(spark, sf_dir, "embeddings")
-    cb = pq_codebook(e, PQ_EXPORT_SUB, PQ_EXPORT_CODES)
-    return pq_encode(e, cb, PQ_EXPORT_SUB).select(
+    return pq_encode(e, PQ_EXPORT_SUB, PQ_EXPORT_CODES).select(
         "vec_id",
         F.col("sub_id").cast("int").alias("sub_id"),
         F.col("code").cast("int").alias("code"),

@@ -1,5 +1,5 @@
 """Unit tests for the nprobe auto-calibration (operators/similarity.py
-calibrate_nprobe / calibrated_nprobe_cached) — the r6 VERDICT's "115
+calibrate_nprobe / calibration_cached) — the r6 VERDICT's "115
 untested lines": clustered corpus -> small nprobe, isotropic corpus ->
 large nprobe, cache hit/miss, and tie-break parity between the numpy
 estimator and the Spark-side operators it models."""
@@ -19,7 +19,7 @@ from etl_dagster_service_crawler_spark.operators.similarity import (
     CALIBRATION_FILE,
     assign_cells,
     calibrate_nprobe,
-    calibrated_nprobe_cached,
+    calibration_cached,
     probe_order_and_assignment,
 )
 
@@ -102,7 +102,7 @@ def test_calibration_cache_hit_and_param_miss(spark, tmp_path, monkeypatch):
     rows, cents = _clustered()
     emb, centroids = _frames(spark, rows, cents)
     index_dir = str(tmp_path)
-    first = calibrated_nprobe_cached(emb, centroids, index_dir, 0.85, 5)
+    first, _ = calibration_cached(emb, centroids, index_dir, 0.85, 5)
     assert first == 1
     assert os.path.exists(os.path.join(index_dir, CALIBRATION_FILE))
 
@@ -113,11 +113,11 @@ def test_calibration_cache_hit_and_param_miss(spark, tmp_path, monkeypatch):
         raise AssertionError("cache miss: calibrate_nprobe re-ran")
 
     monkeypatch.setattr(sim, "calibrate_nprobe", boom)
-    assert calibrated_nprobe_cached(emb, centroids, index_dir, 0.85, 5) == 1
+    assert calibration_cached(emb, centroids, index_dir, 0.85, 5)[0] == 1
 
     # different target/k invalidates the memo and recalibrates
     monkeypatch.setattr(sim, "calibrate_nprobe", lambda *a, **k: (3, [(3, 1.0)]))
-    assert calibrated_nprobe_cached(emb, centroids, index_dir, 0.99, 5) == 3
+    assert calibration_cached(emb, centroids, index_dir, 0.99, 5)[0] == 3
     rec = json.load(open(os.path.join(index_dir, CALIBRATION_FILE)))
     assert rec["target_recall"] == 0.99 and rec["nprobe"] == 3
 

@@ -13,7 +13,6 @@ from etl_dagster_service_crawler_spark.operators.multimodal import (
 )
 from etl_dagster_service_crawler_spark.operators.similarity import (
     cosine_topk_bruteforce,
-    ivf_topk,
 )
 
 
@@ -244,24 +243,54 @@ def test_bruteforce_topk_orders_by_cosine(spark):
     assert [r.nid for r in out] == [1, 2, 3]
 
 
-def test_ivf_topk_returns_k_and_matches_bruteforce_top1(spark, sf_dir):
+def _ivf_queries(emb, qids):
+    return emb.where(F.col("vec_id").isin(qids)).select(
+        F.col("vec_id").alias("qid"), F.col("embedding").alias("qvec")
+    )
+
+
+def test_ivf_search_full_probe_equals_bruteforce(spark, sf_dir, tmp_path):
+    """nprobe == n_centroids probes every cell, so the persisted-index
+    search must equal the exact brute force row for row: same
+    neighbours, same ranks, bit-identical cosines."""
+    from etl_dagster_service_crawler_spark.operators.similarity import (
+        ivf_build,
+        ivf_search,
+    )
+
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    exact = {
-        (r.qid, r.rn): r.nid
-        for r in cosine_topk_bruteforce(emb, [0, 1], k=1).collect()
-    }
-    approx = ivf_topk(emb, [0, 1], k=5, n_centroids=8, nprobe=8).collect()
-    by_q = {}
-    for r in approx:
-        by_q.setdefault(r.qid, []).append(r)
-    for q in (0, 1):
-        assert len(by_q[q]) == 5
-        # nprobe == n_centroids means full coverage: top-1 must match exact
-        top1 = min(by_q[q], key=lambda r: r.rn)
-        assert top1.nid == exact[(q, 1)]
+    index_dir = str(tmp_path / "ivf")
+    ivf_build(emb, index_dir, n_centroids=8)
+    got = ivf_search(
+        spark, index_dir, _ivf_queries(emb, [0, 1]), k=5, nprobe=8
+    ).collect()
+    want = cosine_topk_bruteforce(emb, [0, 1], k=5).collect()
+    assert len(got) == 10
+    assert sorted(tuple(r) for r in got) == sorted(tuple(r) for r in want)
 
 
-def test_ivf_persisted_index_matches_one_shot_and_prunes_partitions(
+def test_ivf_search_runs_no_count_job(spark, sf_dir, tmp_path, monkeypatch):
+    """The bucket count of a freshly built index comes from its _NDIRS
+    marker: ivf_search must not count the centroids (a Spark job per
+    query batch)."""
+    from etl_dagster_service_crawler_spark.operators.similarity import (
+        ivf_build,
+        ivf_search,
+    )
+
+    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+    index_dir = str(tmp_path / "ivf")
+    ivf_build(emb, index_dir, n_centroids=8)
+    q = _ivf_queries(emb, [0, 1])
+
+    def boom(self):
+        raise AssertionError("ivf_search ran a count job")
+
+    monkeypatch.setattr(type(emb), "count", boom)
+    assert len(ivf_search(spark, index_dir, q, k=5, nprobe=2).collect()) == 10
+
+
+def test_ivf_persisted_index_search_is_exact_and_prunes_partitions(
     spark, sf_dir, tmp_path
 ):
     from etl_dagster_service_crawler_spark.operators.similarity import (
@@ -273,16 +302,24 @@ def test_ivf_persisted_index_matches_one_shot_and_prunes_partitions(
     index_dir = str(tmp_path / "ivf")
     ivf_build(emb, index_dir, n_centroids=8)
 
-    q = emb.where(F.col("vec_id").isin([0, 1])).select(
-        F.col("vec_id").alias("qid"), F.col("embedding").alias("qvec")
-    )
+    q = _ivf_queries(emb, [0, 1])
     searched = ivf_search(spark, index_dir, q, k=5, nprobe=2)
-    one_shot = ivf_topk(emb, [0, 1], k=5, n_centroids=8, nprobe=2)
-    got = {(r.qid, r.rn, r.nid) for r in searched.collect()}
-    want = {(r.qid, r.rn, r.nid) for r in one_shot.collect()}
-    # same seed -> same centroids -> identical results from the
-    # persisted index and the in-memory one-shot
-    assert got == want
+    got = searched.collect()
+    # a pruned search returns k rows per query, ranked by the exact
+    # cosine of each returned pair
+    exact = {
+        (r.qid, r.nid): r.cos
+        for r in cosine_topk_bruteforce(emb, [0, 1], k=10**6).collect()
+    }
+    assert len(got) == 10
+    for r in got:
+        assert r.cos == exact[(r.qid, r.nid)]
+    for qid in (0, 1):
+        ranked = sorted((r for r in got if r.qid == qid), key=lambda r: r.rn)
+        assert [r.rn for r in ranked] == [1, 2, 3, 4, 5]
+        assert [r.cos for r in ranked] == sorted(
+            (r.cos for r in ranked), reverse=True
+        )
 
     # the search scan must read ONLY probed buckets: the literal
     # IN-filter on pb (= pmod(cid, n_dirs); n_dirs == n_centroids here,
@@ -455,6 +492,17 @@ def test_ivf_search_and_append_use_recorded_bucket_count(
     back = spark.read.parquet(f"{index_dir}/assignments")
     bad = back.where(F.col("pb") != F.pmod(F.col("cid"), F.lit(4))).count()
     assert bad == 0, "appended rows bucketed with the wrong modulus"
+
+    # last resort, neither marker nor pb= dirs: the cap applied to the
+    # centroid count, read from the centroids' parquet footers
+    import shutil
+
+    os.remove(os.path.join(index_dir, "_NDIRS"))
+    shutil.rmtree(os.path.join(index_dir, "assignments"))
+    monkeypatch.setattr(S, "IVF_MAX_PARTITION_DIRS", 5)
+    assert S.ivf_index_n_dirs(index_dir) == 5
+    monkeypatch.setattr(S, "IVF_MAX_PARTITION_DIRS", 128)
+    assert S.ivf_index_n_dirs(index_dir) == 8
 
 
 def test_multimodal_features_deterministic_and_typed(spark, sf_dir):
@@ -1203,7 +1251,6 @@ def test_pq_encode_complete_codes_in_range(spark, sf_dir):
     from pyspark.sql import functions as F
 
     from etl_dagster_service_crawler_spark.operators.similarity import (
-        pq_codebook,
         pq_encode,
     )
     from etl_dagster_service_crawler_spark.workloads.llm import (
@@ -1213,8 +1260,7 @@ def test_pq_encode_complete_codes_in_range(spark, sf_dir):
 
     e = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
     n = e.count()
-    cb = pq_codebook(e, PQ_EXPORT_SUB, PQ_EXPORT_CODES)
-    codes = pq_encode(e, cb, PQ_EXPORT_SUB).collect()
+    codes = pq_encode(e, PQ_EXPORT_SUB, PQ_EXPORT_CODES).collect()
     assert len(codes) == n * PQ_EXPORT_SUB
     assert {(r["vec_id"], r["sub_id"]) for r in codes} == {
         (v, m)
@@ -1239,21 +1285,57 @@ def test_pq_encode_complete_codes_in_range(spark, sf_dir):
         assert by_vec[vid] == {want}
 
 
+def _codebook_pipeline(emb, n_sub, n_codes, dim=64):
+    """Reference codebook built the two-step way: the numbered
+    hash-spread seed frame, quantized, exploded to one row per
+    (subspace, code) with fixed dim/n_sub slice windows, then collected
+    into cb[sub_id][code] -> csub."""
+    from etl_dagster_service_crawler_spark.operators.similarity import (
+        hash_spread_seeds,
+        quantize_rows,
+    )
+
+    sub_dim = dim // n_sub
+    seed = quantize_rows(
+        hash_spread_seeds(emb, n_codes, out_idx="code", out_vec="cvec"),
+        "code", "cvec",
+    ).select(F.col("id").cast("int").alias("code"), "q8")
+    rows = (
+        seed.select(
+            "code", "q8",
+            F.explode(F.sequence(F.lit(0), F.lit(n_sub - 1))).alias("sub_id"),
+        )
+        .select(
+            "sub_id", "code",
+            F.slice(
+                F.col("q8"), F.col("sub_id") * F.lit(sub_dim) + F.lit(1), sub_dim
+            ).alias("csub"),
+        )
+        .collect()
+    )
+    if not rows:
+        return []
+    cb = [
+        [[] for _ in range(1 + max(r["code"] for r in rows))]
+        for _ in range(1 + max(r["sub_id"] for r in rows))
+    ]
+    for r in rows:
+        if r["csub"] is not None:
+            cb[r["sub_id"]][r["code"]] = list(r["csub"])
+    return cb
+
+
 def test_collect_codebook_from_emb_matches_codebook_pipeline(spark, sf_dir):
     """The one-job codebook collect (TakeOrdered seed pick, kernel
     quantize over just those rows, code = collected row order) must
-    equal the pq_codebook frame collected — same pick, same numbering,
-    same slices."""
+    equal the two-step codebook pipeline collected — same pick, same
+    numbering, same slices."""
     from etl_dagster_service_crawler_spark.operators.similarity import (
-        _collect_codebook,
         _collect_codebook_from_emb,
-        pq_codebook,
     )
 
     e = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    assert _collect_codebook_from_emb(e, 8, 32) == _collect_codebook(
-        pq_codebook(e, 8, 32)
-    )
+    assert _collect_codebook_from_emb(e, 8, 32) == _codebook_pipeline(e, 8, 32)
 
 
 def test_pq_adc_null_embedding_row_is_dropped(spark):
@@ -1284,16 +1366,14 @@ def test_pq_adc_null_embedding_row_is_dropped(spark):
 
 def test_pq_encode_empty_corpus_returns_empty(spark):
     """An empty corpus yields an empty codebook; pq_encode must return
-    an empty frame (the old join shape's behavior), not crash on max()
-    of an empty collect."""
+    an empty frame (the old join shape's behavior), not crash on the
+    empty codebook."""
     from etl_dagster_service_crawler_spark.operators.similarity import (
-        pq_codebook,
         pq_encode,
     )
 
     e = spark.createDataFrame([], "vec_id bigint, embedding array<double>")
-    cb = pq_codebook(e, 8, 32)
-    out = pq_encode(e, cb, 8)
+    out = pq_encode(e, 8, 32)
     assert out.count() == 0
     assert [f.name for f in out.schema.fields] == ["vec_id", "sub_id", "code"]
 
@@ -1578,12 +1658,15 @@ def test_pq_rejects_indivisible_subspace_split(spark, sf_dir):
     import pytest
 
     from etl_dagster_service_crawler_spark.operators.similarity import (
-        pq_codebook,
+        _collect_codebook_from_emb,
+        pq_encode,
     )
 
     e = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
     with pytest.raises(ValueError, match="not divisible"):
-        pq_codebook(e, n_sub=7, n_codes=8)
+        _collect_codebook_from_emb(e, n_sub=7, n_codes=8)
+    with pytest.raises(ValueError, match="not divisible"):
+        pq_encode(e, n_sub=7, n_codes=8)
 
 
 def test_il2_wrong_dim_matches_duckdb_twin(spark):

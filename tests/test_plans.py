@@ -970,3 +970,29 @@ def test_int8_family_runs_on_the_one_quantize_kernel(spark, sf_dir):
         plan = _plan(q(spark, sf_dir))
         assert "MapInArrow" in plan, q.__name__
         assert not re.search(r"aggregate\((?!zip_with\()", plan), q.__name__
+
+
+def test_knn_join_cells_probe_window_needs_no_exchange(spark, sf_dir):
+    """knn_join_cells hash-partitions its n-row base by qid before
+    probe_cells, so the probe window over the fanned n x C frame reads
+    the broadcast centroid join's output directly: no Exchange between
+    the two. An Exchange there would shuffle every (row, centroid)
+    pair with its vector payload."""
+    from etl_dagster_service_crawler_spark.operators.similarity import (
+        assign_cells,
+        hash_spread_seeds,
+        knn_join_cells,
+    )
+
+    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+    cents = hash_spread_seeds(emb, 4)
+    plan = _plan(knn_join_cells(
+        emb, k=3, centroids=cents, assignments=assign_cells(emb, cents),
+    ))
+    lines = plan.splitlines()
+    win = next(i for i, ln in enumerate(lines) if "Window" in ln and "qcos" in ln)
+    bnlj = next(
+        i for i in range(win, len(lines)) if "BroadcastNestedLoopJoin" in lines[i]
+    )
+    between = "\n".join(lines[win:bnlj])
+    assert "Exchange" not in between, plan

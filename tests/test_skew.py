@@ -12,11 +12,16 @@ import random
 
 from pyspark.sql import functions as F
 
+from etl_dagster_service_crawler_spark.operators import dedup, similarity
 from etl_dagster_service_crawler_spark.operators.dedup import (
-    _salt_bucket_members,
     minhash_assign_representatives,
     minhash_cluster_cc,
 )
+from etl_dagster_service_crawler_spark.operators.joins import salt_hot_keys
+
+
+def _plan(df) -> str:
+    return df._jdf.queryExecution().executedPlan().toString()
 
 
 def _skewed_corpus(spark, n=1000, hot_every=5):
@@ -44,7 +49,7 @@ def test_salting_bounds_hot_bucket_task_input(spark):
         "doc_id bigint, bh bigint",
     )
     hot = spark.createDataFrame([(777, True)], "bh bigint, is_hot boolean")
-    salted = _salt_bucket_members(edges, hot, "doc_id", n_salts)
+    salted = salt_hot_keys(edges, hot, "bh", n_salts, spread_col="doc_id")
     per_key = salted.groupBy("bh", "salt").count()
     hot_max = (
         per_key.where(F.col("bh") == 777).agg(F.max("count")).first()[0]
@@ -57,39 +62,38 @@ def test_salting_bounds_hot_bucket_task_input(spark):
     assert salted.where((F.col("bh") != 777) & (F.col("salt") != 0)).count() == 0
 
 
-def test_cc_labels_identical_with_salting_active(spark):
+def test_cc_labels_identical_with_salting_active(spark, monkeypatch):
     """Connected-components output is bit-identical whether the mega
     bucket is salted (threshold below its size) or not (threshold
     above) — salting is pure execution strategy."""
     df = _skewed_corpus(spark)
-    plain = minhash_cluster_cc(
-        df, "doc_id", "text", hot_bucket_rows=10**9
-    ).orderBy("doc_id")
-    salted = minhash_cluster_cc(
-        df, "doc_id", "text", hot_bucket_rows=50, n_salts=8
-    ).orderBy("doc_id")
-    assert [tuple(r) for r in plain.collect()] == [
-        tuple(r) for r in salted.collect()
+    monkeypatch.setattr(dedup, "HOT_BUCKET_ROWS", 10**9)
+    plain = [
+        tuple(r)
+        for r in minhash_cluster_cc(df, "doc_id", "text").orderBy("doc_id").collect()
     ]
+    monkeypatch.setattr(dedup, "HOT_BUCKET_ROWS", 50)
+    monkeypatch.setattr(dedup, "N_SALTS", 8)
+    salted_df = minhash_cluster_cc(df, "doc_id", "text").orderBy("doc_id")
+    salted = [tuple(r) for r in salted_df.collect()]
+    assert plain == salted
     # the mega cluster exists and is labeled by its min id (0)
-    hot_rows = [tuple(r) for r in salted.where(F.col("label") == 0).collect()]
+    hot_rows = [tuple(r) for r in salted_df.where(F.col("label") == 0).collect()]
     assert len(hot_rows) == 200
 
 
-def test_assign_labels_identical_with_salting_active(spark):
+def test_assign_labels_identical_with_salting_active(spark, monkeypatch):
     df = _skewed_corpus(spark)
-    plain = minhash_assign_representatives(
-        df, "doc_id", "text", hot_bucket_rows=10**9
-    ).orderBy("doc_id")
-    salted = minhash_assign_representatives(
-        df, "doc_id", "text", hot_bucket_rows=50, n_salts=8
-    ).orderBy("doc_id")
-    assert [tuple(r) for r in plain.collect()] == [
-        tuple(r) for r in salted.collect()
-    ]
+    monkeypatch.setattr(dedup, "HOT_BUCKET_ROWS", 10**9)
+    plain = minhash_assign_representatives(df, "doc_id", "text").orderBy("doc_id")
+    plain = [tuple(r) for r in plain.collect()]
+    monkeypatch.setattr(dedup, "HOT_BUCKET_ROWS", 50)
+    monkeypatch.setattr(dedup, "N_SALTS", 8)
+    salted = minhash_assign_representatives(df, "doc_id", "text").orderBy("doc_id")
+    assert plain == [tuple(r) for r in salted.collect()]
 
 
-def test_knn_cells_identical_with_salting_active(spark):
+def test_knn_cells_identical_with_salting_active(spark, monkeypatch):
     """A hot IVF cell (many co-located vectors) must produce the SAME
     top-k under forced salting, with the hot cell's members spread over
     the salt sub-keys."""
@@ -107,12 +111,12 @@ def test_knn_cells_identical_with_salting_active(spark):
     for i in range(60, 100):
         rows.append((i, [rng.gauss(0, 1.0) for _ in range(8)]))
     emb = spark.createDataFrame(rows, "vec_id bigint, embedding array<float>")
-    plain = knn_join_cells(
-        emb, k=3, n_centroids=4, nprobe=2, hot_cell_rows=10**9
-    )
-    salted = knn_join_cells(
-        emb, k=3, n_centroids=4, nprobe=2, hot_cell_rows=20, n_salts=4
-    )
+    monkeypatch.setattr(similarity, "HOT_CELL_ROWS", 10**9)
+    plain = knn_join_cells(emb, k=3, n_centroids=4, nprobe=2)
     a = {(r["qid"], r["rn"]): r["nid"] for r in plain.collect()}
+    monkeypatch.setattr(similarity, "HOT_CELL_ROWS", 20)
+    monkeypatch.setattr(similarity, "N_CELL_SALTS", 4)
+    salted = knn_join_cells(emb, k=3, n_centroids=4, nprobe=2)
+    assert "salt" in _plan(salted)
     b = {(r["qid"], r["rn"]): r["nid"] for r in salted.collect()}
     assert a == b
