@@ -53,7 +53,7 @@ Usage (bare / spark-submit):
       --job crawl_scan_2min --transport http://127.0.0.1:8080/listing \
       --cron "*/2 * * * *" --tz Asia/Taipei ...
   spark-submit --master local[8] -m ... (any Spark master works: the
-  session is built from SPARK_MASTER, default local[*])
+  session is built from SPARK_MASTER, default local[<usable cores>])
 """
 
 from __future__ import annotations
@@ -66,6 +66,7 @@ from datetime import datetime, timezone
 
 from pyspark.sql import SparkSession
 
+from etl_dagster_service_crawler_spark.session import get_spark
 from etl_dagster_service_crawler_spark.streaming.jobs import (
     RUN_HISTORY_TABLE,
     job_registry,
@@ -76,23 +77,16 @@ DEFAULT_TZ = "Asia/Taipei"  # the reference's execution_timezone
 
 
 def build_session(app_name: str = "spark-graft-deploy") -> SparkSession:
-    """Deployment session: master from SPARK_MASTER (spark-submit
-    overrides), warehouse from SPARK_WAREHOUSE so the run-history
-    table persists across container restarts."""
-    b = (
-        SparkSession.builder.appName(app_name)
-        .master(os.environ.get("SPARK_MASTER", "local[*]"))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config(
-            "spark.sql.shuffle.partitions",
-            os.environ.get("SPARK_SHUFFLE_PARTITIONS", "8"),
-        )
-        .config("spark.ui.enabled", "false")
-    )
+    """Deployment session: the engine's own factory (get_spark), with
+    the master from SPARK_MASTER (spark-submit overrides; unset means
+    local[<usable cores>]) and the warehouse from SPARK_WAREHOUSE, so
+    the run-history table persists across container restarts."""
     wh = os.environ.get("SPARK_WAREHOUSE")
-    if wh:
-        b = b.config("spark.sql.warehouse.dir", wh)
-    return b.getOrCreate()
+    return get_spark(
+        app_name=app_name,
+        master=os.environ.get("SPARK_MASTER") or None,
+        extra_conf={"spark.sql.warehouse.dir": wh} if wh else None,
+    )
 
 
 def run_tick(

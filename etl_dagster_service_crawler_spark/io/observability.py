@@ -7,10 +7,12 @@ keyword after max_errors=3 (test.py:129-144). Spark-first:
 - batch:  df.observe(Observation, ...) — metrics computed inside the
   job (no second pass over the data) and read on the driver after the
   action. The quality gauge is the reference's empty-field count.
-- stream: a StreamingQueryListener receives per-batch observed metrics
-  and progress; the error-budget listener stops the query when the
-  cumulative bad-row count crosses the budget — the reference's abort,
-  applied to a streaming pipeline.
+- stream: df.observe(name, ...) puts each micro-batch's metrics in
+  that batch's StreamingQueryProgress.observedMetrics[name]; the
+  stream runner (streaming.ingest.run_stream) folds the query's
+  recentProgress by batchId and stops the query when the cumulative
+  bad-row count crosses the budget — the reference's abort, applied
+  to a streaming pipeline.
 
 At 100 TB this is the only sane shape: metrics ride the existing
 aggregation tree (map-side partials), never a separate count() job.
@@ -18,13 +20,8 @@ aggregation tree (map-side partials), never a separate count() job.
 
 from __future__ import annotations
 
-import logging
-
-from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
-from pyspark.sql.streaming import StreamingQueryListener
-
-log = logging.getLogger("spark_graft.observability")
 
 
 def empty_field_count(cols: list[str]):
@@ -57,77 +54,9 @@ def observe_stream_quality(
     df: DataFrame, empty_cols: list[str], name: str = "quality"
 ) -> DataFrame:
     """Streaming variant: named observe; metrics arrive per micro-batch
-    in QueryProgressEvent.progress.observedMetrics[name]."""
+    in the query's progress, observedMetrics[name]."""
     return df.observe(
         name,
         F.count(F.lit(1)).alias("n_rows"),
         empty_field_count(empty_cols).alias("n_empty_fields"),
     )
-
-
-class ErrorBudgetListener(StreamingQueryListener):
-    """O2: stop the stream once cumulative bad rows cross the budget —
-    the reference's max_errors=3 keyword abort (test.py:129-144).
-
-    Attach with spark.streams.addListener(listener); pair with a
-    metric named `metric_name` emitted via observe_stream_quality.
-    max_errors=None disables the abort (pure telemetry: batch/row/bad
-    counters still accumulate — the run-status half of the reference's
-    logging). `query_name` scopes the listener to one named query;
-    listeners are session-global, so an unscoped listener also counts
-    any OTHER stream the session runs concurrently."""
-
-    def __init__(
-        self,
-        spark: SparkSession,
-        max_errors: int | None = 3,
-        metric_name: str = "quality",
-        field: str = "n_empty_fields",
-        query_name: str | None = None,
-    ):
-        self._spark = spark
-        self.max_errors = max_errors
-        self.metric_name = metric_name
-        self.field = field
-        self.query_name = query_name
-        self.total = 0
-        self.batches = 0
-        self.rows = 0
-        self.tripped = False
-
-    def onQueryStarted(self, event) -> None:  # noqa: N802
-        log.info("stream %s started", event.id)
-
-    def onQueryProgress(self, event) -> None:  # noqa: N802
-        if self.query_name is not None and event.progress.name != self.query_name:
-            return
-        self.batches += 1
-        self.rows += event.progress.numInputRows or 0
-        om = event.progress.observedMetrics.get(self.metric_name)
-        if om is None:
-            return
-        self.total += om[self.field] or 0
-        log.info(
-            "stream %s batch %s: rows=%s bad=%s total_bad=%s",
-            event.progress.id,
-            event.progress.batchId,
-            event.progress.numInputRows,
-            om[self.field],
-            self.total,
-        )
-        if (
-            self.max_errors is not None
-            and self.total >= self.max_errors
-            and not self.tripped
-        ):
-            self.tripped = True
-            log.error("error budget exhausted (%s); stopping", self.total)
-            for q in self._spark.streams.active:
-                if str(q.id) == str(event.progress.id):
-                    q.stop()
-
-    def onQueryTerminated(self, event) -> None:  # noqa: N802
-        log.info("stream %s terminated", event.id)
-
-    def onQueryIdle(self, event) -> None:  # noqa: N802
-        pass

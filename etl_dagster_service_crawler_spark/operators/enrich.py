@@ -17,7 +17,7 @@ scatters across its crawl loop folded into the operator:
   re-fetch, test.py:129-144): transient failures retry up to
   max_retries; the row is never dropped — it comes back with
   fetch_status='error' so the error budget is enforced downstream
-  (observe_quality / ErrorBudgetListener), not by killing the stage.
+  (observe_quality / the run_stream budget), not by killing the stage.
 - swap-point transport: `transport` is any str -> str callable. The
   default is a DETERMINISTIC fake (md5-derived payload — this
   container has no network), which keeps the whole pipeline

@@ -1051,14 +1051,6 @@ def knn_join_cells(
         F.sqrt(norm2(F.col(vec_col))).alias("nnrm"),
         "cid",
     )
-    # AQE coalesces the tiny post-window shuffle down to ONE partition
-    # (the probe frame is a few KB per row), which would run the ENTIRE
-    # pair loop — |probes| x cell-size dot folds, the operator's real
-    # work — serially in that task (measured 5.9 s of a 7.7 s query).
-    # The static getNumPartitions check cannot see an AQE decision, so
-    # spread unconditionally: shuffling the probe frame is negligible
-    # next to the pair stage it parallelizes.
-    probes = probes.repartition(n_parts, "qid")
     # skew: a cell above HOT_CELL_ROWS would funnel every probe of that
     # cell through one task when the join shuffles
     hot = hot_keys(

@@ -12,11 +12,16 @@ budget (O2), and observed metrics (K4), and exposes the two run modes
   across ticks and aborts the query when exhausted, exactly the
   reference's give-up counter applied to the stream.
 - run_once: availableNow — catch-up/backfill of everything pending,
-  the shape a missed schedule window recovers with.
+  the shape a missed schedule window recovers with. A drain still
+  running after timeout_s raises TimeoutError (ledgered as an error
+  run), never a partial `ok`.
 
-Both return a RunStatus (the reference's run-status log line, as data):
-batches seen, rows, bad rows, whether the budget tripped, and the
-drained result.
+Both go through `streaming.ingest.run_stream` and return a RunStatus
+(the reference's run-status log line, as data): batches seen, rows,
+bad rows, whether the budget tripped, and the drained result. The
+counts are the query's own progress (recentProgress, folded by
+batchId while the run waits), so they are complete when the query
+stops: no listener, no settle wait.
 
 A module registry maps job names to pipelines — the reference's
 Definitions object — so operational tooling can look jobs up by name.
@@ -27,13 +32,17 @@ from __future__ import annotations
 import itertools
 import time
 from collections.abc import Callable
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 
 from etl_dagster_service_crawler_spark.io.observability import (
-    ErrorBudgetListener,
     observe_stream_quality,
+)
+from etl_dagster_service_crawler_spark.streaming.ingest import (
+    run_stream,
+    stream_documents,
+    stream_events,
 )
 
 _job_runs = itertools.count()
@@ -174,7 +183,7 @@ class ScheduledPipeline:
     observe_cols is set, an empty-field quality metric (Q1's gauge) is
     attached and budget-checked; max_errors=None means no abort.
 
-    Runs are SINGLE-FLIGHT: run()/run_available_now() attach a log
+    Runs are SINGLE-FLIGHT: run_once()/run_scheduled() attach a log
     handler to the shared 'spark_graft' logger and save/restore its
     level, so concurrent runs of any ScheduledPipeline in one process
     would cross-contaminate log tails. deploy serializes ticks under
@@ -201,7 +210,6 @@ class ScheduledPipeline:
     # zero and re-appends the whole source (duplicates). complete-mode
     # rollups are recomputed-in-full by design and may omit it.
     checkpoint_dir: str | None = None
-    _last: RunStatus | None = field(default=None, repr=False)
 
     def _observed(self, spark: SparkSession, source: str) -> DataFrame:
         df = self.build(spark, source)
@@ -326,87 +334,37 @@ class ScheduledPipeline:
         min_batches: int,
         timeout_s: float,
     ) -> RunStatus:
-        listener = ErrorBudgetListener(
-            spark,
-            max_errors=self.max_errors,
-            metric_name=f"{self.name}_quality",
-            field=self.metric_field,
-            query_name=sink,
-        )
-        spark.streams.addListener(listener)
-        old_sp = spark.conf.get("spark.sql.shuffle.partitions")
-        if self.state_partitions is not None:
-            spark.conf.set(
-                "spark.sql.shuffle.partitions", str(self.state_partitions)
-            )
         if self.foreach_batch is not None and self.result_reader is None:
             raise TypeError(
                 f"job {self.name!r}: foreach_batch requires result_reader "
                 "(RunStatus.result must come from reading the sink back)"
             )
-        try:
-            observed = self._observed(spark, source)
-            if self.foreach_batch is not None:
-                writer = (
-                    observed.writeStream.foreachBatch(self.foreach_batch)
-                    .queryName(sink)
-                    .outputMode(self.output_mode)
-                )
-            else:
-                writer = (
-                    observed.writeStream.format("memory")
-                    .queryName(sink)
-                    .outputMode(self.output_mode)
-                )
-            writer = (
-                writer.trigger(availableNow=True)
-                if available_now
-                else writer.trigger(processingTime=self.interval)
-            )
-            if self.checkpoint_dir is not None:
-                writer = writer.option(
-                    "checkpointLocation", self.checkpoint_dir
-                )
-            q = writer.start()
-        finally:
-            if self.state_partitions is not None:
-                spark.conf.set("spark.sql.shuffle.partitions", old_sp)
-        try:
-            deadline = time.time() + timeout_s
-            if available_now:
-                q.awaitTermination(timeout_s)
-            else:
-                while time.time() < deadline and q.isActive:
-                    if listener.batches >= min_batches:
-                        break
-                    time.sleep(0.2)
-        finally:
-            if q.isActive:
-                q.stop()
-        # listener events are delivered async: give the trailing
-        # progress/trip event a moment to land before reading counters
-        settle = time.time() + 5
-        expect = max(min_batches, 1)
-        while time.time() < settle:
-            if listener.tripped or listener.batches >= expect:
-                break
-            time.sleep(0.1)
-        time.sleep(0.2)
-        spark.streams.removeListener(listener)
-        status = RunStatus(
+        run = run_stream(
+            self._observed(spark, source),
+            sink,
+            interval=None if available_now else self.interval,
+            output_mode=self.output_mode,
+            foreach_batch=self.foreach_batch,
+            checkpoint_dir=self.checkpoint_dir,
+            state_partitions=self.state_partitions,
+            metric=f"{self.name}_quality",
+            field=self.metric_field,
+            max_errors=self.max_errors,
+            min_batches=min_batches,
+            timeout_s=timeout_s,
+        )
+        return RunStatus(
             job=self.name,
-            n_batches=listener.batches,
-            n_rows=listener.rows,
-            n_bad=listener.total,
-            budget_tripped=listener.tripped,
+            n_batches=run.batches,
+            n_rows=run.rows,
+            n_bad=run.bad,
+            budget_tripped=run.tripped,
             result=(
                 self.result_reader(spark)
                 if self.result_reader is not None
                 else spark.table(sink)
             ),
         )
-        self._last = status
-        return status
 
     def run_once(
         self, spark: SparkSession, source: str, timeout_s: float = 300
@@ -435,9 +393,6 @@ class ScheduledPipeline:
 
 
 def _corpus_clean_job() -> ScheduledPipeline:
-    from etl_dagster_service_crawler_spark.streaming.ingest import (
-        stream_documents,
-    )
     from etl_dagster_service_crawler_spark.workloads.streaming_wl import (
         corpus_clean_transform,
     )
@@ -454,8 +409,6 @@ def _corpus_clean_job() -> ScheduledPipeline:
 
 
 def _crawl_ingest_job() -> ScheduledPipeline:
-    from etl_dagster_service_crawler_spark.streaming.ingest import stream_events
-
     return ScheduledPipeline(
         name="events_ingest_2min",
         build=lambda spark, sf_dir: stream_events(spark, sf_dir),
@@ -508,9 +461,6 @@ def _crawl_extract_job() -> ScheduledPipeline:
         from etl_dagster_service_crawler_spark.functions.html import (
             EXTRACT_SQL,
             PAGE_SQL,
-        )
-        from etl_dagster_service_crawler_spark.streaming.ingest import (
-            stream_documents,
         )
 
         s = stream_documents(spark, source)

@@ -16,6 +16,7 @@ from pyspark.sql import functions as F
 from etl_dagster_service_crawler_spark.core import QuerySpec
 from etl_dagster_service_crawler_spark.streaming.ingest import (
     run_available_now,
+    run_stream,
     stream_documents,
     stream_events,
 )
@@ -49,7 +50,7 @@ def q_stream_window_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
     s = stream_events(spark, sf_dir)
     # state keyspace is (hour-window x event_type) ~ a few thousand keys
     # -> 8 state stores, not the batch shuffle default (see
-    # run_available_now's state_partitions note)
+    # run_stream's state_partitions note)
     return run_available_now(tumbling_counts(s), "complete", state_partitions=8)
 
 
@@ -65,7 +66,7 @@ GROUP BY 1, 2
 
 def q_stream_window_sliding(spark: SparkSession, sf_dir: str) -> DataFrame:
     s = stream_events(spark, sf_dir)
-    # hour-grain window keyspaces are small; see run_available_now's
+    # hour-grain window keyspaces are small; see run_stream's
     # state_partitions note
     return run_available_now(sliding_counts(s), "complete", state_partitions=8)
 
@@ -206,17 +207,11 @@ def q_stream_dual_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     shutil.rmtree(base, ignore_errors=True)
     main, side = f"{base}/main", f"{base}/side"
     s = stream_events(spark, sf_dir).select("event_id", "event_type")
-    q = (
-        s.writeStream.foreachBatch(
-            dual_sink_foreach_batch(main, side, ["event_type"])
-        )
-        .trigger(availableNow=True)
-        .start()
+    run_stream(
+        s,
+        "stream_dual_sink",
+        foreach_batch=dual_sink_foreach_batch(main, side, ["event_type"]),
     )
-    if not q.awaitTermination(300):
-        q.stop()
-        raise TimeoutError("dual-sink stream still running after 300s — refusing "
-                           "to return a partially-written sink")
     return spark.read.schema("event_id bigint, event_type string").json(main)
 
 
@@ -252,16 +247,13 @@ def q_stream_rollup_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
         .parquet(f"{base}/in")
     )
     rollup_dir = f"{base}/tbl"
-    q = (
-        stream.writeStream.foreachBatch(rollup_merge_batch(rollup_dir))
-        .option("checkpointLocation", f"{base}/ckpt")
-        .trigger(availableNow=True)
-        .start()
+    run_stream(
+        stream,
+        "stream_rollup_upsert",
+        foreach_batch=rollup_merge_batch(rollup_dir),
+        checkpoint_dir=f"{base}/ckpt",
+        timeout_s=180,
     )
-    if not q.awaitTermination(180):
-        q.stop()
-        raise TimeoutError("rollup stream still running after 180s — the rollup "
-                           "table is only partially merged")
     back = spark.read.parquet(rollup_dir)
     return back.select(
         "window_start",
@@ -316,7 +308,7 @@ def q_stream_corpus_clean(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming twin of the batch corpus-clean flagship (see
     corpus_clean_transform). State keyspace = distinct surviving
     texts; state_partitions tracks it (a billion-doc corpus wants
-    thousands — see run_available_now)."""
+    thousands — see run_stream)."""
     cleaned = corpus_clean_transform(stream_documents(spark, sf_dir))
     return run_available_now(cleaned, "complete", state_partitions=8)
 
@@ -419,18 +411,12 @@ def q_stream_ivf_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
             n_dirs=nd,
         )
 
-    q = (
-        stream.writeStream.foreachBatch(ingest)
-        .option("checkpointLocation", f"{base}/ckpt")
-        .trigger(availableNow=True)
-        .start()
+    run_stream(
+        stream,
+        "stream_ivf_ingest",
+        foreach_batch=ingest,
+        checkpoint_dir=f"{base}/ckpt",
     )
-    if not q.awaitTermination(300):
-        q.stop()
-        raise TimeoutError(
-            "ivf ingest stream still running after 300s — the index is "
-            "only partially appended"
-        )
     back = spark.read.parquet(out_dir)
     return (
         back.groupBy("cid")
@@ -537,17 +523,13 @@ def q_stream_cdc_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
         .parquet(f"{base}/in")
     )
     state_dir = f"{base}/state"
-    q = (
-        stream.writeStream.foreachBatch(cdc_apply_batch(state_dir))
-        .option("checkpointLocation", f"{base}/ckpt")
-        .trigger(availableNow=True)
-        .start()
+    run_stream(
+        stream,
+        "stream_cdc_apply",
+        foreach_batch=cdc_apply_batch(state_dir),
+        checkpoint_dir=f"{base}/ckpt",
+        timeout_s=180,
     )
-    if not q.awaitTermination(180):
-        q.stop()
-        raise TimeoutError(
-            "cdc stream still running after 180s — state only partially applied"
-        )
     last = spark.read.parquet(state_dir).select("key", "op", "new_bal_c")
     snap = load_table(spark, sf_dir, "customer").select(
         F.col("c_custkey").alias("key"),
@@ -621,17 +603,12 @@ def q_stream_quarantine_router(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).write.mode("overwrite").parquet(f"{bad_dir}/epoch={int(epoch_id)}")
         batch_df.unpersist()
 
-    q = (
-        stream.writeStream.foreachBatch(route)
-        .option("checkpointLocation", f"{base}/ckpt")
-        .trigger(availableNow=True)
-        .start()
+    run_stream(
+        stream,
+        "stream_quarantine_router",
+        foreach_batch=route,
+        checkpoint_dir=f"{base}/ckpt",
     )
-    if not q.awaitTermination(300):
-        q.stop()
-        raise TimeoutError(
-            "quarantine stream still running after 300s — sinks incomplete"
-        )
     # recursiveFileLookup: read the per-epoch subdirs as plain files
     # (epoch= is an idempotence namespace, not a partition column)
     good = (
@@ -815,19 +792,12 @@ def q_stream_crawl_record(spark: SparkSession, sf_dir: str) -> DataFrame:
     base = f"/tmp/spark_graft_streams/{tag}/crawl_record"
     shutil.rmtree(base, ignore_errors=True)
     s = stream_documents(spark, sf_dir)
-    q = (
-        s.select("doc_id", "source", "lang")
-        .writeStream.foreachBatch(crawl_record_ingest(f"{base}/out"))
-        .option("checkpointLocation", f"{base}/ckpt")
-        .trigger(availableNow=True)
-        .start()
+    run_stream(
+        s.select("doc_id", "source", "lang"),
+        "stream_crawl_record",
+        foreach_batch=crawl_record_ingest(f"{base}/out"),
+        checkpoint_dir=f"{base}/ckpt",
     )
-    if not q.awaitTermination(300):
-        q.stop()
-        raise TimeoutError(
-            "crawl record stream still running after 300s — the record "
-            "sinks are only partially landed"
-        )
     return spark.read.schema("doc_id bigint, record string").json(
         f"{base}/out/job_list"
     ).select("doc_id", "record")
@@ -890,20 +860,12 @@ def q_stream_minhash_dedup(
         .parquet(f"{base}/in")
     )
     state_dir = f"{base}/state"
-    q = (
-        stream.writeStream.foreachBatch(
-            minhash_dedup_ingest(state_dir, MINHASH_VERIFY_JACCARD_BP)
-        )
-        .option("checkpointLocation", f"{base}/ckpt")
-        .trigger(availableNow=True)
-        .start()
+    run_stream(
+        stream,
+        "stream_minhash_dedup",
+        foreach_batch=minhash_dedup_ingest(state_dir, MINHASH_VERIFY_JACCARD_BP),
+        checkpoint_dir=f"{base}/ckpt",
     )
-    if not q.awaitTermination(300):
-        q.stop()
-        raise TimeoutError(
-            "minhash dedup stream still running after 300s — band index "
-            "only partially built"
-        )
     # the SHARED labeling tail (minhash_label_members): members
     # construction, edge sizing, and label selection live in one place
     # so batch and stream cannot drift apart semantically
@@ -960,17 +922,12 @@ def q_stream_pack_sequences(
         .parquet(f"{base}/in")
     )
     state_dir = f"{base}/state"
-    q = (
-        stream.writeStream.foreachBatch(pack_ingest(state_dir))
-        .option("checkpointLocation", f"{base}/ckpt")
-        .trigger(availableNow=True)
-        .start()
+    run_stream(
+        stream,
+        "stream_pack_sequences",
+        foreach_batch=pack_ingest(state_dir),
+        checkpoint_dir=f"{base}/ckpt",
     )
-    if not q.awaitTermination(300):
-        q.stop()
-        raise TimeoutError(
-            "pack stream still running after 300s — offsets incomplete"
-        )
     return read_packed(spark, state_dir)
 
 

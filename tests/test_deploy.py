@@ -135,6 +135,27 @@ def test_status_report_after_ticks(spark, sf_dir, tmp_path, capsys):
         reset_ledger(spark, RUN_HISTORY_TABLE)
 
 
+def test_build_session_is_the_engine_factory(monkeypatch):
+    """The deploy session comes from session.get_spark (UTC pin, Arrow,
+    nanosAsLong, core-sized shuffle partitions); the deployment env
+    picks only the master and the warehouse."""
+    from etl_dagster_service_crawler_spark import deploy
+
+    calls = []
+    monkeypatch.setattr(deploy, "get_spark", lambda **kw: calls.append(kw))
+    monkeypatch.setenv("SPARK_MASTER", "local[2]")
+    monkeypatch.setenv("SPARK_WAREHOUSE", "/data/warehouse")
+    deploy.build_session()
+    monkeypatch.delenv("SPARK_MASTER")
+    monkeypatch.delenv("SPARK_WAREHOUSE")
+    deploy.build_session("other-app")
+    assert calls == [
+        {"app_name": "spark-graft-deploy", "master": "local[2]",
+         "extra_conf": {"spark.sql.warehouse.dir": "/data/warehouse"}},
+        {"app_name": "other-app", "master": None, "extra_conf": None},
+    ]
+
+
 def test_cron_mode_waits_for_first_match(monkeypatch):
     """--cron mode must fire ONLY on schedule matches — including the
     FIRST tick. The reference's ScheduleDefinition never runs a

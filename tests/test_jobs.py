@@ -206,3 +206,67 @@ def test_ledger_records_error_row_on_raised_failure(spark, sf_dir):
         assert "streaming" in rows[0]["error"]
     finally:
         reset_ledger(spark, table)
+
+
+def test_timed_out_run_once_raises_and_ledgers_error(spark, sf_dir):
+    """An availableNow drain still running at timeout_s is a failed
+    run: run_once raises TimeoutError and the ledger row says error,
+    not a partial `ok`."""
+    import pytest
+
+    table = "run_history_timeout_test"
+    reset_ledger(spark, table)
+    job = job_registry()["corpus_clean_2min"]
+    job.ledger_table = table
+    try:
+        with pytest.raises(TimeoutError):
+            job.run_once(spark, sf_dir, timeout_s=0.01)
+        rows = spark.sql(f"SELECT status, error FROM {table}").collect()
+        assert [r["status"] for r in rows] == ["error"]
+        assert "TimeoutError" in rows[0]["error"]
+        assert not [
+            q for q in spark.streams.active
+            if q.name.startswith("job_corpus_clean_2min_")
+        ]
+    finally:
+        reset_ledger(spark, table)
+
+
+def test_run_once_counts_landed_rows_without_sleeping(
+    spark, sf_dir, tmp_path, monkeypatch
+):
+    """A run's counts are the query's own progress, complete when the
+    query stops: with time.sleep made to raise in the job and runner
+    modules, run_once still reports every landed row."""
+    import time
+    import types
+
+    from etl_dagster_service_crawler_spark.streaming import ingest, jobs
+
+    docs = load_table(spark, sf_dir, "documents").select(
+        "doc_id", "text", "lang", "source", "n_chars"
+    )
+    src = str(tmp_path / "nosleep_src")
+    _stage_file(docs.where(F.col("doc_id") < 250), src, "day1")
+    job = ScheduledPipeline(
+        name="nosleep",
+        build=lambda s, d: corpus_clean_transform(
+            s.readStream.schema(DOCUMENTS_SCHEMA).parquet(d)
+        ),
+        output_mode="complete",
+        state_partitions=4,
+    )
+
+    def no_sleep(_s):
+        raise AssertionError("a run must not sleep")
+
+    # a module-local stand-in: patching time.sleep itself would also
+    # hit py4j's own threads
+    no_sleep_time = types.SimpleNamespace(
+        time=time.time, monotonic=time.monotonic, sleep=no_sleep
+    )
+    monkeypatch.setattr(jobs, "time", no_sleep_time)
+    monkeypatch.setattr(ingest, "time", no_sleep_time, raising=False)
+    status = job.run_once(spark, src, timeout_s=120)
+    assert status.ok and status.n_batches == 1
+    assert status.n_rows == 250

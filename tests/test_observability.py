@@ -1,18 +1,11 @@
-"""Tests for observe-based telemetry and the error-budget listener
-(reference K4/Q1/O2)."""
+"""Tests for observe-based telemetry and the stream runner's error
+budget (reference K4/Q1/O2)."""
 
 from __future__ import annotations
 
-import time
-
 from pyspark.sql import Row
-from pyspark.sql import functions as F
 
-from etl_dagster_service_crawler_spark.io.observability import (
-    ErrorBudgetListener,
-    observe_quality,
-    observe_stream_quality,
-)
+from etl_dagster_service_crawler_spark.io.observability import observe_quality
 
 
 def _frame(spark):
@@ -33,30 +26,41 @@ def test_batch_observation_counts_empty_fields(spark):
     assert got["n_empty_fields"] == 3
 
 
-def test_error_budget_listener_stops_stream(spark, sf_dir):
-    from etl_dagster_service_crawler_spark.streaming.ingest import stream_events
+def test_run_stream_budget_stops_processing_time_job(spark, tmp_path):
+    """The runner's error budget: a processingTime job whose budget is
+    one observed row stops after its first batch, although min_batches
+    and three one-file triggers would keep it running."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
 
-    listener = ErrorBudgetListener(spark, max_errors=1, field="n_rows")
-    spark.streams.addListener(listener)
-    try:
-        s = stream_events(spark, sf_dir).select("event_id", "event_type")
-        observed = observe_stream_quality(s, ["event_type"])
-        q = (
-            observed.writeStream.format("memory")
-            .queryName("obs_out")
-            .outputMode("append")
-            .trigger(processingTime="1 second")
-            .start()
+    from etl_dagster_service_crawler_spark.streaming.jobs import (
+        ScheduledPipeline,
+    )
+
+    src = tmp_path / "events_src"
+    src.mkdir()
+    for day in range(3):
+        pq.write_table(
+            pa.table({"event_id": [3 * day, 3 * day + 1],
+                      "event_type": ["view", ""]}),
+            src / f"day{day}.parquet",
         )
-        deadline = time.time() + 120
-        while q.isActive and time.time() < deadline:
-            time.sleep(0.2)
-        # every batch has rows, so budget=1 trips on the first progress
-        # event and the listener stops the query
-        assert not q.isActive
-        assert listener.tripped
-    finally:
-        spark.streams.removeListener(listener)
+    job = ScheduledPipeline(
+        name="budgetjob",
+        build=lambda s, d: s.readStream.schema("event_id long, event_type string")
+        .option("maxFilesPerTrigger", 1)
+        .parquet(d),
+        interval="1 second",
+        observe_cols=["event_type"],
+        max_errors=1,
+        metric_field="n_rows",
+    )
+    status = job.run_scheduled(spark, str(src), min_batches=100, timeout_s=120)
+    assert status.budget_tripped and not status.ok
+    assert status.n_batches == 1
+    assert status.n_rows == 2 and status.n_bad == 2
+    assert not [q for q in spark.streams.active if q.name.startswith("job_budgetjob_")]
+    assert status.result.count() == 2
 
 
 def test_frame_fingerprint_normalizes_representations():
