@@ -12,7 +12,8 @@
   and row groups. Candidate set shrinks by ~C/nprobe.
 - knn_join_cells: the same cells as a batch self-join (every row a
   query). The coarse-then-exact searches (quantized, PQ) share one
-  exact re-rank of their survivors (exact_rerank_topk).
+  exact re-rank of their survivors (exact_rerank_topk); all of them
+  rank through one exact cosine top-k (_cosine_topk).
 - embedding near-dup pairs ride the same bucketing (same-bucket
   equi-join) — see workloads/llm.py.
 
@@ -66,31 +67,27 @@ def exact_rerank_topk(
 ) -> DataFrame:
     """The one exact re-rank of coarse survivors: (qid, nid) rows ->
     the top-k (qid, nid, cos, rn) per qid by (cos desc, nid), cos the
-    full-precision cosine of the two emb vectors. Norms are taken once
-    per row, so each survivor pair pays one dot fold: the same IEEE ops
-    as cosine(), bit-identical. A bounded query_ids list is broadcast
-    as the query side; None makes every emb row a query (the batch
+    full-precision cosine of the two emb vectors (_cosine_topk, norms
+    once per emb row). A bounded query_ids list is broadcast as the
+    query side; None makes every emb row a query (the batch
     self-joins). `dim` unrolls the pair dot (dot_fixed)."""
-    v = emb.select(
-        F.col(id_col).alias("id"),
-        F.col(vec_col).alias("vec"),
-        F.sqrt(norm2(F.col(vec_col))).alias("nrm"),
-    )
-    nv = v.select(
-        F.col("id").alias("nid"), F.col("vec").alias("nvec"),
-        F.col("nrm").alias("nnrm"),
-    )
-    qv = v.select(
-        F.col("id").alias("qid"), F.col("vec").alias("qvec"),
-        F.col("nrm").alias("qnrm"),
-    )
+    v = emb.select(id_col, vec_col, F.sqrt(norm2(F.col(vec_col))))
+    nv = v.toDF("nid", "nvec", "nnrm")
+    qv = v.toDF("qid", "qvec", "qnrm")
     if query_ids is not None:
         qv = F.broadcast(qv.where(F.col("qid").isin(query_ids)))
+    return _cosine_topk(survivors.join(nv, "nid").join(qv, "qid"), k, dim)
+
+
+def _cosine_topk(cand: DataFrame, k: int, dim: int | None = None) -> DataFrame:
+    """The one exact cosine top-k of candidate rows that carry their
+    vectors and norms: (qid, nid, qvec, qnrm, nvec, nnrm) -> the top-k
+    (qid, nid, cos, rn) per qid by (cos desc, nid). cos = dot / (qnrm *
+    nnrm) pays one dot fold per pair: the same IEEE ops as cosine(),
+    bit-identical. `dim` unrolls the pair dot (dot_fixed)."""
     w = Window.partitionBy("qid").orderBy(F.col("cos").desc(), F.col("nid"))
     return (
-        survivors.join(nv, "nid")
-        .join(qv, "qid")
-        .select(
+        cand.select(
             "qid",
             "nid",
             (_pair_dot(F.col("qvec"), F.col("nvec"), dim)
@@ -242,9 +239,10 @@ def probe_cells(
     (qcos desc, ties to smallest cid): every column of `queries` (at
     least qid, qvec) plus (qnrm, cid, qcos, rn), rn <= nprobe. qnrm is
     the query norm, kept for the caller's own pair cosines. Shared by
-    ivf_search, knn_join_cells, ivf_pq_search and the oracle-backed
-    probe exports, and mirrored exactly by calibrate_nprobe's numpy
-    kernel (probe_order_and_assignment). The join and the projection
+    knn_join_cells, ivf_pq_search and the oracle-backed probe exports;
+    ivf_search collects its (qid, cid) rows once and consumes those.
+    Mirrored exactly by calibrate_nprobe's numpy kernel
+    (probe_order_and_assignment). The join and the projection
     keep the queries' partitioning, so a caller that hash-partitions
     queries by qid gets the window with no Exchange over the fanned
     |queries| x C frame.
@@ -559,7 +557,7 @@ def probe_order_and_assignment(S) -> tuple:
     so tests can pin its parity with the Spark-side operators:
 
     - probe order: qcos desc, tie -> smallest cid. Matches
-      knn_join_cells / ivf_search's Window orderBy(qcos desc, cid);
+      probe_cells' Window orderBy(qcos desc, cid);
       stable argsort on -S keeps ascending cid within ties.
     - db assignment: argmax cosine, tie -> smallest cid. Matches
       assign_cells' max_by(ccos, struct(ccos, -cid)); np.argmax takes
@@ -775,9 +773,9 @@ def ivf_assign(
 IVF_MAX_PARTITION_DIRS = 128
 
 
-def ivf_n_dirs(n_centroids: int, cap: int | None = None) -> int:
+def ivf_n_dirs(n_centroids: int) -> int:
     """Directory count for a NEW bucketed assignment layout. The cap
-    default reads the module constant at CALL time (a def-time default
+    is read from the module constant at CALL time (a def-time default
     would freeze it against test monkeypatching).
 
     For an EXISTING index use ivf_index_n_dirs: re-deriving from the
@@ -786,10 +784,10 @@ def ivf_n_dirs(n_centroids: int, cap: int | None = None) -> int:
     path prune pb = pmod(cid, WRONG_nd) — silently missing candidate
     buckets with no error. The _NDIRS marker (r13) removes that
     coupling."""
-    return max(1, min(n_centroids, cap if cap is not None else IVF_MAX_PARTITION_DIRS))
+    return max(1, min(n_centroids, IVF_MAX_PARTITION_DIRS))
 
 
-def ivf_index_n_dirs(index_dir: str, n_centroids: int | None = None) -> int:
+def ivf_index_n_dirs(index_dir: str) -> int:
     """Bucket count of a PERSISTED index: the _NDIRS marker ivf_build
     records (atomic with the publish rename). For marker-less legacy
     indexes the count is derived from the ON-DISK layout itself — the
@@ -805,8 +803,8 @@ def ivf_index_n_dirs(index_dir: str, n_centroids: int | None = None) -> int:
     reader (ivf_search's partition pruning) and every appender
     (streaming ingest) must size pmod by the layout ON DISK.
 
-    n_centroids=None counts the centroids from their parquet footers
-    (driver-side pyarrow, no Spark job), and only on that last path."""
+    The last resort counts the centroids from their parquet footers
+    (driver-side pyarrow, no Spark job)."""
     import os
 
     try:
@@ -835,18 +833,16 @@ def ivf_index_n_dirs(index_dir: str, n_centroids: int | None = None) -> int:
         "is only correct if the cap has not changed since the index was "
         "built", index_dir,
     )
-    if n_centroids is None:
-        import pyarrow.dataset as ds
+    import pyarrow.dataset as ds
 
-        n_centroids = ds.dataset(
-            os.path.join(index_dir, "centroids"), format="parquet"
-        ).count_rows()
-    return ivf_n_dirs(n_centroids)
+    return ivf_n_dirs(
+        ds.dataset(os.path.join(index_dir, "centroids"), format="parquet")
+        .count_rows()
+    )
 
 
 def write_assignments(
-    assignments: DataFrame, out_dir: str, n_centroids: int,
-    mode: str = "error", n_dirs: int | None = None,
+    assignments: DataFrame, out_dir: str, n_dirs: int, mode: str = "error",
 ) -> None:
     """Write (or append) assignment rows in the bucketed index layout:
     partitioned by pb = pmod(cid, n_dirs), sorted by cid within each
@@ -860,16 +856,15 @@ def write_assignments(
     groups, which is what lets the cid IN-filter skip at row-group
     granularity when a bucket holds many cells.
 
-    `n_dirs` overrides the derived bucket count — APPENDS to an
-    existing index must pass its recorded count (ivf_index_n_dirs) so
-    the new rows land in the resident layout even if the cap constant
-    changed since the build."""
-    nd = n_dirs if n_dirs is not None else ivf_n_dirs(n_centroids)
+    A new index passes ivf_n_dirs(n_centroids); APPENDS to an existing
+    index pass its recorded count (ivf_index_n_dirs) so the new rows
+    land in the resident layout even if the cap constant changed since
+    the build."""
     (
         assignments.withColumn(
-            "pb", F.pmod(F.col("cid"), F.lit(nd)).cast("int")
+            "pb", F.pmod(F.col("cid"), F.lit(n_dirs)).cast("int")
         )
-        .repartition(nd, "pb")
+        .repartition(n_dirs, "pb")
         .sortWithinPartitions("cid")
         .write.partitionBy("pb")
         .mode(mode)
@@ -912,12 +907,13 @@ def ivf_build(
         os.makedirs(parent, exist_ok=True)
     stage = f"{index_dir.rstrip('/')}.stage-{uuid.uuid4().hex[:8]}"
     centroids.write.parquet(f"{stage}/centroids")
-    write_assignments(assignments, f"{stage}/assignments", n_centroids)
+    nd = ivf_n_dirs(n_centroids)
+    write_assignments(assignments, f"{stage}/assignments", nd)
     # record the bucket count IN the staged dir so the marker is
     # atomic with the publish rename — readers and appenders size
     # pmod by the layout on disk, not today's cap constant (r13)
     with open(os.path.join(stage, "_NDIRS"), "w") as fh:
-        fh.write(str(ivf_n_dirs(n_centroids)))
+        fh.write(str(nd))
     old = None
     if force and os.path.isdir(index_dir):
         old = f"{index_dir.rstrip('/')}.old-{uuid.uuid4().hex[:8]}"
@@ -943,43 +939,40 @@ def ivf_search(
     """Search a persisted IVF index (see ivf_build) for the top-k
     cosine neighbors of each query row (qid, qvec).
 
-    The probed centroid ids are collected to the driver — bounded
-    planning metadata, at most |queries| * nprobe ints — and applied as
-    TWO literal IN-filters on the bucketed assignments scan: the probed
-    buckets (pb = pmod(cid, n_dirs)) land in the scan's
-    PartitionFilters, so every unprobed directory is pruned before a
-    byte is read, and the probed cids land as a pushed data filter that
-    skips unprobed cells' row groups inside shared buckets (the files
-    are cid-sorted — see write_assignments). Tests pin the partition
-    pruning via the executed plan. The bucket count comes from the
-    index's _NDIRS marker (ivf_index_n_dirs), so the probe collect is
-    the only Spark job before the search itself. Self-matches
-    (nid == qid) are excluded for parity with cosine_topk_bruteforce;
-    at nprobe == the cell count the search IS the brute force (pinned
-    by test)."""
+    The (qid, cid) probe rows are collected to the driver ONCE —
+    bounded planning metadata, at most |queries| * nprobe rows. Their
+    cids become TWO literal IN-filters on the bucketed assignments
+    scan: the probed buckets (pb = pmod(cid, n_dirs)) land in the
+    scan's PartitionFilters, so every unprobed directory is pruned
+    before a byte is read, and the probed cids land as a pushed data
+    filter that skips unprobed cells' row groups inside shared buckets
+    (the files are cid-sorted — see write_assignments; tests pin the
+    pruning via the executed plan). The rows themselves go back in as
+    a local relation (an Arrow table, no RDD to scan), the join's
+    broadcast probe side, so no probe is ranked twice; the candidates
+    meet their broadcast query vectors on qid and _cosine_topk ranks
+    them. The bucket count comes from the _NDIRS marker
+    (ivf_index_n_dirs). Self-matches (nid == qid) are excluded for
+    parity with cosine_topk_bruteforce; at nprobe == the cell count
+    the search IS the brute force (pinned by test)."""
     centroids = spark.read.parquet(f"{index_dir}/centroids")
-    probes = probe_cells(queries, centroids, nprobe).select(
-        "qid", "qvec", "cid"
-    )
-    probe_cids = sorted(
-        int(r["cid"]) for r in probes.select("cid").distinct().collect()
-    )
+    probes = probe_cells(queries, centroids, nprobe).select("qid", "cid").toArrow()
+    probe_cids = sorted(set(probes.column("cid").to_pylist()))
     nd = ivf_index_n_dirs(index_dir)
     probe_pbs = sorted({c % nd for c in probe_cids})
-    assignments = (
+    cells = (
         spark.read.parquet(f"{index_dir}/assignments")
         .where(F.col("pb").isin(probe_pbs) & F.col("cid").isin(probe_cids))
-        .withColumnRenamed(id_col, "nid")
-        .withColumnRenamed(vec_col, "nvec")
+        .select("cid", id_col, vec_col, F.sqrt(norm2(F.col(vec_col))))
+        .toDF("cid", "nid", "nvec", "nnrm")
     )
-    cand = probes.join(assignments, "cid").where(F.col("nid") != F.col("qid"))
-    w = Window.partitionBy("qid").orderBy(F.col("cos").desc(), F.col("nid"))
-    return (
-        cand.select("qid", "nid", cosine(F.col("qvec"), F.col("nvec")).alias("cos"))
-        .withColumn("rn", F.row_number().over(w))
-        .where(F.col("rn") <= k)
-        .select("qid", "nid", "cos", "rn")
+    q = queries.select("qid", "qvec", F.sqrt(norm2(F.col("qvec"))).alias("qnrm"))
+    cand = (
+        cells.join(F.broadcast(spark.createDataFrame(probes)), "cid")
+        .join(F.broadcast(q), "qid")
+        .where(F.col("nid") != F.col("qid"))
     )
+    return _cosine_topk(cand, k)
 
 
 # k-means cells are rarely balanced; a cell above HOT_CELL_ROWS gets
@@ -1063,18 +1056,7 @@ def knn_join_cells(
         probes = salt_hot_keys(probes, hot, "cid", N_CELL_SALTS)
         join_keys = ["cid", "salt"]
     cand = probes.join(cells, join_keys).where(F.col("nid") != F.col("qid"))
-    w = Window.partitionBy("qid").orderBy(F.col("cos").desc(), F.col("nid"))
-    return (
-        cand.select(
-            "qid",
-            "nid",
-            (dot(F.col("qvec"), F.col("nvec"))
-             / (F.col("qnrm") * F.col("nnrm"))).alias("cos"),
-        )
-        .withColumn("rn", F.row_number().over(w))
-        .where(F.col("rn") <= k)
-        .select("qid", "nid", "cos", "rn")
-    )
+    return _cosine_topk(cand, k)
 
 
 def _pair_dot(a: Column, b: Column, dim: int | None) -> Column:

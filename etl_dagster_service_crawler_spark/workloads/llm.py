@@ -4613,9 +4613,11 @@ def q_knn_route_export(spark: SparkSession, sf_dir: str) -> DataFrame:
     quantized when 4*nprobe > C) — parity with the float rule is
     pinned by unit test. Scale: sample and cell count are planning
     constants; the sample² truth pass is ~512² rows of matched-fold
-    cosine, independent of corpus size."""
-    from etl_dagster_service_crawler_spark.functions.vectors import cosine
+    cosine (_cosine_topk, norms once per sample row), independent of
+    corpus size."""
+    from etl_dagster_service_crawler_spark.functions.vectors import norm2
     from etl_dagster_service_crawler_spark.operators.similarity import (
+        _cosine_topk,
         assign_cells,
         probe_cells,
     )
@@ -4641,22 +4643,12 @@ def q_knn_route_export(spark: SparkSession, sf_dir: str) -> DataFrame:
     cell = assign_cells(samp, cent).select(
         F.col("vec_id").alias("nid"), F.col("cid").alias("ncid")
     )
-    a = samp.select(
-        F.col("vec_id").alias("qid"), F.col("embedding").alias("qvec")
-    )
-    b = samp.select(
-        F.col("vec_id").alias("nid"), F.col("embedding").alias("nvec")
-    )
-    wt = Window.partitionBy("qid").orderBy(F.col("cos").desc(), F.col("nid"))
-    truth = (
-        a.join(F.broadcast(b), F.col("qid") != F.col("nid"))
-        .select(
-            "qid", "nid", cosine(F.col("qvec"), F.col("nvec")).alias("cos")
-        )
-        .withColumn("rn", F.row_number().over(wt))
-        .where(F.col("rn") <= 5)
-        .select("qid", "nid")
-    )
+    v = samp.select("vec_id", "embedding", F.sqrt(norm2(F.col("embedding"))))
+    a = v.toDF("qid", "qvec", "qnrm")
+    b = v.toDF("nid", "nvec", "nnrm")
+    truth = _cosine_topk(
+        a.join(F.broadcast(b), F.col("qid") != F.col("nid")), 5
+    ).select("qid", "nid")
     ranked = (
         truth.join(cell, "nid")
         .join(pos, ["qid"])

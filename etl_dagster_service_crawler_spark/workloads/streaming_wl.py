@@ -403,12 +403,11 @@ def q_stream_ivf_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     # size pmod by the BUILT index's recorded bucket count, not
     # today's cap constant — streamed and batch-built layouts must
     # stay identical even across a cap resize (r13)
-    nd = ivf_index_n_dirs(index_dir, 16)
+    nd = ivf_index_n_dirs(index_dir)
 
     def ingest(batch_df: DataFrame, batch_id: int) -> None:
         write_assignments(
-            assign_cells(batch_df, centroids), out_dir, 16, mode="append",
-            n_dirs=nd,
+            assign_cells(batch_df, centroids), out_dir, nd, mode="append"
         )
 
     run_stream(

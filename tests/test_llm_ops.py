@@ -456,11 +456,11 @@ def test_ivf_search_and_append_use_recorded_bucket_count(
         for r in S.ivf_search(spark, index_dir, q, k=5, nprobe=8).collect()
     }
     assert legacy == before
-    assert S.ivf_index_n_dirs(index_dir, 8) == 4
+    assert S.ivf_index_n_dirs(index_dir) == 4
     # the case the old constant-derived fallback got WRONG: marker
     # gone AND the cap since resized — the on-disk layout still wins
     monkeypatch.setattr(S, "IVF_MAX_PARTITION_DIRS", 128)
-    assert S.ivf_index_n_dirs(index_dir, 8) == 4
+    assert S.ivf_index_n_dirs(index_dir) == 4
     legacy_resized = {
         (r.qid, r.rn, r.nid)
         for r in S.ivf_search(spark, index_dir, q, k=5, nprobe=8).collect()
@@ -479,9 +479,8 @@ def test_ivf_search_and_append_use_recorded_bucket_count(
     S.write_assignments(
         S.assign_cells(extra, centroids),
         f"{index_dir}/assignments",
-        8,
+        S.ivf_index_n_dirs(index_dir),
         mode="append",
-        n_dirs=S.ivf_index_n_dirs(index_dir, 8),
     )
     pbs = {
         int(e.split("=", 1)[1])

@@ -996,3 +996,28 @@ def test_knn_join_cells_probe_window_needs_no_exchange(spark, sf_dir):
     )
     between = "\n".join(lines[win:bnlj])
     assert "Exchange" not in between, plan
+
+
+def test_ivf_search_ranks_probes_once(spark, sf_dir, tmp_path):
+    """ivf_search collects its (qid, cid) probe rows once and joins them
+    back as a local relation, so the search plan ranks no probes: its
+    only Window is the cos top-k, no qcos is computed, and the centroids
+    are not fanned against the queries (no BroadcastNestedLoopJoin)."""
+    import re
+
+    from etl_dagster_service_crawler_spark.operators.similarity import (
+        ivf_build,
+        ivf_search,
+    )
+
+    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+    index_dir = str(tmp_path / "ivf")
+    ivf_build(emb, index_dir, n_centroids=8)
+    q = emb.where(emb.vec_id.isin([0, 1])).selectExpr(
+        "vec_id AS qid", "embedding AS qvec"
+    )
+    plan = _plan(ivf_search(spark, index_dir, q, k=5, nprobe=2))
+    windows = re.findall(r"\bWindow \[.*", plan)
+    assert len(windows) == 1 and re.search(r"\bcos#\d+ DESC", windows[0]), plan
+    assert "qcos" not in plan, plan
+    assert "BroadcastNestedLoopJoin" not in plan, plan

@@ -58,7 +58,6 @@ ALLOW: dict[tuple[str, str], str] = {
     # past ~100 probes)
     ("decontaminate_embedding", "BroadcastNestedLoopJoin"):
         "8 quantized probe vectors",
-    ("similarity_topk_ivf", "BroadcastNestedLoopJoin"): "probe + centroid rows",
     ("knn_join_ivf", "BroadcastNestedLoopJoin"): "centroid array row",
     # r8 oracle exports: 32-row plane / 16-row centroid broadcasts and
     # the 16-row seed-rank window (the corpus-sized pick is a
