@@ -28,18 +28,3 @@ def norm2(a: Column) -> Column:
 def cosine(a: Column, b: Column) -> Column:
     return dot(a, b) / (F.sqrt(norm2(a)) * F.sqrt(norm2(b)))
 
-
-def dot_fixed(a: Column, b: Column, dim: int) -> Column:
-    """Unrolled dot product for a KNOWN dimension: `dim` element_at
-    multiply-adds inside one codegen'd projection — no intermediate
-    zipped array is allocated per row, which matters when the dot runs
-    once per CANDIDATE PAIR (ANN joins) rather than once per row.
-    Accumulation starts at 0.0 and runs left-to-right, exactly like
-    dot()'s sequential fold, so values stay bit-identical to the HOF
-    form (and to DuckDB's list ordering)."""
-    out = F.lit(0.0)
-    for i in range(1, dim + 1):
-        out = out + F.element_at(a, i).cast("double") * F.element_at(
-            b, i
-        ).cast("double")
-    return out

@@ -27,10 +27,10 @@ from __future__ import annotations
 
 import logging
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from etl_dagster_service_crawler_spark.functions.vectors import cosine, dot, dot_fixed, norm2
+from etl_dagster_service_crawler_spark.functions.vectors import cosine, dot, norm2
 from etl_dagster_service_crawler_spark.operators.block_pairs import block_pair_fan
 from etl_dagster_service_crawler_spark.operators.joins import hot_keys, salt_hot_keys
 
@@ -63,34 +63,33 @@ def exact_rerank_topk(
     survivors: DataFrame, emb: DataFrame, k: int,
     query_ids: list[int] | None = None,
     id_col: str = "vec_id", vec_col: str = "embedding",
-    dim: int | None = None,
 ) -> DataFrame:
     """The one exact re-rank of coarse survivors: (qid, nid) rows ->
     the top-k (qid, nid, cos, rn) per qid by (cos desc, nid), cos the
     full-precision cosine of the two emb vectors (_cosine_topk, norms
     once per emb row). A bounded query_ids list is broadcast as the
     query side; None makes every emb row a query (the batch
-    self-joins). `dim` unrolls the pair dot (dot_fixed)."""
+    self-joins)."""
     v = emb.select(id_col, vec_col, F.sqrt(norm2(F.col(vec_col))))
     nv = v.toDF("nid", "nvec", "nnrm")
     qv = v.toDF("qid", "qvec", "qnrm")
     if query_ids is not None:
         qv = F.broadcast(qv.where(F.col("qid").isin(query_ids)))
-    return _cosine_topk(survivors.join(nv, "nid").join(qv, "qid"), k, dim)
+    return _cosine_topk(survivors.join(nv, "nid").join(qv, "qid"), k)
 
 
-def _cosine_topk(cand: DataFrame, k: int, dim: int | None = None) -> DataFrame:
+def _cosine_topk(cand: DataFrame, k: int) -> DataFrame:
     """The one exact cosine top-k of candidate rows that carry their
     vectors and norms: (qid, nid, qvec, qnrm, nvec, nnrm) -> the top-k
     (qid, nid, cos, rn) per qid by (cos desc, nid). cos = dot / (qnrm *
     nnrm) pays one dot fold per pair: the same IEEE ops as cosine(),
-    bit-identical. `dim` unrolls the pair dot (dot_fixed)."""
+    bit-identical."""
     w = Window.partitionBy("qid").orderBy(F.col("cos").desc(), F.col("nid"))
     return (
         cand.select(
             "qid",
             "nid",
-            (_pair_dot(F.col("qvec"), F.col("nvec"), dim)
+            (dot(F.col("qvec"), F.col("nvec"))
              / (F.col("qnrm") * F.col("nnrm"))).alias("cos"),
         )
         .withColumn("rn", F.row_number().over(w))
@@ -233,7 +232,6 @@ def srp_planes(
 
 def probe_cells(
     queries: DataFrame, centroids: DataFrame, nprobe: int,
-    dim: int | None = None,
 ) -> DataFrame:
     """Per-query probe ranking — the ONE definition of IVF probe order
     (qcos desc, ties to smallest cid): every column of `queries` (at
@@ -248,9 +246,8 @@ def probe_cells(
     |queries| x C frame.
 
     r14: both norms are computed once per row/centroid instead of once
-    per (query, centroid) pair inside cosine(), and a caller-known
-    `dim` unrolls the pair dot (functions/vectors.dot_fixed). Same
-    factored IEEE ops in the same order — qcos is bit-identical."""
+    per (query, centroid) pair inside cosine(). Same factored IEEE ops
+    in the same order — qcos is bit-identical."""
     wq = Window.partitionBy("qid").orderBy(F.col("qcos").desc(), F.col("cid"))
     cents = centroids.withColumn("__cnrm", F.sqrt(norm2(F.col("cvec"))))
     q = queries.withColumn("qnrm", F.sqrt(norm2(F.col("qvec"))))
@@ -258,7 +255,7 @@ def probe_cells(
         q.join(F.broadcast(cents))
         .select(
             *q.columns, "cid",
-            (_pair_dot(F.col("qvec"), F.col("cvec"), dim)
+            (dot(F.col("qvec"), F.col("cvec"))
              / (F.col("qnrm") * F.col("__cnrm"))).alias("qcos"),
         )
         .withColumn("rn", F.row_number().over(wq))
@@ -306,12 +303,20 @@ def srp_neardup_pairs(
     bytes per doc — the right side of the tradeoff whenever dup density
     is non-trivial (the reason one runs near-dup at all). Pinned by
     tests/test_plans.py (no Exchange/HashAggregate above the self-join)."""
+    import pyarrow as pa
+
     spark = emb.sparkSession
     # hyperplanes as a broadcast 32-row TABLE, not inline literals — a
     # lit()-array per plane would put ~n_tables*bits*dim nodes into the
-    # expression tree and stall the analyzer/codegen.
+    # expression tree and stall the analyzer/codegen. An Arrow table
+    # plans as a LocalRelation, not a parallelized RDD.
+    tbl, bit, plane = zip(*srp_planes(dim, n_tables, bits_per_table, seed))
     planes = spark.createDataFrame(
-        srp_planes(dim, n_tables, bits_per_table, seed),
+        pa.table({
+            "tbl": pa.array(tbl, pa.int32()),
+            "bit": pa.array(bit, pa.int32()),
+            "plane": pa.array(plane, pa.list_(pa.float64())),
+        }),
         "tbl int, bit int, plane array<double>",
     )
 
@@ -364,11 +369,12 @@ def srp_neardup_pairs(
     #
     # r14 NEGATIVE RESULT, kept on purpose (the minhash_dedup_pairs
     # finding): statically expanding this HOF and unrolling the verify
-    # dot (dot_fixed) measured 2.38 s vs 1.60 s at sf0.1 — the cosine
-    # filter below is pushed into the join condition by the optimizer,
-    # and with the CodegenFallback gone the condition (64-term dot +
-    # the expansion) code-generates past the JIT's method limit, so
-    # the per-candidate hot loop runs in the bytecode interpreter.
+    # dot into element_at multiply-adds measured 2.38 s vs 1.60 s at
+    # sf0.1 — the cosine filter below is pushed into the join
+    # condition by the optimizer, and with the CodegenFallback gone
+    # the condition (64-term dot + the expansion) code-generates past
+    # the JIT's method limit, so the per-candidate hot loop runs in
+    # the bytecode interpreter.
     # The HOF forms keep the condition on Catalyst's cached
     # interpreted evaluators, which JIT fine.
     earlier_collision = F.exists(
@@ -398,29 +404,6 @@ def srp_neardup_pairs(
         )
         .where(F.col("cos") >= threshold)
     )
-
-
-def embedding_dim_from_parquet(
-    path: str, vec_col: str = "embedding"
-) -> int | None:
-    """Embedding width from the FIRST non-null vector of a parquet
-    file, read driver-side via pyarrow — no Spark job (the list width
-    is not in the footer, so one tiny column read of the leading rows
-    is the cheapest honest source). Callers pass it as `dim` to unroll
-    per-pair dots (dot_fixed); None (empty/all-null file) keeps the
-    HOF fold, which is bit-identical anyway."""
-    import pyarrow.parquet as pq
-
-    try:
-        pf = pq.ParquetFile(path)
-        for batch in pf.iter_batches(batch_size=64, columns=[vec_col]):
-            col = batch.column(0)
-            for v in col:
-                if v.is_valid:
-                    return len(v)
-    except Exception:  # noqa: BLE001 - dim is an optimization hint only
-        return None
-    return None
 
 
 def ivf_index_dir(sf_dir: str, n_centroids: int = 16,
@@ -658,10 +641,7 @@ def kmeans_centroids(
     actually trained at 100 TB. The fixtures (<= the cap) still fit
     whole-corpus, so fixture-scale results are unchanged; the x10
     replica's fit drops 5x rows, the x100 replica's 45x (what
-    previously blew a 10-minute budget at 5M vectors).
-
-    Falls back to a hash-ordered deterministic seed set if MLlib is
-    unavailable in the environment."""
+    previously blew a 10-minute budget at 5M vectors)."""
     spark = emb.sparkSession
     cap = max(KMEANS_TRAIN_CAP, 100 * n_centroids)
     n = emb.count()  # one column-pruned scan; the build path is batch
@@ -671,46 +651,41 @@ def kmeans_centroids(
         # order-free, append-stable
         m = -(-n // cap)  # ceil
         train = emb.where(F.pmod(F.xxhash64(F.col(id_col)), F.lit(m)) == 0)
-    try:
-        from pyspark.ml.clustering import KMeans
-        from pyspark.ml.functions import array_to_vector
+    from pyspark.ml.clustering import KMeans
+    from pyspark.ml.functions import array_to_vector
+    import pyarrow as pa
 
-        # persist the converted features: every Lloyd pass (and every
-        # init pass) rescans its input otherwise — the scan+convert was
-        # most of the fit wall time, not the math. initMode random
-        # (still seed-deterministic) skips k-means||'s extra
-        # distributed init passes: for IVF cells the refined Lloyd
-        # rounds dominate quality, not the init — measured 10.2 s ->
-        # ~2 s for identical downstream recall at sf0.1.
-        feat = train.select(
-            array_to_vector(F.col(vec_col).cast("array<double>")).alias("features")
-        ).persist()
-        try:
-            model = KMeans(
-                k=n_centroids, maxIter=max_iter, seed=seed,
-                distanceMeasure="cosine", initMode="random",
-            ).fit(feat)
-        finally:
-            feat.unpersist()
-        centers = [
-            (i, [float(x) for x in c]) for i, c in enumerate(model.clusterCenters())
-        ]
-        return spark.createDataFrame(centers, "cid int, cvec array<double>")
-    except ImportError:
-        return (
-            emb.orderBy(F.xxhash64(F.col(id_col)))
-            .limit(n_centroids)
-            .select(
-                (F.row_number().over(Window.orderBy(F.col(id_col))) - 1).alias("cid"),
-                F.col(vec_col).cast("array<double>").alias("cvec"),
-            )
-        )
+    # persist the converted features: every Lloyd pass (and every
+    # init pass) rescans its input otherwise — the scan+convert was
+    # most of the fit wall time, not the math. initMode random
+    # (still seed-deterministic) skips k-means||'s extra
+    # distributed init passes: for IVF cells the refined Lloyd
+    # rounds dominate quality, not the init — measured 10.2 s ->
+    # ~2 s for identical downstream recall at sf0.1.
+    feat = train.select(
+        array_to_vector(F.col(vec_col).cast("array<double>")).alias("features")
+    ).persist()
+    try:
+        model = KMeans(
+            k=n_centroids, maxIter=max_iter, seed=seed,
+            distanceMeasure="cosine", initMode="random",
+        ).fit(feat)
+    finally:
+        feat.unpersist()
+    centers = model.clusterCenters()
+    # an Arrow table plans as a LocalRelation, not a parallelized RDD
+    return spark.createDataFrame(
+        pa.table({
+            "cid": pa.array(range(len(centers)), pa.int32()),
+            "cvec": pa.array([c.tolist() for c in centers], pa.list_(pa.float64())),
+        }),
+        "cid int, cvec array<double>",
+    )
 
 
 def assign_cells(
     emb: DataFrame, centroids: DataFrame,
     id_col: str = "vec_id", vec_col: str = "embedding",
-    dim: int | None = None,
 ) -> DataFrame:
     """Assign each vector to its nearest centroid cell: broadcast
     centroids, argmax cosine per vector — one scan of the corpus.
@@ -735,8 +710,8 @@ def assign_cells(
         F.col("cid"), F.struct(F.col("ccos"), (-F.col("cid")).alias("ncid"))
     )
     # r14: norms once per row/centroid instead of per (row, centroid)
-    # pair inside cosine(), dot unrolled when the caller knows `dim` —
-    # same factored IEEE ops in the same order, ccos bit-identical
+    # pair inside cosine() — same factored IEEE ops in the same
+    # order, ccos bit-identical
     # (oracle: SQL_IVF_ASSIGN_EXPORT).
     cents = centroids.withColumn("__cnrm", F.sqrt(norm2(F.col("cvec"))))
     return (
@@ -744,7 +719,7 @@ def assign_cells(
         .join(F.broadcast(cents))
         .select(
             id_col, vec_col, "cid",
-            (_pair_dot(F.col(vec_col), F.col("cvec"), dim)
+            (dot(F.col(vec_col), F.col("cvec"))
              / (F.col("__nrm") * F.col("__cnrm"))).alias("ccos"),
         )
         .groupBy(id_col)
@@ -1009,11 +984,7 @@ def knn_join_cells(
     amortization. Norms are computed ONCE per row on each side so every
     candidate pair pays a single dot-product fold, not three (the same
     precompute srp_neardup_pairs uses; with |cells| x nprobe candidates
-    per row, the per-pair fold IS the operator's hot loop). The pair dot
-    stays the HOF fold: unrolled (dot_fixed) inside the candidate
-    projection it code-generates a method past the JIT's compilation
-    limit and the hot loop drops to the bytecode interpreter — measured
-    20.6 s vs 3.5 s for knn_join_ivf at sf0.1 (r14 bisect).
+    per row, the per-pair fold IS the operator's hot loop).
 
     Returns (qid, nid, cos, rn) with rn in 1..k per qid.
     """
@@ -1057,10 +1028,6 @@ def knn_join_cells(
         join_keys = ["cid", "salt"]
     cand = probes.join(cells, join_keys).where(F.col("nid") != F.col("qid"))
     return _cosine_topk(cand, k)
-
-
-def _pair_dot(a: Column, b: Column, dim: int | None) -> Column:
-    return dot_fixed(a, b, dim) if dim else dot(a, b)
 
 
 # Per-task coarse work is bq x bc x dim multiply-adds; 4096^2 x 128
@@ -1244,7 +1211,6 @@ def knn_join_quantized(
     r_candidates: int = 64,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    dim: int | None = None,
     n_rows: int | None = None,
 ) -> DataFrame:
     """Batch kNN self-join for corpora where IVF degenerates (the
@@ -1337,9 +1303,7 @@ def knn_join_quantized(
         .where(F.col("crn") <= r_candidates)
         .select("qid", "nid")
     )
-    return exact_rerank_topk(
-        survivors, emb, k, id_col=id_col, vec_col=vec_col, dim=dim
-    )
+    return exact_rerank_topk(survivors, emb, k, id_col=id_col, vec_col=vec_col)
 
 
 SIM_HIST_BUCKETS = 20
@@ -1916,7 +1880,6 @@ def ivf_pq_search(
     n_centroids: int = 16, nprobe: int = 4,
     n_sub: int = 8, n_codes: int = 32,
     id_col: str = "vec_id", vec_col: str = "embedding",
-    dim: int | None = None,
 ) -> DataFrame:
     """The full IVF-PQ search — the composition that actually runs at
     100 TB: IVF cells PRUNE (only vectors in the nprobe closest cells
@@ -1934,13 +1897,11 @@ def ivf_pq_search(
     per-query work is |probed cells| x codes, the IVF-PQ contract.
     Returns (qid, rn, nid, adc)."""
     cent = hash_spread_seeds(emb, n_centroids, id_col, vec_col)
-    assign = assign_cells(emb, cent, id_col, vec_col, dim=dim).select(
-        id_col, "cid"
-    )
+    assign = assign_cells(emb, cent, id_col, vec_col).select(id_col, "cid")
     q = emb.where(F.col(id_col).isin(query_ids)).select(
         F.col(id_col).alias("qid"), F.col(vec_col).alias("qvec")
     )
-    probes = probe_cells(q, cent, nprobe, dim=dim).select("qid", "cid")
+    probes = probe_cells(q, cent, nprobe).select("qid", "cid")
     cb = _collect_codebook_from_emb(emb, n_sub, n_codes, id_col, vec_col)
     luts = _collect_query_luts(emb, query_ids, cb, id_col, vec_col)
     cand = assign.join(F.broadcast(probes), "cid").where(
@@ -2102,7 +2063,6 @@ def knn_graph_mutual(
     emb: DataFrame, k: int = 3,
     n_centroids: int | None = None, n_sub: int = 8, n_codes: int = 32,
     id_col: str = "vec_id", vec_col: str = "embedding",
-    dim: int | None = None,
 ) -> DataFrame:
     """Cell-blocked mutual-kNN graph under symmetric PQ distance — the
     SemDeDup/semantic-clustering backbone: nodes are vectors, an edge
@@ -2129,7 +2089,7 @@ def knn_graph_mutual(
     if n_centroids is None:
         n_centroids = auto_graph_cells(emb.count())
     cent = hash_spread_seeds(emb, n_centroids, id_col, vec_col)
-    asg = assign_cells(emb, cent, id_col, vec_col, dim=dim).select(
+    asg = assign_cells(emb, cent, id_col, vec_col).select(
         F.col(id_col).alias("aid"), "cid"
     )
     # the pair stage is a cell-blocked grouped Arrow kernel — one

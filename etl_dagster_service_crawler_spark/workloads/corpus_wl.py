@@ -637,7 +637,7 @@ def q_source_mirror_communities(spark: SparkSession, sf_dir: str) -> DataFrame:
         "sn", F.concat_ws("|", F.lit("self"), "sn").alias("bh")
     )
     edges = members.unionByName(selfb)
-    labels = cc_label_propagation(edges, "sn", n_edges=1024).select(
+    labels = cc_label_propagation(edges, "sn").select(
         "sn", F.col("label").cast("int").alias("lab")
     )
     rep = srcs.select(F.col("sn").alias("lab"), F.col("source").alias("community_rep"))
@@ -870,7 +870,7 @@ def q_knn_join_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     This op is EXPLICITLY the IVF arm (the index inspection surface);
     production batch kNN should call knn_join_auto, which routes away
     from IVF when the calibration curve shows it degenerating."""
-    emb, c, _index_dir, centroids, assignments, nprobe, _curve, _dim = (
+    emb, c, _index_dir, centroids, assignments, nprobe, _curve = (
         _knn_ivf_plan(spark, sf_dir)
     )
     return knn_join_cells(
@@ -883,15 +883,11 @@ def _knn_ivf_plan(spark: SparkSession, sf_dir: str):
     """Shared IVF planning for the knn_join family: persisted index
     (built once per corpus), cached calibration. Returns
     (emb, n_centroids, index_dir, centroids, assignments, nprobe,
-    curve, dim) — dim peeked from the parquet leading rows (driver-side
-    pyarrow read, no Spark job) so the quantized arm's exact re-rank
-    can unroll its pair dot (dot_fixed, r14); the IVF arm keeps the HOF
-    fold (see knn_join_cells)."""
+    curve)."""
     import os
 
     from etl_dagster_service_crawler_spark.operators.similarity import (
         calibration_cached,
-        embedding_dim_from_parquet,
         ivf_build,
         ivf_index_dir,
     )
@@ -919,8 +915,7 @@ def _knn_ivf_plan(spark: SparkSession, sf_dir: str):
     nprobe, curve = calibration_cached(
         emb, centroids, index_dir, target_recall=KNN_TARGET_RECALL, k=5
     )
-    dim = embedding_dim_from_parquet(f"{sf_dir}/embeddings.parquet")
-    return emb, c, index_dir, centroids, assignments, nprobe, curve, dim
+    return emb, c, index_dir, centroids, assignments, nprobe, curve
 
 
 def q_sink_ivf_index(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -994,7 +989,7 @@ def q_knn_join_auto(spark: SparkSession, sf_dir: str) -> DataFrame:
         route_knn,
     )
 
-    emb, c, _index_dir, centroids, assignments, nprobe, curve, dim = (
+    emb, c, _index_dir, centroids, assignments, nprobe, curve = (
         _knn_ivf_plan(spark, sf_dir)
     )
     path, nprobe = route_knn(curve, c, KNN_TARGET_RECALL)
@@ -1009,13 +1004,8 @@ def q_knn_join_auto(spark: SparkSession, sf_dir: str) -> DataFrame:
         n_rows = pq.ParquetFile(
             f"{sf_dir}/embeddings.parquet"
         ).metadata.num_rows
-        # the rerank leg keeps the pre-r14 shape: unroll the exact
-        # rerank dot only for large corpora (n x R survivors make it
-        # count); dim now comes from the plan's driver-side parquet
-        # peek instead of a 1-row Spark probe job.
         out = knn_join_quantized(
-            emb, k=5, r_candidates=KNN_RERANK_CANDIDATES, n_rows=n_rows,
-            dim=dim if n_rows >= 10_000 else None,
+            emb, k=5, r_candidates=KNN_RERANK_CANDIDATES, n_rows=n_rows
         )
     return out.orderBy("qid", "rn")
 

@@ -88,12 +88,17 @@ def q_text_lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
     return d.select("doc_id", lang_id(F.col("text")).alias("lang_guess"))
 
 
-def _lang_id_sql() -> str:
+def lang_guess_sql(words: str) -> tuple[str, str]:
+    """The DuckDB twin of lang_id over a word-list SQL expression:
+    (hit_cols, guess) — one `h_<lang>` stopword-hit column per language
+    and the CASE that picks the language with the most hits (ties to
+    the first in LANG_STOPWORDS order, no hit -> 'und'). The guess
+    reads the h_ columns, so it runs one SELECT level above them."""
     langs = list(LANG_STOPWORDS)
     hits = {
         lang: (
-            "len(list_filter(string_split(text,' '), x -> list_contains(["
-            + ", ".join(f"'{w}'" for w in LANG_STOPWORDS[lang])
+            f"len(list_filter({words}, x -> list_contains(["
+            + ", ".join(f"'{s}'" for s in LANG_STOPWORDS[lang])
             + "], x)))"
         )
         for lang in langs
@@ -104,8 +109,13 @@ def _lang_id_sql() -> str:
         conds.append(f"h_{lang} > 0")
         whens.append(f"WHEN {' AND '.join(conds)} THEN '{lang}'")
     hit_cols = ", ".join(f"{expr} AS h_{lang}" for lang, expr in hits.items())
+    return hit_cols, f"CASE {' '.join(whens)} ELSE 'und' END"
+
+
+def _lang_id_sql() -> str:
+    hit_cols, guess = lang_guess_sql("string_split(text,' ')")
     return f"""
-SELECT doc_id, CASE {' '.join(whens)} ELSE 'und' END AS lang_guess
+SELECT doc_id, {guess} AS lang_guess
 FROM (SELECT doc_id, {hit_cols} FROM documents)
 """
 
@@ -2544,21 +2554,7 @@ def q_corpus_clean_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _corpus_clean_incremental_sql() -> str:
-    langs = list(LANG_STOPWORDS)
-    hits = {
-        lang: (
-            "len(list_filter(w, x -> list_contains(["
-            + ", ".join(f"'{s}'" for s in LANG_STOPWORDS[lang])
-            + "], x)))"
-        )
-        for lang in langs
-    }
-    whens = []
-    for lang in langs:
-        conds = [f"h_{lang} >= h_{other}" for other in langs if other != lang]
-        conds.append(f"h_{lang} > 0")
-        whens.append(f"WHEN {' AND '.join(conds)} THEN '{lang}'")
-    hit_cols = ", ".join(f"{expr} AS h_{lang}" for lang, expr in hits.items())
+    hit_cols, guess = lang_guess_sql("w")
     return f"""
 WITH t AS (
   SELECT doc_id, text, lang, source, string_split(text, ' ') AS w FROM documents
@@ -2566,7 +2562,7 @@ WITH t AS (
   SELECT *, {hit_cols} FROM t
 ), f AS (
   SELECT doc_id, text, source FROM h
-  WHERE (CASE {' '.join(whens)} ELSE 'und' END) = lang
+  WHERE ({guess}) = lang
     AND 0.5 * least(CAST(len(w) AS DOUBLE) / 100.0, 1.0)
       + 0.5 * (CAST(h_en AS DOUBLE) / CAST(len(w) AS DOUBLE))
         >= {CLEAN_QUALITY_MIN}
@@ -2600,21 +2596,7 @@ ORDER BY doc_id
 
 
 def _corpus_clean_sql() -> str:
-    langs = list(LANG_STOPWORDS)
-    hits = {
-        lang: (
-            "len(list_filter(w, x -> list_contains(["
-            + ", ".join(f"'{s}'" for s in LANG_STOPWORDS[lang])
-            + "], x)))"
-        )
-        for lang in langs
-    }
-    whens = []
-    for lang in langs:
-        conds = [f"h_{lang} >= h_{other}" for other in langs if other != lang]
-        conds.append(f"h_{lang} > 0")
-        whens.append(f"WHEN {' AND '.join(conds)} THEN '{lang}'")
-    hit_cols = ", ".join(f"{expr} AS h_{lang}" for lang, expr in hits.items())
+    hit_cols, guess = lang_guess_sql("w")
     return f"""
 WITH t AS (
   SELECT doc_id, text, lang, source, string_split(text, ' ') AS w FROM documents
@@ -2622,7 +2604,7 @@ WITH t AS (
   SELECT *, {hit_cols} FROM t
 ), f AS (
   SELECT doc_id, text, source, len(w) AS n_tok FROM h
-  WHERE (CASE {' '.join(whens)} ELSE 'und' END) = lang
+  WHERE ({guess}) = lang
     AND 0.5 * least(CAST(len(w) AS DOUBLE) / 100.0, 1.0)
       + 0.5 * (CAST(h_en AS DOUBLE) / CAST(len(w) AS DOUBLE))
         >= {CLEAN_QUALITY_MIN}
@@ -3171,21 +3153,18 @@ def minhash_label_members(pairs: DataFrame, doc_ids: DataFrame) -> DataFrame:
     the full id set — the SHARED tail of the batch pipeline and the
     streaming drain (stream_minhash_dedup): both must keep identical
     keeper semantics for the shared-oracle claim to hold, so the
-    members construction, edge sizing, and label selection live in
-    exactly one place.
+    members construction and label selection live in exactly one
+    place.
 
-    Pairs are persisted+counted (r10 advice): the member frame is
-    2·|pairs| + n rows and |pairs| grows QUADRATICALLY per near-dup
-    cluster, so a corpus-size heuristic undersizes the CC shuffle on
-    dup-heavy corpora; the frame is consumed twice anyway (both member
-    legs). Unpersisted after the CC loop materializes its own cached
-    edge frame (a later eviction merely recomputes)."""
+    Pairs are persisted because both member legs read them; nothing is
+    counted, the CC loop runs at the session's shuffle width.
+    Unpersisted after the CC loop materializes its own cached edge
+    frame (a later eviction merely recomputes)."""
     from etl_dagster_service_crawler_spark.operators.dedup import (
         cc_label_propagation,
     )
 
     pairs = pairs.persist()
-    n_pairs = pairs.count()
     bh = F.concat_ws("-", F.col("doc_a"), F.col("doc_b"))
     members = (
         pairs.select(F.col("doc_a").alias("doc_id"), bh.alias("bh"))
@@ -3196,10 +3175,9 @@ def minhash_label_members(pairs: DataFrame, doc_ids: DataFrame) -> DataFrame:
             )
         )
     )
-    n = doc_ids.count()
-    out = cc_label_propagation(
-        members, "doc_id", n_edges=2 * n_pairs + n
-    ).select("doc_id", "label", "is_dup")
+    out = cc_label_propagation(members, "doc_id").select(
+        "doc_id", "label", "is_dup"
+    )
     pairs.unpersist()
     return out
 
@@ -4362,8 +4340,7 @@ def q_semantic_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
     )
-    n = e.count()
-    return cc_label_propagation(members, "vec_id", n_edges=3 * n).select(
+    return cc_label_propagation(members, "vec_id").select(
         "vec_id", "label", "is_dup"
     )
 

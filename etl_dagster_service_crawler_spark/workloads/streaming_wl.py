@@ -314,27 +314,13 @@ def q_stream_corpus_clean(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _stream_corpus_clean_sql() -> str:
-    from etl_dagster_service_crawler_spark.functions.text import LANG_STOPWORDS
     from etl_dagster_service_crawler_spark.workloads.llm import (
         CLEAN_QUALITY_MIN,
         CLEAN_REP_MAX,
+        lang_guess_sql,
     )
 
-    langs = list(LANG_STOPWORDS)
-    hits = {
-        lang: (
-            "len(list_filter(w, x -> list_contains(["
-            + ", ".join(f"'{s}'" for s in LANG_STOPWORDS[lang])
-            + "], x)))"
-        )
-        for lang in langs
-    }
-    whens = []
-    for lang in langs:
-        conds = [f"h_{lang} >= h_{other}" for other in langs if other != lang]
-        conds.append(f"h_{lang} > 0")
-        whens.append(f"WHEN {' AND '.join(conds)} THEN '{lang}'")
-    hit_cols = ", ".join(f"{expr} AS h_{lang}" for lang, expr in hits.items())
+    hit_cols, guess = lang_guess_sql("w")
     return f"""
 WITH t AS (
   SELECT doc_id, text, lang, string_split(text, ' ') AS w FROM documents
@@ -342,7 +328,7 @@ WITH t AS (
   SELECT *, {hit_cols} FROM t
 ), f AS (
   SELECT doc_id, text FROM h
-  WHERE (CASE {' '.join(whens)} ELSE 'und' END) = lang
+  WHERE ({guess}) = lang
     AND 0.5 * least(CAST(len(w) AS DOUBLE) / 100.0, 1.0)
       + 0.5 * (CAST(h_en AS DOUBLE) / CAST(len(w) AS DOUBLE))
         >= {CLEAN_QUALITY_MIN}

@@ -733,7 +733,7 @@ def test_knn_join_auto_routes_quantized_on_isotropic(spark, sf_dir):
         q_knn_join_auto,
     )
 
-    _emb, c, _d, _ce, _a, _np_, curve, _dim = _knn_ivf_plan(spark, sf_dir)
+    _emb, c, _d, _ce, _a, _np_, curve = _knn_ivf_plan(spark, sf_dir)
     path, _ = route_knn(curve, c, KNN_TARGET_RECALL)
     assert path == "quantized"
 
@@ -791,7 +791,7 @@ def test_knn_join_auto_routes_ivf_on_clustered(spark, tmp_path):
     ).to_parquet(f"{tmp_path}/embeddings.parquet", index=False)
 
     sf = str(tmp_path)
-    _emb, c, _d, _ce, _a, nprobe, curve, _dim = _knn_ivf_plan(spark, sf)
+    _emb, c, _d, _ce, _a, nprobe, curve = _knn_ivf_plan(spark, sf)
     path, nprobe = route_knn(curve, c, KNN_TARGET_RECALL)
     assert path == "ivf"
     assert nprobe <= 0.25 * c
