@@ -492,141 +492,158 @@ def minhash_cluster_cc(
     overflow. Near-dup graphs have tiny diameters (dup clusters are
     dense), so this converges in a handful of iterations.
 
-    The loop's shuffle width is the session's spark.sql.shuffle.partitions
-    (see cc_label_propagation)."""
+    The loop's shuffle width is sized to the EDGE COUNT, not the
+    session default (~250k edge rows per task, floor 8, cap at the
+    session conf): a plain 200-partition session otherwise schedules
+    200 near-empty tasks per exchange per iteration and the fixpoint
+    loop becomes pure task-launch latency (measured 35% of CC wall
+    time at sf0.1). Same lesson as the streaming state stores — width
+    must track keyspace. At 100 TB the edge count drives the width
+    back up to the cluster default and the clamp is a no-op. The conf
+    is set only while the loop runs and restored after."""
     # (id, bucket) edges — built once, reused every iteration through
-    # one partition-aligned persisted copy per join key.
+    # one partition-aligned persisted copy per join key. Width is sized
+    # from the input row count (a parquet-metadata-only count on the
+    # usual scan input — no data pass) times the band fan-out.
+    bands_per_doc = 1 if exact else LSH_BANDS
     if exact:
         edges = df.select(F.col(id_col), F.sha2(F.col(text_col), 256).alias("bh"))
     else:
         sig = minhash_signatures(df, id_col, text_col)
         edges = sig.select(F.col(id_col), F.explode(_band_hashes()).alias("bh"))
-    return cc_label_propagation(edges, id_col, max_iters)
+
+    n_edges = df.count() * bands_per_doc
+    return cc_label_propagation(edges, id_col, n_edges, max_iters)
 
 
 def cc_label_propagation(
-    edges: DataFrame, id_col: str, max_iters: int = 10,
+    edges: DataFrame, id_col: str, n_edges: int, max_iters: int = 10,
 ) -> DataFrame:
     """Connected components over an (id, bh) membership frame by
     iterative min-label propagation to a fixpoint — the tuned loop
     minhash_cluster_cc documents (two aligned exchanges per round,
     hot-bucket salting, pointer jump, localCheckpoint lineage
-    truncation). Factored so any deterministic bucket/edge construction
-    gets the same machinery: the LSH families pass band buckets;
-    semantic_dedup_clusters passes mutual-kNN edges as 2-member
-    buckets. Every exchange is spark.sql.shuffle.partitions wide, as
-    the session has it: the operator reads the conf and never sets it,
-    so it sizes no width from a count and leaves no session-global
-    state behind. Returns (id, label, is_dup)."""
+    truncation, edge-count-sized shuffle width). Factored so any
+    deterministic bucket/edge construction gets the same machinery:
+    the LSH families pass band buckets; semantic_dedup_clusters passes
+    mutual-kNN edges as 2-member buckets. n_edges sizes the shuffle
+    width without forcing a pass over the frame (callers usually know
+    it from metadata). Returns (id, label, is_dup)."""
     spark = edges.sparkSession
-    width = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    by_id = edges.repartition(width, F.col(id_col)).persist()
-    # ONE bucket-stats pass does double duty (r9: the separate
-    # skew probe + iteration-0 aggregation cost a full extra
-    # exchange over the edge frame each — fused here): the count
-    # side is the hot-bucket probe, the min side IS iteration 0's
-    # bucket_min (labels start as the identity, so the first
-    # bucket-min is just min(id) per bucket).
-    #
-    # Skew hardening (static across iterations, so probed ONCE):
-    # hot buckets — the near-constant-corpus mega bucket — get
-    # their members salted over N_SALTS sub-keys; each iteration's
-    # label side is replicated across those salts, keeping results
-    # bit-identical while the per-iteration members<-label join
-    # spreads the hot key over N_SALTS tasks. The salted loop
-    # (broadcast barriers, 2-key join, replicate generate) is built
-    # ONLY when the probe finds a hot bucket — the no-skew plan is
-    # byte-for-byte the old one.
-    stats = (
-        by_id.groupBy("bh")
-        .agg(
-            F.count(F.lit(1)).alias("bn"),
-            F.min(id_col).alias("bucket_label"),
-        )
-        .persist()
-    )
-    hot = hot_keys(stats, "bh", "bn", HOT_BUCKET_ROWS)
-    if hot is not None:
-        by_bh = (
-            salt_hot_keys(by_id, hot, "bh", N_SALTS, spread_col=id_col)
-            .repartition(width, F.col("bh"), F.col("salt"))
+    default_width = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    width = max(8, min(default_width, n_edges // 250_000 + 1))
+
+    spark.conf.set("spark.sql.shuffle.partitions", str(width))
+    try:
+        by_id = edges.repartition(width, F.col(id_col)).persist()
+        # ONE bucket-stats pass does double duty (r9: the separate
+        # skew probe + iteration-0 aggregation cost a full extra
+        # exchange over the edge frame each — fused here): the count
+        # side is the hot-bucket probe, the min side IS iteration 0's
+        # bucket_min (labels start as the identity, so the first
+        # bucket-min is just min(id) per bucket).
+        #
+        # Skew hardening (static across iterations, so probed ONCE):
+        # hot buckets — the near-constant-corpus mega bucket — get
+        # their members salted over N_SALTS sub-keys; each iteration's
+        # label side is replicated across those salts, keeping results
+        # bit-identical while the per-iteration members<-label join
+        # spreads the hot key over N_SALTS tasks. The salted loop
+        # (broadcast barriers, 2-key join, replicate generate) is built
+        # ONLY when the probe finds a hot bucket — the no-skew plan is
+        # byte-for-byte the old one.
+        stats = (
+            by_id.groupBy("bh")
+            .agg(
+                F.count(F.lit(1)).alias("bn"),
+                F.min(id_col).alias("bucket_label"),
+            )
             .persist()
         )
-        join_keys = ["bh", "salt"]
-    else:
-        by_bh = by_id.repartition(width, F.col("bh")).persist()
-        join_keys = "bh"
-    # no eager by_bh.count(): iteration 0's action populates the
-    # cache as part of its own job — same work, one fewer driver
-    # round-trip
-
-    labels: DataFrame | None = None
-    prev_sum = None
-    for it in range(max_iters):
-        if labels is None:
-            bucket_min = stats.select("bh", "bucket_label")
-        else:
-            bucket_min = (
-                by_id.join(labels, id_col)
-                .groupBy("bh")
-                .agg(F.min("label").alias("bucket_label"))
-            )
+        hot = hot_keys(stats, "bh", "bn", HOT_BUCKET_ROWS)
         if hot is not None:
-            bucket_min = salt_hot_keys(bucket_min, hot, "bh", N_SALTS)
-        hop = (
-            by_bh.join(bucket_min, join_keys)
-            .groupBy(id_col)
-            .agg(F.min("bucket_label").alias("label"))
-        )
-        # pointer jump: follow the label one more step through the
-        # hop frame itself (labels are doc ids, so label2 = hop[label])
-        lmap = hop.select(
-            F.col(id_col).alias("label"), F.col("label").alias("label2")
-        )
-        cur = hop.join(lmap, "label", "left").select(
-            F.col(id_col), F.coalesce("label2", "label").alias("label")
-        )
-        # localCheckpoint, not persist: persist caches DATA but the
-        # LOGICAL plan keeps growing — the pointer jump self-joins
-        # hop with itself, so the plan TREE doubles every round
-        # (shared subtrees are re-printed, not shared, by plan
-        # stringification). At sf0.1 (4 rounds) that is invisible;
-        # the 10x scale replica needed more rounds and the driver
-        # OOM'd inside TreeNode.generateTreeString before the data
-        # was ever large. Checkpointing truncates lineage to a
-        # LogicalRDD each job: plan depth is O(1) in iterations,
-        # which is the property that actually matters at 100 TB
-        # (on a cluster: reliable checkpoint dir, same call shape).
-        #
-        # The fixpoint sum rides the checkpoint action as an
-        # observed metric (r9): one job per round instead of
-        # checkpoint + a separate agg/collect — and the observed
-        # sum is computed on exactly the rows the checkpoint
-        # writes. Equal consecutive sums mean the LAST round
-        # changed nothing (labels are monotone non-increasing, the
-        # sum strictly decreases until the fixpoint), so stopping
-        # on equality is exact.
-        obs = Observation(f"cc_labsum_{it}")
-        new_labels = (
-            cur.observe(
-                obs, F.sum(F.col("label").cast("decimal(38,0)")).alias("s")
+            by_bh = (
+                salt_hot_keys(by_id, hot, "bh", N_SALTS, spread_col=id_col)
+                .repartition(width, F.col("bh"), F.col("salt"))
+                .persist()
             )
-            .localCheckpoint(eager=True)
-        )
-        new_sum = obs.get["s"]
-        if labels is not None:
-            labels.unpersist()
-        labels = new_labels
-        if new_sum == prev_sum:
-            break
-        prev_sum = new_sum
-    # labels is checkpointed (LogicalRDD), so the returned frame no
-    # longer depends on the edge caches — release them here instead
-    # of leaking them into a long-lived session (the caller's
-    # clearCache() should be a no-op, not the cleanup mechanism)
-    by_id.unpersist()
-    by_bh.unpersist()
-    stats.unpersist()
+            join_keys = ["bh", "salt"]
+        else:
+            by_bh = by_id.repartition(width, F.col("bh")).persist()
+            join_keys = "bh"
+        # no eager by_bh.count(): iteration 0's action populates the
+        # cache as part of its own job — same work, one fewer driver
+        # round-trip
+
+        labels: DataFrame | None = None
+        prev_sum = None
+        for it in range(max_iters):
+            if labels is None:
+                bucket_min = stats.select("bh", "bucket_label")
+            else:
+                bucket_min = (
+                    by_id.join(labels, id_col)
+                    .groupBy("bh")
+                    .agg(F.min("label").alias("bucket_label"))
+                )
+            if hot is not None:
+                bucket_min = salt_hot_keys(bucket_min, hot, "bh", N_SALTS)
+            hop = (
+                by_bh.join(bucket_min, join_keys)
+                .groupBy(id_col)
+                .agg(F.min("bucket_label").alias("label"))
+            )
+            # pointer jump: follow the label one more step through the
+            # hop frame itself (labels are doc ids, so label2 = hop[label])
+            lmap = hop.select(
+                F.col(id_col).alias("label"), F.col("label").alias("label2")
+            )
+            cur = hop.join(lmap, "label", "left").select(
+                F.col(id_col), F.coalesce("label2", "label").alias("label")
+            )
+            # localCheckpoint, not persist: persist caches DATA but the
+            # LOGICAL plan keeps growing — the pointer jump self-joins
+            # hop with itself, so the plan TREE doubles every round
+            # (shared subtrees are re-printed, not shared, by plan
+            # stringification). At sf0.1 (4 rounds) that is invisible;
+            # the 10x scale replica needed more rounds and the driver
+            # OOM'd inside TreeNode.generateTreeString before the data
+            # was ever large. Checkpointing truncates lineage to a
+            # LogicalRDD each job: plan depth is O(1) in iterations,
+            # which is the property that actually matters at 100 TB
+            # (on a cluster: reliable checkpoint dir, same call shape).
+            #
+            # The fixpoint sum rides the checkpoint action as an
+            # observed metric (r9): one job per round instead of
+            # checkpoint + a separate agg/collect — and the observed
+            # sum is computed on exactly the rows the checkpoint
+            # writes. Equal consecutive sums mean the LAST round
+            # changed nothing (labels are monotone non-increasing, the
+            # sum strictly decreases until the fixpoint), so stopping
+            # on equality is exact.
+            obs = Observation(f"cc_labsum_{it}")
+            new_labels = (
+                cur.observe(
+                    obs, F.sum(F.col("label").cast("decimal(38,0)")).alias("s")
+                )
+                .localCheckpoint(eager=True)
+            )
+            new_sum = obs.get["s"]
+            if labels is not None:
+                labels.unpersist()
+            labels = new_labels
+            if new_sum == prev_sum:
+                break
+            prev_sum = new_sum
+        # labels is checkpointed (LogicalRDD), so the returned frame no
+        # longer depends on the edge caches — release them here instead
+        # of leaking them into a long-lived session (the caller's
+        # clearCache() should be a no-op, not the cleanup mechanism)
+        by_id.unpersist()
+        by_bh.unpersist()
+        stats.unpersist()
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", str(default_width))
     return labels.withColumn("is_dup", F.col(id_col) != F.col("label"))
 
 

@@ -303,20 +303,12 @@ def srp_neardup_pairs(
     bytes per doc — the right side of the tradeoff whenever dup density
     is non-trivial (the reason one runs near-dup at all). Pinned by
     tests/test_plans.py (no Exchange/HashAggregate above the self-join)."""
-    import pyarrow as pa
-
     spark = emb.sparkSession
     # hyperplanes as a broadcast 32-row TABLE, not inline literals — a
     # lit()-array per plane would put ~n_tables*bits*dim nodes into the
-    # expression tree and stall the analyzer/codegen. An Arrow table
-    # plans as a LocalRelation, not a parallelized RDD.
-    tbl, bit, plane = zip(*srp_planes(dim, n_tables, bits_per_table, seed))
+    # expression tree and stall the analyzer/codegen.
     planes = spark.createDataFrame(
-        pa.table({
-            "tbl": pa.array(tbl, pa.int32()),
-            "bit": pa.array(bit, pa.int32()),
-            "plane": pa.array(plane, pa.list_(pa.float64())),
-        }),
+        srp_planes(dim, n_tables, bits_per_table, seed),
         "tbl int, bit int, plane array<double>",
     )
 
@@ -653,7 +645,6 @@ def kmeans_centroids(
         train = emb.where(F.pmod(F.xxhash64(F.col(id_col)), F.lit(m)) == 0)
     from pyspark.ml.clustering import KMeans
     from pyspark.ml.functions import array_to_vector
-    import pyarrow as pa
 
     # persist the converted features: every Lloyd pass (and every
     # init pass) rescans its input otherwise — the scan+convert was
@@ -672,15 +663,10 @@ def kmeans_centroids(
         ).fit(feat)
     finally:
         feat.unpersist()
-    centers = model.clusterCenters()
-    # an Arrow table plans as a LocalRelation, not a parallelized RDD
-    return spark.createDataFrame(
-        pa.table({
-            "cid": pa.array(range(len(centers)), pa.int32()),
-            "cvec": pa.array([c.tolist() for c in centers], pa.list_(pa.float64())),
-        }),
-        "cid int, cvec array<double>",
-    )
+    centers = [
+        (i, [float(x) for x in c]) for i, c in enumerate(model.clusterCenters())
+    ]
+    return spark.createDataFrame(centers, "cid int, cvec array<double>")
 
 
 def assign_cells(

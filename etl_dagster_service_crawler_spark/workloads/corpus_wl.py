@@ -637,7 +637,7 @@ def q_source_mirror_communities(spark: SparkSession, sf_dir: str) -> DataFrame:
         "sn", F.concat_ws("|", F.lit("self"), "sn").alias("bh")
     )
     edges = members.unionByName(selfb)
-    labels = cc_label_propagation(edges, "sn").select(
+    labels = cc_label_propagation(edges, "sn", n_edges=1024).select(
         "sn", F.col("label").cast("int").alias("lab")
     )
     rep = srcs.select(F.col("sn").alias("lab"), F.col("source").alias("community_rep"))

@@ -3153,18 +3153,21 @@ def minhash_label_members(pairs: DataFrame, doc_ids: DataFrame) -> DataFrame:
     the full id set — the SHARED tail of the batch pipeline and the
     streaming drain (stream_minhash_dedup): both must keep identical
     keeper semantics for the shared-oracle claim to hold, so the
-    members construction and label selection live in exactly one
-    place.
+    members construction, edge sizing, and label selection live in
+    exactly one place.
 
-    Pairs are persisted because both member legs read them; nothing is
-    counted, the CC loop runs at the session's shuffle width.
-    Unpersisted after the CC loop materializes its own cached edge
-    frame (a later eviction merely recomputes)."""
+    Pairs are persisted+counted (r10 advice): the member frame is
+    2·|pairs| + n rows and |pairs| grows QUADRATICALLY per near-dup
+    cluster, so a corpus-size heuristic undersizes the CC shuffle on
+    dup-heavy corpora; the frame is consumed twice anyway (both member
+    legs). Unpersisted after the CC loop materializes its own cached
+    edge frame (a later eviction merely recomputes)."""
     from etl_dagster_service_crawler_spark.operators.dedup import (
         cc_label_propagation,
     )
 
     pairs = pairs.persist()
+    n_pairs = pairs.count()
     bh = F.concat_ws("-", F.col("doc_a"), F.col("doc_b"))
     members = (
         pairs.select(F.col("doc_a").alias("doc_id"), bh.alias("bh"))
@@ -3175,9 +3178,10 @@ def minhash_label_members(pairs: DataFrame, doc_ids: DataFrame) -> DataFrame:
             )
         )
     )
-    out = cc_label_propagation(members, "doc_id").select(
-        "doc_id", "label", "is_dup"
-    )
+    n = doc_ids.count()
+    out = cc_label_propagation(
+        members, "doc_id", n_edges=2 * n_pairs + n
+    ).select("doc_id", "label", "is_dup")
     pairs.unpersist()
     return out
 
@@ -4340,7 +4344,8 @@ def q_semantic_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
     )
-    return cc_label_propagation(members, "vec_id").select(
+    n = e.count()
+    return cc_label_propagation(members, "vec_id", n_edges=3 * n).select(
         "vec_id", "label", "is_dup"
     )
 

@@ -861,43 +861,6 @@ def test_cc_plan_depth_constant_across_iterations(spark):
     assert "ExistingRDD" in plan or "LogicalRDD" in plan
 
 
-def test_cc_label_propagation_runs_at_session_width(spark, monkeypatch):
-    """The CC loop takes its shuffle width from the session and never
-    sets a conf: with RuntimeConfig.set refusing while it runs, the
-    labels are the same at 2 and at 29 shuffle partitions."""
-    from pyspark.sql.conf import RuntimeConfig
-
-    from etl_dagster_service_crawler_spark.operators.dedup import (
-        cc_label_propagation,
-    )
-
-    # chain 1-2-3 through two buckets, pair 5-6, singleton 4
-    edges = spark.createDataFrame(
-        [(1, "a"), (2, "a"), (2, "b"), (3, "b"), (4, "s4"), (5, "c"), (6, "c")],
-        "doc_id bigint, bh string",
-    )
-
-    def refuse(self, key, value):
-        raise AssertionError(f"cc_label_propagation set {key}={value}")
-
-    prior = spark.conf.get("spark.sql.shuffle.partitions")
-    labels = {}
-    try:
-        for width in (2, 29):
-            spark.conf.set("spark.sql.shuffle.partitions", str(width))
-            with monkeypatch.context() as m:
-                m.setattr(RuntimeConfig, "set", refuse)
-                labels[width] = sorted(
-                    tuple(r) for r in cc_label_propagation(edges, "doc_id").collect()
-                )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prior)
-    assert labels[2] == labels[29] == [
-        (1, 1, False), (2, 1, True), (3, 1, True),
-        (4, 4, False), (5, 5, False), (6, 5, True),
-    ]
-
-
 def test_repetition_exprs_null_text_yields_zero(spark):
     """Null-safe contract: a NULL text scores 0 for the top-bigram
     run (not NULL) — callers reuse the helper on nullable columns."""
