@@ -5,10 +5,10 @@ generation always groups or equi-joins on a bucket key, which is the
 only formulation that survives 100 TB):
 
 - exact:    sha256(text) group-by. One shuffle on the hash.
-- minhash:  token n-gram shingles (width configurable; default
-            unigram) -> k permutation-min signatures -> LSH banding ->
-            grouped sub-block pairs per (band, band_hash). Candidate
-            count is controlled by the band geometry, not O(n^2).
+- minhash:  distinct-token (unigram) shingles -> k permutation-min
+            signatures -> LSH banding -> grouped sub-block pairs per
+            (band, band_hash). Candidate count is controlled by the
+            band geometry, not O(n^2).
 - simhash:  63-bit weighted-token signature -> chunk banding ->
             equi-join on chunks, hamming verify via bit_count(xor).
 - embedding:near-dup via cosine on LSH-bucketed candidates (see
@@ -152,15 +152,14 @@ def _spread(df: DataFrame, id_col: str) -> DataFrame:
     return df
 
 
-def minhash_signatures(
-    df: DataFrame, id_col: str, text_col: str, shingle: int = 1
-) -> DataFrame:
+def minhash_signatures(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     """One row per doc: id + `sig` array<bigint> of k component minima.
 
-    Shingles are DISTINCT token n-grams (`shingle` tokens wide; 1 =
-    unigram token set, 3+ = w-shingling, which is order-sensitive and
-    the usual choice for near-dup detection of prose). Shingle hashes
-    fold once into an array column JVM-side (xxhash64, codegen), then
+    Shingles are the doc's DISTINCT space-split tokens (the unigram
+    token set, so a token permutation signs identically; the
+    order-sensitive 3-token shingles live in the md5 export family of
+    workloads/llm.py). Shingle hashes fold once into an array column
+    JVM-side (xxhash64, codegen), then
     the k running minima are computed by the vectorized numpy kernel
     (make_affine_min_sig_udf, guide §4.2) — still ONE shuffle-free
     projection per doc, with only the hv column crossing the Arrow
@@ -174,36 +173,18 @@ def minhash_signatures(
     output.) At 100 TB the first difference is a full-corpus
     token-stream shuffle avoided.
 
-    Empty docs (no shingles) get the all-P sentinel signature — every
+    Empty token sets get the all-P sentinel signature — every
     empty doc shares it, so byte-identical empty docs cluster together,
     and P is out of the [0, P) hash range so no real shingle set can
     collide with the sentinel on all k components."""
     df = _spread(df, id_col)
-    # materialize the token array once per row BEFORE the per-shingle
-    # lambda: slicing the raw split() expression from inside transform
-    # re-splits the text once per shingle (docs/SCALE.md rule 1)
+    # materialize the token array once per row BEFORE the per-token
+    # lambda (docs/SCALE.md rule 1)
     dt = df.select(F.col(id_col), F.split(F.col(text_col), " ").alias("__toks"))
-    toks = F.col("__toks")
-    if shingle <= 1:
-        grams = toks
-    else:
-        # w-shingles as slices of the token array, joined with a
-        # separator no tokenizer emits (US control char) so adjacent
-        # tokens can't alias across shingle boundaries. Guarded: Spark
-        # sequence(1, n) DESCENDS when n < 1, so docs shorter than one
-        # shingle must get an explicit empty array.
-        n = F.size(toks) - shingle + 1
-        grams = F.when(
-            n >= 1,
-            F.transform(
-                F.sequence(F.lit(1), n),
-                lambda i: F.concat_ws("\x1f", F.slice(toks, i, shingle)),
-            ),
-        ).otherwise(F.array().cast("array<string>"))
     hv = dt.select(
         F.col(id_col),
         F.transform(
-            F.array_distinct(grams),
+            F.array_distinct(F.col("__toks")),
             lambda s: F.pmod(F.xxhash64(s), F.lit(MINHASH_P)),
         ).alias("hv"),
     )
@@ -438,8 +419,7 @@ def minhash_assign_representatives(
 
 
 def minhash_cluster_cc(
-    df: DataFrame, id_col: str, text_col: str, max_iters: int = 10,
-    exact: bool = False,
+    df: DataFrame, id_col: str, text_col: str, exact: bool = False,
 ) -> DataFrame:
     """FULL near-dup clustering: connected components over the LSH
     bucket graph by iterative label propagation to a fixpoint.
@@ -513,11 +493,17 @@ def minhash_cluster_cc(
         edges = sig.select(F.col(id_col), F.explode(_band_hashes()).alias("bh"))
 
     n_edges = df.count() * bands_per_doc
-    return cc_label_propagation(edges, id_col, n_edges, max_iters)
+    return cc_label_propagation(edges, id_col, n_edges)
+
+
+# Round cap of the label-propagation loop: with the pointer jump a
+# round halves the remaining chain distance, and near-dup graphs
+# converge in a handful of rounds (4 at sf0.1).
+CC_MAX_ITERS = 10
 
 
 def cc_label_propagation(
-    edges: DataFrame, id_col: str, n_edges: int, max_iters: int = 10,
+    edges: DataFrame, id_col: str, n_edges: int,
 ) -> DataFrame:
     """Connected components over an (id, bh) membership frame by
     iterative min-label propagation to a fixpoint — the tuned loop
@@ -577,7 +563,7 @@ def cc_label_propagation(
 
         labels: DataFrame | None = None
         prev_sum = None
-        for it in range(max_iters):
+        for it in range(CC_MAX_ITERS):
             if labels is None:
                 bucket_min = stats.select("bh", "bucket_label")
             else:
@@ -648,6 +634,10 @@ def cc_label_propagation(
 
 
 SIMHASH_BITS = 63  # 1<<63 overflows a signed long literal
+# 7 chunks of 9 bits: every pair within hamming distance 6 shares at
+# least one chunk (pigeonhole), so 6 is the verify bound with complete
+# recall.
+SIMHASH_CHUNKS = 7
 
 
 def simhash_signatures(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
@@ -680,42 +670,27 @@ def simhash_signatures(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     return hv.select(F.col(id_col), sig.alias("simhash"))
 
 
-def simhash_near_pairs(
-    df: DataFrame, id_col: str, text_col: str, max_hamming: int | None = None,
-    chunks: int = 7
-) -> DataFrame:
-    """Candidate pairs share >=1 of `chunks` 9-bit signature chunks
-    (pigeonhole: any pair within hamming distance chunks-1 must share
-    one); verify with bit_count(xor).
-
-    Recall is complete only for max_hamming <= chunks-1: a pair at
-    distance chunks (or more) can differ in every chunk and never
-    collide. Default is therefore chunks-1; asking for more raises
-    rather than silently returning a partial pair set.
+def simhash_near_pairs(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
+    """Pairs within hamming distance SIMHASH_CHUNKS-1 (6): candidates
+    share >=1 of the SIMHASH_CHUNKS 9-bit signature chunks, verified
+    with bit_count(xor). The bound is the banding's recall limit (a
+    pair at distance 7 can differ in every chunk), so the pair set is
+    complete.
 
     Like minhash_dedup_pairs, each pair is emitted from its FIRST
     matching chunk only (join condition: no earlier chunk equal), so
     the output is the distinct pair set with no distinct exchange —
     two shuffles total (the self-join's two sides)."""
-    if max_hamming is None:
-        max_hamming = chunks - 1
-    if max_hamming > chunks - 1:
-        raise ValueError(
-            f"max_hamming={max_hamming} exceeds the chunk-banding recall "
-            f"bound chunks-1={chunks - 1}; raise chunks or lower the "
-            "threshold (pairs beyond the bound can differ in every chunk "
-            "and would be silently missed)"
-        )
     # eagerly materialized: the 63-agg vote pass would otherwise run
     # once per self-join side (lazy caches race-fill). localCheckpoint
     # (r15) skips the persist path's separate count job and leaves no
     # CacheManager entry to leak across invocations.
     sig = simhash_signatures(df, id_col, text_col).localCheckpoint(eager=True)
-    width = SIMHASH_BITS // chunks
+    width = SIMHASH_BITS // SIMHASH_CHUNKS
     cvs = F.array(
         *[
             F.shiftright("simhash", j * width).bitwiseAND(F.lit((1 << width) - 1))
-            for j in range(chunks)
+            for j in range(SIMHASH_CHUNKS)
         ]
     )
     buckets = sig.select(
@@ -728,7 +703,7 @@ def simhash_near_pairs(
     # whole-stage-codegen blocker on the pair join — reduces to plain
     # element comparisons with identical truth value.
     no_earlier_collision = F.lit(True)
-    for j in range(chunks - 1):
+    for j in range(SIMHASH_CHUNKS - 1):
         no_earlier_collision = no_earlier_collision & (
             (F.col("a.cid") <= j)
             | (F.element_at(F.col("a.cvs"), j + 1)
@@ -748,5 +723,5 @@ def simhash_near_pairs(
             F.col(f"b.{id_col}").alias("id_b"),
             hamming.alias("hamming"),
         )
-        .where(F.col("hamming") <= max_hamming)
+        .where(F.col("hamming") <= SIMHASH_CHUNKS - 1)
     )

@@ -22,9 +22,9 @@ from pyspark.sql import functions as F
 
 
 def broadcast_dim_join(
-    fact: DataFrame, dim: DataFrame, on: Column | str | list[str], how: str = "inner"
+    fact: DataFrame, dim: DataFrame, on: Column | str | list[str]
 ) -> DataFrame:
-    return fact.join(F.broadcast(dim), on, how)
+    return fact.join(F.broadcast(dim), on)
 
 
 def upsert_merge(
@@ -46,14 +46,14 @@ def upsert_merge(
 
 
 def theta_tolerance_join(
-    big: DataFrame, small_dim: DataFrame, condition: Column, how: str = "inner"
+    big: DataFrame, small_dim: DataFrame, condition: Column
 ) -> DataFrame:
     """Inequality join against a SMALL broadcast dim (BNLJ).
 
     Never call with two large inputs — O(|big| * |dim|) comparisons per
     partition; the dim must fit in executor memory.
     """
-    return big.join(F.broadcast(small_dim), condition, how)
+    return big.join(F.broadcast(small_dim), condition)
 
 
 def salted_join(
@@ -61,7 +61,6 @@ def salted_join(
     other: DataFrame,
     on: str,
     n_salts: int = 16,
-    how: str = "inner",
 ) -> DataFrame:
     """Large-large equi join with manual key salting for skew.
 
@@ -79,7 +78,7 @@ def salted_join(
     right = other.withColumn(
         "_salt", F.explode(F.array(*[F.lit(i) for i in range(n_salts)]))
     )
-    return left.join(right, [on, "_salt"], how).drop("_salt")
+    return left.join(right, [on, "_salt"]).drop("_salt")
 
 
 def hot_keys(sizes: DataFrame, key: str, size_col: str, threshold: int) -> DataFrame | None:

@@ -39,14 +39,13 @@ _log = logging.getLogger("spark_graft.similarity")
 
 def cosine_topk_bruteforce(
     emb: DataFrame, query_ids: list[int], k: int = 5,
-    id_col: str = "vec_id", vec_col: str = "embedding",
 ) -> DataFrame:
     """Exact cosine top-k of every corpus vector for each query id.
     Deterministic ties: (cos desc, neighbor id asc)."""
-    q = emb.where(F.col(id_col).isin(query_ids)).select(
-        F.col(id_col).alias("qid"), F.col(vec_col).alias("qvec")
+    q = emb.where(F.col("vec_id").isin(query_ids)).select(
+        F.col("vec_id").alias("qid"), F.col("embedding").alias("qvec")
     )
-    cand = emb.select(F.col(id_col).alias("nid"), F.col(vec_col).alias("nvec"))
+    cand = emb.select(F.col("vec_id").alias("nid"), F.col("embedding").alias("nvec"))
     scored = (
         cand.join(F.broadcast(q), F.col("nid") != F.col("qid"))
         .select("qid", "nid", cosine(F.col("qvec"), F.col("nvec")).alias("cos"))
@@ -62,7 +61,6 @@ def cosine_topk_bruteforce(
 def exact_rerank_topk(
     survivors: DataFrame, emb: DataFrame, k: int,
     query_ids: list[int] | None = None,
-    id_col: str = "vec_id", vec_col: str = "embedding",
 ) -> DataFrame:
     """The one exact re-rank of coarse survivors: (qid, nid) rows ->
     the top-k (qid, nid, cos, rn) per qid by (cos desc, nid), cos the
@@ -70,7 +68,7 @@ def exact_rerank_topk(
     once per emb row). A bounded query_ids list is broadcast as the
     query side; None makes every emb row a query (the batch
     self-joins)."""
-    v = emb.select(id_col, vec_col, F.sqrt(norm2(F.col(vec_col))))
+    v = emb.select("vec_id", "embedding", F.sqrt(norm2(F.col("embedding"))))
     nv = v.toDF("nid", "nvec", "nnrm")
     qv = v.toDF("qid", "qvec", "qnrm")
     if query_ids is not None:
@@ -101,7 +99,6 @@ def _cosine_topk(cand: DataFrame, k: int) -> DataFrame:
 def quantized_rerank_topk(
     emb: DataFrame, query_ids: list[int], k: int = 5,
     r_candidates: int = 64,
-    id_col: str = "vec_id", vec_col: str = "embedding",
 ) -> DataFrame:
     """Quantized coarse scan + exact re-rank: the ANN shape for the
     corpora where IVF degenerates (docs/SCALE.md "Isotropic-corpus ANN
@@ -134,12 +131,10 @@ def quantized_rerank_topk(
     size the result equals cosine_topk_bruteforce row-for-row
     (pinned by test). Returns (qid, nid, cos, rn).
     """
-    qrows = quantize_rows(
-        emb.where(F.col(id_col).isin(query_ids)), id_col, vec_col
-    ).collect()
+    qrows = quantize_rows(emb.where(F.col("vec_id").isin(query_ids))).collect()
     # a NULL id never passes the pairs' nid != qid test
-    coarse = emb.where(F.col(id_col).isNotNull()).select(
-        F.col(id_col).alias("id"), F.col(vec_col).alias("emb")
+    coarse = emb.where(F.col("vec_id").isNotNull()).select(
+        F.col("vec_id").alias("id"), F.col("embedding").alias("emb")
     ).mapInArrow(
         _make_coarse_scores_kernel(qrows), "qid bigint, nid bigint, coarse double"
     )
@@ -149,7 +144,7 @@ def quantized_rerank_topk(
         .where(F.col("crn") <= r_candidates)
         .select("qid", "nid")
     )
-    return exact_rerank_topk(survivors, emb, k, query_ids, id_col, vec_col)
+    return exact_rerank_topk(survivors, emb, k, query_ids)
 
 
 def _make_coarse_scores_kernel(qrows):
@@ -269,9 +264,6 @@ def srp_neardup_pairs(
     dim: int = 64,
     n_tables: int = 4,
     bits_per_table: int = 8,
-    seed: int = 42,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """All-pairs embedding near-dup via signed-random-projection LSH —
     the scale path for cosine near-dup (the exact adjacent-pair twin is
@@ -308,32 +300,34 @@ def srp_neardup_pairs(
     # lit()-array per plane would put ~n_tables*bits*dim nodes into the
     # expression tree and stall the analyzer/codegen.
     planes = spark.createDataFrame(
-        srp_planes(dim, n_tables, bits_per_table, seed),
+        srp_planes(dim, n_tables, bits_per_table),
         "tbl int, bit int, plane array<double>",
     )
 
     n_parts = emb.sparkSession.sparkContext.defaultParallelism
     base = emb.select(
-        F.col(id_col), F.col(vec_col), F.sqrt(norm2(F.col(vec_col))).alias("nrm")
+        F.col("vec_id"),
+        F.col("embedding"),
+        F.sqrt(norm2(F.col("embedding"))).alias("nrm"),
     )
     if base.rdd.getNumPartitions() < max(2, n_parts // 2):
         # single-row-group sources scan as one task; the HOF folds
         # below are CPU-bound, so fan out first
-        base = base.repartition(n_parts, id_col)
+        base = base.repartition(n_parts, "vec_id")
     proj = base.join(F.broadcast(planes)).select(
-        id_col,
-        vec_col,
+        "vec_id",
+        "embedding",
         "nrm",
         "tbl",
         "bit",
-        (dot(F.col(vec_col), F.col("plane")) > 0).cast("bigint").alias("sign"),
+        (dot(F.col("embedding"), F.col("plane")) > 0).cast("bigint").alias("sign"),
     )
     # ONE groupBy(id) folds all n_tables bucket values into an array —
     # the per-(id, tbl) formulation needed a second exchange to gather
     # the array. first(vec/nrm) is deterministic: every fanned plane
     # row of an id carries the same vector.
-    sig = proj.groupBy(id_col).agg(
-        F.first(vec_col).alias(vec_col),
+    sig = proj.groupBy("vec_id").agg(
+        F.first("embedding").alias("embedding"),
         F.first("nrm").alias("nrm"),
         F.array(
             *[
@@ -353,7 +347,7 @@ def srp_neardup_pairs(
     # materialization job instead of two, and no CacheManager entry
     # leaks across invocations (the persist here was never released).
     buckets = sig.select(
-        id_col, vec_col, "nrm", "bkts", F.posexplode("bkts").alias("tbl", "bkt")
+        "vec_id", "embedding", "nrm", "bkts", F.posexplode("bkts").alias("tbl", "bkt")
     )
     a, b = buckets.alias("a"), buckets.alias("b")
     # "first matching table": no table before this one also collided —
@@ -378,7 +372,7 @@ def srp_neardup_pairs(
         lambda t: t,
     )
     # norms precomputed in base: one fold per pair, not three
-    cos = dot(F.col(f"a.{vec_col}"), F.col(f"b.{vec_col}")) / (
+    cos = dot(F.col("a.embedding"), F.col("b.embedding")) / (
         F.col("a.nrm") * F.col("b.nrm")
     )
     return (
@@ -386,20 +380,19 @@ def srp_neardup_pairs(
             b,
             (F.col("a.tbl") == F.col("b.tbl"))
             & (F.col("a.bkt") == F.col("b.bkt"))
-            & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}"))
+            & (F.col("a.vec_id") < F.col("b.vec_id"))
             & ~earlier_collision,
         )
         .select(
-            F.col(f"a.{id_col}").alias("id_a"),
-            F.col(f"b.{id_col}").alias("id_b"),
+            F.col("a.vec_id").alias("id_a"),
+            F.col("b.vec_id").alias("id_b"),
             cos.alias("cos"),
         )
         .where(F.col("cos") >= threshold)
     )
 
 
-def ivf_index_dir(sf_dir: str, n_centroids: int = 16,
-                  vec_table: str = "embeddings") -> str:
+def ivf_index_dir(sf_dir: str, n_centroids: int = 16) -> str:
     """Canonical /tmp location of the persisted IVF index for one
     corpus. Keyed by the SOURCE FILE's identity (path + size + mtime)
     and the cell count, not just the path: fixture directories get
@@ -410,15 +403,15 @@ def ivf_index_dir(sf_dir: str, n_centroids: int = 16,
     import hashlib
     import os
 
-    f = f"{sf_dir}/{vec_table}.parquet"
-    # |v2 = the pb-bucketed assignment layout (see write_assignments):
-    # bumping the layout version makes every pre-bucketing /tmp index
-    # MISS, so new readers never touch an old cid=-partitioned tree
+    f = f"{sf_dir}/embeddings.parquet"
+    # |v3 = the pb-bucketed assignment layout with its _NDIRS marker
+    # (see ivf_index_n_dirs): bumping the layout version makes every
+    # older /tmp index MISS, so readers never touch a marker-less tree
     try:
         st = os.stat(f)
-        ident = f"{f}|{st.st_size}|{st.st_mtime_ns}|{n_centroids}|v2"
+        ident = f"{f}|{st.st_size}|{st.st_mtime_ns}|{n_centroids}|v3"
     except OSError:
-        ident = f"{f}|missing|{n_centroids}|v2"
+        ident = f"{f}|missing|{n_centroids}|v3"
     # root overridable (r15): a driver that wants build-from-cold runs
     # points this at a session temp dir; the default keeps the
     # per-corpus amortization the search entries document. The BUILD
@@ -442,9 +435,6 @@ def calibrate_nprobe(
     centroids: DataFrame,
     target_recall: float = 0.85,
     k: int = 5,
-    n_sample: int = CALIBRATION_SAMPLE,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> tuple[int, list[tuple[int, float]]]:
     """Pick the smallest nprobe whose estimated recall@k reaches
     target_recall — the FAISS-autotune move, as bounded driver-side
@@ -462,7 +452,8 @@ def calibrate_nprobe(
     over-spends on the easy one; calibration detects which corpus it
     is holding.
 
-    Method: a deterministic hash-spread sample of <= ~n_sample vectors
+    Method: a deterministic hash-spread sample of <= ~CALIBRATION_SAMPLE
+    vectors
     (same xxhash64-modulus idiom as the k-means train cap, so replica
     copies and appended shards are represented, never just the head
     row group), exact top-k WITHIN the sample, each neighbor's cell
@@ -471,7 +462,7 @@ def calibrate_nprobe(
     recall approximates full-corpus recall at the same probe count
     because cell-coincidence of true neighbor pairs is distribution-
     level structure, not sample-size structure. O(m^2) numpy at
-    m <= ~n_sample; no Spark job beyond two bounded collects."""
+    m <= ~CALIBRATION_SAMPLE; no Spark job beyond two bounded collects."""
     import numpy as np
 
     cents = sorted(
@@ -479,16 +470,16 @@ def calibrate_nprobe(
     )
     C = np.array([r["cvec"] for r in cents], dtype=np.float64)
     n_cent = len(cents)
-    n = emb.select(id_col).count()
+    n = emb.select("vec_id").count()
     sample = emb
-    if n > n_sample:
-        m = -(-n // n_sample)  # ceil
-        # filter BEFORE projecting id_col away: filtering a projected
+    if n > CALIBRATION_SAMPLE:
+        m = -(-n // CALIBRATION_SAMPLE)  # ceil
+        # filter BEFORE projecting vec_id away: filtering a projected
         # frame on the dropped column leans on the analyzer's
         # missing-reference resolution — it resolves, but fragilely
-        sample = sample.where(F.pmod(F.xxhash64(F.col(id_col)), F.lit(m)) == 0)
+        sample = sample.where(F.pmod(F.xxhash64(F.col("vec_id")), F.lit(m)) == 0)
     V = np.array(
-        [r[0] for r in sample.select(vec_col).collect()], dtype=np.float64
+        [r[0] for r in sample.select("embedding").collect()], dtype=np.float64
     )
     if len(V) <= k:  # degenerate corpus: everything fits in one probe
         return 1, [(1, 1.0)]
@@ -555,12 +546,12 @@ def calibration_cached(
     index_dir: str,
     target_recall: float = 0.85,
     k: int = 5,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> tuple[int, list[tuple[int, float]]]:
     """calibrate_nprobe, memoized in the persisted index dir (atomic
     tmp+rename publish, same discipline as ivf_build): repeated query
-    batches against one index pay calibration once. Returns
+    batches against one index pay calibration once. The memo is keyed
+    by (target_recall, k), the only inputs besides the index itself:
+    the sample size and the embeddings columns are fixed. Returns
     (nprobe, curve) — the curve is what route_knn adjudicates on."""
     import json
     import os
@@ -572,9 +563,7 @@ def calibration_cached(
             rec = json.load(fh)
         if rec.get("target_recall") == target_recall and rec.get("k") == k:
             return int(rec["nprobe"]), [tuple(p) for p in rec["curve"]]
-    nprobe, curve = calibrate_nprobe(
-        emb, centroids, target_recall, k, id_col=id_col, vec_col=vec_col
-    )
+    nprobe, curve = calibrate_nprobe(emb, centroids, target_recall, k)
     tmp = f"{path}.tmp-{uuid.uuid4().hex[:8]}"
     with open(tmp, "w") as fh:
         json.dump(
@@ -598,7 +587,6 @@ def route_knn(
     curve: list[tuple[int, float]],
     n_cells: int,
     target_recall: float,
-    max_probed_fraction: float = KNN_ROUTE_MAX_PROBED_FRACTION,
 ) -> tuple[str, int]:
     """Corpus-adaptive ANN routing (r7 verdict item 1): adjudicate the
     calibration curve. Returns ('ivf'|'quantized', nprobe).
@@ -611,16 +599,14 @@ def route_knn(
     function of the published curve so tests drive both corpus shapes
     directly."""
     nprobe = next((p for p, r in curve if r >= target_recall), n_cells)
-    if nprobe > max_probed_fraction * n_cells:
+    if nprobe > KNN_ROUTE_MAX_PROBED_FRACTION * n_cells:
         return "quantized", nprobe
     return "ivf", nprobe
 
 
-def kmeans_centroids(
-    emb: DataFrame, n_centroids: int, vec_col: str = "embedding",
-    max_iter: int = 5, seed: int = 42, id_col: str = "vec_id",
-) -> DataFrame:
-    """Real k-means centroids (cosine distance, fixed seed) via MLlib —
+def kmeans_centroids(emb: DataFrame, n_centroids: int) -> DataFrame:
+    """Real k-means centroids (cosine distance, 5 Lloyd rounds, seed
+    42) via MLlib —
     Lloyd iterations run as treeAggregate partial sums per partition,
     so the corpus is scanned, never shuffled; only the C x dim centroid
     matrix moves. Returns (cid int, cvec array<double>).
@@ -642,7 +628,7 @@ def kmeans_centroids(
         # keep ~cap rows: modulus filter over the id hash — scan-side,
         # order-free, append-stable
         m = -(-n // cap)  # ceil
-        train = emb.where(F.pmod(F.xxhash64(F.col(id_col)), F.lit(m)) == 0)
+        train = emb.where(F.pmod(F.xxhash64(F.col("vec_id")), F.lit(m)) == 0)
     from pyspark.ml.clustering import KMeans
     from pyspark.ml.functions import array_to_vector
 
@@ -654,11 +640,11 @@ def kmeans_centroids(
     # rounds dominate quality, not the init — measured 10.2 s ->
     # ~2 s for identical downstream recall at sf0.1.
     feat = train.select(
-        array_to_vector(F.col(vec_col).cast("array<double>")).alias("features")
+        array_to_vector(F.col("embedding").cast("array<double>")).alias("features")
     ).persist()
     try:
         model = KMeans(
-            k=n_centroids, maxIter=max_iter, seed=seed,
+            k=n_centroids, maxIter=5, seed=42,
             distanceMeasure="cosine", initMode="random",
         ).fit(feat)
     finally:
@@ -669,10 +655,7 @@ def kmeans_centroids(
     return spark.createDataFrame(centers, "cid int, cvec array<double>")
 
 
-def assign_cells(
-    emb: DataFrame, centroids: DataFrame,
-    id_col: str = "vec_id", vec_col: str = "embedding",
-) -> DataFrame:
+def assign_cells(emb: DataFrame, centroids: DataFrame) -> DataFrame:
     """Assign each vector to its nearest centroid cell: broadcast
     centroids, argmax cosine per vector — one scan of the corpus.
     Shared by the batch index build (ivf_assign) and the streaming
@@ -701,27 +684,26 @@ def assign_cells(
     # (oracle: SQL_IVF_ASSIGN_EXPORT).
     cents = centroids.withColumn("__cnrm", F.sqrt(norm2(F.col("cvec"))))
     return (
-        emb.withColumn("__nrm", F.sqrt(norm2(F.col(vec_col))))
+        emb.withColumn("__nrm", F.sqrt(norm2(F.col("embedding"))))
         .join(F.broadcast(cents))
         .select(
-            id_col, vec_col, "cid",
-            (dot(F.col(vec_col), F.col("cvec"))
+            "vec_id", "embedding", "cid",
+            (dot(F.col("embedding"), F.col("cvec"))
              / (F.col("__nrm") * F.col("__cnrm"))).alias("ccos"),
         )
-        .groupBy(id_col)
-        .agg(F.first(vec_col).alias(vec_col), best.alias("cid"))
-        .select(id_col, vec_col, "cid")
+        .groupBy("vec_id")
+        .agg(F.first("embedding").alias("embedding"), best.alias("cid"))
+        .select("vec_id", "embedding", "cid")
     )
 
 
 def ivf_assign(
     emb: DataFrame, n_centroids: int = 16,
-    id_col: str = "vec_id", vec_col: str = "embedding",
 ) -> tuple[DataFrame, DataFrame]:
     """(centroids, assignments). Centroids are k-means-refined (see
     kmeans_centroids); assignment via assign_cells."""
-    centroids = kmeans_centroids(emb, n_centroids, vec_col, id_col=id_col)
-    return centroids, assign_cells(emb, centroids, id_col, vec_col)
+    centroids = kmeans_centroids(emb, n_centroids)
+    return centroids, assign_cells(emb, centroids)
 
 
 # Cap on the number of assignment partition DIRECTORIES. With one dir
@@ -735,71 +717,31 @@ IVF_MAX_PARTITION_DIRS = 128
 
 
 def ivf_n_dirs(n_centroids: int) -> int:
-    """Directory count for a NEW bucketed assignment layout. The cap
-    is read from the module constant at CALL time (a def-time default
-    would freeze it against test monkeypatching).
-
-    For an EXISTING index use ivf_index_n_dirs: re-deriving from the
-    constant is stable only while the cap never changes, and above the
-    cap (production cell counts) a resized cap would make the probe
-    path prune pb = pmod(cid, WRONG_nd) — silently missing candidate
-    buckets with no error. The _NDIRS marker (r13) removes that
-    coupling."""
+    """Directory count for a NEW bucketed assignment layout, from the
+    cap constant read at call time (so tests can monkeypatch it).
+    ivf_build records it in the index's _NDIRS marker; an EXISTING
+    index is always sized by that marker (ivf_index_n_dirs), never by
+    re-deriving from the constant, which a resized cap would make
+    prune pb = pmod(cid, WRONG_nd) and silently miss buckets."""
     return max(1, min(n_centroids, IVF_MAX_PARTITION_DIRS))
 
 
 def ivf_index_n_dirs(index_dir: str) -> int:
     """Bucket count of a PERSISTED index: the _NDIRS marker ivf_build
-    records (atomic with the publish rename). For marker-less legacy
-    indexes the count is derived from the ON-DISK layout itself — the
-    highest pb= partition directory under assignments/ plus one — never from
-    today's cap constant (r14, ADVICE item: a cap resized after such an
-    index was built would make the probe path prune pmod(cid, WRONG_nd)
-    and silently miss candidate buckets; the layout on disk is the only
-    authority). max(pb)+1 rather than the dir COUNT so interior empty
-    buckets cannot undercount; only trailing all-empty residue classes
-    remain unknowable without the marker, and the derivation then still
-    beats a resized constant. The constant is the last resort when
-    assignments/ itself is unreadable — with a loud warning either way. Every
+    writes into the staged dir, atomic with the publish rename. Every
     reader (ivf_search's partition pruning) and every appender
-    (streaming ingest) must size pmod by the layout ON DISK.
-
-    The last resort counts the centroids from their parquet footers
-    (driver-side pyarrow, no Spark job)."""
+    (streaming ingest) sizes pmod by it. An index without the marker
+    raises: its layout cannot be trusted, so it must be rebuilt."""
     import os
 
     try:
         with open(os.path.join(index_dir, "_NDIRS")) as fh:
             return int(fh.read().strip())
     except FileNotFoundError:
-        pass
-    try:
-        pbs = [
-            int(e.split("=", 1)[1])
-            for e in os.listdir(os.path.join(index_dir, "assignments"))
-            if e.startswith("pb=")
-        ]
-    except (OSError, ValueError):
-        pbs = []
-    if pbs:
-        _log.warning(
-            "ivf_index_n_dirs: %s has no _NDIRS marker (pre-r13 index); "
-            "deriving bucket count %d from the on-disk pb= layout",
-            index_dir, max(pbs) + 1,
-        )
-        return max(pbs) + 1
-    _log.warning(
-        "ivf_index_n_dirs: no _NDIRS marker and no pb= directories under "
-        "%s/assignments — falling back to the CURRENT cap constant, which "
-        "is only correct if the cap has not changed since the index was "
-        "built", index_dir,
-    )
-    import pyarrow.dataset as ds
-
-    return ivf_n_dirs(
-        ds.dataset(os.path.join(index_dir, "centroids"), format="parquet")
-        .count_rows()
-    )
+        raise FileNotFoundError(
+            f"IVF index {index_dir} has no _NDIRS marker; rebuild it with "
+            "ivf_build"
+        ) from None
 
 
 def write_assignments(
@@ -818,7 +760,7 @@ def write_assignments(
     granularity when a bucket holds many cells.
 
     A new index passes ivf_n_dirs(n_centroids); APPENDS to an existing
-    index pass its recorded count (ivf_index_n_dirs) so the new rows
+    index pass its _NDIRS count (ivf_index_n_dirs), so the new rows
     land in the resident layout even if the cap constant changed since
     the build."""
     (
@@ -835,7 +777,6 @@ def write_assignments(
 
 def ivf_build(
     emb: DataFrame, index_dir: str, n_centroids: int = 16,
-    id_col: str = "vec_id", vec_col: str = "embedding",
     force: bool = False,
 ) -> str:
     """Build the PERSISTED IVF index: centroids as a tiny parquet table,
@@ -862,7 +803,7 @@ def ivf_build(
     import shutil
     import uuid
 
-    centroids, assignments = ivf_assign(emb, n_centroids, id_col, vec_col)
+    centroids, assignments = ivf_assign(emb, n_centroids)
     parent = os.path.dirname(index_dir.rstrip("/"))
     if parent:
         os.makedirs(parent, exist_ok=True)
@@ -895,7 +836,6 @@ def ivf_build(
 
 def ivf_search(
     spark, index_dir: str, queries: DataFrame, k: int = 5, nprobe: int = 4,
-    id_col: str = "vec_id", vec_col: str = "embedding",
 ) -> DataFrame:
     """Search a persisted IVF index (see ivf_build) for the top-k
     cosine neighbors of each query row (qid, qvec).
@@ -912,19 +852,20 @@ def ivf_search(
     a local relation (an Arrow table, no RDD to scan), the join's
     broadcast probe side, so no probe is ranked twice; the candidates
     meet their broadcast query vectors on qid and _cosine_topk ranks
-    them. The bucket count comes from the _NDIRS marker
-    (ivf_index_n_dirs). Self-matches (nid == qid) are excluded for
+    them. The bucket count is the index's _NDIRS marker
+    (ivf_index_n_dirs), read before any job runs: an index without it
+    raises. Self-matches (nid == qid) are excluded for
     parity with cosine_topk_bruteforce; at nprobe == the cell count
     the search IS the brute force (pinned by test)."""
+    nd = ivf_index_n_dirs(index_dir)
     centroids = spark.read.parquet(f"{index_dir}/centroids")
     probes = probe_cells(queries, centroids, nprobe).select("qid", "cid").toArrow()
     probe_cids = sorted(set(probes.column("cid").to_pylist()))
-    nd = ivf_index_n_dirs(index_dir)
     probe_pbs = sorted({c % nd for c in probe_cids})
     cells = (
         spark.read.parquet(f"{index_dir}/assignments")
         .where(F.col("pb").isin(probe_pbs) & F.col("cid").isin(probe_cids))
-        .select("cid", id_col, vec_col, F.sqrt(norm2(F.col(vec_col))))
+        .select("cid", "vec_id", "embedding", F.sqrt(norm2(F.col("embedding"))))
         .toDF("cid", "nid", "nvec", "nnrm")
     )
     q = queries.select("qid", "qvec", F.sqrt(norm2(F.col("qvec"))).alias("qnrm"))
@@ -948,7 +889,6 @@ N_CELL_SALTS = 8
 
 def knn_join_cells(
     emb: DataFrame, k: int = 5, n_centroids: int = 16, nprobe: int = 2,
-    id_col: str = "vec_id", vec_col: str = "embedding",
     centroids: DataFrame | None = None,
     assignments: DataFrame | None = None,
 ) -> DataFrame:
@@ -975,7 +915,7 @@ def knn_join_cells(
     Returns (qid, nid, cos, rn) with rn in 1..k per qid.
     """
     if centroids is None or assignments is None:
-        centroids, assignments = ivf_assign(emb, n_centroids, id_col, vec_col)
+        centroids, assignments = ivf_assign(emb, n_centroids)
     n_parts = emb.sparkSession.sparkContext.defaultParallelism
     # ALWAYS hash-partition base by qid before the probe window — not
     # just when the source scanned narrow. The window requires
@@ -990,15 +930,15 @@ def knn_join_cells(
     # fans out single-row-group sources for the CPU-bound probe folds
     # (srp_neardup_pairs discipline).
     base = emb.select(
-        F.col(id_col).alias("qid"), F.col(vec_col).alias("qvec")
+        F.col("vec_id").alias("qid"), F.col("embedding").alias("qvec")
     ).repartition(n_parts, "qid")
     probes = probe_cells(base, centroids, nprobe).select(
         "qid", "qvec", "qnrm", "cid"
     )
     cells = assignments.select(
-        F.col(id_col).alias("nid"),
-        F.col(vec_col).alias("nvec"),
-        F.sqrt(norm2(F.col(vec_col))).alias("nnrm"),
+        F.col("vec_id").alias("nid"),
+        F.col("embedding").alias("nvec"),
+        F.sqrt(norm2(F.col("embedding"))).alias("nnrm"),
         "cid",
     )
     # skew: a cell above HOT_CELL_ROWS would funnel every probe of that
@@ -1116,12 +1056,7 @@ def quantize_rows(
     ).mapInArrow(_quantize_rows_kernel, "id bigint, q8 array<int>, n8 double")
 
 
-def quantized_block_pairs(
-    emb: DataFrame,
-    n: int,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
+def quantized_block_pairs(emb: DataFrame, n: int) -> DataFrame:
     """The shared block-product stage of the quantized family
     (knn_join_quantized, similarity_pair_histogram): int8-quantize
     (the embedding_quantize formula) and fan the vectors over every
@@ -1153,7 +1088,7 @@ def quantized_block_pairs(
     # noop sink on each subplan. Math and null semantics are replayed
     # exactly (see _quantize_rows_kernel); output is bit-identical
     # (histogram value-hash oracle + exact-when-r-covers-corpus pin).
-    base = quantize_rows(emb, id_col, vec_col).where(F.col("q8").isNotNull())
+    base = quantize_rows(emb).where(F.col("q8").isNotNull())
     return block_pair_fan(base, [], "id", n_blocks=n_blocks)
 
 
@@ -1195,8 +1130,6 @@ def knn_join_quantized(
     emb: DataFrame,
     k: int = 5,
     r_candidates: int = 64,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     n_rows: int | None = None,
 ) -> DataFrame:
     """Batch kNN self-join for corpora where IVF degenerates (the
@@ -1235,7 +1168,7 @@ def knn_join_quantized(
         return emb.sparkSession.createDataFrame(
             [], "qid long, nid long, cos double, rn int"
         )
-    pairs = quantized_block_pairs(emb, n, id_col, vec_col)
+    pairs = quantized_block_pairs(emb, n)
 
     r_cand = r_candidates
 
@@ -1289,17 +1222,14 @@ def knn_join_quantized(
         .where(F.col("crn") <= r_candidates)
         .select("qid", "nid")
     )
-    return exact_rerank_topk(survivors, emb, k, id_col=id_col, vec_col=vec_col)
+    return exact_rerank_topk(survivors, emb, k)
 
 
 SIM_HIST_BUCKETS = 20
 
 
 def similarity_pair_histogram(
-    emb: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    n_rows: int | None = None,
+    emb: DataFrame, n_rows: int | None = None,
 ) -> DataFrame:
     """Corpus-wide distribution of pairwise quantized cosine — the
     artifact that picks a near-dup threshold BEFORE running dedup
@@ -1331,7 +1261,7 @@ def similarity_pair_histogram(
         return spark.createDataFrame(
             [], "bucket int, cos_lo double, pair_count bigint"
         )
-    pairs = quantized_block_pairs(emb, n, id_col, vec_col)
+    pairs = quantized_block_pairs(emb, n)
     n_buckets = SIM_HIST_BUCKETS
 
     def hist_blocks(key, table):
@@ -1404,9 +1334,7 @@ PQ_DIM = 64  # fixture embedding dim; the slice width every oracle pins
 
 
 def hash_spread_seeds(
-    emb: DataFrame, n: int,
-    id_col: str = "vec_id", vec_col: str = "embedding",
-    out_idx: str = "cid", out_vec: str = "cvec",
+    emb: DataFrame, n: int, out_idx: str = "cid", out_vec: str = "cvec",
 ) -> DataFrame:
     """The deterministic seed pick shared by every oracle-replayable
     index: the n corpus vectors with the smallest (md5(id), id),
@@ -1418,23 +1346,21 @@ def hash_spread_seeds(
     n-row frame."""
     seed = (
         emb.select(
-            id_col, vec_col,
-            F.md5(F.col(id_col).cast("string")).alias("h"),
+            "vec_id", "embedding",
+            F.md5(F.col("vec_id").cast("string")).alias("h"),
         )
-        .orderBy("h", id_col)
+        .orderBy("h", "vec_id")
         .limit(n)
     )
-    wk = Window.orderBy("h", id_col)
+    wk = Window.orderBy("h", "vec_id")
     return seed.withColumn("rk", F.row_number().over(wk)).select(
         (F.col("rk") - 1).cast("int").alias(out_idx),
-        F.col(vec_col).alias(out_vec),
+        F.col("embedding").alias(out_vec),
     )
 
 
 def _collect_codebook_from_emb(
     emb: DataFrame, n_sub: int, n_codes: int,
-    id_col: str = "vec_id", vec_col: str = "embedding",
-    dim: int = PQ_DIM,
 ) -> list[list[list[int]]]:
     """The PQ codebook cb[sub_id][code] -> csub (list of ints),
     collected with ONE tiny Spark job: the n_codes hash-spread seed
@@ -1444,25 +1370,25 @@ def _collect_codebook_from_emb(
     entries, CONSTANT in corpus size. A NULL seed embedding leaves its
     code's subvectors empty; an empty corpus gives n_sub empty lists.
 
-    The slice width is pinned from the EXPECTED dim, never derived per
-    row: a defective row (wrong-dim vector, the kind
+    The slice width is pinned from the EXPECTED dim (PQ_DIM), never
+    derived per row: a defective row (wrong-dim vector, the kind
     embedding_quality_gate quarantines) slices the same fixed windows
     the DuckDB twins hardcode, so the engines stay bit-identical even
     on bad input. An n_sub that does not divide dim fails before any
     job runs instead of silently truncating the tail dimensions."""
-    if dim % n_sub:
-        raise ValueError(f"dim {dim} not divisible by n_sub {n_sub}")
+    if PQ_DIM % n_sub:
+        raise ValueError(f"dim {PQ_DIM} not divisible by n_sub {n_sub}")
     seed = (
         emb.select(
-            F.md5(F.col(id_col).cast("string")).alias("__h"), id_col, vec_col
+            F.md5(F.col("vec_id").cast("string")).alias("__h"), "vec_id", "embedding"
         )
-        .orderBy("__h", id_col)
+        .orderBy("__h", "vec_id")
         .limit(n_codes)
     )
     # the TakeOrdered output is one sorted partition and the kernel
     # keeps row order, so the i-th collected row is code i
-    rows = quantize_rows(seed, id_col, vec_col).collect()
-    sub_dim = dim // n_sub
+    rows = quantize_rows(seed).collect()
+    sub_dim = PQ_DIM // n_sub
     cb: list[list[list[int]]] = [
         [[] for _ in range(len(rows))] for _ in range(n_sub)
     ]
@@ -1576,11 +1502,9 @@ def _make_fused_encode_kernel(cb: list[list[list[int]]], sub_dim: int):
 
 
 def pq_encode_codes(
-    emb: DataFrame, cb: list[list[list[int]]],
-    id_col: str = "vec_id", vec_col: str = "embedding",
-    dim: int = PQ_DIM,
+    emb: DataFrame, cb: list[list[list[int]]], dim: int = PQ_DIM,
 ) -> DataFrame:
-    """(id, codes array<int>): every subspace's nearest-code id in one
+    """(vec_id, codes array<int>): every subspace's nearest-code id in one
     shuffle-free projection. r15: the quantize AND the argmin encode
     run fused inside one mapInArrow kernel — the r14 shape kept the
     quantization as an interpreted JVM fold (measured ~half
@@ -1593,30 +1517,29 @@ def pq_encode_codes(
     PQ representation kept together."""
     sub_dim = dim // len(cb)
     return emb.select(
-        F.col(id_col).alias("id"), F.col(vec_col).alias("emb")
+        F.col("vec_id").alias("id"), F.col("embedding").alias("emb")
     ).mapInArrow(
         _make_fused_encode_kernel(cb, sub_dim), "id bigint, codes array<int>"
-    ).withColumnRenamed("id", id_col)
+    ).withColumnRenamed("id", "vec_id")
 
 
 def pq_encode(
     emb: DataFrame, n_sub: int = 8, n_codes: int = 32,
-    id_col: str = "vec_id", vec_col: str = "embedding",
 ) -> DataFrame:
-    """(id, sub_id, code): nearest codebook entry per subspace by exact
+    """(vec_id, sub_id, code): nearest codebook entry per subspace by exact
     integer squared-L2, ties to the smallest code — pq_encode_codes
     exploded to one row per subspace, against the collected
     hash-spread codebook (_collect_codebook_from_emb). Output rows are
     bit-identical to the DuckDB twin (oracle: SQL_PQ_ENCODE_EXPORT)."""
-    cb = _collect_codebook_from_emb(emb, n_sub, n_codes, id_col, vec_col)
-    return pq_encode_codes(emb, cb, id_col, vec_col).select(
-        id_col, F.posexplode("codes").alias("sub_id", "code")
+    cb = _collect_codebook_from_emb(emb, n_sub, n_codes)
+    return pq_encode_codes(emb, cb).select(
+        "vec_id", F.posexplode("codes").alias("sub_id", "code")
     )
 
 
 def _collect_query_luts(
     emb: DataFrame, query_ids: list[int], cb: list[list[list[int]]],
-    id_col: str, vec_col: str, dim: int = PQ_DIM,
+    dim: int = PQ_DIM,
 ) -> list[tuple[int, list[list[int]]]]:
     """[(qid, lut[sub][code] = exact integer squared-L2)] for each
     standing query found in the corpus, in ascending qid order. The
@@ -1626,9 +1549,7 @@ def _collect_query_luts(
     against the collected codebook is _il2_py's exact Python int math
     (either-side-None terms count 0)."""
     sub_dim = dim // len(cb)
-    rows = quantize_rows(
-        emb.where(F.col(id_col).isin(query_ids)), id_col, vec_col
-    ).collect()
+    rows = quantize_rows(emb.where(F.col("vec_id").isin(query_ids))).collect()
     out = []
     for r in sorted(rows, key=lambda r: r["id"]):
         if r["q8"] is None:
@@ -1768,9 +1689,8 @@ def _make_adc_gather_kernel(
 def _pq_adc_scores(
     emb: DataFrame, query_ids: list[int],
     n_sub: int, n_codes: int,
-    id_col: str, vec_col: str,
 ) -> DataFrame:
-    """(qid, id, adc): exact-integer asymmetric distances of every
+    """(qid, vec_id, adc): exact-integer asymmetric distances of every
     corpus vector to every standing query, self excluded. The shared
     quadratic stage of pq_adc_topk and pq_rerank_topk. The codebook
     and the q per-query LUTs are bounded deterministic tables
@@ -1782,28 +1702,25 @@ def _pq_adc_scores(
     sf0.1, dominated by the giant constant expression tree). ZERO
     joins, ZERO aggregate exchanges, one Python crossing. Values are
     bit-identical (oracle: SQL_PQ_ADC_TOPK)."""
-    cb = _collect_codebook_from_emb(emb, n_sub, n_codes, id_col, vec_col)
-    luts = _collect_query_luts(emb, query_ids, cb, id_col, vec_col)
+    cb = _collect_codebook_from_emb(emb, n_sub, n_codes)
+    luts = _collect_query_luts(emb, query_ids, cb)
     spark = emb.sparkSession
     if not luts:
-        return spark.createDataFrame(
-            [], f"qid bigint, {id_col} bigint, adc bigint"
-        )
+        return spark.createDataFrame([], "qid bigint, vec_id bigint, adc bigint")
     sub_dim = PQ_DIM // len(cb)
     return (
-        emb.select(F.col(id_col).alias("id"), F.col(vec_col).alias("emb"))
+        emb.select(F.col("vec_id").alias("id"), F.col("embedding").alias("emb"))
         .mapInArrow(
             _make_adc_scores_kernel(cb, sub_dim, luts),
             "qid bigint, id bigint, adc bigint",
         )
-        .withColumnRenamed("id", id_col)
+        .withColumnRenamed("id", "vec_id")
     )
 
 
 def pq_adc_topk(
     emb: DataFrame, query_ids: list[int], k: int = 5,
     n_sub: int = 8, n_codes: int = 32,
-    id_col: str = "vec_id", vec_col: str = "embedding",
     scores: DataFrame | None = None,
 ) -> DataFrame:
     """Asymmetric-distance top-k over PQ codes: per query build the
@@ -1819,14 +1736,14 @@ def pq_adc_topk(
     union branches — measured: 0 ReusedExchange in the recall report
     without it)."""
     adc = scores if scores is not None else _pq_adc_scores(
-        emb, query_ids, n_sub, n_codes, id_col, vec_col
+        emb, query_ids, n_sub, n_codes
     )
-    wk = Window.partitionBy("qid").orderBy(F.col("adc"), F.col(id_col))
+    wk = Window.partitionBy("qid").orderBy(F.col("adc"), F.col("vec_id"))
     return (
         adc.withColumn("rn", F.row_number().over(wk))
         .where(F.col("rn") <= k)
         .select("qid", F.col("rn").cast("int").alias("rn"),
-                F.col(id_col).alias("nid"), F.col("adc"))
+                F.col("vec_id").alias("nid"), F.col("adc"))
     )
 
 
@@ -1834,7 +1751,6 @@ def pq_rerank_topk(
     emb: DataFrame, query_ids: list[int], k: int = 5,
     r_candidates: int = 128,
     n_sub: int = 8, n_codes: int = 32,
-    id_col: str = "vec_id", vec_col: str = "embedding",
     scores: DataFrame | None = None,
 ) -> DataFrame:
     """PQ ADC prune + exact cosine re-rank — the production PQ search:
@@ -1848,24 +1764,23 @@ def pq_rerank_topk(
     Returns (qid, rn, nid, cos). `scores` threads a shared ADC frame
     (see pq_adc_topk)."""
     adc = scores if scores is not None else _pq_adc_scores(
-        emb, query_ids, n_sub, n_codes, id_col, vec_col
+        emb, query_ids, n_sub, n_codes
     )
-    wc = Window.partitionBy("qid").orderBy(F.col("adc"), F.col(id_col))
+    wc = Window.partitionBy("qid").orderBy(F.col("adc"), F.col("vec_id"))
     surv = (
         adc.withColumn("crn", F.row_number().over(wc))
         .where(F.col("crn") <= r_candidates)
-        .select("qid", F.col(id_col).alias("nid"))
+        .select("qid", F.col("vec_id").alias("nid"))
     )
-    return exact_rerank_topk(
-        surv, emb, k, query_ids, id_col, vec_col
-    ).select("qid", "rn", "nid", "cos")
+    return exact_rerank_topk(surv, emb, k, query_ids).select(
+        "qid", "rn", "nid", "cos"
+    )
 
 
 def ivf_pq_search(
     emb: DataFrame, query_ids: list[int], k: int = 5,
     n_centroids: int = 16, nprobe: int = 4,
     n_sub: int = 8, n_codes: int = 32,
-    id_col: str = "vec_id", vec_col: str = "embedding",
 ) -> DataFrame:
     """The full IVF-PQ search — the composition that actually runs at
     100 TB: IVF cells PRUNE (only vectors in the nprobe closest cells
@@ -1882,20 +1797,20 @@ def ivf_pq_search(
     and ADC-joins the survivors' CODES against the broadcast LUT —
     per-query work is |probed cells| x codes, the IVF-PQ contract.
     Returns (qid, rn, nid, adc)."""
-    cent = hash_spread_seeds(emb, n_centroids, id_col, vec_col)
-    assign = assign_cells(emb, cent, id_col, vec_col).select(id_col, "cid")
-    q = emb.where(F.col(id_col).isin(query_ids)).select(
-        F.col(id_col).alias("qid"), F.col(vec_col).alias("qvec")
+    cent = hash_spread_seeds(emb, n_centroids)
+    assign = assign_cells(emb, cent).select("vec_id", "cid")
+    q = emb.where(F.col("vec_id").isin(query_ids)).select(
+        F.col("vec_id").alias("qid"), F.col("embedding").alias("qvec")
     )
     probes = probe_cells(q, cent, nprobe).select("qid", "cid")
-    cb = _collect_codebook_from_emb(emb, n_sub, n_codes, id_col, vec_col)
-    luts = _collect_query_luts(emb, query_ids, cb, id_col, vec_col)
+    cb = _collect_codebook_from_emb(emb, n_sub, n_codes)
+    luts = _collect_query_luts(emb, query_ids, cb)
     cand = assign.join(F.broadcast(probes), "cid").where(
-        F.col(id_col) != F.col("qid")
+        F.col("vec_id") != F.col("qid")
     )
     if not luts:
         adc = emb.sparkSession.createDataFrame(
-            [], f"qid bigint, {id_col} bigint, adc bigint"
+            [], "qid bigint, vec_id bigint, adc bigint"
         )
     else:
         # r14: one id-keyed join attaches the 8-byte code array to the
@@ -1906,24 +1821,24 @@ def ivf_pq_search(
         # rows (NULL embeddings) have no ADC distance and are dropped,
         # else a NULL adc would rank first (a behaviour fix, the same
         # as _make_adc_scores_kernel's).
-        enc = pq_encode_codes(emb, cb, id_col, vec_col).where(
+        enc = pq_encode_codes(emb, cb).where(
             F.col("codes").isNotNull()
         )
         adc = (
-            cand.join(enc, id_col)
-            .select("qid", F.col(id_col).alias("id"), "codes")
+            cand.join(enc, "vec_id")
+            .select("qid", F.col("vec_id").alias("id"), "codes")
             .mapInArrow(
                 _make_adc_gather_kernel(luts, len(cb)),
                 "qid bigint, id bigint, adc bigint",
             )
-            .withColumnRenamed("id", id_col)
+            .withColumnRenamed("id", "vec_id")
         )
-    wk = Window.partitionBy("qid").orderBy(F.col("adc"), F.col(id_col))
+    wk = Window.partitionBy("qid").orderBy(F.col("adc"), F.col("vec_id"))
     return (
         adc.withColumn("rn", F.row_number().over(wk))
         .where(F.col("rn") <= k)
         .select("qid", F.col("rn").cast("int").alias("rn"),
-                F.col(id_col).alias("nid"), F.col("adc"))
+                F.col("vec_id").alias("nid"), F.col("adc"))
     )
 
 
@@ -2048,7 +1963,6 @@ def _make_graph_pair_kernel(sdc, k: int):
 def knn_graph_mutual(
     emb: DataFrame, k: int = 3,
     n_centroids: int | None = None, n_sub: int = 8, n_codes: int = 32,
-    id_col: str = "vec_id", vec_col: str = "embedding",
 ) -> DataFrame:
     """Cell-blocked mutual-kNN graph under symmetric PQ distance — the
     SemDeDup/semantic-clustering backbone: nodes are vectors, an edge
@@ -2074,10 +1988,8 @@ def knn_graph_mutual(
     the knob explicitly."""
     if n_centroids is None:
         n_centroids = auto_graph_cells(emb.count())
-    cent = hash_spread_seeds(emb, n_centroids, id_col, vec_col)
-    asg = assign_cells(emb, cent, id_col, vec_col).select(
-        F.col(id_col).alias("aid"), "cid"
-    )
+    cent = hash_spread_seeds(emb, n_centroids)
+    asg = assign_cells(emb, cent).select(F.col("vec_id").alias("aid"), "cid")
     # the pair stage is a cell-blocked grouped Arrow kernel — one
     # gather-sum distance matrix per (cell sub-block, sub-block) group
     # plus a per-aid tie-preserving partial top-k, replacing the
@@ -2093,15 +2005,15 @@ def knn_graph_mutual(
     # NULL-codes rows are dropped exactly as the exploded-encode inner
     # join dropped them, and sub-blocking keeps a hot cell's quadratic
     # pair mass spread across tasks.
-    cb = _collect_codebook_from_emb(emb, n_sub, n_codes, id_col, vec_col)
+    cb = _collect_codebook_from_emb(emb, n_sub, n_codes)
     if not any(cb):  # empty corpus: no codes
         return emb.sparkSession.createDataFrame(
             [], "src bigint, dst bigint, d bigint"
         )
     node = (
-        pq_encode_codes(emb, cb, id_col, vec_col)
+        pq_encode_codes(emb, cb)
         .where(F.col("codes").isNotNull())
-        .select(F.col(id_col).alias("aid"), "codes")
+        .select(F.col("vec_id").alias("aid"), "codes")
         .join(asg, "aid")
     )
     # block grain read at call time (module global) so tests can pin

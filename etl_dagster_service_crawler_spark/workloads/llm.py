@@ -4468,8 +4468,7 @@ def q_ann_recall_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     # localCheckpointed — computed once at the first action, reused by
     # both arms (the ivf arm's cell-pruned chain is distinct by design)
     adc = _pq_adc_scores(
-        e, TOPK_QUERY_IDS, PQ_EXPORT_SUB, PQ_EXPORT_CODES,
-        "vec_id", "embedding",
+        e, TOPK_QUERY_IDS, PQ_EXPORT_SUB, PQ_EXPORT_CODES
     ).localCheckpoint(eager=False)
     arms = [
         ("pq_adc", pq_adc_topk(
