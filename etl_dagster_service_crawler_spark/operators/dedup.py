@@ -25,7 +25,9 @@ from typing import Iterator  # noqa: UP035 - PySpark's pandas_udf
 # type-hint inference resolves string hints in THIS module's globals
 # and requires typing.Iterator (collections.abc is not recognized)
 
+import numpy as np
 import pandas as pd
+import pyarrow as pa
 
 from pyspark.sql import Column, DataFrame, Observation, functions as F
 
@@ -422,79 +424,37 @@ def minhash_cluster_cc(
     df: DataFrame, id_col: str, text_col: str, exact: bool = False,
 ) -> DataFrame:
     """FULL near-dup clustering: connected components over the LSH
-    bucket graph by iterative label propagation to a fixpoint.
+    bucket graph (cc_label_propagation), every doc labeled with the
+    smallest id of its component. Returns (id, label, is_dup).
+
+    One-hop assignment (minhash_assign_representatives) can split a
+    chain A~B~C where A and C share buckets only with B; connected
+    components merge such chains. Docs with no co-bucketed neighbor
+    keep their own id as label.
 
     exact=True swaps the LSH band buckets for ONE bucket per doc,
     sha2(text) — the bucket graph then IS the exact-duplicate relation,
-    so the fixpoint labels provably equal min(id) per verbatim-text
-    group: `min(id) OVER (PARTITION BY text)` in ANSI SQL. That makes
-    the label-propagation machinery (the iteration loop, both exchange
-    alignments, the pointer jump) oracle-checkable end-to-end by the
-    driver's DuckDB differential, while the approximate default keeps
-    its unit tests (recall/chain-merge). Same loop, same shuffles —
-    only the edge construction changes.
-
-    One-hop assignment (minhash_assign_representatives) can split a
-    chain A~B~C where A and C share buckets only with B; propagating
-    bucket-min labels until no label changes merges such chains. Docs
-    with no co-bucketed neighbor keep their own id as label.
-
-    Shuffle discipline — each iteration is exactly the TWO unavoidable
-    aggregation exchanges (labels by bucket, bucket labels by doc):
-
-    - The (id, bucket) edge frame is persisted TWICE, pre-partitioned
-      by each join key (`id` for the label join, `bh` for the
-      bucket-min join). Both per-iteration joins then reuse the
-      partitioning of the persisted side and of the previous
-      aggregation's output, so neither join adds an exchange.
-    - Convergence is a fixpoint check on `sum(label)`: per-doc labels
-      are monotonically non-increasing under min-propagation, so the
-      sum is strictly decreasing until the fixpoint and equality means
-      NO label changed. One partial-agg action per iteration — the
-      `distinct(label).count()` formulation this replaces added a full
-      extra exchange + scan per iteration (and distinct-count equality
-      is a weaker signal than the exact sum).
-    - Iteration 0 skips the label join entirely: labels are initially
-      the identity, so the first bucket-min is just min(id) per bucket.
-    - Each iteration ends with a POINTER JUMP (label <- label's label):
-      one extra label-frame self-join that halves the remaining chain
-      distance, so convergence is O(log diameter) bucket rounds instead
-      of O(diameter). On the sf0.1 fixture this cuts 7 rounds to 4 —
-      measured equal output, ~10% faster end-to-end, and the gap widens
-      with chain length (at 100 TB a long-tail chain costs log2 extra
-      rounds, not linearly many).
-
-    At 100 TB: iterations are label-only frames (id, label — 16 bytes a
-    row); the text/token stream is touched exactly once to build
-    buckets (the double-persist costs one extra copy of the edge frame,
-    docs x bands x 16 bytes — noise next to the corpus). The label sum
-    is accumulated in DECIMAL(38,0) so row-count x id-magnitude cannot
-    overflow. Near-dup graphs have tiny diameters (dup clusters are
-    dense), so this converges in a handful of iterations.
-
-    The loop's shuffle width is sized to the EDGE COUNT, not the
-    session default (~250k edge rows per task, floor 8, cap at the
-    session conf): a plain 200-partition session otherwise schedules
-    200 near-empty tasks per exchange per iteration and the fixpoint
-    loop becomes pure task-launch latency (measured 35% of CC wall
-    time at sf0.1). Same lesson as the streaming state stores — width
-    must track keyspace. At 100 TB the edge count drives the width
-    back up to the cluster default and the clamp is a no-op. The conf
-    is set only while the loop runs and restored after."""
-    # (id, bucket) edges — built once, reused every iteration through
-    # one partition-aligned persisted copy per join key. Width is sized
-    # from the input row count (a parquet-metadata-only count on the
-    # usual scan input — no data pass) times the band fan-out.
-    bands_per_doc = 1 if exact else LSH_BANDS
+    so the labels provably equal min(id) per verbatim-text group:
+    `min(id) OVER (PARTITION BY text)` in ANSI SQL. That makes the
+    components machinery oracle-checkable end-to-end by the driver's
+    DuckDB differential, while the approximate default keeps its unit
+    tests (recall/chain-merge). Only the edge construction changes."""
     if exact:
         edges = df.select(F.col(id_col), F.sha2(F.col(text_col), 256).alias("bh"))
     else:
         sig = minhash_signatures(df, id_col, text_col)
         edges = sig.select(F.col(id_col), F.explode(_band_hashes()).alias("bh"))
+    return cc_label_propagation(edges, id_col)
 
-    n_edges = df.count() * bands_per_doc
-    return cc_label_propagation(edges, id_col, n_edges)
 
+# Driver bytes charged per star row when sizing the residual collect:
+# the two ids as Arrow columns plus the numpy union-find's working set
+# (the concatenated endpoints, np.unique's sort and inverse, the parent
+# array and the per-round root gathers; ~110 B a row at peak, traced on
+# a 1M-row star of int64 ids), with 2x headroom. Read at call time, so
+# tests force the distributed loop by raising it past any result-size
+# limit.
+CC_STAR_ROW_BYTES = 256
 
 # Round cap of the label-propagation loop: with the pointer jump a
 # round halves the remaining chain distance, and near-dup graphs
@@ -502,33 +462,162 @@ def minhash_cluster_cc(
 CC_MAX_ITERS = 10
 
 
-def cc_label_propagation(
-    edges: DataFrame, id_col: str, n_edges: int,
-) -> DataFrame:
-    """Connected components over an (id, bh) membership frame by
-    iterative min-label propagation to a fixpoint — the tuned loop
-    minhash_cluster_cc documents (two aligned exchanges per round,
-    hot-bucket salting, pointer jump, localCheckpoint lineage
-    truncation, edge-count-sized shuffle width). Factored so any
-    deterministic bucket/edge construction gets the same machinery:
-    the LSH families pass band buckets; semantic_dedup_clusters passes
-    mutual-kNN edges as 2-member buckets. n_edges sizes the shuffle
-    width without forcing a pass over the frame (callers usually know
-    it from metadata). Returns (id, label, is_dup)."""
+def cc_label_propagation(edges: DataFrame, id_col: str) -> DataFrame:
+    """Connected components over an (id, bh) membership frame: every
+    id that shares a bucket `bh` with another is in its component, and
+    its label is the component's smallest id. The LSH families pass
+    band buckets; the pair graphs (semantic_dedup_clusters, the
+    verified-pair pipeline, source_mirror_communities) pass each edge
+    as a 2-member bucket plus one self-bucket per node. Edges with a
+    NULL id or bucket are dropped: they name no node and join nothing.
+    Returns (id, label, is_dup), label of the id's type.
+
+    Bucket-star contraction first: one aggregation gives each bucket
+    its size and min id, and every non-min member of a bucket with more
+    than one member becomes ONE star edge (id, bucket min). The star
+    graph has the same components as the bucket graph, and its size is
+    the non-singleton membership — on near-dup corpora a small fraction
+    of the edges (6,000 docs x 4 bands: 24,000 edges, 6,652 star rows).
+    When the star fits one driver collect (spark.driver.maxResultSize,
+    the limit Spark already puts on a collect, over CC_STAR_ROW_BYTES a
+    row; the driver heap when that limit is 0), a vectorized union-find
+    on the driver (_min_labels) labels it, and the labels go back as a
+    broadcast side: each node's label is its star label or, untouched
+    by any star edge, its own id. A handful of Spark jobs in all,
+    against two to three per round for the loop.
+
+    When the star does not fit, the distributed loop runs on the edges
+    (_cc_loop): the 100 TB shape, where the residual outgrows the
+    driver. Both paths return checkpointed frames (plan depth O(1))."""
+    spark = edges.sparkSession
+    edges = edges.where(
+        F.col(id_col).isNotNull() & F.col("bh").isNotNull()
+    ).localCheckpoint(eager=True)
+    # one bucket-stats pass serves the star and, on the loop path, the
+    # hot-bucket probe and iteration 0's bucket-min (labels start as the
+    # identity, so the first bucket-min is min(id) per bucket)
+    stats = (
+        edges.groupBy("bh")
+        .agg(F.count(F.lit(1)).alias("bn"), F.min(id_col).alias("bucket_label"))
+        .persist()
+    )
+    try:
+        star = (
+            edges.join(stats.where(F.col("bn") > 1), "bh")
+            .where(F.col(id_col) != F.col("bucket_label"))
+            .select(id_col, "bucket_label")
+        )
+        bound = _max_result_bytes(spark) // CC_STAR_ROW_BYTES
+        residual = star.limit(bound + 1).toArrow()
+        if residual.num_rows > bound:
+            labels = _cc_loop(edges, stats, id_col)
+        else:
+            ids, lab = _min_labels(
+                residual.column(0).to_numpy(), residual.column(1).to_numpy()
+            )
+            id_type = residual.schema.field(0).type
+            moved = spark.createDataFrame(pa.table({
+                id_col: pa.array(ids, type=id_type),
+                "label": pa.array(lab, type=id_type),
+            }))
+            labels = (
+                edges.select(id_col).distinct()
+                .join(F.broadcast(moved), id_col, "left")
+                .select(id_col, F.coalesce("label", id_col).alias("label"))
+                .localCheckpoint(eager=True)
+            )
+    finally:
+        stats.unpersist()
+    return labels.withColumn("is_dup", F.col(id_col) != F.col("label"))
+
+
+def _max_result_bytes(spark) -> int:
+    """spark.driver.maxResultSize in bytes (Spark's default 1g); when
+    it is 0 (no limit), the driver heap, spark.driver.memory. A bare
+    number reads as bytes, which can only shrink the bound."""
+    size = _size_bytes(spark.conf.get("spark.driver.maxResultSize", "1g"))
+    return size or _size_bytes(spark.conf.get("spark.driver.memory", "1g"))
+
+
+def _size_bytes(size: str) -> int:
+    """A Spark size string ("512m", "1g", "2gb", bare bytes) in bytes."""
+    v = size.strip().lower().removesuffix("b")
+    units = "kmgtp"
+    if v[-1:] in units:
+        return int(v[:-1]) << (10 * (units.index(v[-1]) + 1))
+    return int(v)
+
+
+def _min_labels(a: np.ndarray, b: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+    """Connected components of the undirected edges (a[i], b[i]):
+    (node, label) for every node whose label, the smallest id of its
+    component, is not the node itself. Union-find over dense node
+    indices in sorted-id order, so the smallest index is the smallest
+    id: each round hooks every edge's larger root under its smaller
+    root, then pointer-jumps until every node points at its root, and
+    stops when no edge crosses two roots. Parents only ever decrease,
+    so no round can form a cycle."""
+    nodes, inv = np.unique(np.concatenate([a, b]), return_inverse=True)
+    u, v = inv[: len(a)], inv[len(a):]
+    parent = np.arange(len(nodes))
+    while True:
+        ru, rv = parent[u], parent[v]
+        cross = ru != rv
+        if not cross.any():
+            break
+        np.minimum.at(
+            parent, np.maximum(ru, rv)[cross], np.minimum(ru, rv)[cross]
+        )
+        while True:
+            up = parent[parent]
+            if np.array_equal(up, parent):
+                break
+            parent = up
+    moved = parent != np.arange(len(nodes))
+    return nodes[moved], nodes[parent[moved]]
+
+
+def _cc_loop(edges: DataFrame, stats: DataFrame, id_col: str) -> DataFrame:
+    """(id, label) by iterative min-label propagation to a fixpoint over
+    the checkpointed edges, for a star residual too large for the
+    driver. `stats` is the (bh, bn, bucket_label) aggregate of the
+    same edges.
+
+    Shuffle discipline — each iteration is exactly the TWO unavoidable
+    aggregation exchanges (labels by bucket, bucket labels by doc):
+
+    - The edge frame is persisted TWICE, pre-partitioned by each join
+      key (`id` for the label join, `bh` for the bucket-min join). Both
+      per-iteration joins then reuse the partitioning of the persisted
+      side and of the previous aggregation's output, so neither join
+      adds an exchange.
+    - Convergence is a fixpoint check on `sum(label)`: per-doc labels
+      are monotonically non-increasing under min-propagation, so the
+      sum is strictly decreasing until the fixpoint and equality means
+      NO label changed. The label sum is accumulated in DECIMAL(38,0)
+      so row-count x id-magnitude cannot overflow.
+    - Iteration 0 skips the label join entirely: its bucket-min is the
+      stats frame's min id per bucket.
+    - Each iteration ends with a POINTER JUMP (label <- label's label):
+      one extra label-frame self-join that halves the remaining chain
+      distance, so convergence is O(log diameter) bucket rounds instead
+      of O(diameter).
+
+    Width: the loop's shuffles are sized to the EDGE COUNT, not the
+    session default (~250k edge rows per task, floor 8, cap at the
+    session conf): a plain 200-partition session otherwise schedules
+    200 near-empty tasks per exchange per iteration and the fixpoint
+    loop becomes pure task-launch latency. At 100 TB the edge count
+    drives the width back up to the cluster default and the clamp is a
+    no-op. The conf is set only while the loop runs and restored
+    after."""
     spark = edges.sparkSession
     default_width = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    width = max(8, min(default_width, n_edges // 250_000 + 1))
+    width = max(8, min(default_width, edges.count() // 250_000 + 1))
 
     spark.conf.set("spark.sql.shuffle.partitions", str(width))
     try:
         by_id = edges.repartition(width, F.col(id_col)).persist()
-        # ONE bucket-stats pass does double duty (r9: the separate
-        # skew probe + iteration-0 aggregation cost a full extra
-        # exchange over the edge frame each — fused here): the count
-        # side is the hot-bucket probe, the min side IS iteration 0's
-        # bucket_min (labels start as the identity, so the first
-        # bucket-min is just min(id) per bucket).
-        #
         # Skew hardening (static across iterations, so probed ONCE):
         # hot buckets — the near-constant-corpus mega bucket — get
         # their members salted over N_SALTS sub-keys; each iteration's
@@ -536,16 +625,7 @@ def cc_label_propagation(
         # bit-identical while the per-iteration members<-label join
         # spreads the hot key over N_SALTS tasks. The salted loop
         # (broadcast barriers, 2-key join, replicate generate) is built
-        # ONLY when the probe finds a hot bucket — the no-skew plan is
-        # byte-for-byte the old one.
-        stats = (
-            by_id.groupBy("bh")
-            .agg(
-                F.count(F.lit(1)).alias("bn"),
-                F.min(id_col).alias("bucket_label"),
-            )
-            .persist()
-        )
+        # ONLY when the probe finds a hot bucket.
         hot = hot_keys(stats, "bh", "bn", HOT_BUCKET_ROWS)
         if hot is not None:
             by_bh = (
@@ -557,9 +637,6 @@ def cc_label_propagation(
         else:
             by_bh = by_id.repartition(width, F.col("bh")).persist()
             join_keys = "bh"
-        # no eager by_bh.count(): iteration 0's action populates the
-        # cache as part of its own job — same work, one fewer driver
-        # round-trip
 
         labels: DataFrame | None = None
         prev_sum = None
@@ -591,22 +668,17 @@ def cc_label_propagation(
             # LOGICAL plan keeps growing — the pointer jump self-joins
             # hop with itself, so the plan TREE doubles every round
             # (shared subtrees are re-printed, not shared, by plan
-            # stringification). At sf0.1 (4 rounds) that is invisible;
-            # the 10x scale replica needed more rounds and the driver
-            # OOM'd inside TreeNode.generateTreeString before the data
-            # was ever large. Checkpointing truncates lineage to a
-            # LogicalRDD each job: plan depth is O(1) in iterations,
-            # which is the property that actually matters at 100 TB
-            # (on a cluster: reliable checkpoint dir, same call shape).
+            # stringification); the 10x scale replica OOM'd the driver
+            # inside TreeNode.generateTreeString before the data was
+            # ever large. Checkpointing truncates lineage to a
+            # LogicalRDD each job: plan depth is O(1) in iterations (on
+            # a cluster: reliable checkpoint dir, same call shape).
             #
             # The fixpoint sum rides the checkpoint action as an
-            # observed metric (r9): one job per round instead of
-            # checkpoint + a separate agg/collect — and the observed
-            # sum is computed on exactly the rows the checkpoint
-            # writes. Equal consecutive sums mean the LAST round
-            # changed nothing (labels are monotone non-increasing, the
-            # sum strictly decreases until the fixpoint), so stopping
-            # on equality is exact.
+            # observed metric: one job per round, computed on exactly
+            # the rows the checkpoint writes. Equal consecutive sums
+            # mean the LAST round changed nothing, so stopping on
+            # equality is exact.
             obs = Observation(f"cc_labsum_{it}")
             new_labels = (
                 cur.observe(
@@ -623,14 +695,12 @@ def cc_label_propagation(
             prev_sum = new_sum
         # labels is checkpointed (LogicalRDD), so the returned frame no
         # longer depends on the edge caches — release them here instead
-        # of leaking them into a long-lived session (the caller's
-        # clearCache() should be a no-op, not the cleanup mechanism)
+        # of leaking them into a long-lived session
         by_id.unpersist()
         by_bh.unpersist()
-        stats.unpersist()
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", str(default_width))
-    return labels.withColumn("is_dup", F.col(id_col) != F.col("label"))
+    return labels
 
 
 SIMHASH_BITS = 63  # 1<<63 overflows a signed long literal

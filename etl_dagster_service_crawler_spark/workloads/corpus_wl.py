@@ -592,11 +592,14 @@ def q_source_mirror_communities(spark: SparkSession, sf_dir: str) -> DataFrame:
     Node ids are the source's rank in the sorted source vocabulary —
     a pure function of the source STRINGS (no format assumption; a
     digitless source name works) computed identically in both engines.
-    Runs the SAME tuned label-propagation loop as the LSH/semantic
-    dedup families (operators/dedup.cc_label_propagation — pair edges
-    as 2-member buckets, per-source self-buckets keep singletons), and
-    like semantic_dedup_clusters the ITERATIVE loop itself value-hash
-    oracle-checks against a DuckDB recursive CTE. Scale: the node set
+    Runs the SAME components operator as the LSH/semantic dedup
+    families (operators/dedup.cc_label_propagation — pair edges as
+    2-member buckets, per-source self-buckets keep singletons), and
+    like semantic_dedup_clusters the labels value-hash oracle-check
+    against a DuckDB recursive CTE. The source vocabulary is far below
+    one driver collect, so that check covers the union-find finish;
+    tests/test_llm_ops.py::test_cc_oracle_queries_identical_on_forced_loop
+    pins the distributed loop to the same rows. Scale: the node set
     is the source vocabulary (tiny by construction; the rank window is
     vocabulary-sized); the expensive part is the segment overlap,
     whose exchanges _source_overlap_pairs documents."""
@@ -637,7 +640,7 @@ def q_source_mirror_communities(spark: SparkSession, sf_dir: str) -> DataFrame:
         "sn", F.concat_ws("|", F.lit("self"), "sn").alias("bh")
     )
     edges = members.unionByName(selfb)
-    labels = cc_label_propagation(edges, "sn", n_edges=1024).select(
+    labels = cc_label_propagation(edges, "sn").select(
         "sn", F.col("label").cast("int").alias("lab")
     )
     rep = srcs.select(F.col("sn").alias("lab"), F.col("source").alias("community_rep"))
@@ -3757,8 +3760,8 @@ SPECS: list[QuerySpec] = [
         _sql_cross_source_dup(),
     ),
     # r9: CC over the source-overlap graph through the shared
-    # label-propagation loop; iterative loop oracle-checked via
-    # recursive CTE (the semantic_dedup_clusters pattern)
+    # components operator; labels oracle-checked via recursive CTE
+    # (the semantic_dedup_clusters pattern)
     QuerySpec(
         "source_mirror_communities",
         q_source_mirror_communities,

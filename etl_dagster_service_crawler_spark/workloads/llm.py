@@ -663,7 +663,8 @@ def q_dedup_minhash_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_dedup_minhash_cc(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Full connected-components near-dup clustering (rows-only:
-    iterative, not SQL-expressible; unit-tested chain merging)."""
+    approximate LSH graph, not SQL-expressible; unit-tested chain
+    merging)."""
     d = load_table(spark, sf_dir, "documents")
     return minhash_cluster_cc(d, "doc_id", "text")
 
@@ -694,13 +695,16 @@ FROM aug
 
 
 def q_dedup_cc_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The connected-components loop under an EXACT oracle: sha2(text)
-    buckets degenerate the LSH graph to the verbatim-duplicate
-    relation, so labels provably equal min(doc_id) per text group
-    (DuckDB-expressible). Verbatim duplicates are injected (every 10th
-    doc re-crawled under a shifted id) so is_dup exercises both
-    branches. This drives the SAME loop — label join, bucket-min,
-    pointer jump, fixpoint — that the approximate 100 TB path runs."""
+    """Connected components (minhash_cluster_cc) under an EXACT oracle:
+    sha2(text) buckets degenerate the LSH graph to the
+    verbatim-duplicate relation, so labels provably equal min(doc_id)
+    per text group (DuckDB-expressible). Verbatim duplicates are
+    injected (every 10th doc re-crawled under a shifted id) so is_dup
+    exercises both branches. At the oracle scales the bucket-star
+    residual fits the driver, so the oracle checks the star contraction
+    and the union-find finish; the distributed loop the approximate
+    100 TB path falls back to is pinned to the same rows by
+    tests/test_llm_ops.py::test_cc_oracle_queries_identical_on_forced_loop."""
     d = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     dups = d.where(F.col("doc_id") % 10 == 0).select(
         (F.col("doc_id") + F.lit(1_000_000)).alias("doc_id"), "text"
@@ -3134,15 +3138,17 @@ def q_pipeline_minhash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     (smallest doc_id; singletons label themselves). This is the
     composed flagship the production rows-only family
     (dedup_minhash_lsh → dedup_minhash_cc) ships — here every stage
-    including the ITERATIVE CC fixpoint is value-hash-checked (the CC
-    loop against a DuckDB recursive CTE, the semantic_dedup_clusters
+    including connected components is value-hash-checked (the labels
+    against a DuckDB recursive CTE, the semantic_dedup_clusters
     pattern), because verified pairs are a pure deterministic function
     of the corpus.
 
     Scale: inherits the verify stage's envelope (Σ|band bucket|² pair
-    work, hash arrays only); the CC loop is the shared tuned
-    label-propagation machinery — two aligned exchanges per round,
-    hot-bucket salting, pointer jump, checkpoint lineage truncation."""
+    work, hash arrays only); connected components is the shared
+    operators/dedup.cc_label_propagation — bucket-star contraction and
+    a driver union-find finish (what the oracle checks at its scales),
+    or the distributed label-propagation loop when the star outgrows
+    one driver collect."""
     pairs = q_dedup_minhash_verify(spark, sf_dir)
     d = load_table(spark, sf_dir, "documents").select("doc_id")
     return minhash_label_members(pairs, d)
@@ -3153,21 +3159,17 @@ def minhash_label_members(pairs: DataFrame, doc_ids: DataFrame) -> DataFrame:
     the full id set — the SHARED tail of the batch pipeline and the
     streaming drain (stream_minhash_dedup): both must keep identical
     keeper semantics for the shared-oracle claim to hold, so the
-    members construction, edge sizing, and label selection live in
+    members construction and the label selection live in
     exactly one place.
 
-    Pairs are persisted+counted (r10 advice): the member frame is
-    2·|pairs| + n rows and |pairs| grows QUADRATICALLY per near-dup
-    cluster, so a corpus-size heuristic undersizes the CC shuffle on
-    dup-heavy corpora; the frame is consumed twice anyway (both member
-    legs). Unpersisted after the CC loop materializes its own cached
-    edge frame (a later eviction merely recomputes)."""
+    Pairs are persisted: both member legs read them in the one job
+    that checkpoints the CC edge frame, and unpersisted once
+    cc_label_propagation returns (its edges are checkpointed by then)."""
     from etl_dagster_service_crawler_spark.operators.dedup import (
         cc_label_propagation,
     )
 
     pairs = pairs.persist()
-    n_pairs = pairs.count()
     bh = F.concat_ws("-", F.col("doc_a"), F.col("doc_b"))
     members = (
         pairs.select(F.col("doc_a").alias("doc_id"), bh.alias("bh"))
@@ -3178,10 +3180,9 @@ def minhash_label_members(pairs: DataFrame, doc_ids: DataFrame) -> DataFrame:
             )
         )
     )
-    n = doc_ids.count()
-    out = cc_label_propagation(
-        members, "doc_id", n_edges=2 * n_pairs + n
-    ).select("doc_id", "label", "is_dup")
+    out = cc_label_propagation(members, "doc_id").select(
+        "doc_id", "label", "is_dup"
+    )
     pairs.unpersist()
     return out
 
@@ -4317,13 +4318,15 @@ def q_semantic_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SemDeDup-shaped semantic clustering: connected components over
     the mutual-kNN graph (knn_graph_mutual), every corpus vector
     labeled with the smallest id in its component (singletons label
-    themselves via per-node self-buckets). Runs the SAME tuned
-    label-propagation loop as the LSH dedup family
-    (operators/dedup.cc_label_propagation: two aligned exchanges per
-    round, pointer jump, localCheckpoint lineage truncation) — and
-    because the mutual graph is a pure function of the corpus, the
-    ITERATIVE algorithm itself is value-hash oracle-checked against a
-    DuckDB recursive CTE, not just its exact-bucket twin. Returns
+    themselves via per-node self-buckets). Runs the SAME components
+    operator as the LSH dedup family
+    (operators/dedup.cc_label_propagation: bucket-star contraction, a
+    driver union-find finish when the star fits one collect, else the
+    distributed label-propagation loop) — and because the mutual graph
+    is a pure function of the corpus, the components are value-hash
+    oracle-checked against a DuckDB recursive CTE, not just an
+    exact-bucket twin. At the oracle scales that check covers the
+    union-find finish. Returns
     (vec_id, label, is_dup). r10: the graph comes from the persisted
     sidecar (mutual_graph_cached; build oracle-checked by
     sink_graph_sidecar) instead of a per-query rebuild."""
@@ -4344,8 +4347,7 @@ def q_semantic_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
     )
-    n = e.count()
-    return cc_label_propagation(members, "vec_id", n_edges=3 * n).select(
+    return cc_label_propagation(members, "vec_id").select(
         "vec_id", "label", "is_dup"
     )
 

@@ -23,6 +23,15 @@ def sf_dir() -> str:
     return SF_DIR
 
 
+def force_cc_loop(monkeypatch) -> None:
+    """Send connected components down the distributed label-propagation
+    loop: a per-row cost past any driver result limit sizes the star
+    residual's collect bound to 0 rows, so any star edge overflows it."""
+    from etl_dagster_service_crawler_spark.operators import dedup
+
+    monkeypatch.setattr(dedup, "CC_STAR_ROW_BYTES", 1 << 62)
+
+
 def reset_ledger(spark, table: str = "run_history") -> None:
     """Drop a ledger table AND its managed warehouse directory. With a
     fresh derby catalog (every pytest session), DROP TABLE alone is a

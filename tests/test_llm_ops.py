@@ -1,5 +1,6 @@
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from etl_dagster_service_crawler_spark.operators.dedup import (
@@ -543,28 +544,159 @@ def test_dual_sink_foreach_batch_writes_both(spark, sf_dir, tmp_path):
     assert side_df.columns == ["event_type"]
 
 
-def test_cc_merges_chains_one_hop_cannot(spark):
-    """A~B and B~C overlap (share LSH buckets) but A and C don't; full
-    connected components must put all three in one cluster."""
-    from pyspark.sql import Row
-
-    from etl_dagster_service_crawler_spark.operators.dedup import (
-        minhash_cluster_cc,
-    )
-
+def _chain_corpus(spark):
+    """A~B and B~C overlap (share LSH buckets) but A and C don't."""
     # jaccard(a, mid) = jaccard(mid, c) ~ 0.94 — above the ~0.84
     # banding threshold; a and c differ at both ends
     mid = " ".join(f"w{i}" for i in range(30))
     a = " ".join(f"w{i}" for i in range(0, 29)) + " onlyA"
     c = " ".join(f"w{i}" for i in range(1, 30)) + " onlyC"
     other = "entirely different text about benchmarks and clusters"
-    df = spark.createDataFrame(
-        [Row(doc_id=1, text=a), Row(doc_id=2, text=mid),
-         Row(doc_id=3, text=c), Row(doc_id=4, text=other)]
+    return _docs(spark, [(1, a), (2, mid), (3, c), (4, other)])
+
+
+def test_cc_merges_chains_one_hop_cannot(spark):
+    """Full connected components must put all three docs of a chain in
+    one cluster."""
+    from etl_dagster_service_crawler_spark.operators.dedup import (
+        minhash_cluster_cc,
     )
+
+    df = _chain_corpus(spark)
     lab = {r["doc_id"]: r["label"] for r in minhash_cluster_cc(df, "doc_id", "text").collect()}
     assert lab[1] == lab[2] == lab[3]
     assert lab[4] != lab[1]
+
+
+def _cc_chain(spark):
+    from etl_dagster_service_crawler_spark.operators.dedup import (
+        minhash_cluster_cc,
+    )
+
+    return minhash_cluster_cc(_chain_corpus(spark), "doc_id", "text")
+
+
+def _cc_hot_bucket(spark):
+    from etl_dagster_service_crawler_spark.operators.dedup import (
+        minhash_cluster_cc,
+    )
+    from tests.test_skew import _skewed_corpus
+
+    return minhash_cluster_cc(_skewed_corpus(spark), "doc_id", "text")
+
+
+def _cc_exact_dups(spark):
+    """exact=True over docs with verbatim re-crawls injected under
+    shifted ids (the dedup_cc_exact shape)."""
+    from etl_dagster_service_crawler_spark.operators.dedup import (
+        minhash_cluster_cc,
+    )
+
+    rows = [(i, f"page {i % 13} body") for i in range(40)]
+    rows += [(1000 + i, t) for i, t in rows if i % 3 == 0]
+    return minhash_cluster_cc(_docs(spark, rows), "doc_id", "text", exact=True)
+
+
+def _cc_int_self_buckets(spark):
+    """Pair edges as 2-member buckets plus one self-bucket per node,
+    int ids (the source_mirror_communities shape)."""
+    from etl_dagster_service_crawler_spark.operators.dedup import (
+        cc_label_propagation,
+    )
+
+    pairs = [(2, 5), (5, 9), (9, 3), (7, 8)]
+    rows = [(n, f"p|{a}|{b}") for a, b in pairs for n in (a, b)]
+    rows += [(n, f"self|{n}") for n in range(12)]
+    edges = spark.createDataFrame(rows, "sn int, bh string")
+    return cc_label_propagation(edges, "sn")
+
+
+def _cc_null_id(spark):
+    """A NULL id and a NULL bucket among the edges: neither names a
+    node nor joins two buckets."""
+    from etl_dagster_service_crawler_spark.operators.dedup import (
+        cc_label_propagation,
+    )
+
+    rows = [(1, "b1"), (2, "b1"), (None, "b1"), (None, "b2"), (3, "b2"),
+            (4, "b2"), (5, None), (6, "b3")]
+    edges = spark.createDataFrame(rows, "doc_id bigint, bh string")
+    return cc_label_propagation(edges, "doc_id")
+
+
+@pytest.mark.parametrize(
+    "build",
+    [_cc_chain, _cc_hot_bucket, _cc_exact_dups, _cc_int_self_buckets, _cc_null_id],
+)
+def test_cc_union_find_matches_forced_loop(spark, monkeypatch, build):
+    """The driver union-find finish and the distributed loop return the
+    same (id, label, is_dup) rows with the same column types."""
+    from tests.conftest import force_cc_loop
+
+    finish = build(spark)
+    force_cc_loop(monkeypatch)
+    loop = build(spark)
+    assert finish.dtypes == loop.dtypes
+    id_col = finish.columns[0]
+    rows = finish.orderBy(id_col).collect()
+    assert rows == loop.orderBy(id_col).collect()
+    assert dict(finish.dtypes)["label"] == dict(finish.dtypes)[id_col]
+    if build is _cc_null_id:
+        assert [tuple(r) for r in rows] == [
+            (1, 1, False), (2, 1, True), (3, 3, False), (4, 3, True),
+            (6, 6, False),
+        ]
+    if build is _cc_int_self_buckets:
+        assert dict(finish.dtypes)["label"] == "int"
+        lab = {r["sn"]: r["label"] for r in rows}
+        assert {lab[n] for n in (2, 3, 5, 9)} == {2}
+        assert lab[7] == lab[8] == 7
+
+
+def test_min_labels_matches_sequential_union_find():
+    """The vectorized driver union-find labels every node of random
+    multigraphs (self-loops, repeated edges, many rounds of hooking)
+    with its component's min id, like a one-edge-at-a-time union-find."""
+    import numpy as np
+
+    from etl_dagster_service_crawler_spark.operators.dedup import _min_labels
+
+    def sequential(a, b):
+        parent: dict[int, int] = {}
+
+        def root(x):
+            while parent.setdefault(x, x) != x:
+                x = parent[x]
+            return x
+
+        for u, v in zip(a.tolist(), b.tolist()):
+            ru, rv = root(u), root(v)
+            parent[max(ru, rv)] = min(ru, rv)
+        return {x: root(x) for x in list(parent) if root(x) != x}
+
+    for seed in range(20):
+        rng = np.random.default_rng(seed)
+        m = int(rng.integers(0, 400))
+        a, b = rng.integers(0, 300, m), rng.integers(0, 300, m)
+        ids, lab = _min_labels(a, b)
+        assert dict(zip(ids.tolist(), lab.tolist())) == sequential(a, b)
+
+
+def test_cc_oracle_queries_identical_on_forced_loop(spark, sf_dir, monkeypatch):
+    """The oracle-checked CC queries run the union-find finish at the
+    test scale; the distributed loop must return the same rows."""
+    from etl_dagster_service_crawler_spark.workloads.corpus_wl import (
+        q_source_mirror_communities,
+    )
+    from etl_dagster_service_crawler_spark.workloads.llm import q_dedup_cc_exact
+    from tests.conftest import force_cc_loop
+
+    queries = (q_dedup_cc_exact, q_source_mirror_communities)
+    finish = [sorted(map(tuple, q(spark, sf_dir).collect())) for q in queries]
+    force_cc_loop(monkeypatch)
+    loop = [sorted(map(tuple, q(spark, sf_dir).collect())) for q in queries]
+    assert finish == loop
+    assert all(finish)
 
 
 def test_image_decode_and_resize_with_pillow():
@@ -788,17 +920,21 @@ def test_embedding_quality_gate_flags_injected_defects(spark, sf_dir):
     assert clean and all(r.usable == 1 for r in clean)
 
 
-def test_cc_plan_depth_constant_across_iterations(spark):
+def test_cc_plan_depth_constant_across_iterations(spark, monkeypatch):
     """Regression for the sf1 driver OOM: the pointer-jump self-join
-    doubled the LOGICAL plan tree every fixpoint round, so plans (and
-    their stringification) grew exponentially with iteration count.
-    localCheckpoint truncates lineage per round — the final plan must
-    be a flat LogicalRDD regardless of how many rounds ran."""
+    of the label-propagation loop doubled the LOGICAL plan tree every
+    fixpoint round, so plans (and their stringification) grew
+    exponentially with iteration count. localCheckpoint truncates
+    lineage per round — the final plan must be a flat LogicalRDD
+    regardless of how many rounds ran."""
     from pyspark.sql import Row
 
     from etl_dagster_service_crawler_spark.operators.dedup import (
         minhash_cluster_cc,
     )
+    from tests.conftest import force_cc_loop
+
+    force_cc_loop(monkeypatch)
 
     # a long duplicate CHAIN: doc i overlaps doc i+1 only, forcing
     # several propagation rounds (pointer jumping halves the distance,

@@ -18,6 +18,7 @@ from etl_dagster_service_crawler_spark.operators.dedup import (
     minhash_cluster_cc,
 )
 from etl_dagster_service_crawler_spark.operators.joins import salt_hot_keys
+from tests.conftest import force_cc_loop
 
 
 def _plan(df) -> str:
@@ -63,10 +64,12 @@ def test_salting_bounds_hot_bucket_task_input(spark):
 
 
 def test_cc_labels_identical_with_salting_active(spark, monkeypatch):
-    """Connected-components output is bit-identical whether the mega
-    bucket is salted (threshold below its size) or not (threshold
-    above) — salting is pure execution strategy."""
+    """Connected-components output of the label-propagation loop is
+    bit-identical whether the mega bucket is salted (threshold below
+    its size) or not (threshold above) — salting is pure execution
+    strategy."""
     df = _skewed_corpus(spark)
+    force_cc_loop(monkeypatch)
     monkeypatch.setattr(dedup, "HOT_BUCKET_ROWS", 10**9)
     plain = [
         tuple(r)

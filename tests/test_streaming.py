@@ -605,7 +605,7 @@ def test_minhash_state_compaction_preserves_semantics(spark, sf_dir):
     )
     labeled = {
         (r["doc_id"], r["label"], r["is_dup"])
-        for r in cc_label_propagation(members, "doc_id", n_edges=2000)
+        for r in cc_label_propagation(members, "doc_id")
         .select("doc_id", "label", "is_dup").collect()
     }
     assert labeled == batch
