@@ -14,6 +14,10 @@ upstream file fails loudly instead of corrupting downstream operators.
 
 from __future__ import annotations
 
+import hashlib
+import os
+import tempfile
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -85,6 +89,45 @@ TABLES: dict[str, list[tuple[str, str]]] = {
         ("label", "int"),
     ],
 }
+
+
+def scratch_dir(sf_dir: str, *parts: str) -> str:
+    """The directory the engine writes for one corpus:
+    `<temp root>/spark_graft/<sha1(sf_dir)[:8]>/<parts...>`. Every sink,
+    stream checkpoint and state dir and corpus-derived sidecar lives
+    here, under a namespace first part (`sinks`, `streams`, `ivf`), so
+    no two writers share a dir. The root is `tempfile.gettempdir()`:
+    setting `TMPDIR` moves every dir at once, which gives each process
+    its own dirs when two run on one corpus."""
+    tag = hashlib.sha1(sf_dir.encode()).hexdigest()[:8]
+    return os.path.join(tempfile.gettempdir(), "spark_graft", tag, *parts)
+
+
+def _source_fingerprint(sf_dir: str, table: str) -> str:
+    """Content fingerprint of a source table for sidecar path keying
+    (r10 advice: the row-count key missed a same-count in-place corpus
+    rewrite). Hashes the parquet file set's (relpath, size, mtime_ns)
+    — pure os.stat, no Spark job, no data scan — so regeneration,
+    append, AND in-place rewrite all change the fingerprint. A
+    byte-identical rewrite only changes mtime, which at worst forces
+    one unnecessary rebuild: staleness errors are impossible, spurious
+    rebuilds are merely cheap. This is the snapshot-id role a table
+    format (Delta/Iceberg) would play; for raw parquet directories,
+    file metadata is the equivalent commit identity."""
+    root = os.path.join(sf_dir, f"{table}.parquet")
+    entries = []
+    if os.path.isdir(root):
+        for dirpath, _dirs, files in os.walk(root):
+            for f in sorted(files):
+                if f.startswith((".", "_")):
+                    continue
+                st = os.stat(os.path.join(dirpath, f))
+                rel = os.path.relpath(os.path.join(dirpath, f), root)
+                entries.append(f"{rel}:{st.st_size}:{st.st_mtime_ns}")
+    else:
+        st = os.stat(root)
+        entries.append(f".:{st.st_size}:{st.st_mtime_ns}")
+    return hashlib.sha1("\n".join(sorted(entries)).encode()).hexdigest()[:12]
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:

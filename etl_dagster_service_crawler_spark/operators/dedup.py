@@ -20,6 +20,7 @@ runs. xxhash64 is Spark's built-in 64-bit hash (JVM-side).
 
 from __future__ import annotations
 
+import itertools
 import random
 from typing import Iterator  # noqa: UP035 - PySpark's pandas_udf
 # type-hint inference resolves string hints in THIS module's globals
@@ -456,11 +457,6 @@ def minhash_cluster_cc(
 # limit.
 CC_STAR_ROW_BYTES = 256
 
-# Round cap of the label-propagation loop: with the pointer jump a
-# round halves the remaining chain distance, and near-dup graphs
-# converge in a handful of rounds (4 at sf0.1).
-CC_MAX_ITERS = 10
-
 
 def cc_label_propagation(edges: DataFrame, id_col: str) -> DataFrame:
     """Connected components over an (id, bh) membership frame: every
@@ -594,8 +590,9 @@ def _cc_loop(edges: DataFrame, stats: DataFrame, id_col: str) -> DataFrame:
     - Convergence is a fixpoint check on `sum(label)`: per-doc labels
       are monotonically non-increasing under min-propagation, so the
       sum is strictly decreasing until the fixpoint and equality means
-      NO label changed. The label sum is accumulated in DECIMAL(38,0)
-      so row-count x id-magnitude cannot overflow.
+      NO label changed, and the loop needs no round cap: a sum of ids
+      cannot decrease forever. The label sum is accumulated in
+      DECIMAL(38,0) so row-count x id-magnitude cannot overflow.
     - Iteration 0 skips the label join entirely: its bucket-min is the
       stats frame's min id per bucket.
     - Each iteration ends with a POINTER JUMP (label <- label's label):
@@ -640,7 +637,7 @@ def _cc_loop(edges: DataFrame, stats: DataFrame, id_col: str) -> DataFrame:
 
         labels: DataFrame | None = None
         prev_sum = None
-        for it in range(CC_MAX_ITERS):
+        for it in itertools.count():
             if labels is None:
                 bucket_min = stats.select("bh", "bucket_label")
             else:

@@ -31,6 +31,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from etl_dagster_service_crawler_spark.functions.vectors import cosine, dot, norm2
+from etl_dagster_service_crawler_spark.io.tables import _source_fingerprint, scratch_dir
 from etl_dagster_service_crawler_spark.operators.block_pairs import block_pair_fan
 from etl_dagster_service_crawler_spark.operators.joins import hot_keys, salt_hot_keys
 
@@ -393,32 +394,20 @@ def srp_neardup_pairs(
 
 
 def ivf_index_dir(sf_dir: str, n_centroids: int = 16) -> str:
-    """Canonical /tmp location of the persisted IVF index for one
-    corpus. Keyed by the SOURCE FILE's identity (path + size + mtime)
-    and the cell count, not just the path: fixture directories get
-    regenerated between driver rounds, and an index keyed by path alone
-    would silently serve assignments for data that no longer exists —
-    unguarded staleness in a rows-only query that no oracle would
-    catch."""
-    import hashlib
-    import os
-
-    f = f"{sf_dir}/embeddings.parquet"
-    # |v3 = the pb-bucketed assignment layout with its _NDIRS marker
-    # (see ivf_index_n_dirs): bumping the layout version makes every
-    # older /tmp index MISS, so readers never touch a marker-less tree
-    try:
-        st = os.stat(f)
-        ident = f"{f}|{st.st_size}|{st.st_mtime_ns}|{n_centroids}|v3"
-    except OSError:
-        ident = f"{f}|missing|{n_centroids}|v3"
-    # root overridable (r15): a driver that wants build-from-cold runs
-    # points this at a session temp dir; the default keeps the
-    # per-corpus amortization the search entries document. The BUILD
-    # cost itself is benched either way via sink_ivf_index, which
-    # force-rebuilds into this location every invocation.
-    root = os.environ.get("SPARK_GRAFT_IVF_ROOT", "/tmp/spark_graft_ivf")
-    return os.path.join(root, hashlib.sha1(ident.encode()).hexdigest()[:12])
+    """Where the persisted IVF index of one corpus lives:
+    `scratch_dir(sf_dir, "ivf", ...)`, keyed by the cell count, the
+    index layout version and the embeddings table's file fingerprint
+    (`_source_fingerprint`: every part file's path, size and mtime).
+    Fixture directories get regenerated between runs, and an index
+    keyed by path alone would silently serve assignments for data that
+    no longer exists. v4 = the pb-bucketed assignment layout with its
+    _NDIRS marker (see ivf_index_n_dirs) under this key; bumping it
+    makes every older index miss, so readers never touch a marker-less
+    tree. `TMPDIR` moves the index with every other engine dir; the
+    build cost is benched either way via sink_ivf_index, which
+    force-rebuilds into this location every invocation."""
+    fp = _source_fingerprint(sf_dir, "embeddings")
+    return scratch_dir(sf_dir, "ivf", f"c{n_centroids}_v4_{fp}")
 
 
 KMEANS_TRAIN_CAP = 100_000

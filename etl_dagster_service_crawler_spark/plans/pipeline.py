@@ -25,7 +25,7 @@ from etl_dagster_service_crawler_spark.functions.cleaning import (
     encode_bool_cn,
 )
 from etl_dagster_service_crawler_spark.functions.compat import dsum, fround
-from etl_dagster_service_crawler_spark.io.tables import load_table
+from etl_dagster_service_crawler_spark.io.tables import load_table, scratch_dir
 
 
 def crawl_shaped_records(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -86,7 +86,6 @@ def crawl_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     Everything between source and sink is codegen'd column expressions;
     the sinks are append-mode JSON dirs (crash-safe, no
     read-merge-rewrite — unlike reference save_to_json test.py:115-120)."""
-    import hashlib
     import shutil
 
     from etl_dagster_service_crawler_spark.functions.cleaning import extract_url_key
@@ -115,8 +114,7 @@ def crawl_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     gated, obs = observe_quality(gated, ["keyword", "title", "company_key"])
 
-    tag = hashlib.sha1(sf_dir.encode()).hexdigest()[:8]
-    base = f"/tmp/spark_graft_sinks/{tag}/crawl_e2e"
+    base = scratch_dir(sf_dir, "sinks", "crawl_e2e")
     shutil.rmtree(base, ignore_errors=True)
     sink_json_append(gated, f"{base}/records")
     import logging
@@ -184,7 +182,6 @@ def pipeline_daily_mart(spark: SparkSession, sf_dir: str) -> DataFrame:
     runs incrementally at 100 TB (late days overwrite their own
     partition only). Exact BIGINT cents and integer sum/sumsq variance
     keep the read-back oracle-exact."""
-    import hashlib
     import shutil
 
     from pyspark.sql import Window
@@ -209,8 +206,7 @@ def pipeline_daily_mart(spark: SparkSession, sf_dir: str) -> DataFrame:
         "amount_sum",
         (F.abs(z) > 2.0).alias("volume_anomaly"),
     )
-    tag = hashlib.sha1(sf_dir.encode()).hexdigest()[:8]
-    out = f"/tmp/spark_graft_sinks/{tag}/daily_mart"
+    out = scratch_dir(sf_dir, "sinks", "daily_mart")
     shutil.rmtree(out, ignore_errors=True)
     mart.write.partitionBy("ingest_date").parquet(out)
     back = spark.read.parquet(out)

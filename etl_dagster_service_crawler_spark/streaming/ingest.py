@@ -19,7 +19,6 @@ the query's own progress.
 
 from __future__ import annotations
 
-import hashlib
 import itertools
 import logging
 import os
@@ -31,6 +30,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming.listener import StreamingQueryProgress
+
+from etl_dagster_service_crawler_spark.io.tables import scratch_dir
 
 log = logging.getLogger("spark_graft.streaming")
 
@@ -62,13 +63,13 @@ def _events_ts_is_nanos(sf_dir: str) -> bool:
 
 def _stream_dir(sf_dir: str, name: str) -> str:
     """Spark's file source requires a DIRECTORY; the fixture is a single
-    read-only file. Stage a symlink dir under /tmp (per sf_dir/table).
+    read-only file. Stage a dir holding one symlink to it at
+    `scratch_dir(sf_dir, "streams", name)`.
 
     lexists, not exists: exists() is False for a BROKEN symlink (e.g.
     the fixture dir was recreated), and os.symlink would then raise
     FileExistsError — a dangling link is unlinked and re-created."""
-    tag = hashlib.sha1(sf_dir.encode()).hexdigest()[:8]
-    d = f"/tmp/spark_graft_streams/{tag}/{name}"
+    d = scratch_dir(sf_dir, "streams", name)
     os.makedirs(d, exist_ok=True)
     link = f"{d}/{name}.parquet"
     target = f"{sf_dir}/{name}.parquet"

@@ -6,7 +6,8 @@
 - error_budget_counter: the reference's per-keyword max_errors=3 abort
   (test.py:129-144) as a running per-key stateful counter via
   applyInPandasWithState: emits one row per key whose error count
-  crossed the budget, with the count at crossing.
+  crossed the budget, with the count at crossing. It is the engine's
+  only error-budget counter (stream_stateful_error_budget runs it).
 
 State scale: both operators key their state (event_id hash range /
 user_id), so state shards across executors with the shuffle; the
@@ -43,49 +44,6 @@ BUDGET_STATE_SCHEMA = T.StructType(
         T.StructField("tripped", T.BooleanType()),
     ]
 )
-
-
-def error_budget_counter_tws(events: DataFrame, max_errors: int = 3) -> DataFrame:
-    """transformWithStateInPandas variant of the error budget (Spark
-    4.x stateful processor API: typed value state, explicit handle
-    lifecycle). Falls back to error_budget_counter on older runtimes —
-    SURVEY §7 risk register."""
-    try:
-        from pyspark.sql.streaming.stateful_processor import (
-            StatefulProcessor,
-            StatefulProcessorHandle,
-        )
-
-        # TWS workers speak protobuf to the state server; without it
-        # the worker crashes at runtime, so probe here and fall back.
-        import google.protobuf.descriptor  # noqa: F401
-    except ImportError:  # Spark < 4 or no protobuf in the worker env
-        return error_budget_counter(events, max_errors)
-
-    class BudgetProcessor(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._state = handle.getValueState("budget", BUDGET_STATE_SCHEMA)
-
-        def handleInputRows(self, key, rows, timerValues):  # noqa: N802
-            count, tripped = (
-                self._state.get() if self._state.exists() else (0, False)
-            )
-            for pdf in rows:
-                count += int((pdf["event_type"] == "error").sum())
-            newly = not tripped and count >= max_errors
-            self._state.update((count, tripped or newly))
-            if newly:
-                yield pd.DataFrame({"user_id": [key[0]], "n_errors": [count]})
-
-        def close(self) -> None:
-            pass
-
-    return events.groupBy("user_id").transformWithStateInPandas(
-        BudgetProcessor(),
-        outputStructType=BUDGET_OUTPUT_SCHEMA,
-        outputMode="Append",
-        timeMode="None",
-    )
 
 
 def error_budget_counter(events: DataFrame, max_errors: int = 3) -> DataFrame:

@@ -932,7 +932,7 @@ def q_sink_ivf_index(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     This makes the index BUILD a first-class benched cost: before it,
     knn_join_ivf / knn_join_auto / similarity_topk_ivf only ever timed
-    the search against a /tmp index persisted across bench runs — the
+    the search against an index persisted across bench runs — the
     train+assign pass appeared in no timed entry. The consumers'
     amortize-across-queries contract is unchanged; this entry is the
     one that pays (and re-pays, every invocation) the build.
@@ -1864,10 +1864,8 @@ def index_sidecar_cached(spark: SparkSession, sf_dir: str) -> str:
     index-bound, docs/SCALE.md r13 table)."""
     import os as _os
 
-    from etl_dagster_service_crawler_spark.workloads.io_wl import (
-        _scratch,
-        _source_fingerprint,
-    )
+    from etl_dagster_service_crawler_spark.io.tables import _source_fingerprint
+    from etl_dagster_service_crawler_spark.workloads.io_wl import _scratch
 
     fp = _source_fingerprint(sf_dir, "documents")
     path = _scratch(sf_dir, f"index_sidecar_cache/v{INDEX_SIDECAR_VER}_{fp}")
@@ -2382,10 +2380,8 @@ _LM_SIDECAR_SCHEMA = "bigram string, c12 bigint, c1 bigint"
 
 
 def _lm_sidecar_path(sf_dir: str) -> str:
-    from etl_dagster_service_crawler_spark.workloads.io_wl import (
-        _scratch,
-        _source_fingerprint,
-    )
+    from etl_dagster_service_crawler_spark.io.tables import _source_fingerprint
+    from etl_dagster_service_crawler_spark.workloads.io_wl import _scratch
 
     fp = _source_fingerprint(sf_dir, "documents")
     return _scratch(sf_dir, f"lm_sidecar/v{LM_SIDECAR_VER}_{fp}")
@@ -3839,8 +3835,8 @@ SPECS: list[QuerySpec] = [
     ),
     QuerySpec("knn_join_ivf", q_knn_join_ivf, None, bench=True),
     # r15: the IVF index build as a first-class benched sink — the
-    # train+assign+write cost was previously amortized into a /tmp
-    # cache and appeared in no timed entry (VERDICT r14 item 2)
+    # train+assign+write cost was previously amortized into a
+    # cached index and appeared in no timed entry (VERDICT r14 item 2)
     QuerySpec("sink_ivf_index", q_sink_ivf_index, None, bench=True),
     # the routed production entry (r7 item 1): IVF when the corpus
     # clusters, quantized block scan when calibration shows IVF

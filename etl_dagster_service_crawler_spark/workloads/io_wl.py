@@ -4,9 +4,9 @@ S1/K1-K3).
 
 Sinks are verified round-trip: write with the engine's sink, read back,
 and oracle-check the read-back against the original parquet — a
-stronger guarantee than rows-only. Sink paths live under /tmp keyed by
-sf_dir so runs are deterministic and the read-only fixtures are never
-touched.
+stronger guarantee than rows-only. Sink paths live under
+`scratch_dir(sf_dir, "sinks", ...)` so runs are deterministic and the
+read-only fixtures are never touched.
 
 At 100 TB: every sink here is an append of NEW files under a commit
 protocol (no read-merge-rewrite like the reference's save_to_json,
@@ -18,7 +18,6 @@ the partition count is bounded by the calendar, not by the data.
 
 from __future__ import annotations
 
-import hashlib
 import os
 import shutil
 
@@ -37,39 +36,11 @@ from etl_dagster_service_crawler_spark.io.sinks import (
     sink_partitioned_parquet,
     sink_versioned,
 )
-from etl_dagster_service_crawler_spark.io.tables import TABLES, load_table
+from etl_dagster_service_crawler_spark.io.tables import TABLES, load_table, scratch_dir
 
 
 def _scratch(sf_dir: str, leaf: str) -> str:
-    tag = hashlib.sha1(sf_dir.encode()).hexdigest()[:8]
-    return f"/tmp/spark_graft_sinks/{tag}/{leaf}"
-
-
-def _source_fingerprint(sf_dir: str, table: str) -> str:
-    """Content fingerprint of a source table for sidecar path keying
-    (r10 advice: the row-count key missed a same-count in-place corpus
-    rewrite). Hashes the parquet file set's (relpath, size, mtime_ns)
-    — pure os.stat, no Spark job, no data scan — so regeneration,
-    append, AND in-place rewrite all change the fingerprint. A
-    byte-identical rewrite only changes mtime, which at worst forces
-    one unnecessary rebuild: staleness errors are impossible, spurious
-    rebuilds are merely cheap. This is the snapshot-id role a table
-    format (Delta/Iceberg) would play; for raw parquet directories,
-    file metadata is the equivalent commit identity."""
-    root = os.path.join(sf_dir, f"{table}.parquet")
-    entries = []
-    if os.path.isdir(root):
-        for dirpath, _dirs, files in os.walk(root):
-            for f in sorted(files):
-                if f.startswith((".", "_")):
-                    continue
-                st = os.stat(os.path.join(dirpath, f))
-                rel = os.path.relpath(os.path.join(dirpath, f), root)
-                entries.append(f"{rel}:{st.st_size}:{st.st_mtime_ns}")
-    else:
-        st = os.stat(root)
-        entries.append(f".:{st.st_size}:{st.st_mtime_ns}")
-    return hashlib.sha1("\n".join(sorted(entries)).encode()).hexdigest()[:12]
+    return scratch_dir(sf_dir, "sinks", leaf)
 
 
 # --- scans -------------------------------------------------------------------

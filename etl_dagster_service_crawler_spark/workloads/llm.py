@@ -9,6 +9,8 @@ ARE oracle-checked, so the approximation layers sit on verified math.
 
 from __future__ import annotations
 
+import functools
+
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -30,6 +32,7 @@ from etl_dagster_service_crawler_spark.functions.vectors import cosine, dot
 from etl_dagster_service_crawler_spark.io.tables import load_table
 from etl_dagster_service_crawler_spark.operators.dedup import (
     dedup_exact,
+    make_affine_min_sig_udf,
     minhash_assign_representatives,
     minhash_cluster_cc,
     minhash_dedup_pairs,
@@ -841,12 +844,13 @@ def q_similarity_topk_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF-bucketed approximate top-k against a PERSISTED index
     (rows-only: recall < 1 by design).
 
-    The index is built once per corpus (atomic rename publish under
-    /tmp, keyed by sf_dir) and reused by every subsequent search — the
-    expensive train+assign pass is amortized, and the search scan reads
-    only the probed buckets' partitions (and, within them, the probed
-    cells' row groups). With nprobe equal to the cell count the search
-    equals cosine_topk_bruteforce row for row, pinned by unit test."""
+    The index is built once per corpus (atomic rename publish at
+    ivf_index_dir, keyed by the corpus files) and reused by every
+    subsequent search — the expensive train+assign pass is amortized,
+    and the search scan reads only the probed buckets' partitions
+    (and, within them, the probed cells' row groups). With nprobe equal
+    to the cell count the search equals cosine_topk_bruteforce row for
+    row, pinned by unit test."""
     import os
 
     from etl_dagster_service_crawler_spark.operators.similarity import (
@@ -2748,6 +2752,17 @@ MINHASH_EXPORT_A = [3, 5, 7, 11, 13, 17, 19, 23]
 MINHASH_EXPORT_B = [17, 29, 41, 53, 67, 79, 97, 113]
 
 
+@functools.cache
+def _export_sig_udf():
+    """The export's signature kernel, built once on first use:
+    sig[k] = min over hv of (a_k*h + b_k) mod P for the MINHASH_EXPORT
+    coefficients, the all-P sentinel for an empty hv. Shared by the
+    signature export and the band keys, so both fold alike."""
+    return make_affine_min_sig_udf(
+        MINHASH_EXPORT_A, MINHASH_EXPORT_B, MINHASH_EXPORT_P
+    )
+
+
 def minhash_hv_frame(docs: DataFrame) -> DataFrame:
     """(doc_id, hv) over an arbitrary documents FRAME (batch or one
     micro-batch) — each document's distinct 3-token shingles hashed
@@ -2798,34 +2813,20 @@ def minhash_bands_frame(docs: DataFrame) -> DataFrame:
 def minhash_bands_from_hv(hv: DataFrame) -> DataFrame:
     """(doc_id, band, band_key) from an (doc_id, hv) frame. r14 shape:
     band keys are sliced straight out of the signature ARRAY — each
-    band j is '-'-joined sig[j*W+1 .. j*W+W] in seed order, built in
-    the same projection that folds the signature and emitted by ONE
-    explode. The previous shape posexploded all 8 (doc, seed) rows and
+    band j is '-'-joined sig[j*W+1 .. j*W+W] in seed order, sliced
+    from the `_export_sig_udf` signature and emitted by ONE explode.
+    The previous shape posexploded all 8 (doc, seed) rows and
     re-grouped them with a collect_list + array_sort aggregate — a
     full corpus-keyed exchange spent re-assembling adjacency the array
     already had. Output rows are bit-identical (oracle:
     SQL_MINHASH_BAND_EXPORT); one exchange removed from every
     consumer (band export, candidate verify, streaming ingest)."""
-    p = F.lit(MINHASH_EXPORT_P)
-    sig = F.aggregate(
-        "hv",
-        F.array_repeat(p.cast("bigint"), MINHASH_EXPORT_SEEDS),
-        lambda acc, h: F.zip_with(
-            acc,
-            F.array(
-                *[
-                    (MINHASH_EXPORT_A[i] * h + MINHASH_EXPORT_B[i]) % p
-                    for i in range(MINHASH_EXPORT_SEEDS)
-                ]
-            ),
-            lambda a, b: F.least(a, b),
-        ),
-    )
+    sig = _export_sig_udf()("hv")
     w = MINHASH_EXPORT_BAND_ROWS
     n_bands = MINHASH_EXPORT_SEEDS // w
-    # sig is materialized as a column in the Project BELOW the Generate,
-    # so the interpreted HOF fold runs once per doc even though the
-    # band structs reference it 2*n_bands times.
+    # sig is materialized as a column BELOW the Generate, so the
+    # signature kernel runs once per doc even though the band structs
+    # reference it 2*n_bands times.
     with_sig = hv.select("doc_id", sig.alias("__sig"))
     bands = F.array(
         *[
@@ -2859,27 +2860,13 @@ def q_minhash_signature_export(spark: SparkSession, sf_dir: str) -> DataFrame:
     approximate family beyond the exact-mode twins.
 
     Each shingle is md5'd ONCE; the k components are integer affine
-    maps of that hash folded in a single pass carrying all k running
-    minima (the production path's one-fold shape; the md5-per-seed
-    formulation re-hashed k times — measured 8x the cost). Short docs
-    (< 3 tokens) export the sentinel P, outside the [0, P) range.
+    maps of that hash, minimised per seed in one vectorized pass
+    (`_export_sig_udf`, the kernel the band keys use too; the
+    md5-per-seed formulation re-hashed k times — measured 8x the
+    cost). Short docs (< 3 tokens) export the sentinel P, outside the [0, P) range.
     Scale: one shuffle-free projection per doc."""
     hv = _minhash_shingle_hv(spark, sf_dir)
-    p = F.lit(MINHASH_EXPORT_P)
-    sig = F.aggregate(
-        "hv",
-        F.array_repeat(p.cast("bigint"), MINHASH_EXPORT_SEEDS),
-        lambda acc, h: F.zip_with(
-            acc,
-            F.array(
-                *[
-                    (MINHASH_EXPORT_A[i] * h + MINHASH_EXPORT_B[i]) % p
-                    for i in range(MINHASH_EXPORT_SEEDS)
-                ]
-            ),
-            lambda a, b: F.least(a, b),
-        ),
-    )
+    sig = _export_sig_udf()("hv")
     return hv.select("doc_id", F.posexplode(sig).alias("seed", "sig")).select(
         "doc_id", F.col("seed").cast("int").alias("seed"), F.col("sig").cast("bigint").alias("sig")
     )
@@ -3937,10 +3924,8 @@ _GRAPH_SIDECAR_SCHEMA = "src bigint, dst bigint, d bigint"
 
 
 def _graph_sidecar_path(sf_dir: str) -> str:
-    from etl_dagster_service_crawler_spark.workloads.io_wl import (
-        _scratch,
-        _source_fingerprint,
-    )
+    from etl_dagster_service_crawler_spark.io.tables import _source_fingerprint
+    from etl_dagster_service_crawler_spark.workloads.io_wl import _scratch
 
     fp = _source_fingerprint(sf_dir, "embeddings")
     return _scratch(
@@ -3967,7 +3952,7 @@ def mutual_graph_cached(
     pins the schema so consumers see identical types either way. The
     path fingerprint carries the graph parameters AND a file-metadata
     fingerprint of the embeddings table (size+mtime of every parquet
-    part, io_wl._source_fingerprint), so an older configuration's
+    part, io.tables._source_fingerprint), so an older configuration's
     sidecar, a regenerated/appended corpus, AND a same-count in-place
     rewrite (the residual the r10 row-count key missed) are all
     invisible. Consumers' results are bit-identical with and without

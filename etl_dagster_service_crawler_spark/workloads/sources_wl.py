@@ -10,12 +10,12 @@ fake content.
 
 from __future__ import annotations
 
-import hashlib
 import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 
 from etl_dagster_service_crawler_spark.core import QuerySpec
+from etl_dagster_service_crawler_spark.io.tables import scratch_dir
 from etl_dagster_service_crawler_spark.sources.crawl_source import (
     CRAWL_SCHEMA,
     DEFAULT_KEYWORDS,
@@ -53,8 +53,7 @@ def q_source_crawl_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     reference, definitions.py:35); the checkpointed file sink makes the
     union of runs exactly-once. Drained result == the batch scan."""
     register(spark)
-    tag = hashlib.sha1(sf_dir.encode()).hexdigest()[:8]
-    base = f"/tmp/spark_graft_streams/{tag}/crawl"
+    base = scratch_dir(sf_dir, "streams", "crawl")
     shutil.rmtree(base, ignore_errors=True)
     out_dir, ckpt = f"{base}/out", f"{base}/ckpt"
     for _ in range(DEFAULT_PAGES + 1):

@@ -14,6 +14,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from etl_dagster_service_crawler_spark.core import QuerySpec
+from etl_dagster_service_crawler_spark.io.tables import scratch_dir
 from etl_dagster_service_crawler_spark.streaming.ingest import (
     run_available_now,
     run_stream,
@@ -197,13 +198,11 @@ def q_stream_dual_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     """K1+K3 in streaming: one foreachBatch writes the full records AND
     the side projection per micro-batch (reference test.py:577-580);
     the read-back of the main sink oracle-checks the whole path."""
-    import hashlib
     import shutil
 
     from etl_dagster_service_crawler_spark.io.sinks import dual_sink_foreach_batch
 
-    tag = hashlib.sha1(sf_dir.encode()).hexdigest()[:8]
-    base = f"/tmp/spark_graft_streams/{tag}/dual_sink"
+    base = scratch_dir(sf_dir, "streams", "dual_sink")
     shutil.rmtree(base, ignore_errors=True)
     main, side = f"{base}/main", f"{base}/side"
     s = stream_events(spark, sf_dir).select("event_id", "event_type")
@@ -226,15 +225,13 @@ def q_stream_rollup_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregate — the oracle is the same SQL as stream_window_tumbling.
     State lives in the rollup table (bounded by window keyspace), not
     the state store."""
-    import hashlib
     import shutil
 
     from etl_dagster_service_crawler_spark.functions.compat import fround
     from etl_dagster_service_crawler_spark.io.tables import load_table
     from etl_dagster_service_crawler_spark.streaming.rollup import rollup_merge_batch
 
-    tag = hashlib.sha1(sf_dir.encode()).hexdigest()[:8]
-    base = f"/tmp/spark_graft_streams/{tag}/rollup"
+    base = scratch_dir(sf_dir, "streams", "rollup")
     shutil.rmtree(base, ignore_errors=True)
     ev = load_table(spark, sf_dir, "events").select(
         "event_id", "ts", "event_type", "value"
@@ -356,7 +353,6 @@ def q_stream_ivf_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     centroids are k-means output, not SQL-expressible); the row-level
     equivalence streamed==batch-built is pinned by unit test
     (tests/test_streaming.py)."""
-    import hashlib
     import os
     import shutil
 
@@ -369,14 +365,13 @@ def q_stream_ivf_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
         write_assignments,
     )
 
-    tag = hashlib.sha1(sf_dir.encode()).hexdigest()[:8]
     index_dir = ivf_index_dir(sf_dir, n_centroids=16)
     emb = load_table(spark, sf_dir, "embeddings")
     if not os.path.isdir(index_dir):
         ivf_build(emb, index_dir, n_centroids=16)
     centroids = spark.read.parquet(f"{index_dir}/centroids")
 
-    base = f"/tmp/spark_graft_streams/{tag}/ivf_ingest"
+    base = scratch_dir(sf_dir, "streams", "ivf_ingest")
     shutil.rmtree(base, ignore_errors=True)
     emb.repartition(4, "vec_id").write.parquet(f"{base}/in")
     stream = (
@@ -483,14 +478,12 @@ def q_stream_cdc_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: per-batch work is batch-sized + state-sized (key-spaced
     ceiling, never event-count); idempotent per epoch (at-least-once
     foreachBatch re-delivery is detected and skipped)."""
-    import hashlib
     import shutil
 
     from etl_dagster_service_crawler_spark.io.tables import load_table
     from etl_dagster_service_crawler_spark.streaming.cdc import cdc_apply_batch
 
-    tag = hashlib.sha1(sf_dir.encode()).hexdigest()[:8]
-    base = f"/tmp/spark_graft_streams/{tag}/cdc"
+    base = scratch_dir(sf_dir, "streams", "cdc")
     shutil.rmtree(base, ignore_errors=True)
     o = load_table(spark, sf_dir, "orders")
     cents = F.floor(F.col("o_totalprice") * F.lit(1e2) + F.lit(0.5)).cast("bigint")
@@ -550,13 +543,11 @@ def q_stream_quarantine_router(spark: SparkSession, sf_dir: str) -> DataFrame:
     form. The final summary over BOTH sinks must hash-equal the batch
     quarantine oracle — proving no row is lost or double-routed across
     batch boundaries."""
-    import hashlib
     import shutil
 
     from etl_dagster_service_crawler_spark.io.tables import load_table
 
-    tag = hashlib.sha1(sf_dir.encode()).hexdigest()[:8]
-    base = f"/tmp/spark_graft_streams/{tag}/quarantine"
+    base = scratch_dir(sf_dir, "streams", "quarantine")
     shutil.rmtree(base, ignore_errors=True)
     docs = load_table(spark, sf_dir, "documents")
     j = F.to_json(F.struct("doc_id", "source", "n_chars"))
@@ -770,11 +761,9 @@ def q_stream_crawl_record(spark: SparkSession, sf_dir: str) -> DataFrame:
     rescans of landed records; exactly the hourly-crawl-drop profile.
     Retry lives in the http_enrich transport contract, same as
     batch."""
-    import hashlib
     import shutil
 
-    tag = hashlib.sha1(sf_dir.encode()).hexdigest()[:8]
-    base = f"/tmp/spark_graft_streams/{tag}/crawl_record"
+    base = scratch_dir(sf_dir, "streams", "crawl_record")
     shutil.rmtree(base, ignore_errors=True)
     s = stream_documents(spark, sf_dir)
     run_stream(
@@ -819,7 +808,6 @@ def q_stream_minhash_dedup(
     Scale: per-batch cost is |batch| x band probes + candidate hv
     joins; state is append-only per epoch (no corpus-sized rewrite);
     the final CC runs over the near-dup-pair table, not the corpus."""
-    import hashlib
     import shutil
 
     from etl_dagster_service_crawler_spark.io.tables import load_table
@@ -832,8 +820,7 @@ def q_stream_minhash_dedup(
         minhash_label_members,
     )
 
-    tag = hashlib.sha1(sf_dir.encode()).hexdigest()[:8]
-    base = f"/tmp/spark_graft_streams/{tag}/minhash_dedup"
+    base = scratch_dir(sf_dir, "streams", "minhash_dedup")
     shutil.rmtree(base, ignore_errors=True)
     docs = load_table(spark, sf_dir, "documents")
     # n_files controls the micro-batch slicing; the result is
@@ -886,7 +873,6 @@ def q_stream_pack_sequences(
     a continuous trainer-feed never rescans packed history; the
     token-conservation and boundary semantics are the batch entry's,
     pinned by the shared value hash."""
-    import hashlib
     import os
     import shutil
 
@@ -896,8 +882,7 @@ def q_stream_pack_sequences(
         read_packed,
     )
 
-    tag = hashlib.sha1(sf_dir.encode()).hexdigest()[:8]
-    base = f"/tmp/spark_graft_streams/{tag}/pack_seq"
+    base = scratch_dir(sf_dir, "streams", "pack_seq")
     shutil.rmtree(base, ignore_errors=True)
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     write_ordered_slices(docs, f"{base}/in", n_files)

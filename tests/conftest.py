@@ -23,6 +23,17 @@ def sf_dir() -> str:
     return SF_DIR
 
 
+@pytest.fixture
+def scratch_root(tmp_path, monkeypatch):
+    """Point the temp root that every engine dir sits under
+    (`tempfile.gettempdir()`, read by io.tables.scratch_dir) at
+    tmp_path for one test."""
+    import tempfile
+
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    return tmp_path
+
+
 def force_cc_loop(monkeypatch) -> None:
     """Send connected components down the distributed label-propagation
     loop: a per-row cost past any driver result limit sizes the star

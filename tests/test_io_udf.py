@@ -420,9 +420,7 @@ def test_source_fingerprint_catches_all_staleness_classes(tmp_path):
     import shutil
     import time
 
-    from etl_dagster_service_crawler_spark.workloads.io_wl import (
-        _source_fingerprint,
-    )
+    from etl_dagster_service_crawler_spark.io.tables import _source_fingerprint
 
     src = "/root/testdata/sf0.001/documents.parquet"
     sf = tmp_path / "sf"
@@ -474,6 +472,62 @@ def test_lm_sidecar_path_changes_on_corpus_rewrite(tmp_path):
     time.sleep(0.01)
     dst.write_bytes(data)  # same-count, same-size in-place rewrite
     assert _lm_sidecar_path(str(sf)) != p0
+
+
+def test_engine_dirs_sit_under_the_temp_root(spark, sf_dir, scratch_root):
+    """Sinks, stream dirs and the IVF index all live under the temp
+    root, so pointing TMPDIR elsewhere moves every dir the engine
+    writes; a sink and a stream that share a leaf name do not share a
+    dir."""
+    import os
+    from urllib.parse import urlparse
+
+    from etl_dagster_service_crawler_spark.io.tables import scratch_dir
+    from etl_dagster_service_crawler_spark.operators.similarity import (
+        ivf_index_dir,
+    )
+    from etl_dagster_service_crawler_spark.workloads.io_wl import _scratch
+    from etl_dagster_service_crawler_spark.workloads.streaming_wl import (
+        q_stream_dual_sink,
+    )
+
+    root = f"{scratch_root}{os.sep}"
+    files = (
+        q_sink_json_append(spark, sf_dir).inputFiles()
+        + q_stream_dual_sink(spark, sf_dir).inputFiles()
+    )
+    assert files
+    for f in files:
+        assert urlparse(f).path.startswith(root), f
+        assert "spark_graft_" not in f
+    assert os.path.islink(
+        scratch_dir(sf_dir, "streams", "events", "events.parquet")
+    )
+    assert ivf_index_dir(sf_dir).startswith(root)
+    assert _scratch(sf_dir, "crawl_record") != scratch_dir(
+        sf_dir, "streams", "crawl_record"
+    )
+
+
+def test_ivf_index_dir_changes_on_in_place_part_rewrite(tmp_path):
+    """Rewriting one part file of a directory-of-parts embeddings table
+    in place (same name, same size) gives a new index dir: the
+    directory's own stat does not change, its parts' fingerprint does."""
+    import os
+
+    from etl_dagster_service_crawler_spark.operators.similarity import (
+        ivf_index_dir,
+    )
+
+    parts = tmp_path / "sf" / "embeddings.parquet"
+    parts.mkdir(parents=True)
+    part = parts / "part-0000.parquet"
+    part.write_bytes(b"a" * 64)
+    os.utime(part, ns=(1_000_000_000, 1_000_000_000))
+    before = ivf_index_dir(str(tmp_path / "sf"))
+    part.write_bytes(b"b" * 64)
+    os.utime(part, ns=(2_000_000_000, 2_000_000_000))
+    assert ivf_index_dir(str(tmp_path / "sf")) != before
 
 
 def test_pq_sidecar_apply_semantics_and_partition_pruning(spark, sf_dir):

@@ -341,9 +341,7 @@ def test_ivf_persisted_index_search_is_exact_and_prunes_partitions(
 
 
 
-def test_sink_ivf_index_force_rebuild_and_layout(
-    spark, sf_dir, tmp_path, monkeypatch
-):
+def test_sink_ivf_index_force_rebuild_and_layout(spark, sf_dir, scratch_root):
     """The r15 benched build entry: force-rebuilds into the canonical
     index dir every invocation (old tree swapped out whole, no stage/
     old residue), returns the read-back (vec_id, cid, pb) with one row
@@ -352,6 +350,7 @@ def test_sink_ivf_index_force_rebuild_and_layout(
     -> deterministic rebuild)."""
     import os
 
+    from etl_dagster_service_crawler_spark.io.tables import scratch_dir
     from etl_dagster_service_crawler_spark.operators.similarity import (
         ivf_search,
     )
@@ -359,16 +358,15 @@ def test_sink_ivf_index_force_rebuild_and_layout(
         q_sink_ivf_index,
     )
 
-    monkeypatch.setenv("SPARK_GRAFT_IVF_ROOT", str(tmp_path / "ivf_root"))
     out1 = q_sink_ivf_index(spark, sf_dir).collect()
     n = spark.read.parquet(f"{sf_dir}/embeddings.parquet").count()
     assert len(out1) == n
-    root = tmp_path / "ivf_root"
+    root = scratch_dir(sf_dir, "ivf")
     dirs = os.listdir(root)
     assert len(dirs) == 1 and not any(
         "stage" in d or "old" in d for d in dirs
     )
-    index_dir = str(root / dirs[0])
+    index_dir = os.path.join(root, dirs[0])
     with open(os.path.join(index_dir, "_NDIRS")) as fh:
         nd = int(fh.read().strip())
     assert all(r["pb"] == r["cid"] % nd for r in out1)
@@ -697,6 +695,26 @@ def test_cc_oracle_queries_identical_on_forced_loop(spark, sf_dir, monkeypatch):
     loop = [sorted(map(tuple, q(spark, sf_dir).collect())) for q in queries]
     assert finish == loop
     assert all(finish)
+
+
+def test_cc_loop_labels_long_chain_to_fixpoint(spark, monkeypatch):
+    """The distributed loop runs until no label changes, however many
+    rounds that takes: an increasing-id chain of 2,100 members, one
+    2-member bucket per link, still has labels above 0 after 10 rounds
+    (they reach 0 in round 11 and round 12 sees the sum repeat), and
+    every member must end labelled with the chain's min id."""
+    from etl_dagster_service_crawler_spark.operators.dedup import (
+        cc_label_propagation,
+    )
+    from tests.conftest import force_cc_loop
+
+    n = 2100
+    rows = [(i + d, f"link{i}") for i in range(n - 1) for d in (0, 1)]
+    edges = spark.createDataFrame(rows, "doc_id bigint, bh string")
+    force_cc_loop(monkeypatch)
+    labels = cc_label_propagation(edges, "doc_id").collect()
+    assert len(labels) == n
+    assert {r["label"] for r in labels} == {0}
 
 
 def test_image_decode_and_resize_with_pillow():

@@ -6,7 +6,7 @@ import tempfile
 from pyspark.sql import functions as F
 
 from etl_dagster_service_crawler_spark.io.sinks import dual_sink_foreach_batch
-from etl_dagster_service_crawler_spark.io.tables import load_table
+from etl_dagster_service_crawler_spark.io.tables import load_table, scratch_dir
 from etl_dagster_service_crawler_spark.streaming.ingest import (
     run_available_now,
     stream_events,
@@ -97,27 +97,6 @@ def test_processing_time_trigger_drains_source(spark, sf_dir):
     assert out.count() > 0
 
 
-def test_error_budget_tws_variant_matches(spark, sf_dir):
-    """transformWithStateInPandas where the runtime supports it,
-    applyInPandasWithState fallback otherwise — same rows either way."""
-    from etl_dagster_service_crawler_spark.streaming.ingest import (
-        run_available_now,
-        stream_events,
-    )
-    from etl_dagster_service_crawler_spark.streaming.state import (
-        error_budget_counter,
-        error_budget_counter_tws,
-    )
-
-    a = run_available_now(
-        error_budget_counter(stream_events(spark, sf_dir), 3), "append"
-    )
-    b = run_available_now(
-        error_budget_counter_tws(stream_events(spark, sf_dir), 3), "append"
-    )
-    assert {tuple(r) for r in a.collect()} == {tuple(r) for r in b.collect()}
-
-
 def test_rollup_merge_is_idempotent_per_epoch(spark, tmp_path):
     """foreachBatch is at-least-once: a re-delivered epoch (restart
     after publish, before checkpoint commit) must not double-add."""
@@ -176,7 +155,6 @@ def test_stream_ivf_ingest_matches_batch_assignment(spark, sf_dir):
     """The streamed, micro-batch-appended index must contain EXACTLY
     the rows a batch assignment against the same frozen centroids
     produces — ingest order and batch slicing must not matter."""
-    import hashlib
 
     from pyspark.sql import functions as F
 
@@ -196,7 +174,6 @@ def test_stream_ivf_ingest_matches_batch_assignment(spark, sf_dir):
         ivf_index_dir,
     )
 
-    tag = hashlib.sha1(sf_dir.encode()).hexdigest()[:8]
     centroids = spark.read.parquet(f"{ivf_index_dir(sf_dir)}/centroids")
     emb = load_table(spark, sf_dir, "embeddings")
     batch = {
@@ -209,7 +186,7 @@ def test_stream_ivf_ingest_matches_batch_assignment(spark, sf_dir):
     assert counts == batch
     # and row-level: streamed index ids per cell == batch ids per cell
     streamed = spark.read.parquet(
-        f"/tmp/spark_graft_streams/{tag}/ivf_ingest/assignments"
+        scratch_dir(sf_dir, "streams", "ivf_ingest", "assignments")
     ).select("vec_id", "cid")
     diff = (
         streamed.exceptAll(assign_cells(emb, centroids).select("vec_id", "cid"))
@@ -312,7 +289,6 @@ def test_cdc_stream_restart_is_noop(spark, sf_dir):
     checkpoint with no new input files must not change the state
     table (checkpoint offsets + epoch markers make the restart a
     no-op, the crash-recovery contract)."""
-    import hashlib
 
     from etl_dagster_service_crawler_spark.workloads.streaming_wl import (
         q_stream_cdc_apply,
@@ -323,8 +299,7 @@ def test_cdc_stream_restart_is_noop(spark, sf_dir):
     # from a FRESH checkpoint (the op rmtree's its base) — to test the
     # restart path, drive the stream again manually on the surviving
     # state with the same checkpoint
-    tag = hashlib.sha1(sf_dir.encode()).hexdigest()[:8]
-    base = f"/tmp/spark_graft_streams/{tag}/cdc"
+    base = scratch_dir(sf_dir, "streams", "cdc")
     from etl_dagster_service_crawler_spark.streaming.cdc import cdc_apply_batch
 
     stream = (
@@ -445,7 +420,6 @@ def test_stream_minhash_ingest_epoch_redelivery_idempotent(spark, sf_dir):
     epoch must leave the state byte-stable (same pair set, same band
     index rows), and a restart with the same checkpoint must add no
     epochs."""
-    import hashlib
 
     from etl_dagster_service_crawler_spark.streaming.minhash import (
         _read_state,
@@ -462,8 +436,7 @@ def test_stream_minhash_ingest_epoch_redelivery_idempotent(spark, sf_dir):
 
     # drain once (rebuilds state from scratch under /tmp)
     q_stream_minhash_dedup(spark, sf_dir).collect()
-    tag = hashlib.sha1(sf_dir.encode()).hexdigest()[:8]
-    base = f"/tmp/spark_graft_streams/{tag}/minhash_dedup"
+    base = scratch_dir(sf_dir, "streams", "minhash_dedup")
     state = f"{base}/state"
 
     pairs_before = {
@@ -523,7 +496,6 @@ def test_minhash_state_compaction_preserves_semantics(spark, sf_dir):
     leave the pair set and the band index IDENTICAL, and a further
     ingest over the compacted state must behave exactly like one over
     the epoch chain (new candidates still probe the full index)."""
-    import hashlib
     import os
 
     from etl_dagster_service_crawler_spark.streaming.minhash import (
@@ -542,8 +514,7 @@ def test_minhash_state_compaction_preserves_semantics(spark, sf_dir):
     )
 
     q_stream_minhash_dedup(spark, sf_dir).collect()
-    tag = hashlib.sha1(sf_dir.encode()).hexdigest()[:8]
-    base = f"/tmp/spark_graft_streams/{tag}/minhash_dedup"
+    base = scratch_dir(sf_dir, "streams", "minhash_dedup")
     state = f"{base}/state"
 
     pairs_before = {
@@ -615,7 +586,6 @@ def test_minhash_compaction_second_generation(spark, sf_dir):
     """Compacting twice: the second pass folds epoch=-1 plus any newer
     epochs into epoch=-2 without loss (the old generation is never
     deleted before the new one exists)."""
-    import hashlib
     import os
 
     from etl_dagster_service_crawler_spark.streaming.minhash import (
@@ -631,8 +601,7 @@ def test_minhash_compaction_second_generation(spark, sf_dir):
     )
 
     q_stream_minhash_dedup(spark, sf_dir).collect()
-    tag = hashlib.sha1(sf_dir.encode()).hexdigest()[:8]
-    base = f"/tmp/spark_graft_streams/{tag}/minhash_dedup"
+    base = scratch_dir(sf_dir, "streams", "minhash_dedup")
     state = f"{base}/state"
     want = {
         (r["doc_a"], r["doc_b"]) for r in read_verified_pairs(spark, state).collect()
@@ -678,7 +647,6 @@ def test_stream_minhash_survives_mid_drain_stop_and_resume(spark, sf_dir):
     drain must complete the state exactly — final labeling equals the
     batch pipeline — proving checkpoint + epoch-dir idempotence
     compose under a real interruption, not just a clean restart."""
-    import hashlib
     import os
     import shutil
     import time
@@ -694,8 +662,7 @@ def test_stream_minhash_survives_mid_drain_stop_and_resume(spark, sf_dir):
         q_pipeline_minhash_dedup,
     )
 
-    tag = hashlib.sha1(sf_dir.encode()).hexdigest()[:8]
-    base = f"/tmp/spark_graft_streams/{tag}/minhash_chaos"
+    base = scratch_dir(sf_dir, "streams", "minhash_chaos")
     shutil.rmtree(base, ignore_errors=True)
     docs = load_table(spark, sf_dir, "documents")
     docs.repartition(4, "doc_id").write.parquet(f"{base}/in")
@@ -780,7 +747,6 @@ def test_stream_pack_survives_mid_drain_stop_and_resume(spark, sf_dir):
     compose across the interruption because epoch facts of completed
     epochs are immutable and the interrupted epoch re-delivers
     idempotently."""
-    import hashlib
     import os
     import shutil
     import time
@@ -797,8 +763,7 @@ def test_stream_pack_survives_mid_drain_stop_and_resume(spark, sf_dir):
         write_ordered_slices,
     )
 
-    tag = hashlib.sha1(sf_dir.encode()).hexdigest()[:8]
-    base = f"/tmp/spark_graft_streams/{tag}/pack_chaos"
+    base = scratch_dir(sf_dir, "streams", "pack_chaos")
     shutil.rmtree(base, ignore_errors=True)
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     write_ordered_slices(docs, f"{base}/in", 4)
@@ -848,7 +813,6 @@ def test_pack_ingest_rejects_misordered_manifest(spark, sf_dir):
     of order (backfilled slice, mis-stamped mtime) must fail the epoch
     LOUDLY before any state lands — never silently pack offsets that
     diverge from the batch oracle."""
-    import hashlib
     import os
     import shutil
 
@@ -863,8 +827,7 @@ def test_pack_ingest_rejects_misordered_manifest(spark, sf_dir):
         write_ordered_slices,
     )
 
-    tag = hashlib.sha1(sf_dir.encode()).hexdigest()[:8]
-    base = f"/tmp/spark_graft_streams/{tag}/pack_misorder"
+    base = scratch_dir(sf_dir, "streams", "pack_misorder")
     shutil.rmtree(base, ignore_errors=True)
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     cut = docs.agg(F.expr("max(doc_id) * 3 DIV 4")).first()[0]
@@ -901,7 +864,6 @@ def test_pack_state_compaction_and_resume(spark, sf_dir):
     — a second tranche ingested AFTER the compaction packs exactly
     like the single batch query over the whole corpus, and the fact
     read is bounded by generations, not epochs."""
-    import hashlib
     import os
     import shutil
 
@@ -920,8 +882,7 @@ def test_pack_state_compaction_and_resume(spark, sf_dir):
         write_ordered_slices,
     )
 
-    tag = hashlib.sha1(sf_dir.encode()).hexdigest()[:8]
-    base = f"/tmp/spark_graft_streams/{tag}/pack_compact"
+    base = scratch_dir(sf_dir, "streams", "pack_compact")
     shutil.rmtree(base, ignore_errors=True)
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     cut = docs.agg(F.expr("max(doc_id) * 3 DIV 4")).first()[0]
@@ -1011,7 +972,6 @@ def test_stream_crawl_record_matches_batch_and_redelivery_idempotent(
     shared oracle), BOTH dual sinks land per epoch, and re-delivering
     an epoch (foreachBatch is at-least-once) rewrites identical bytes
     — state after a duplicate delivery is value-identical."""
-    import hashlib
     import os
 
     from etl_dagster_service_crawler_spark.io.tables import load_table
@@ -1033,8 +993,7 @@ def test_stream_crawl_record_matches_batch_and_redelivery_idempotent(
     }
     assert got == want and len(got) > 0
 
-    tag = hashlib.sha1(sf_dir.encode()).hexdigest()[:8]
-    out = f"/tmp/spark_graft_streams/{tag}/crawl_record/out"
+    out = scratch_dir(sf_dir, "streams", "crawl_record", "out")
     # both of the reference's sinks landed, one dir per epoch
     job_eps = sorted(os.listdir(f"{out}/job_list"))
     com_eps = sorted(os.listdir(f"{out}/com_url"))
@@ -1088,7 +1047,6 @@ def test_compaction_crash_window_never_doubles_sum_consumers(spark, sf_dir):
     exact through the crash window, a resumed ingest packs correctly,
     and the NEXT compaction folds the leftovers away (transitively,
     across a second interrupted generation)."""
-    import hashlib
     import os
     import shutil
 
@@ -1109,8 +1067,7 @@ def test_compaction_crash_window_never_doubles_sum_consumers(spark, sf_dir):
         write_ordered_slices,
     )
 
-    tag = hashlib.sha1(sf_dir.encode()).hexdigest()[:8]
-    base = f"/tmp/spark_graft_streams/{tag}/pack_crashwin"
+    base = scratch_dir(sf_dir, "streams", "pack_crashwin")
     shutil.rmtree(base, ignore_errors=True)
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     cut = docs.agg(F.expr("max(doc_id) * 3 DIV 4")).first()[0]
@@ -1183,7 +1140,6 @@ def test_pack_redelivery_content_mismatch_fails_loudly(spark, sf_dir):
     DIFFERENT doc range (checkpoint/source disagreement) must refuse to
     overwrite committed state, while a faithful re-delivery stays
     idempotent."""
-    import hashlib
     import shutil
 
     import pytest
@@ -1193,8 +1149,7 @@ def test_pack_redelivery_content_mismatch_fails_loudly(spark, sf_dir):
         pack_ingest,
     )
 
-    tag = hashlib.sha1(sf_dir.encode()).hexdigest()[:8]
-    base = f"/tmp/spark_graft_streams/{tag}/pack_redeliver"
+    base = scratch_dir(sf_dir, "streams", "pack_redeliver")
     shutil.rmtree(base, ignore_errors=True)
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     cut = docs.agg(F.expr("max(doc_id) DIV 2")).first()[0]

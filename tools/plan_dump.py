@@ -3,9 +3,14 @@
 Two dumps compare with `diff -r`: a change that must not alter any
 executed plan (a refactor, a parameter deletion) shows an empty diff.
 Run-dependent numbers are normalised away: expression ids (`#123`),
-lambda variable numbers (`x_12`), plan and RDD ids, the path of the
-persisted IVF index dir (its name hashes the corpus and layout) and the
-random token in a push sink's file names.
+lambda variable numbers (`x_12`), plan and RDD ids, an RDD's JVM call
+site (`NativeMethodAccessorImpl.java:0` in one run, `<unknown>:0` in
+another, for the same plan), the path of the
+persisted IVF index dir (its name hashes the corpus and layout), the
+scratch root the engine writes under (`io.tables.scratch_dir`: the temp
+root and the corpus tag, so dumps taken under different `TMPDIR`s, or
+before the one-root layout, compare) and the random token in a push
+sink's file names.
 
 Usage: python tools/plan_dump.py sf_dir out_dir [module ...]
 
@@ -34,7 +39,12 @@ _NORMALISE = [
     (re.compile(r"\b([a-z]{1,5})_\d+\b"), r"\1_N"),
     (re.compile(r"plan_id=\d+"), "plan_id=N"),
     (re.compile(r"RDD\[\d+\]"), "RDD[N]"),
-    (re.compile(r"file:\S*/[0-9a-f]{12}/(centroids|assignments)"), r"file:INDEX/\1"),
+    (re.compile(r"(RDD\[N\] at \w+) at [^,\s]+"), r"\1 at CALLSITE"),
+    (re.compile(r"file:\S*[/_][0-9a-f]{12}/(centroids|assignments)"), r"file:INDEX/\1"),
+    (
+        re.compile(r"/\S*?/spark_graft(?:_([a-z]+)/[0-9a-f]{8}|/[0-9a-f]{8}/([a-z]+))/"),
+        r"SCRATCH/\1\2/",
+    ),
     (re.compile(r"part-[0-9a-f]{12}-"), "part-N-"),
 ]
 
